@@ -45,15 +45,7 @@ object DeltaView {
   private val replayDirs =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   sys.addShutdownHook {
-    replayDirs.values.foreach { dir =>
-      try {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete()
-        }
-        rm(new java.io.File(dir))
-      } catch { case _: Exception => () }
-    }
+    replayDirs.values.foreach(dir => EventTime.deleteTree(new java.io.File(dir)))
   }
 
   private val Batches = 3
@@ -97,10 +89,7 @@ object DeltaView {
         val dst = Paths.get(dir, f"batch-$b%02d.parquet")
         Files.move(part.toPath, dst, StandardCopyOption.REPLACE_EXISTING)
         dst.toFile.setLastModified(1000000000000L + b * 60000L)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-        }
-        rm(new java.io.File(tmp))
+        EventTime.deleteTree(new java.io.File(tmp))
       }
       dir
     })
@@ -123,10 +112,10 @@ object DeltaView {
       df.groupBy("priority")
         .agg((sum(col("rev")) * sign).as("rev"), (count(lit(1)) * sign).as("n"))
 
+    val ckpt = Files.createTempDirectory("graft-dv-ckpt").toFile
     val q = stream.writeStream
       .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-dv-ckpt").toString)
+      .option("checkpointLocation", ckpt.toString)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val dL = batch.filter(col("tbl") === "L" && col("op") === "i")
           .select(col("okey"), col("rev"))
@@ -157,7 +146,7 @@ object DeltaView {
           .localCheckpoint()
       }
       .start()
-    q.awaitTermination()
+    try q.awaitTermination() finally EventTime.deleteTree(ckpt)
     val dataBatches = q.recentProgress.count(_.numInputRows > 0)
     require(dataBatches >= Batches,
       s"q224 must exercise ≥$Batches-batch maintenance, saw $dataBatches")

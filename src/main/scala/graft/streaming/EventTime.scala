@@ -28,6 +28,14 @@ import org.apache.spark.sql.streaming.Trigger
   * size is bounded by (open windows × group cardinality) because the
   * watermark evicts finalized windows — this is the 100 TB-safe shape
   * (no unbounded state, no driver collection).
+  *
+  * Every query here runs its stream through [[replayToTable]], a bounded
+  * replay (D-Streams: a stream is a series of deterministic batch
+  * jobs). It is the only code that starts a memory sink, creates a
+  * `graft-et*` checkpoint dir or counts data batches, and the only
+  * owner of their cleanup: the sink's temp view is dropped and the
+  * checkpoint deleted whether the run succeeds, fails its batch-count
+  * check, or throws.
   */
 object EventTime {
 
@@ -39,27 +47,20 @@ object EventTime {
   // of leaking a fresh temp dir each call; a shutdown hook removes them
   private val srcDirs =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  // multi-file copies of the events table (q45's multi-batch source),
-  // one per (session, path, parts)
+  // time-ordered multi-file copies of the events table (the stateful
+  // replays' source), one per (session, path, parts)
   private val splitDirs =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), String]
   sys.addShutdownHook {
-    srcDirs.values.foreach { dir =>
-      val p = java.nio.file.Paths.get(dir)
-      try {
-        Files.deleteIfExists(p.resolve("events.parquet"))
-        Files.deleteIfExists(p)
-      } catch { case _: java.io.IOException => () }
-    }
-    splitDirs.values.foreach { dir =>
-      try {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete()
-        }
-        rm(new java.io.File(dir))
-      } catch { case _: Exception => () }
-    }
+    (srcDirs.values ++ splitDirs.values).foreach(dir => deleteTree(new java.io.File(dir)))
+  }
+
+  /** Best-effort recursive delete of a temp dir. A symbolic link is
+    * removed, never followed, so the source dirs' link to the real
+    * events file leaves the file in place. */
+  private[streaming] def deleteTree(f: java.io.File): Unit = {
+    if (!Files.isSymbolicLink(f.toPath)) Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete()
   }
 
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
@@ -80,27 +81,6 @@ object EventTime {
     graft.operators.Tables.normalizeTs(s.readStream.schema(schema).parquet(dir))
   }
 
-  /** The events table as a MULTI-FILE stream source: the table is
-    * rewritten once per session into `parts` parquet files and streamed
-    * with `maxFilesPerTrigger = 1`, so a query over it runs ≥ `parts`
-    * micro-batches — the shape that actually exercises cross-batch
-    * state (a single-file source collapses every stateful operator to
-    * one batch). */
-  private def eventsStreamMultiBatch(s: SparkSession, d: String,
-      parts: Int): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$d/events.parquet"
-    val schema = s.read.parquet(path).schema
-    val dir = splitDirs.getOrElseUpdate((s, path, parts), {
-      val tmp = Files.createTempDirectory("graft-events-split").toString
-      s.read.parquet(path).repartition(parts)
-        .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
-    graft.operators.Tables.normalizeTs(
-      s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir))
-  }
-
   /** The events table as a TIME-ORDERED multi-file stream: range-split
     * by (ts, event_id) into `parts` files with file mtimes forced
     * ascending in range order, so the file source replays
@@ -111,7 +91,11 @@ object EventTime {
     * event_id order — the per-batch (us, event_id) sort the stateful
     * consumers apply then composes to a GLOBAL (us, event_id) order
     * across batches, matching the batch windows' strict
-    * preceding-row semantics exactly (the q200 tie contract). */
+    * preceding-row semantics exactly (the q200 tie contract). Streamed
+    * with `maxFilesPerTrigger = 1`, a query over it runs ≥ `parts`
+    * micro-batches — the shape that actually exercises cross-batch
+    * state (a single-file source collapses every stateful operator to
+    * one batch). */
   private def eventsStreamTimeOrdered(s: SparkSession, d: String,
       parts: Int): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -132,8 +116,7 @@ object EventTime {
   private[graft] def timeOrderedSplitDir(s: SparkSession, d: String,
       parts: Int): String = {
     val path = s"$d/events.parquet"
-    // negative parts keys the ordered variant in the same cache
-    splitDirs.getOrElseUpdate((s, path, -parts), {
+    splitDirs.getOrElseUpdate((s, path, parts), {
       val tmp = Files.createTempDirectory("graft-events-tsplit").toString
       s.read.parquet(path)
         .repartitionByRange(parts, col("ts"), col("event_id"))
@@ -151,27 +134,50 @@ object EventTime {
     })
   }
 
-  /** Read a memory-sink table ONCE into a local relation and DROP its
-    * temp view — without this every streaming runner leaked its full
-    * emission history into the session catalog (and heap) for the rest
-    * of the process, measured as whole-suite tail slowdown in the r12
-    * bench adjudication (BENCH_NOTES "suite-state amplification"). */
-  private def snapshotTable(s: SparkSession, name: String): DataFrame =
-    snapshotAgg(s, name)(identity)
-
-  /** [[snapshotTable]] with the final rollup applied BEFORE the
-    * collect (r12 OPTIMIZATION, guide §5: don't pull row-scaled data
-    * to the driver): for runners whose emission history is row-scaled
-    * (q372 emits one edge per input event), aggregating the sink table
-    * first means the local relation holds the group-sized result, not
-    * a second full copy of the history. */
-  private def snapshotAgg(s: SparkSession, name: String)(
-      agg: DataFrame => DataFrame): DataFrame = {
-    val t = agg(s.table(name))
-    val local = s.createDataFrame(
-      java.util.Arrays.asList(t.collect(): _*), t.schema)
-    s.catalog.dropTempView(name)
-    local
+  /** Run a streaming DataFrame to completion in `mode` into a memory
+    * sink and return the sink's contents as a local relation.
+    * Trigger.AvailableNow processes everything available, runs the
+    * final no-data batch that advances the watermark and flushes
+    * finalized windows, then stops.
+    *
+    * `minBatches` pins that the run genuinely crossed micro-batch
+    * boundaries (the cross-batch state path is what the gate must
+    * exercise); `label` names the query in the failure message.
+    * `finalAgg` runs on the sink table BEFORE the collect
+    * (OPTIMIZATION_r12.md: don't pull row-scaled data to the driver):
+    * for a runner whose emission history is row-scaled (q372 emits one
+    * edge per input event), the local relation then holds the
+    * group-sized result, not a second full copy of the history.
+    *
+    * The `finally` drops the sink's temp view — otherwise each run's
+    * full emission history stays in the session catalog (and heap) for
+    * the rest of the process, measured as whole-suite tail slowdown in
+    * the r12 bench adjudication (BENCH_NOTES "suite-state
+    * amplification") — and deletes the checkpoint dir, on success and
+    * failure alike. */
+  private[graft] def replayToTable(df: DataFrame, mode: String, minBatches: Int,
+      label: String)(finalAgg: DataFrame => DataFrame = identity): DataFrame = {
+    val s = df.sparkSession
+    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
+    val ckpt = Files.createTempDirectory("graft-et").toFile
+    try {
+      val q = df.writeStream
+        .format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt.toString)
+        .start()
+      try q.awaitTermination() finally q.stop()
+      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
+      require(dataBatches >= minBatches,
+        s"$label state must span ≥ $minBatches data batches, saw $dataBatches")
+      val t = finalAgg(s.table(name))
+      s.createDataFrame(java.util.Arrays.asList(t.collect(): _*), t.schema)
+    } finally {
+      s.catalog.dropTempView(name)
+      deleteTree(ckpt)
+    }
   }
 
   /** q133: the ordered funnel (q131) as STREAMING state — per-user
@@ -194,19 +200,7 @@ object EventTime {
         unix_micros(col("ts")).as("us"))
       .as[(Long, String, Long)]
     val staged = Stateful.funnelStages(ev)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = staged.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3,
-      s"q133 must exercise cross-batch funnel state, saw $dataBatches data batches")
-    val snap = snapshotTable(s, name)
+    val snap = replayToTable(staged.toDF(), "update", 3, "q133 funnel")()
     val fin = snap.groupBy("user_id").agg(
       max("v_us").as("v"), max("c_us").as("c"), max("p_us").as("p"))
     fin
@@ -220,35 +214,18 @@ object EventTime {
           .as("conversion_rate"))
   }
 
-  /** Run a streaming DataFrame to completion (Trigger.AvailableNow —
-    * process everything available, run the final no-data batch that
-    * advances the watermark and flushes finalized windows, stop) into a
-    * memory sink, and return the sink table. */
-  private def runToTable(df: DataFrame, s: SparkSession): DataFrame = {
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = df.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    snapshotTable(s, name)
-  }
-
   /** q38: tumbling one-hour windows with a 30-minute watermark —
     * count + value sum per (window, event_type), emitting only windows
     * the watermark has closed. */
   def qWatermarkTumbling(s: SparkSession, d: String): DataFrame =
-    runToTable(
+    replayToTable(
       eventsStream(s, d)
         .withWatermark("ts", Delay)
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count("*").as("n"), round(sum("value"), 2).as("sum_value"))
         .select(unix_timestamp(col("window.start")).as("hour_ts"),
           col("event_type"), col("n"), col("sum_value")),
-      s)
+      "append", 0, "q38")()
 
   /** q51: sliding one-hour windows advancing every 15 minutes — each
     * event lands in 4 overlapping windows; count + value sum per
@@ -257,14 +234,14 @@ object EventTime {
     * (open windows × types): duration/slide = 4× the tumbling window
     * count, still watermark-evicted. */
   def qSlidingWindow(s: SparkSession, d: String): DataFrame =
-    runToTable(
+    replayToTable(
       eventsStream(s, d)
         .withWatermark("ts", Delay)
         .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
         .agg(count("*").as("n"), round(sum("value"), 2).as("sum_value"))
         .select(unix_timestamp(col("window.start")).as("win_ts"),
           col("event_type"), col("n"), col("sum_value")),
-      s)
+      "append", 0, "q51")()
 
   /** q45: streaming stateful dedup — `dropDuplicatesWithinWatermark`
     * over (event_type, user_id) maintains a state store across
@@ -278,8 +255,8 @@ object EventTime {
     * assertion in EventTimeSpec, which runs the production-sized
     * 30-minute horizon).
     *
-    * The input streams as ≥ 3 micro-batches (multi-file source,
-    * one file per trigger — asserted below), so the cross-batch state
+    * The input streams as ≥ 3 micro-batches (the time-ordered 3-file
+    * source, one file per trigger — asserted), so the cross-batch state
     * path IS what the gate exercises. The dedup horizon is
     * `DedupHorizon` (35 days), which covers the synthetic table's
     * 30-day event-time span (also asserted): no key's state can expire
@@ -291,34 +268,23 @@ object EventTime {
     * semantics, but an answer that depends on file/batch boundaries,
     * which no SQL oracle can reproduce portably.) */
   def qStreamingDedup(s: SparkSession, d: String): DataFrame = {
-    val deduped = eventsStreamMultiBatch(s, d, parts = 3)
-      .withWatermark("ts", DedupHorizon)
-      .select(col("event_type"), col("user_id"), col("ts"))
-      .dropDuplicatesWithinWatermark("event_type", "user_id")
-      .groupBy("event_type")
-      .agg(count("*").as("n_distinct_users"))
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = deduped.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    // pin both oracle preconditions loudly: the run was genuinely
-    // multi-batch, and the horizon covers the event-time span (so the
-    // COUNT(DISTINCT) oracle is exact whatever the batch boundaries)
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3,
-      s"q45 must exercise cross-batch dedup state, saw $dataBatches data batches")
+    // pin both oracle preconditions loudly: the horizon covers the
+    // event-time span (so the COUNT(DISTINCT) oracle is exact whatever
+    // the batch boundaries), and the run is genuinely multi-batch
     val spanDays = graft.operators.Tables.events(s, d)
       .agg(expr("(unix_micros(max(ts)) - unix_micros(min(ts))) / 86400e6"))
       .head().getDouble(0)
     require(spanDays < 35.0,
       f"event-time span $spanDays%.1f days exceeds the 35-day dedup horizon — " +
         "the COUNT(DISTINCT) oracle would no longer be batching-invariant")
-    snapshotTable(s, name)
+    replayToTable(
+      eventsStreamTimeOrdered(s, d, parts = 3)
+        .withWatermark("ts", DedupHorizon)
+        .select(col("event_type"), col("user_id"), col("ts"))
+        .dropDuplicatesWithinWatermark("event_type", "user_id")
+        .groupBy("event_type")
+        .agg(count("*").as("n_distinct_users")),
+      "complete", 3, "q45 dedup")()
   }
 
   /** q45's dedup horizon: longer than the synthetic events table's
@@ -349,14 +315,14 @@ object EventTime {
       .select(col("event_id").as("purchase_id"), col("user_id"),
         col("ts").as("p_ts"))
       .withWatermark("p_ts", Delay)
-    runToTable(
+    replayToTable(
       clicks.join(purchases,
         col("c_user") === col("user_id") &&
           col("c_ts") <= col("p_ts") &&
           col("c_ts") >= col("p_ts") - expr("INTERVAL 30 minutes"))
         .select(col("click_id"), col("purchase_id"), col("user_id"),
           (unix_timestamp(col("p_ts")) - unix_timestamp(col("c_ts"))).as("lag_sec")),
-      s)
+      "append", 0, "q61")()
   }
 
   /** q68: LEFT OUTER stream-stream join — the state semantics q61's
@@ -379,7 +345,7 @@ object EventTime {
       .select(col("event_id").as("purchase_id"), col("user_id"),
         col("ts").as("p_ts"))
       .withWatermark("p_ts", Delay)
-    runToTable(
+    replayToTable(
       clicks.join(purchases,
         col("c_user") === col("user_id") &&
           col("c_ts") <= col("p_ts") &&
@@ -387,7 +353,7 @@ object EventTime {
         "left_outer")
         .select(col("click_id"), col("purchase_id"), col("c_user").as("user_id"),
           (unix_timestamp(col("p_ts")) - unix_timestamp(col("c_ts"))).as("lag_sec")),
-      s)
+      "append", 0, "q68")()
   }
 
   /** q70: STREAM-STATIC join — the enrichment shape every trigger
@@ -403,12 +369,12 @@ object EventTime {
   def qStreamStaticJoin(s: SparkSession, d: String): DataFrame = {
     val dim = graft.operators.Tables.customer(s, d)
       .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("mktsegment"))
-    runToTable(
+    replayToTable(
       eventsStream(s, d)
         .select(col("event_id"), col("user_id"))
         .join(broadcast(dim), Seq("user_id"))
         .select(col("event_id"), col("user_id"), col("mktsegment")),
-      s)
+      "append", 0, "q70")()
   }
 
   /** Event-time windows over the custom `graft-log` DataSourceV2
@@ -438,7 +404,7 @@ object EventTime {
     * the gap duration; only sessions the watermark has finalized are
     * emitted. */
   def qSessionWindow(s: SparkSession, d: String): DataFrame =
-    runToTable(
+    replayToTable(
       eventsStream(s, d)
         .withWatermark("ts", Delay)
         .groupBy(session_window(col("ts"), "10 minutes"), col("user_id"))
@@ -446,7 +412,7 @@ object EventTime {
         .select(col("user_id"),
           unix_timestamp(col("session_window.start")).as("session_start_sec"),
           col("n_events")),
-      s)
+      "append", 0, "q39")()
 
   /** q158: the q156 throttle-dedup as STREAMING state — per-(user,
     * type) last-timestamp + running counters advanced micro-batch by
@@ -463,19 +429,8 @@ object EventTime {
         unix_micros(col("ts")).as("us"), col("event_id").cast("long").as("eid"))
       .as[(Long, String, Long, Long)]
     val counted = Stateful.throttleCounts(ev)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = counted.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3,
-      s"q158 must exercise cross-batch throttle state, saw $dataBatches data batches")
-    snapshotTable(s, name).groupBy("user_id", "event_type")
+    replayToTable(counted.toDF(), "update", 3, "q158 throttle")()
+      .groupBy("user_id", "event_type")
       .agg(max("n_total").as("t"), max("n_dropped").as("dr"))
       .groupBy("event_type")
       .agg(sum("t").as("n_total"), sum("dr").as("n_dropped"),
@@ -497,19 +452,7 @@ object EventTime {
         unix_micros(col("ts")).as("us"), col("event_id").cast("long").as("eid"))
       .as[(Long, Long, Long)]
     val progressed = Stateful.sessionProgress(ev)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = progressed.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3,
-      s"q167 must exercise cross-batch session state, saw $dataBatches data batches")
-    snapshotTable(s, name).groupBy("user_id")
+    replayToTable(progressed.toDF(), "update", 3, "q167 session")().groupBy("user_id")
       .agg(max("n_sessions").as("n_sessions"),
         max("max_session_events").as("max_session_events"),
         max("n_events").as("n_events"))
@@ -534,19 +477,7 @@ object EventTime {
         unix_micros(col("ts")).as("us"), col("event_id").cast("long").as("eid"))
       .as[(Long, Long, Long)]
     val prog = Stateful.coverageProgress(ev)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = prog.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3,
-      s"q310 must exercise cross-batch island state, saw $dataBatches data batches")
-    snapshotTable(s, name).groupBy("user_id")
+    replayToTable(prog.toDF(), "update", 3, "q310 island")().groupBy("user_id")
       .agg(expr("max_by(n_islands, n_events)").as("n_islands"),
         expr("max_by(covered_sec, n_events)").as("covered_sec"))
   }
@@ -567,19 +498,7 @@ object EventTime {
       .select(col("event_type"), unix_micros(col("ts")).as("us"))
       .as[(String, Long)]
     val prog = Stateful.pageCusumProgress(ev)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = prog.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3,
-      s"q186 must exercise cross-batch detector state, saw $dataBatches data batches")
-    snapshotTable(s, name).filter(col("n_days") > 7)
+    replayToTable(prog.toDF(), "update", 3, "q186 detector")().filter(col("n_days") > 7)
       .groupBy("event_type")
       .agg(max(struct(col("n_days"), col("max_s"), col("sum7"),
         col("first_alarm_day"), col("s_at_alarm"))).as("m"))
@@ -606,19 +525,7 @@ object EventTime {
       .select(col("event_type"), unix_micros(col("ts")).as("us"))
       .as[(String, Long)]
     val prog = Stateful.ewmaProgress(ev)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = prog.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3,
-      s"q298 must exercise cross-batch EWMA state, saw $dataBatches data batches")
-    snapshotTable(s, name).groupBy("event_type")
+    replayToTable(prog.toDF(), "update", 3, "q298 EWMA")().groupBy("event_type")
       .agg(max_by(struct(col("n_hours"), col("final_ewma_micro"),
         col("n_spikes"), col("first_spike_hour")), col("n_seen")).as("m"))
       .select(col("event_type"), col("m.n_hours").as("n_hours"),
@@ -645,19 +552,7 @@ object EventTime {
       .select(col("event_type"), unix_micros(col("ts")).as("us"))
       .as[(String, Long)]
     val prog = Stateful.holtProgress(ev)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = prog.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3,
-      s"q327 must exercise cross-batch Holt state, saw $dataBatches data batches")
-    snapshotTable(s, name).groupBy("event_type")
+    replayToTable(prog.toDF(), "update", 3, "q327 Holt")().groupBy("event_type")
       .agg(max_by(struct(col("n_hours"), col("level_micro"),
         col("trend_micro"), col("forecast_micro"),
         col("n_over_forecast"), col("first_over_hour")),
@@ -686,19 +581,7 @@ object EventTime {
         col("event_id").cast("long"), col("user_id").cast("long"))
       .as[(String, Long, Long, Long)]
     val prog = Stateful.mgProgress(ev)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = prog.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3,
-      s"q345 must exercise cross-batch MG state, saw $dataBatches data batches")
-    snapshotTable(s, name).groupBy("event_type")
+    replayToTable(prog.toDF(), "update", 3, "q345 MG")().groupBy("event_type")
       .agg(max_by(struct(col("n_seen"), col("keys"), col("counts")),
         col("n_seen")).as("m"))
       .select(col("event_type"), col("m.n_seen").as("n_events"),
@@ -722,19 +605,7 @@ object EventTime {
       .select(col("event_type"), unix_micros(col("ts")).as("us"))
       .as[(String, Long)]
     val prog = Stateful.locfProgress(ev)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = prog.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3,
-      s"q314 must exercise cross-batch LOCF state, saw $dataBatches data batches")
-    snapshotTable(s, name).groupBy("event_type")
+    replayToTable(prog.toDF(), "update", 3, "q314 LOCF")().groupBy("event_type")
       .agg(max_by(struct(col("n_days"), col("n_obs"), col("n_filled"),
         col("locf_checksum")), col("n_seen")).as("m"))
       .select(col("event_type"), col("m.n_days").as("n_days"),
@@ -751,26 +622,7 @@ object EventTime {
     * the streamed estimate beside the exact batch count. Rows-only
     * (the estimator is not SQL-expressible — q193's argument). */
   def qStreamingHll(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("event_type"), xxhash64(col("user_id")).as("h"))
-      .as[(String, Long)]
-    val prog = Stateful.hllDistinctProgress(ev)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = prog.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3,
-      s"q214 must exercise cross-batch register state, saw $dataBatches data batches")
-    val fin = snapshotTable(s, name).groupBy("event_type")
-      .agg(max(col("n_seen")).as("n_events"),
-        max_by(col("regs"), col("n_seen")).as("regs"))
+    val fin = hllFinal(s, d)
     val exact = graft.operators.Tables.events(s, d)
       .groupBy("event_type")
       .agg(countDistinct(col("user_id")).as("exact_users"))
@@ -784,6 +636,28 @@ object EventTime {
     s.createDataFrame(rows).toDF("event_type", "n_events", "exact_users",
       "est_users", "err_pct")
   }
+
+  /** q214's final streamed state per type — (event_type, n_events,
+    * regs) — shared with its spec hook, so the spec checks the code the
+    * gate runs. */
+  private def hllFinal(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
+      .select(col("event_type"), xxhash64(col("user_id")).as("h"))
+      .as[(String, Long)]
+    val prog = Stateful.hllDistinctProgress(ev)
+    replayToTable(prog.toDF(), "update", 3, "q214 register")()
+      .groupBy("event_type")
+      .agg(max(col("n_seen")).as("n_events"),
+        max_by(col("regs"), col("n_seen")).as("regs"))
+  }
+
+  /** Final streamed HLL registers per type (spec hook: compared bit
+    * for bit to a batch udaf build over the same events). */
+  private[graft] def streamedHllRegisters(s: SparkSession,
+      d: String): Map[String, Array[Byte]] =
+    hllFinal(s, d).collect().map(r => r.getAs[String]("event_type") ->
+      r.getAs[Array[Byte]]("regs")).toMap
 
   /** q369: streaming two-sample KS drift monitor
     * ([[Stateful.ksDriftProgress]]) — the live "has this arm's metric
@@ -816,19 +690,7 @@ object EventTime {
       .select(col("pair"), col("in_arm"), col("v"))
       .as[(String, Long, Long)]
     val prog = Stateful.ksDriftProgress(tagged)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = prog.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3,
-      s"q369 must exercise cross-batch rollup state, saw $dataBatches data batches")
-    val snap = snapshotTable(s, name)
+    val snap = replayToTable(prog.toDF(), "update", 3, "q369 rollup")()
     snap.groupBy("pair")
       .agg(max_by(col("n1"), col("n_seen")).as("n1"),
         max_by(col("n2"), col("n_seen")).as("n2"),
@@ -837,30 +699,6 @@ object EventTime {
         round(col("d_num").cast("double") /
           (col("n1").cast("double") * col("n2").cast("double")), 6).as("ks_d"))
       .orderBy("pair")
-  }
-
-  /** Final streamed HLL registers per type (spec hook: compared bit
-    * for bit to a batch udaf build over the same events). */
-  private[graft] def streamedHllRegisters(s: SparkSession,
-      d: String): Map[String, Array[Byte]] = {
-    import s.implicits._
-    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("event_type"), xxhash64(col("user_id")).as("h"))
-      .as[(String, Long)]
-    val prog = Stateful.hllDistinctProgress(ev)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = prog.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    snapshotTable(s, name).groupBy("event_type")
-      .agg(max_by(col("regs"), col("n_seen")).as("regs"))
-      .collect().map(r => r.getAs[String]("event_type") ->
-        r.getAs[Array[Byte]]("regs")).toMap
   }
 
   /** q242: streaming per-type Count-Min frequency state
@@ -876,31 +714,7 @@ object EventTime {
     * Rows-only (Murmur hashing is not SQL-expressible — q170's
     * argument). */
   def qStreamingCms(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val depth = 4
-    val width = 1024
-    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("event_type"), col("user_id").cast("string").as("item"))
-      .as[(String, String)]
-    val prog = Stateful.cmsProgress(ev, depth, width)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = prog.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3,
-      s"q242 must exercise cross-batch counter state, saw $dataBatches data batches")
-    val snap = snapshotTable(s, name)
-    val fin = snap.groupBy("event_type")
-      .agg(max(col("n_seen")).as("n_events"),
-        max_by(col("counts"), col("n_seen")).as("counts"))
-      .collect().map(r => r.getAs[String]("event_type") ->
-        (r.getAs[Long]("n_events"), r.getAs[Seq[Long]]("counts").toArray)).toMap
+    val fin = streamedCmsState(s, d)
     val top = graft.operators.Tables.events(s, d)
       .groupBy(col("event_type"), col("user_id"))
       .agg(count(lit(1)).as("exact"))
@@ -913,37 +727,34 @@ object EventTime {
     val rows = top.toSeq.map { case (tpe, uid, exact) =>
       val (n, counts) = fin(tpe)
       val est = graft.functions.CountMin.estimate(
-        graft.functions.CMSState(counts, n), uid.toString, depth, width)
-      val bound = math.ceil(math.E / width * n).toLong
+        graft.functions.CMSState(counts, n), uid.toString, CmsDepth, CmsWidth)
+      val bound = math.ceil(math.E / CmsWidth * n).toLong
       (tpe, uid, n, exact, est, est - exact, est - exact <= bound)
     }
     s.createDataFrame(rows).toDF("event_type", "user_id", "n_events",
       "exact", "estimate", "overestimate", "within_bound")
   }
 
-  /** Final streamed CMS matrices per type (spec hook: compared bit
-    * for bit to a batch udaf build over the same events). */
+  /** q242's Count-Min shape. */
+  private val CmsDepth = 4
+  private val CmsWidth = 1024
+
+  /** Final streamed (n, CMS matrix) per type — q242's final state and
+    * its spec hook in one (the spec compares it bit for bit to a batch
+    * udaf build over the same events). */
   private[graft] def streamedCmsState(s: SparkSession,
       d: String): Map[String, (Long, Array[Long])] = {
     import s.implicits._
     val ev = eventsStreamTimeOrdered(s, d, parts = 3)
       .select(col("event_type"), col("user_id").cast("string").as("item"))
       .as[(String, String)]
-    val prog = Stateful.cmsProgress(ev)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = prog.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    snapshotTable(s, name).groupBy("event_type")
-      .agg(max(col("n_seen")).as("n_seen"),
+    val prog = Stateful.cmsProgress(ev, CmsDepth, CmsWidth)
+    replayToTable(prog.toDF(), "update", 3, "q242 counter")()
+      .groupBy("event_type")
+      .agg(max(col("n_seen")).as("n_events"),
         max_by(col("counts"), col("n_seen")).as("counts"))
       .collect().map(r => r.getAs[String]("event_type") ->
-        (r.getAs[Long]("n_seen"), r.getAs[Seq[Long]]("counts").toArray)).toMap
+        (r.getAs[Long]("n_events"), r.getAs[Seq[Long]]("counts").toArray)).toMap
   }
 
   /** q245: streaming per-type KMV (bottom-k) distinct-user state
@@ -968,27 +779,7 @@ object EventTime {
     * per-key running counts); this is that monitor with O(k) state
     * per key instead of a per-user set. */
   def qStreamingKmv(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val k = 16
-    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("event_type"), col("user_id").cast("string").as("item"))
-      .as[(String, String)]
-    val prog = Stateful.kmvProgress(ev, k)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = prog.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3,
-      s"q245 must exercise cross-batch bottom-k state, saw $dataBatches data batches")
-    val fin = snapshotTable(s, name).groupBy("event_type")
-      .agg(max(col("n_seen")).as("n_events"),
-        max_by(col("hashes"), col("n_seen")).as("hashes"))
+    val fin = kmvFinal(s, d)
     // exact distinct over the SAME md5 domain the sketch hashes into,
     // so under-k types report sketch-exact == n_exact by construction
     val exact = graft.operators.Tables.events(s, d)
@@ -996,17 +787,42 @@ object EventTime {
         md5(col("user_id").cast("string").cast("binary")).as("h"))
       .distinct()
       .groupBy("event_type").agg(count(lit(1)).as("n_exact"))
-    val sk = new graft.functions.KmvSketch(k)
+    val sk = new graft.functions.KmvSketch(KmvK)
     val rows = fin.join(exact, Seq("event_type")).collect().toSeq.map { r =>
       val hs = r.getAs[scala.collection.Seq[String]]("hashes").toVector
       val est = sk.finish(graft.functions.KmvState(hs))
-      val kth: String = if (hs.length == k) hs.last else null
+      val kth: String = if (hs.length == KmvK) hs.last else null
       (r.getAs[String]("event_type"), r.getAs[Long]("n_events"),
         r.getAs[Long]("n_exact"), kth, est)
     }
     s.createDataFrame(rows).toDF("event_type", "n_events", "n_exact",
       "kth_hash", "kmv_estimate")
   }
+
+  /** q245's sketch size. */
+  private val KmvK = 16
+
+  /** q245's final streamed state per type — (event_type, n_events,
+    * hashes) — shared with its spec hook. */
+  private def kmvFinal(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
+      .select(col("event_type"), col("user_id").cast("string").as("item"))
+      .as[(String, String)]
+    val prog = Stateful.kmvProgress(ev, KmvK)
+    replayToTable(prog.toDF(), "update", 3, "q245 bottom-k")()
+      .groupBy("event_type")
+      .agg(max(col("n_seen")).as("n_events"),
+        max_by(col("hashes"), col("n_seen")).as("hashes"))
+  }
+
+  /** Final streamed KMV bottom-k vectors per type (spec hook:
+    * compared bit for bit to an independent batch window-rank
+    * bottom-k over the same events). */
+  private[graft] def streamedKmvState(s: SparkSession,
+      d: String): Map[String, Seq[String]] =
+    kmvFinal(s, d).collect().map(r => r.getAs[String]("event_type") ->
+      r.getAs[scala.collection.Seq[String]]("hashes").toVector.toSeq).toMap
 
   /** q265: streaming per-type Bloom membership state
     * ([[Stateful.bloomProgress]]) — the NINTH bit-exact stream/batch
@@ -1025,30 +841,8 @@ object EventTime {
     * Rows-only (Murmur-based bit layout is not SQL-expressible —
     * q170's argument). */
   def qStreamingBloom(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val expected = 4096L
-    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("event_type"), xxhash64(col("user_id")).as("h"))
-      .as[(String, Long)]
-    val prog = Stateful.bloomProgress(ev, expected)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = prog.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3,
-      s"q265 must exercise cross-batch filter state, saw $dataBatches data batches")
-    val snap = snapshotTable(s, name)
-    val fin = snap.groupBy("event_type")
-      .agg(max(col("n_seen")).as("n_events"),
-        max_by(col("bits"), col("n_seen")).as("bits"))
-      .collect().map(r => r.getAs[String]("event_type") ->
-        (r.getAs[Long]("n_events"), r.getAs[Array[Byte]]("bits"))).toMap
+    val fin = bloomFinal(s, d).collect().map(r => r.getAs[String]("event_type") ->
+      (r.getAs[Long]("n_events"), r.getAs[Array[Byte]]("bits"))).toMap
     val present = graft.operators.Tables.events(s, d)
       .select(col("event_type"), col("user_id")).distinct()
       .groupBy("event_type")
@@ -1075,30 +869,27 @@ object EventTime {
       "filter_bytes", "false_negatives", "false_positives", "fpr_ppm")
   }
 
-  /** Final streamed Bloom filters per type (spec hook: compared byte
-    * for byte to a batch bloom_filter_agg build over the same
-    * hashes). */
-  private[graft] def streamedBloomState(s: SparkSession,
-      d: String): Map[String, Array[Byte]] = {
+  /** q265's final streamed state per type — (event_type, n_events,
+    * bits) — shared with its spec hook. */
+  private def bloomFinal(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ev = eventsStreamTimeOrdered(s, d, parts = 3)
       .select(col("event_type"), xxhash64(col("user_id")).as("h"))
       .as[(String, Long)]
-    val prog = Stateful.bloomProgress(ev)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = prog.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    snapshotTable(s, name).groupBy("event_type")
-      .agg(max_by(col("bits"), col("n_seen")).as("bits"))
-      .collect().map(r => r.getAs[String]("event_type") ->
-        r.getAs[Array[Byte]]("bits")).toMap
+    val prog = Stateful.bloomProgress(ev, expected = 4096L)
+    replayToTable(prog.toDF(), "update", 3, "q265 filter")()
+      .groupBy("event_type")
+      .agg(max(col("n_seen")).as("n_events"),
+        max_by(col("bits"), col("n_seen")).as("bits"))
   }
+
+  /** Final streamed Bloom filters per type (spec hook: compared byte
+    * for byte to a batch bloom_filter_agg build over the same
+    * hashes). */
+  private[graft] def streamedBloomState(s: SparkSession,
+      d: String): Map[String, Array[Byte]] =
+    bloomFinal(s, d).collect().map(r => r.getAs[String]("event_type") ->
+      r.getAs[Array[Byte]]("bits")).toMap
 
   /** q281: streaming exact percentile monitor
     * ([[Stateful.percentileProgress]]) — the TENTH bit-exact
@@ -1126,49 +917,12 @@ object EventTime {
         expr("CAST(ROUND(value * 100, 0) AS BIGINT)").as("cents"))
       .as[(String, Long, Long)]
     val prog = Stateful.percentileProgress(ev)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = prog.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3,
-      s"q281 must exercise cross-batch rollup state, saw $dataBatches data batches")
-    val snap = snapshotTable(s, name)
+    val snap = replayToTable(prog.toDF(), "update", 3, "q281 rollup")()
     snap.groupBy("event_type")
       .agg(max_by(col("weekly"), col("n_seen")).as("weekly"))
       .select(col("event_type"), explode(col("weekly")).as("w"))
       .select(col("event_type"), col("w._1").as("week"), col("w._2").as("n"),
         col("w._3").as("p50_cents"), col("w._4").as("p90_cents"))
-  }
-
-  /** Final streamed KMV bottom-k vectors per type (spec hook:
-    * compared bit for bit to an independent batch window-rank
-    * bottom-k over the same events). */
-  private[graft] def streamedKmvState(s: SparkSession,
-      d: String): Map[String, Seq[String]] = {
-    import s.implicits._
-    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("event_type"), col("user_id").cast("string").as("item"))
-      .as[(String, String)]
-    val prog = Stateful.kmvProgress(ev)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = prog.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    snapshotTable(s, name).groupBy("event_type")
-      .agg(max_by(col("hashes"), col("n_seen")).as("hashes"))
-      .collect().map(r => r.getAs[String]("event_type") ->
-        r.getAs[scala.collection.Seq[String]]("hashes").toVector.toSeq).toMap
   }
 
   /** q200: q199's last-touch attribution as STREAMING state
@@ -1189,19 +943,8 @@ object EventTime {
         expr("CAST(ROUND(value * 100, 0) AS BIGINT)").as("cents"))
       .as[(Long, String, Long, Long, Long)]
     val prog = Stateful.attributionProgress(ev)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = prog.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3,
-      s"q200 must exercise cross-batch touch state, saw $dataBatches data batches")
-    val fin = snapshotTable(s, name).groupBy("user_id")
+    val fin = replayToTable(prog.toDF(), "update", 3, "q200 touch")()
+      .groupBy("user_id")
       .agg(max("click_n").as("cn"), max("click_cents").as("cc"),
         max("view_n").as("vn"), max("view_cents").as("vc"),
         max("un_n").as("un"), max("un_cents").as("uc"))
@@ -1231,20 +974,8 @@ object EventTime {
         col("event_id").cast("long"), col("event_type"))
       .as[(Long, Long, Long, String)]
     val prog = Stateful.transitionProgress(src)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = prog.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3,
-      s"q372 must exercise cross-batch carried state, saw $dataBatches data batches")
-    snapshotAgg(s, name)(_.groupBy("from_type", "to_type")
-        .agg(count(lit(1)).as("n")))
+    replayToTable(prog.toDF(), "update", 3, "q372 carried")(
+        _.groupBy("from_type", "to_type").agg(count(lit(1)).as("n")))
       .orderBy("from_type", "to_type")
   }
 
@@ -1262,19 +993,7 @@ object EventTime {
         expr("CAST(ROUND(value * 100, 0) AS BIGINT)"))
       .as[(String, Long)]
     val prog = Stateful.momentsProgress(src)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = prog.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3,
-      s"q373 must exercise cross-batch moment state, saw $dataBatches data batches")
-    snapshotTable(s, name).groupBy("event_type")
+    replayToTable(prog.toDF(), "update", 3, "q373 moment")().groupBy("event_type")
       .agg(max(col("n")).as("n_events"),
         max_by(col("sum_cents"), col("n")).as("sum_cents"),
         max_by(col("sumsq_cents"), col("n")).as("sumsq_cents"))
@@ -1296,19 +1015,7 @@ object EventTime {
       .select(col("event_type"), col("user_id").cast("long"))
       .as[(String, Long)]
     val prog = Stateful.distinctExactProgress(src)
-    val name = "graft_et_" + UUID.randomUUID().toString.replace("-", "")
-    val q = prog.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-et").toString)
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3,
-      s"q374 must exercise cross-batch id-set state, saw $dataBatches data batches")
-    snapshotTable(s, name).groupBy("event_type")
+    replayToTable(prog.toDF(), "update", 3, "q374 id-set")().groupBy("event_type")
       .agg(max(col("n_seen")).as("n_events"),
         max_by(col("n_users"), col("n_seen")).as("n_users"))
       .orderBy("event_type")

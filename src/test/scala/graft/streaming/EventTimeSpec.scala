@@ -322,4 +322,41 @@ class EventTimeSpec extends AnyFunSuite {
     assert(streamed == batch)
     assert(batch.size >= 6, s"degenerate timeline: ${batch.size} cells")
   }
+
+  test("q45: streamed dedup equals the batch COUNT(DISTINCT user_id) per event_type") {
+    val batch = Tables.events(spark, sf)
+      .groupBy("event_type")
+      .agg(countDistinct("user_id").as("n_distinct_users"))
+    val got = rows(EventTime.qStreamingDedup(spark, sf))
+    assert(got.nonEmpty)
+    assert(got == rows(batch))
+  }
+
+  test("replayToTable leaves no sink view or checkpoint dir on success, failed check or throw") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def ckptDirs: Set[String] = Option(tmp.listFiles()).toSet.flatten
+      .map(_.getName).filter(_.startsWith("graft-et"))
+    def sinkViews: Seq[String] = spark.catalog.listTables().collect().toSeq
+      .map(_.name).filter(_.startsWith("graft_et_"))
+    val before = ckptDirs
+
+    assert(EventTime.qStreamingMoments(spark, sf).count() > 0)
+    // the 3-file source replays as 3 data batches: 4 cannot be met
+    val dir = EventTime.timeOrderedSplitDir(spark, sf, 3)
+    def source = spark.readStream.schema(spark.read.parquet(dir).schema)
+      .option("maxFilesPerTrigger", "1").parquet(dir)
+    val short = intercept[IllegalArgumentException] {
+      EventTime.replayToTable(source.groupBy("event_type").count(), "complete", 4,
+        "hygiene probe")()
+    }
+    assert(short.getMessage.contains("hygiene probe"), short.getMessage)
+    intercept[Exception] {
+      EventTime.replayToTable(source.select(expr("raise_error('probe failure')")),
+        "append", 0, "failing probe")()
+    }
+
+    assert(sinkViews.isEmpty, s"leaked sink views: $sinkViews")
+    val leaked = ckptDirs -- before
+    assert(leaked.isEmpty, s"leaked checkpoint dirs: $leaked")
+  }
 }
