@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.Dataset
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.core.StreamRecord
+import graft.core.{HadoopFiles, StreamRecord}
 
 /** GraftLog: a durable, append-only log of [[StreamRecord]]s — the
   * engine's analogue of a Redis stream key space. `append` is the XADD
@@ -26,8 +26,11 @@ import graft.core.StreamRecord
   * observes a partial segment — the same durability shape as
   * [[graft.streaming.CheckpointStore]]. A segment is immutable once
   * renamed; offsets are therefore simply "number of segments", and a
-  * micro-batch is a contiguous segment range (each segment reads as
-  * one input partition, so ingest parallelism = append granularity).
+  * micro-batch is a contiguous segment range. The source packs that
+  * range into at most `defaultParallelism` contiguous sub-ranges, one
+  * input partition each, so read parallelism follows the cluster's
+  * cores rather than append granularity, and many small appends cost
+  * one task per core instead of one task per segment.
   * Records carry the dual decoded/raw field views byte-exactly
   * (`fieldsRaw` base64-encoded in the JSON).
   *
@@ -125,16 +128,11 @@ final class GraftLog(val dir: String, hadoopConf: Configuration) extends Seriali
     }
   }
 
-  /** Read segments [from, until) — used by the DSv2 partition readers
-    * (one call per segment, executor-side) and by tests. */
-  def readSegment(i: Long): Iterator[StreamRecord] = {
-    val p = segPath(i)
-    val len = fs.getFileStatus(p).getLen.toInt
-    val buf = new Array[Byte](len)
-    val in = fs.open(p)
-    try in.readFully(0, buf) finally in.close()
-    new String(buf, UTF_8).linesIterator.filter(_.nonEmpty).map(GraftLog.fromJsonLine)
-  }
+  /** Read segment `i` — used by the DSv2 partition readers (one call
+    * per segment of their range, executor-side) and by tests. */
+  def readSegment(i: Long): Iterator[StreamRecord] =
+    new String(HadoopFiles.readAll(fs, segPath(i)), UTF_8)
+      .linesIterator.filter(_.nonEmpty).map(GraftLog.fromJsonLine)
 
   /** E6 retention: rewrite the log, dropping every record at or below
     * its stream's watermark. Segment numbering is preserved (readers'
@@ -210,11 +208,8 @@ final class GraftLog(val dir: String, hadoopConf: Configuration) extends Seriali
     * the old file with the staged rewrite. Idempotent at every step —
     * a swap whose staged file is gone has already been applied. */
   private def applyCommit(): Unit = {
-    val len = fs.getFileStatus(commitPath).getLen.toInt
-    val buf = new Array[Byte](len)
-    val in = fs.open(commitPath)
-    try in.readFully(0, buf) finally in.close()
-    new String(buf, UTF_8).linesIterator.filter(_.nonEmpty).foreach { line =>
+    val body = new String(HadoopFiles.readAll(fs, commitPath), UTF_8)
+    body.linesIterator.filter(_.nonEmpty).foreach { line =>
       line.split('\t') match {
         case Array("S", i) =>
           val (tmp, seg) = (tmpCompactPath(i.toLong), segPath(i.toLong))

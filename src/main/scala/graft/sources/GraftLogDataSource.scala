@@ -4,8 +4,11 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
@@ -13,6 +16,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.StreamRecord
@@ -30,9 +34,16 @@ import graft.core.StreamRecord
   *   .load().as[StreamRecord]
   * }}}
   *
-  * - Offsets are the log's segment count: a micro-batch is a
-  *   contiguous immutable segment range, one input partition per
-  *   segment (executor-parallel reads, no driver materialization).
+  * - Offsets are the log's segment count: a micro-batch (or a batch
+  *   read) is a contiguous immutable segment range, packed into at most
+  *   `defaultParallelism` contiguous sub-ranges, one input partition
+  *   each (`GraftLogSource.ranges`): executor-parallel reads with no
+  *   driver materialization, and a fixed per-task cost paid once per
+  *   core rather than once per segment.
+  * - The partition reader builds each row by hand from the decoded
+  *   [[StreamRecord]] (no encoder derivation or codegen per task), and
+  *   the Hadoop configuration is broadcast once per scan or streaming
+  *   query, not serialized into every task.
   * - `prefix` is pushed INTO the source: non-matching streams are
   *   dropped at the partition reader, before any shuffle.
   * - Restart resumes from the committed segment offset in the query
@@ -68,18 +79,18 @@ final class GraftLogScan(path: String, prefix: String,
   override def readSchema(): StructType = StreamRecord.schema
   override def description(): String = s"graft-log $path prefix='$prefix'"
 
-  private def hadoopConf = new SerializableConfiguration(
-    org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
+  private lazy val spark = SparkSession.active
+  // a batch read's one broadcast; a streaming query gets its own below
+  private lazy val conf = GraftLogSource.broadcastConf(spark)
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new GraftLogMicroBatchStream(path, prefix, hadoopConf)
+    new GraftLogMicroBatchStream(path, prefix)
 
   override def toBatch: Batch = new Batch {
-    private val conf = hadoopConf
-    override def planInputPartitions(): Array[InputPartition] = {
-      val n = new GraftLog(path, conf.value).segmentCount
-      (0L until n).map(i => GraftLogPartition(path, i, prefix): InputPartition).toArray
-    }
+    override def planInputPartitions(): Array[InputPartition] =
+      GraftLogSource.ranges(path, prefix, 0L,
+        new GraftLog(path, spark.sparkContext.hadoopConfiguration).segmentCount,
+        spark.sparkContext.defaultParallelism)
     override def createReaderFactory(): PartitionReaderFactory =
       new GraftLogReaderFactory(conf)
   }
@@ -90,9 +101,12 @@ case class GraftLogOffset(segments: Long) extends Offset {
   override def json(): String = segments.toString
 }
 
-final class GraftLogMicroBatchStream(path: String, prefix: String,
-    conf: SerializableConfiguration) extends MicroBatchStream {
-  private val log = new GraftLog(path, conf.value)
+/** One instance per streaming query: the Hadoop configuration is
+  * broadcast here, once for the query's lifetime, not per micro-batch. */
+final class GraftLogMicroBatchStream(path: String, prefix: String) extends MicroBatchStream {
+  private val spark = SparkSession.active
+  private val log = new GraftLog(path, spark.sparkContext.hadoopConfiguration)
+  private val conf = GraftLogSource.broadcastConf(spark)
 
   override def initialOffset(): Offset = GraftLogOffset(0)
   override def latestOffset(): Offset = GraftLogOffset(log.segmentCount)
@@ -100,35 +114,64 @@ final class GraftLogMicroBatchStream(path: String, prefix: String,
   override def commit(end: Offset): Unit = () // retention is trim-driven (E6)
   override def stop(): Unit = ()
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[GraftLogOffset].segments
-    val e = end.asInstanceOf[GraftLogOffset].segments
-    (s until e).map(i => GraftLogPartition(path, i, prefix): InputPartition).toArray
-  }
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    GraftLogSource.ranges(path, prefix, start.asInstanceOf[GraftLogOffset].segments,
+      end.asInstanceOf[GraftLogOffset].segments, spark.sparkContext.defaultParallelism)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftLogReaderFactory(conf)
 }
 
-/** One immutable segment = one input partition. */
-case class GraftLogPartition(path: String, segment: Long, prefix: String)
+/** Immutable segments `[from, until)`, read in order by one task. */
+case class GraftLogPartition(path: String, from: Long, until: Long, prefix: String)
   extends InputPartition
 
-final class GraftLogReaderFactory(conf: SerializableConfiguration)
+private[sources] object GraftLogSource {
+  /** Pack segments `[start, end)` into `min(end - start, parallelism)`
+    * contiguous ranges whose sizes differ by at most one. */
+  def ranges(path: String, prefix: String, start: Long, end: Long,
+      parallelism: Int): Array[InputPartition] = {
+    val n = end - start
+    val k = math.min(n, math.max(parallelism, 1).toLong).toInt
+    Array.tabulate[InputPartition](k) { i =>
+      GraftLogPartition(path, start + n * i / k, start + n * (i + 1) / k, prefix)
+    }
+  }
+
+  def broadcastConf(spark: SparkSession): Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+
+  /** `r` as a [[StreamRecord.schema]] row. */
+  def toRow(r: StreamRecord): InternalRow = {
+    val keys = new Array[Any](r.fields.size)
+    val values = new Array[Any](r.fields.size)
+    var i = 0
+    r.fields.foreach { case (k, v) =>
+      keys(i) = UTF8String.fromString(k)
+      values(i) = UTF8String.fromString(v)
+      i += 1
+    }
+    val raw = r.fieldsRaw.iterator
+      .map { case (k, v) => new GenericInternalRow(Array[Any](k, v)): Any }.toArray
+    new GenericInternalRow(Array[Any](
+      UTF8String.fromString(r.stream), r.idMs, r.idSeq,
+      new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(values)),
+      new GenericArrayData(raw)))
+  }
+}
+
+final class GraftLogReaderFactory(conf: Broadcast[SerializableConfiguration])
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftLogPartition]
+    val log = new GraftLog(p.path, conf.value.value)
     new PartitionReader[InternalRow] {
-      private val serializer =
-        ExpressionEncoder(org.apache.spark.sql.Encoders.product[StreamRecord]
-          .asInstanceOf[org.apache.spark.sql.catalyst.encoders.AgnosticEncoder[StreamRecord]])
-          .createSerializer()
-      private val it = new GraftLog(p.path, conf.value)
-        .readSegment(p.segment)
+      private val it = (p.from until p.until).iterator // one segment held at a time
+        .flatMap(log.readSegment)
         .filter(_.stream.startsWith(p.prefix)) // prefix pushdown (E1)
       private var current: InternalRow = _
       override def next(): Boolean =
-        if (it.hasNext) { current = serializer(it.next()).copy(); true } else false
+        if (it.hasNext) { current = GraftLogSource.toRow(it.next()); true } else false
       override def get(): InternalRow = current
       override def close(): Unit = ()
     }

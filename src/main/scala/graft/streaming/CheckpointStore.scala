@@ -6,6 +6,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
+import graft.core.HadoopFiles
+
 /** Durable store for per-(consumer, stream) acked stream ids.
   *
   * The reference persists each stream consumer's `last_read_id` per
@@ -66,12 +68,7 @@ final class CheckpointStore(dir: String, hadoopConf: Configuration, keep: Int = 
     listVersions().lastOption match {
       case None => Map.empty
       case Some(v) =>
-        val p = file(v)
-        val len = fs.getFileStatus(p).getLen.toInt
-        val buf = new Array[Byte](len)
-        val in = fs.open(p)
-        try in.readFully(0, buf) finally in.close()
-        new String(buf, UTF_8).split('\n').iterator
+        new String(HadoopFiles.readAll(fs, file(v)), UTF_8).split('\n').iterator
           .filter(_.nonEmpty)
           .map { line =>
             val Array(c, s, ms, seq) = line.split('\t')

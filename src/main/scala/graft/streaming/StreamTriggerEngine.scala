@@ -649,11 +649,7 @@ object StreamTriggerEngine {
       fs.delete(stage, true) // uncommitted staging from a crashed run
       return
     }
-    val len = fs.getFileStatus(commitPath).getLen.toInt
-    val buf = new Array[Byte](len)
-    val in = fs.open(commitPath)
-    try in.readFully(0, buf) finally in.close()
-    new String(buf, java.nio.charset.StandardCharsets.UTF_8)
+    new String(HadoopFiles.readAll(fs, commitPath), java.nio.charset.StandardCharsets.UTF_8)
       .linesIterator.filter(_.nonEmpty).foreach { line =>
         line.split('\t') match {
           case Array("P", src, dst) =>

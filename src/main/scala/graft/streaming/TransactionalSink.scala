@@ -6,6 +6,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 
+import graft.core.HadoopFiles
+
 /** Exactly-once `foreachBatch` sink (E12): the reference replicates a
   * sync trigger's effects atomically as one MULTI/EXEC block
   * (`run_ctx.rs:43-59`); the Spark analogue is transactional batch
@@ -44,11 +46,8 @@ final class TransactionalSink(dir: String, hadoopConf: Configuration) {
   // migrate a legacy single-file commit log to per-batch markers
   locally {
     if (fs.exists(commitDir) && fs.getFileStatus(commitDir).isFile) {
-      val len = fs.getFileStatus(commitDir).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = fs.open(commitDir)
-      try in.readFully(0, buf) finally in.close()
-      val ids = new String(buf, UTF_8).split('\n').filter(_.nonEmpty).map(_.toLong)
+      val ids = new String(HadoopFiles.readAll(fs, commitDir), UTF_8)
+        .split('\n').filter(_.nonEmpty).map(_.toLong)
       fs.delete(commitDir, false)
       fs.mkdirs(commitDir)
       ids.foreach(id => fs.create(new Path(commitDir, s"commit-$id"), true).close())

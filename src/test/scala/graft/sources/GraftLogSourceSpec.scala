@@ -20,16 +20,120 @@ class GraftLogSourceSpec extends AnyFunSuite {
 
   private def newLog(dir: String) = new GraftLog(dir, spark.sparkContext.hadoopConfiguration)
 
+  /** A record with `fieldsRaw` as byte sequences, so two records with
+    * equal bytes compare equal. */
+  private def bytewise(r: StreamRecord) =
+    (r.stream, r.idMs, r.idSeq, r.fields, r.fieldsRaw.map { case (k, v) => (k.toSeq, v.toSeq) })
+
+  /** Every record an `attach` over `dir` delivers to a consumer of
+    * `prefix`, in delivery order, and the consumer's per-stream stats. */
+  private def attachAll(dir: String, prefix: String)
+      : (Seq[StreamRecord], Map[String, StreamConsumerStats]) = {
+    import spark.implicits._
+    val e = new Engine(spark)
+    val seen = ArrayBuffer.empty[StreamRecord]
+    e.load(LibraryDefinition("lib", code =
+      _.registerStreamTrigger("t", prefix, (_, r) => seen += r)))
+    val q = e.streams.attach(spark.readStream.format("graft-log")
+      .option("path", dir).option("prefix", prefix).load().as[StreamRecord],
+      tmpDir("glog-ckpt"))
+    try q.processAllAvailable() finally q.stop()
+    val stats = e.list().flatMap(_.streamTriggers).flatMap(_.streams).toMap
+    e.close()
+    (seen.toSeq, stats)
+  }
+
   test("append/read round-trip preserves fields and binary raw pairs") {
-    val log = newLog(tmpDir("glog") + "/log")
+    val dir = tmpDir("glog") + "/log"
+    val log = newLog(dir)
     val junk = Array(0x00, 0x80, 0xFF, 0xE2).map(_.toByte)
     val r = StreamRecord.binary("s:1", 1, 0, Seq("k".getBytes("UTF-8") -> junk))
-    log.append(Seq(r, rec("s:2", 2)))
+    val recs = Seq(r, rec("s:2", 2),
+      StreamRecord("s:3", 3, 0, Map.empty),
+      StreamRecord("s:ключ-鍵", 4, 1, Map("поле" -> "värde ✓ 値"),
+        Seq("поле".getBytes("UTF-8") -> "värde ✓ 値".getBytes("UTF-8"))))
+    log.append(recs)
     assert(log.segmentCount == 1)
     val back = log.readSegment(0).toSeq
-    assert(back.size == 2)
-    assert(java.util.Arrays.equals(back.head.fieldsRaw.head._2, junk))
+    assert(back.size == 4)
+    assert(r.fields.isEmpty && java.util.Arrays.equals(back.head.fieldsRaw.head._2, junk))
     assert(back(1) == rec("s:2", 2))
+    assert(back.map(bytewise) == recs.map(bytewise))
+
+    // the DSv2 reader's hand-built rows decode to the same records,
+    // through a batch read and through a streaming attach
+    import spark.implicits._
+    val read = spark.read.format("graft-log").option("path", dir).load()
+      .as[StreamRecord].collect().toSeq
+    assert(read.map(bytewise).sortBy(_._2) == back.map(bytewise))
+    val (delivered, _) = attachAll(dir, "s:")
+    assert(delivered.map(bytewise).sortBy(_._2) == back.map(bytewise))
+  }
+
+  test("a segment longer than an Int can count fails its read instead of wrapping") {
+    val dir = tmpDir("glog") + "/log"
+    new java.io.File(dir).mkdirs()
+    val seg = new java.io.File(dir, "seg-0000000000.jsonl")
+    val line = GraftLog.toJsonLine(rec("s:1", 1)) + "\n"
+    val f = new java.io.RandomAccessFile(seg, "rw")
+    try {
+      f.write(line.getBytes("UTF-8"))
+      // sparse: 4 GiB + the first line's length, which truncates to an Int
+      // that reads back just that first line
+      f.setLength((4L << 30) + line.length)
+    } finally f.close()
+    try {
+      val err = intercept[java.io.IOException](newLog(dir).readSegment(0).toList)
+      assert(err.getMessage.contains("seg-0000000000.jsonl"))
+    } finally seg.delete()
+  }
+
+  test("property: segment ranges cover the log once; batch reads and attach deliver it exactly") {
+    import org.scalacheck.{Gen, Prop}
+    import org.scalacheck.Test.{check, Parameters}
+    import spark.implicits._
+    val streams = Seq("s:a", "s:b", "s:c", "x:a", "x:b")
+    // per segment: the stream index of each record; only x: streams in
+    // some, empty in others
+    val genLog = Gen.choose(0, 40).flatMap(n => Gen.listOfN(n, Gen.frequency(
+      1 -> Gen.const(List.empty[Int]),
+      1 -> Gen.choose(0, 20).flatMap(Gen.listOfN(_, Gen.choose(3, 4))),
+      4 -> Gen.choose(0, 20).flatMap(Gen.listOfN(_, Gen.choose(0, 4))))))
+    val parallelism = spark.sparkContext.defaultParallelism
+    // no shrinking: every step of it would be another Spark read and streaming query
+    val prop = Prop.forAllNoShrink(genLog, Gen.long) { (segStreams, seed) =>
+      // ids 1..n per stream, shuffled across that stream's slots
+      val rnd = new scala.util.Random(seed)
+      val ids = segStreams.flatten.groupBy(identity).map { case (s, slots) =>
+        s -> rnd.shuffle((1L to slots.size.toLong).toList).iterator
+      }
+      val segs = segStreams.map(_.map(s => rec(streams(s), ids(s).next())))
+      val dir = tmpDir("glog") + "/log"
+      val log = newLog(dir)
+      segs.foreach(log.append)
+      val expected = segs.flatten.filter(_.stream.startsWith("s:"))
+
+      val df = spark.read.format("graft-log").option("path", dir)
+        .option("prefix", "s:").load()
+      val ranges = df.queryExecution.executedPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.inputPartitions
+      }.flatten.map(_.asInstanceOf[GraftLogPartition])
+      val covered = ranges.sortBy(_.from).flatMap(p => p.from until p.until)
+      val rows = df.as[StreamRecord].collect().toSeq
+
+      val (delivered, stats) = attachAll(dir, "s:")
+      val perStream = delivered.groupBy(_.stream)
+      val maxIds = expected.groupBy(_.stream).map { case (s, rs) => s -> s"${rs.map(_.idMs).max}-0" }
+
+      df.rdd.getNumPartitions <= parallelism && ranges.size <= parallelism &&
+        covered == (0L until segs.size.toLong) &&
+        rows.sorted == expected.sorted &&
+        delivered.sorted == expected.sorted &&
+        perStream.values.forall(rs => rs.map(_.idMs) == rs.map(_.idMs).sorted) &&
+        stats.map { case (s, st) => s -> st.lastReadId } == maxIds
+    }
+    val result = check(Parameters.default.withMinSuccessfulTests(12), prop)
+    assert(result.passed, result.status.toString)
   }
 
   test("batch read via format(graft-log) with prefix pushdown") {
