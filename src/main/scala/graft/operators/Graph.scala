@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.Iterate.CheckpointOps
+import scala.util.Using
+
+import graft.operators.Iterate.{CheckpointOps, EdgeBlock, EdgeBlocks}
 
 /** Iterative graph analytics over relationship structures the relational
   * operators only touch pairwise — the engine family the reference
@@ -37,106 +39,89 @@ object Graph {
     *
     * Scale shape: pair generation is an l_orderkey equi-self-join with
     * per-order fanout ≤ lines²  (TPC-H ≤ 7 lines/order ⇒ ≤ 21 pairs —
-    * bounded, no blow-up); each iteration is ONE edge⋈rank equi-join +
-    * a destination-keyed partial-agg sum — the textbook distributed
-    * power iteration, `localCheckpoint` per round so lineage stays
-    * flat. Driver state: one (count) scalar per round. At 100 TB the
-    * edge table is the big operand; it partitions by source key and
-    * never materializes on the driver. */
+    * bounded, no blow-up). Under `rankBroadcastMaxNodes` the ranks live
+    * on the driver and each round is one job over the edge blocks
+    * ([[Iterate.EdgeBlocks]]); past it each iteration is ONE edge⋈rank
+    * equi-join + a destination-keyed partial-agg sum — the textbook
+    * distributed power iteration, `localCheckpoint` per round so
+    * lineage stays flat. Either way the edge table never materializes
+    * on the driver. */
   def qCopurchaseRank(s: SparkSession, d: String, iters: Int = 15,
       topK: Int = 20): DataFrame = {
     val pairs = orderPartPairs(s, d)
       .groupBy(col("u"), col("v"))
       .agg(count(lit(1)).as("w"))
-    val edges = pairs
-      .union(pairs.select(col("v").as("u"), col("u").as("v"), col("w")))
-      .cutLineage()
-    val wdeg = edges.groupBy("u")
-      .agg(sum("w").as("wdeg"), count(lit(1)).as("deg"))
-      .cutLineage()
-    val n = wdeg.count()
-    val init = 1000000000000L / n
-    val base = 150000000000L / n // (1−d)·mass, d = 0.85
-    // fold the out-weight onto the edges ONCE — the loop then never
-    // shuffles the (big) edge table: ranks are node-sized and
-    // broadcast into a map-side join each round, so the only per-round
-    // shuffle is the destination-keyed partial-agg of contributions.
-    // r10 (VERDICT r9 #7): the broadcast boundary is CODE, not a
-    // comment — past `spark.graft.graph.rankBroadcastMaxNodes` nodes
-    // (default 10M ≈ 160 MB of (u, r) rows) the hint drops and AQE
-    // plans the rank join; the edge side still stays put under its
-    // checkpointed partitioning. GraphSpec pins that both modes
-    // produce bit-identical ranks.
-    val rankBroadcastMax = s.conf
-      .get("spark.graft.graph.rankBroadcastMaxNodes", "10000000").toLong
-    val hintBroadcast = n <= rankBroadcastMax
-    Graph.lastRankBroadcast = hintBroadcast
-    def hinted(r: DataFrame): DataFrame = if (hintBroadcast) broadcast(r) else r
-    val edgesW = edges.join(wdeg.select(col("u"), col("wdeg")), Seq("u"))
-      .select(col("u"), col("v"), col("w"), col("wdeg"))
-      .cutLineage()
-    // r13 OPTIMIZATION (VERDICT r12 #4, guide §1.2): under the SAME
-    // boundary that already ships the node-sized rank table through a
-    // broadcast every round, the loop runs as a DRIVER ROUND-TRIP —
-    // each round is ONE distributed job (edge ⋈ broadcast(local ranks)
-    // → destination-keyed partial-agg sum → node-sized collect), and
-    // the damping mix `base + 85·cin div 100` is applied driver-side
-    // with identical long arithmetic (Java `/` on non-negative longs ≡
-    // SQL `div`). The old shape paid, per round, a localCheckpoint job
-    // PLUS a broadcast-build job re-reading the checkpointed blocks —
-    // 2 jobs + O(rounds) executor storage churn for the same bytes the
-    // broadcast already moved to the driver. Ranks bit-identical
-    // (GraphSpec: both boundary modes agree; sequential reference).
-    // Past the boundary, the distributed checkpoint-per-round loop
-    // below is unchanged — the edge table still never reshuffles.
-    if (hintBroadcast) {
-      import s.implicits._
-      var ranks: Seq[(Long, Long)] = wdeg.select("u").collect()
-        .map(r => (r.getLong(0), init)).toSeq
-      for (_ <- 1 to iters) {
-        val round = edgesW.join(broadcast(ranks.toDF("u", "r")), Seq("u"))
-          .select(col("v"), expr("(r * w) div wdeg").as("c"))
-          .groupBy("v").agg(sum("c").as("cin"))
-        if (roundPlanHook ne null) roundPlanHook("q163_round", round)
-        ranks = round.collect()
-          .map(r => (r.getLong(0), base + 85L * r.getLong(1) / 100L)).toSeq
-      }
-      wdeg.join(broadcast(ranks.toDF("u", "r")), "u")
-        .orderBy(col("r").desc, col("u"))
-        .limit(topK)
-        .select(col("u").as("part"), col("deg").as("degree"),
-          col("wdeg").as("weighted_degree"), col("r").as("rank_pico"))
-    } else {
-      var ranks = wdeg.select(col("u"), lit(init).as("r"))
-      for (_ <- 1 to iters) {
-        val contrib = edgesW.join(hinted(ranks), Seq("u"))
-          .select(col("v"), expr("(r * w) div wdeg").as("c"))
-          .groupBy("v").agg(sum("c").as("cin"))
-        // materialize per round: the next round's broadcast build reads
-        // ranks, so an unmaterialized chain would re-execute every round
-        // since the last cut (quadratic recompute); one node-sized
-        // checkpoint per round is the cheap side of that trade.
-        // r12 OPTIMIZATION (guide §2.4): the old per-round
-        // wdeg LEFT JOIN contrib existed to re-attach zero-in-edge nodes,
-        // but the edge set is symmetric by construction (pairs ∪
-        // reversed pairs), so every wdeg node has ≥1 in-edge and contrib
-        // already carries exactly the node set — the join (one node-sized
-        // exchange per round, ×15 rounds) is the identity and is gone.
-        val prev = ranks
-        ranks = contrib
-          .select(col("v").as("u"),
-            (lit(base) + expr("85L * cin div 100L")).as("r"))
+    val ranked = EdgeBlocks.pack(pairs, symmetric = true) match {
+      case Some(g) =>
+        lastRankBroadcast = true
+        Using.resource(g)(rankLocal(s, _, iters))
+      case None =>
+        lastRankBroadcast = false
+        val edges = pairs
+          .union(pairs.select(col("v").as("u"), col("u").as("v"), col("w")))
           .cutLineage()
-        // the new round is materialized; the superseded round's blocks
-        // would otherwise sit in executor storage until a GC cycle
-        Iterate.release(prev)
-      }
-      ranks.join(wdeg, "u")
-        .orderBy(col("r").desc, col("u"))
-        .limit(topK)
-        .select(col("u").as("part"), col("deg").as("degree"),
-          col("wdeg").as("weighted_degree"), col("r").as("rank_pico"))
+        val wdeg = edges.groupBy("u")
+          .agg(sum("w").as("wdeg"), count(lit(1)).as("deg"))
+          .cutLineage()
+        val n = wdeg.count()
+        val init = 1000000000000L / n
+        val base = 150000000000L / n // (1−d)·mass, d = 0.85
+        // fold the out-weight onto the edges ONCE — the loop then never
+        // shuffles the (big) edge table: the only per-round shuffle is
+        // the destination-keyed partial-agg of contributions.
+        val edgesW = edges.join(wdeg.select(col("u"), col("wdeg")), Seq("u"))
+          .select(col("u"), col("v"), col("w"), col("wdeg"))
+          .cutLineage()
+        var ranks = wdeg.select(col("u"), lit(init).as("r"))
+        for (_ <- 1 to iters) {
+          val contrib = edgesW.join(ranks, Seq("u"))
+            .select(col("v"), expr("(r * w) div wdeg").as("c"))
+            .groupBy("v").agg(sum("c").as("cin"))
+          // materialize per round: the next round's join reads ranks, so
+          // an unmaterialized chain would re-execute every round since
+          // the last cut (quadratic recompute). The edge set is symmetric
+          // by construction (pairs ∪ reversed pairs), so every wdeg node
+          // has ≥1 in-edge and contrib carries exactly the node set.
+          val prev = ranks
+          ranks = contrib
+            .select(col("v").as("u"),
+              (lit(base) + expr("85L * cin div 100L")).as("r"))
+            .cutLineage()
+          // the new round is materialized; the superseded round's blocks
+          // would otherwise sit in executor storage until a GC cycle
+          Iterate.release(prev)
+        }
+        ranks.join(wdeg, "u")
     }
+    ranked.orderBy(col("r").desc, col("u"))
+      .limit(topK)
+      .select(col("u").as("part"), col("deg").as("degree"),
+        col("wdeg").as("weighted_degree"), col("r").as("rank_pico"))
+  }
+
+  /** q163 on edge blocks: the same integer rounds, the damping mix
+    * `base + 85·cin div 100` folded into each block; returns
+    * (u, deg, wdeg, r). */
+  private def rankLocal(s: SparkSession, g: EdgeBlocks, iters: Int): DataFrame = {
+    import s.implicits._
+    val n = g.size.toLong
+    val base = 150000000000L / n
+    var r = Array.fill(g.size)(1000000000000L / n)
+    for (_ <- 1 to iters)
+      r = g.round((r, g.wdeg)) { case (b, ids, (rank, wdeg)) =>
+        b.perKey { (from, until) =>
+          var cin = 0L
+          var e = from
+          while (e < until) {
+            val j = EdgeBlocks.at(ids, b.nbr(e))
+            cin = Math.addExact(cin, Math.multiplyExact(rank(j), b.w(e)) / wdeg(j))
+            e += 1
+          }
+          Math.addExact(base, Math.multiplyExact(85L, cin) / 100L)
+        }
+      }
+    g.ids.indices.map(i => (g.ids(i), g.deg(i), g.wdeg(i), r(i)))
+      .toDF("u", "deg", "wdeg", "r")
   }
 
   /** q166: triangle census of the co-purchase graph — triangle count,
@@ -291,9 +276,9 @@ object Graph {
     * per-node h-index (window row_number over in-row neighbor values,
     * bounded by degree) — the same equi-shuffle round discipline as
     * q57/q163, `localCheckpoint` per round, one scalar count on the
-    * driver. The spec proves the fixpoint equals sequential
-    * Batagelj–Zaversnik peeling on the real sf graph and a handcrafted
-    * clique-plus-tail. */
+    * driver; under `rankBroadcastMaxNodes`, one edge-block job. The
+    * spec proves the fixpoint equals sequential Batagelj–Zaversnik
+    * peeling on the real sf graph and a handcrafted clique-plus-tail. */
   def qKCore(s: SparkSession, d: String, maxRounds: Int = 50): DataFrame =
     kCoreHistogram(copurchaseEdges(s, d))
 
@@ -316,78 +301,71 @@ object Graph {
     * ToomCook multiply in SizeInBytesOnlyStatsPlanVisitor). */
   private[graft] def kCoreHistogram(pairs0: DataFrame,
       maxRounds: Int = 100): DataFrame = {
-    val s = pairs0.sparkSession
-    val pairs = pairs0.cutLineage()
-    val bidir = pairs
-      .union(pairs.select(col("v").as("u"), col("u").as("v")))
-      .cutLineage()
-    val core0 = bidir.groupBy("u").agg(count(lit(1)).as("core"))
-      .cutLineage()
+    val cores = EdgeBlocks.pack(pairs0, symmetric = true) match {
+      case Some(g) => Using.resource(g)(kCoreLocal(pairs0.sparkSession, _, maxRounds))
+      case None =>
+        val pairs = pairs0.cutLineage()
+        val bidir = pairs
+          .union(pairs.select(col("v").as("u"), col("u").as("v")))
+          .cutLineage()
+        var core = bidir.groupBy("u").agg(count(lit(1)).as("core"))
+          .cutLineage()
+        var changed = 1L
+        var round = 0
+        // h-index of the neighbor multiset: sorted desc, the count of
+        // positions whose value covers the position is the h (prefix
+        // property: values non-increasing vs threshold increasing)
+        val hExpr = expr(
+          "size(filter(transform(sort_array(ncs, false), (x, i) -> x >= i + 1)," +
+            " b -> b))")
+        var prevNext: DataFrame = null
+        while (changed > 0 && round < maxRounds) {
+          val h = bidir
+            .join(core.select(col("u").as("v"), col("core").as("nc")), Seq("v"))
+            .groupBy("u").agg(collect_list("nc").as("ncs"))
+            .select(col("u"), hExpr.cast("long").as("h"))
+          val next = core.join(h, Seq("u"))
+            .select(col("u"), col("core"), least(col("core"), col("h")).as("nc"))
+            .cutLineage()
+          changed = next.filter(col("nc") < col("core")).count()
+          if (prevNext ne null) Iterate.release(prevNext) // superseded round
+          prevNext = next
+          core = next.select(col("u"), col("nc").as("core"))
+          round += 1
+          if (probeHook ne null) probeHook(round, changed)
+        }
+        core
+    }
+    cores.groupBy("core").agg(count(lit(1)).as("n_nodes"))
+      .select(col("core").as("coreness"), col("n_nodes"))
+  }
+
+  /** [[kCoreHistogram]] on edge blocks: each block computes its nodes'
+    * h-indexes; the `least(core, h)` contraction and the changed count
+    * run on the driver. Returns the final cores as one `core` column. */
+  private def kCoreLocal(s: SparkSession, g: EdgeBlocks,
+      maxRounds: Int): DataFrame = {
+    import s.implicits._
+    val core = g.deg.clone()
     var changed = 1L
     var round = 0
-    // h-index of the neighbor multiset: sorted desc, the count of
-    // positions whose value covers the position is the h (prefix
-    // property: values non-increasing vs threshold increasing)
-    val hExpr = expr(
-      "size(filter(transform(sort_array(ncs, false), (x, i) -> x >= i + 1)," +
-        " b -> b))")
-    val nNodes = core0.count()
-    val rankBroadcastMax = s.conf
-      .get("spark.graft.graph.rankBroadcastMaxNodes", "10000000").toLong
-    // r13 OPTIMIZATION (the q163/q365 driver-round device): the core
-    // table is node-sized; under the broadcast boundary each sweep is
-    // ONE job — edge ⋈ broadcast(local cores) → per-node h-index →
-    // collect — with the `least(core, h)` contraction and the
-    // changed-count applied driver-side, replacing the old per-round
-    // shuffle join + node-sized checkpoint + separate count job.
-    // Values bit-identical (integer h-index; GraphSpec pins the
-    // fixpoint against sequential Batagelj–Zaversnik peeling). Past the
-    // boundary the dense checkpoint-per-sweep loop is unchanged.
-    if (nNodes <= rankBroadcastMax) {
-      import s.implicits._
-      var core = core0.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      Iterate.release(core0) // the loop state now lives on the driver
-      while (changed > 0 && round < maxRounds) {
-        val sweep = bidir
-          .join(broadcast(core.toSeq.toDF("v", "nc")), Seq("v"))
-          .groupBy("u").agg(collect_list("nc").as("ncs"))
-          .select(col("u"), hExpr.cast("long").as("h"))
-        if (roundPlanHook ne null) roundPlanHook("q184_sweep", sweep)
-        var ch = 0L
-        val next = sweep.collect().map { r =>
-          val u = r.getLong(0)
-          val nc = math.min(core(u), r.getLong(1))
-          if (nc < core(u)) ch += 1
-          u -> nc
-        }.toMap
-        core = next
-        changed = ch
-        round += 1
-        if (probeHook ne null) probeHook(round, changed)
+    while (changed > 0 && round < maxRounds) {
+      val h = g.round(core) { (b, ids, cores) =>
+        b.perKey { (from, until) =>
+          val ncs = Array.tabulate(until - from)(k => cores(EdgeBlocks.at(ids, b.nbr(from + k))))
+          java.util.Arrays.sort(ncs)
+          // the k-th largest value is ncs(d - 1 - k); h = #k with it ≥ k + 1
+          var k = 0
+          while (k < ncs.length && ncs(ncs.length - 1 - k) >= k + 1) k += 1
+          k.toLong
+        }
       }
-      core.groupBy(_._2).map { case (c, m) => (c, m.size.toLong) }
-        .toSeq.toDF("coreness", "n_nodes")
-    } else {
-      var core = core0
-      var prevNext: DataFrame = null
-      while (changed > 0 && round < maxRounds) {
-        val h = bidir
-          .join(core.select(col("u").as("v"), col("core").as("nc")), Seq("v"))
-          .groupBy("u").agg(collect_list("nc").as("ncs"))
-          .select(col("u"), hExpr.cast("long").as("h"))
-        val next = core.join(h, Seq("u"))
-          .select(col("u"), col("core"), least(col("core"), col("h")).as("nc"))
-          .cutLineage()
-        changed = next.filter(col("nc") < col("core")).count()
-        if (prevNext ne null) Iterate.release(prevNext) // superseded round
-        prevNext = next
-        core = next.select(col("u"), col("nc").as("core"))
-        round += 1
-        if (probeHook ne null) probeHook(round, changed)
-      }
-      core.groupBy("core").agg(count(lit(1)).as("n_nodes"))
-        .select(col("core").as("coreness"), col("n_nodes"))
+      changed = 0L
+      for (i <- core.indices if h(i) < core(i)) { core(i) = h(i); changed += 1 }
+      round += 1
+      if (probeHook ne null) probeHook(round, changed)
     }
+    core.toSeq.toDF("core")
   }
 
   /** The Batagelj–Zaversnik BUCKET variant of [[kCoreHistogram]] —
@@ -457,17 +435,9 @@ object Graph {
 
   @volatile private[graft] var probeHook: (Int, Long) => Unit = null
 
-  /** r13 (VERDICT r12 #9): observability hook for MID-ITERATION plan
-    * evidence — the loop operators' round frames never appear in the
-    * final query plan (they are consumed by per-round actions), so the
-    * committed `plans/` files could not evidence the per-round join
-    * shapes. Tools set this to capture one round frame's explain; the
-    * production path pays a null check. */
-  @volatile private[graft] var roundPlanHook: (String, DataFrame) => Unit = null
-
   /** Observability for GraphSpec/probes: whether the last
-    * [[qCopurchaseRank]] run hinted the rank join broadcast (the
-    * r10 conditional boundary). */
+    * [[qCopurchaseRank]] run took the edge-block path (under
+    * `rankBroadcastMaxNodes`) rather than the distributed loop. */
   @volatile private[graft] var lastRankBroadcast: Boolean = true
 
   /** Dev instrumentation for the iteration's round/frontier profile. */
@@ -560,81 +530,74 @@ object Graph {
     * an anti-join against the visited set; rounds ≤ the graph's
     * diameter (single digits on co-purchase graphs — the small-world
     * property), each localCheckpointed so lineage stays flat. This is
-    * Pregel's BFS as plain DataFrame joins: no driver state beyond a
-    * per-round count. The DuckDB oracle walks the same frontier with
+    * Pregel's BFS as plain DataFrame joins; under
+    * `rankBroadcastMaxNodes` the hops live on the driver and each round
+    * is one edge-block job. The DuckDB oracle walks the same frontier with
     * a recursive CTE — hop-minimal by UNION dedup. */
   def qBfsHops(s: SparkSession, d: String, maxHops: Int = 8): DataFrame = {
     val pairs = copurchaseEdges(s, d)
-    val bidir = pairs
-      .union(pairs.select(col("v").as("u"), col("u").as("v")))
-      .cutLineage()
-    val deg = bidir.groupBy("u").agg(count(lit(1)).as("dg"))
-    val nNodes = deg.count()
-    val source = deg.orderBy(col("dg").desc, col("u")).limit(1)
-      .head().getLong(0)
-    // r12 OPTIMIZATION (guide §2.4/§3.1): frontier and visited are
-    // node-sized; hinting them broadcast makes each hop's expansion a
-    // map-side hash join + a map-side anti-join over the CHECKPOINTED
-    // edge blocks — the edge table never re-shuffles per hop (the old
-    // plan sort-merge-joined bidir against the frontier every round).
-    // Same conditional boundary as q163's rank broadcast: past
-    // `rankBroadcastMaxNodes` the hints drop and AQE plans the joins.
-    val rankBroadcastMax = s.conf
-      .get("spark.graft.graph.rankBroadcastMaxNodes", "10000000").toLong
-    def hinted(r: DataFrame): DataFrame =
-      if (nNodes <= rankBroadcastMax) broadcast(r) else r
+    EdgeBlocks.pack(pairs, symmetric = true) match {
+      case Some(g) => Using.resource(g)(bfsLocal(s, _, maxHops))
+      case None =>
+        val bidir = pairs
+          .union(pairs.select(col("v").as("u"), col("u").as("v")))
+          .cutLineage()
+        val deg = bidir.groupBy("u").agg(count(lit(1)).as("dg"))
+        val nNodes = deg.count()
+        val source = deg.orderBy(col("dg").desc, col("u")).limit(1)
+          .head().getLong(0)
+        import s.implicits._
+        var visited = Seq((source, 0)).toDF("node", "hop").cutLineage()
+        var frontier = visited.select("node")
+        var prevNext: DataFrame = null
+        var hop = 1
+        var frontierSize = 1L
+        while (hop <= maxHops && frontierSize > 0) {
+          val next = bidir.join(frontier.select(col("node").as("u")), Seq("u"))
+            .select(col("v").as("node")).distinct()
+            .join(visited, Seq("node"), "left_anti")
+            .withColumn("hop", lit(hop))
+            .cutLineage()
+          frontierSize = next.count()
+          val prevVisited = visited
+          visited = visited.union(next).cutLineage()
+          Iterate.release(prevVisited) // superseded by the union above
+          if (prevNext ne null) Iterate.release(prevNext) // last round's frontier
+          prevNext = next
+          frontier = next.select("node")
+          hop += 1
+        }
+        val reached = visited.groupBy("hop").agg(count(lit(1)).as("n_nodes"))
+        val unreachedCount = nNodes - visited.count()
+        reached.union(Seq((-1, unreachedCount)).toDF("hop", "n_nodes"))
+    }
+  }
+
+  /** q171 on edge blocks: hop `h` reaches every unvisited node with a
+    * neighbour at hop `h − 1` (the first hop that reaches a node claims
+    * it, as the frontier anti-join does). */
+  private def bfsLocal(s: SparkSession, g: EdgeBlocks, maxHops: Int): DataFrame = {
     import s.implicits._
-    // r13 OPTIMIZATION (the q163/q365 driver-round device): frontier
-    // and visited are node-sized and already crossed the driver every
-    // hop as broadcast builds; keeping them AS driver state makes each
-    // hop ONE job — edge ⋈ broadcast(local frontier) → distinct →
-    // collect — with the visited anti-join a driver-side set filter,
-    // replacing the old per-hop checkpoint + count + visited-union
-    // checkpoint. Hop assignment identical (first hop that reaches a
-    // node claims it). Past the boundary the r12 loop is unchanged.
-    if (nNodes <= rankBroadcastMax) {
-      val visited = scala.collection.mutable.LongMap.empty[Int]
-      visited(source) = 0
-      var frontier: Seq[Long] = Seq(source)
-      var hop = 1
-      while (hop <= maxHops && frontier.nonEmpty) {
-        val next = bidir
-          .join(broadcast(frontier.toDF("u")), Seq("u"))
-          .select(col("v")).distinct()
-        if (roundPlanHook ne null) roundPlanHook("q171_hop", next)
-        frontier = next.collect().iterator.map(_.getLong(0))
-          .filter(n => !visited.contains(n)).toSeq
-        frontier.foreach(n => visited(n) = hop)
-        hop += 1
+    var source = 0 // max degree, lowest id
+    for (i <- g.deg.indices if g.deg(i) > g.deg(source)) source = i
+    val hop = Array.fill(g.size)(-1L)
+    hop(source) = 0L
+    val perHop = new Array[Long](maxHops + 1)
+    perHop(0) = 1L
+    var h = 1
+    while (h <= maxHops && perHop(h - 1) > 0) {
+      val touched = g.round((hop, h - 1L)) { case (b, ids, (hops, prev)) =>
+        b.perKey { (from, until) =>
+          var e = from
+          while (e < until && hops(EdgeBlocks.at(ids, b.nbr(e))) != prev) e += 1
+          if (e < until) 1L else 0L
+        }
       }
-      val reached = visited.valuesIterator.toSeq.groupBy(identity)
-        .map { case (h, hs) => (h, hs.size.toLong) }.toSeq
-      (reached :+ ((-1, nNodes - visited.size))).toDF("hop", "n_nodes")
-    } else {
-    var visited = Seq((source, 0)).toDF("node", "hop").cutLineage()
-    var frontier = visited.select("node")
-    var prevNext: DataFrame = null
-    var hop = 1
-    var frontierSize = 1L
-    while (hop <= maxHops && frontierSize > 0) {
-      val next = bidir.join(hinted(frontier.select(col("node").as("u"))), Seq("u"))
-        .select(col("v").as("node")).distinct()
-        .join(hinted(visited), Seq("node"), "left_anti")
-        .withColumn("hop", lit(hop))
-        .cutLineage()
-      frontierSize = next.count()
-      val prevVisited = visited
-      visited = visited.union(next).cutLineage()
-      Iterate.release(prevVisited) // superseded by the union above
-      if (prevNext ne null) Iterate.release(prevNext) // last round's frontier
-      prevNext = next
-      frontier = next.select("node")
-      hop += 1
+      for (i <- hop.indices if touched(i) == 1L && hop(i) < 0) { hop(i) = h; perHop(h) += 1 }
+      h += 1
     }
-    val reached = visited.groupBy("hop").agg(count(lit(1)).as("n_nodes"))
-    val unreachedCount = nNodes - visited.count()
-    reached.union(Seq((-1, unreachedCount)).toDF("hop", "n_nodes"))
-    }
+    ((0 to maxHops).filter(perHop(_) > 0).map(h => (h, perHop(h))) :+
+      ((-1, g.size - perHop.sum))).toDF("hop", "n_nodes")
   }
 
   /** q169: degree assortativity — the Pearson correlation of endpoint
@@ -816,60 +779,53 @@ object Graph {
     * step is integer vote counting + an argmax-by-(count, −label)
     * struct max — engine- and partitioning-invariant. */
   private[graft] def labelPropagation(pairs: DataFrame,
-      rounds: Int): DataFrame = {
-    val s = pairs.sparkSession
-    val bidir = pairs
-      .union(pairs.select(col("v").as("u"), col("u").as("v")))
-      .cutLineage()
-    val nodes = bidir.select(col("u").as("node")).distinct().cutLineage()
-    val nNodes = nodes.count()
-    val rankBroadcastMax = s.conf
-      .get("spark.graft.graph.rankBroadcastMaxNodes", "10000000").toLong
-    // r13 OPTIMIZATION (the q163/q365 driver-round device, VERDICT r12
-    // #4): labels are node-sized; under the broadcast boundary each
-    // round is ONE job — edge ⋈ broadcast(local labels) → (u, label)
-    // vote rollup → argmax-by-(cnt, −label) → node-sized collect —
-    // instead of a shuffle join + checkpoint job per round (the old
-    // labels join carried no hint, so bidir re-shuffled EVERY round).
-    // The plurality argmax stays in the distributed agg; the driver
-    // only swaps the row buffer. Bit-identical labels (GraphSpec's
-    // sequential reference; integer vote counts are partitioning-
-    // invariant). Past the boundary the r12 loop is unchanged.
-    if (nNodes <= rankBroadcastMax) {
-      import s.implicits._
-      var labelRows: Seq[(Long, Long)] = nodes.collect()
-        .map(r => (r.getLong(0), r.getLong(0))).toSeq
-      for (_ <- 1 to rounds) {
-        val round = bidir
-          .join(broadcast(labelRows.toDF("v", "label")), Seq("v"))
-          .groupBy(col("u"), col("label")).agg(count(lit(1)).as("cnt"))
-          .select(col("u"),
-            struct(col("cnt"), (-col("label")).as("neg")).as("sv"))
-          .groupBy("u").agg(max(col("sv")).as("m"))
-          .select(col("u").as("node"), (-col("m.neg")).as("label"))
-        if (roundPlanHook ne null) roundPlanHook("q253_round", round)
-        labelRows = round.collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      rounds: Int): DataFrame =
+    EdgeBlocks.pack(pairs, symmetric = true) match {
+      case Some(g) => Using.resource(g) { g =>
+        import pairs.sparkSession.implicits._
+        var label = g.ids
+        for (_ <- 1 to rounds)
+          label = g.round(label) { (b, ids, labels) =>
+            b.perKey { (from, until) =>
+              val ls = Array.tabulate(until - from)(k => labels(EdgeBlocks.at(ids, b.nbr(from + k))))
+              java.util.Arrays.sort(ls)
+              // plurality label: runs ascend, so only a strictly longer
+              // run wins and ties go to the minimum label
+              var best = ls(0)
+              var bestN = 0
+              var k = 0
+              while (k < ls.length) {
+                var j = k
+                while (j < ls.length && ls(j) == ls(k)) j += 1
+                if (j - k > bestN) { best = ls(k); bestN = j - k }
+                k = j
+              }
+              best
+            }
+          }
+        g.ids.indices.map(i => (g.ids(i), label(i))).toDF("node", "label")
       }
-      labelRows.toDF("node", "label")
-    } else {
-      var labels = nodes.withColumn("label", col("node"))
-      for (_ <- 1 to rounds) {
-        val votes = bidir
-          .join(labels.select(col("node").as("v"), col("label")), Seq("v"))
-          .groupBy(col("u"), col("label")).agg(count(lit(1)).as("cnt"))
-        val prev = labels
-        labels = votes
-          .select(col("u"),
-            struct(col("cnt"), (-col("label")).as("neg")).as("sv"))
-          .groupBy("u").agg(max(col("sv")).as("m"))
-          .select(col("u").as("node"), (-col("m.neg")).as("label"))
+      case None =>
+        val bidir = pairs
+          .union(pairs.select(col("v").as("u"), col("u").as("v")))
           .cutLineage()
-        Iterate.release(prev) // superseded round frame
-      }
-      labels
+        var labels = bidir.select(col("u").as("node")).distinct()
+          .withColumn("label", col("node"))
+        for (_ <- 1 to rounds) {
+          val votes = bidir
+            .join(labels.select(col("node").as("v"), col("label")), Seq("v"))
+            .groupBy(col("u"), col("label")).agg(count(lit(1)).as("cnt"))
+          val prev = labels
+          labels = votes
+            .select(col("u"),
+              struct(col("cnt"), (-col("label")).as("neg")).as("sv"))
+            .groupBy("u").agg(max(col("sv")).as("m"))
+            .select(col("u").as("node"), (-col("m.neg")).as("label"))
+            .cutLineage()
+          Iterate.release(prev) // superseded round frame
+        }
+        labels
     }
-  }
 
   /** q253: synchronous label-propagation communities on the
     * co-purchase BACKBONE (Raghavan et al., Phys. Rev. E'07) — the
@@ -896,7 +852,8 @@ object Graph {
     * Scale shape: one weighted pair rollup (per-order fanout ≤ lines²,
     * q163's bound), then per round ONE edge⋈labels equi-join and a
     * (node, label) vote rollup — the Pregel message pattern as
-    * DataFrame joins, localCheckpoint per round; rounds fixed.
+    * DataFrame joins, localCheckpoint per round (one edge-block job
+    * under `rankBroadcastMaxNodes`); rounds fixed.
     * Report: top-10 communities + census, TakeOrdered cut. */
   def qLabelPropagation(s: SparkSession, d: String, rounds: Int = 5,
       topK: Int = 10, minShared: Int = 2): DataFrame = {
@@ -986,10 +943,11 @@ object Graph {
     * recompute). Rows-only in the gate: mutually-recursive normalized
     * iteration exceeds recursive-CTE SQL.
     *
-    * Scale shape: the edge list (customer, part) is checkpointed once
-    * and never reshuffles; per round the node-sized score table
-    * broadcasts into a map-side join (the q163 boundary conf applies),
-    * and the only shuffle is the destination-keyed partial agg.
+    * Scale shape: under `rankBroadcastMaxNodes` customers the edge list
+    * is packed into edge blocks twice (keyed by customer and by part)
+    * and each half-round is one job; past it the edge list is
+    * checkpointed once and never reshuffles, and each half-round is an
+    * edge⋈score join plus the destination-keyed partial agg:
     * 2·iters rounds of node-sized checkpoints. */
   def qHits(s: SparkSession, d: String, iters: Int = 12,
       topK: Int = 20): DataFrame = {
@@ -997,97 +955,54 @@ object Graph {
       .join(lineitem(s, d).select(col("l_orderkey").as("o"), col("l_partkey").as("p")), Seq("o"))
       .select("c", "p").distinct()
       .cutLineage()
-    val custs = edges.select("c").distinct().cutLineage()
-    val nC = custs.count()
-    val scale = 1000000000000L
-    val rankBroadcastMax = s.conf
-      .get("spark.graft.graph.rankBroadcastMaxNodes", "10000000").toLong
-    def hinted(r: DataFrame): DataFrame =
-      if (nC <= rankBroadcastMax) broadcast(r) else r
-    // L1-renormalize to Σ = 10¹² with integer div (remainder ≤ #nodes
-    // picos — sub-ppm — vanishes identically on both recomputes). The
-    // product s·10¹² tops 64 bits (s can carry a whole round's
-    // un-normalized mass), so it rides DECIMAL(38,0) and lands back
-    // in BIGINT after the div.
-    def renorm(scores: DataFrame, key: String): DataFrame = {
-      val row = scores.agg(sum("s")).collect()(0)
-      // an empty edge set (or an all-zero round) yields a NULL/0 sum —
-      // fail with a clear message instead of an NPE / div-by-zero
-      require(!row.isNullAt(0) && row.getLong(0) > 0,
-        s"HITS renorm: total $key mass is empty or zero — graph has no edges")
-      val tot = row.getLong(0)
-      scores.select(col(key),
-        expr(s"CAST(CAST(s AS DECIMAL(38,0)) * $scale div $tot AS BIGINT)")
-          .as("s"))
-    }
-    // r13 OPTIMIZATION (VERDICT r12 #4, guide §1.2): under the same
-    // broadcast boundary, each half-round fuses into ONE distributed
-    // job — edge ⋈ broadcast(local scores) → destination-keyed sum →
-    // node-sized collect — with the L1 renorm applied driver-side in
-    // BigInt (≡ the engine's DECIMAL(38,0) `div`: both truncate toward
-    // zero on non-negatives; HitsSpec's recompute pins exactly this).
-    // The old shape paid THREE driver-visible steps per half-round
-    // (checkpoint job, mass-sum collect job, next join's broadcast
-    // build) for the same bytes; at sf0.1 those fixed costs WERE the
-    // query (~0.55 s/half-round × 24). Past the boundary the r12
-    // checkpoint-per-half-round loop is unchanged.
-    if (nC <= rankBroadcastMax) {
-      import s.implicits._
-      def renormLocal(rows: Array[org.apache.spark.sql.Row],
-          key: String): Seq[(Long, Long)] = {
-        val tot = rows.iterator.map(_.getLong(1)).sum
-        require(tot > 0,
-          s"HITS renorm: total $key mass is empty or zero — graph has no edges")
-        rows.map(r => (r.getLong(0), (BigInt(r.getLong(1)) * scale / tot).toLong)).toSeq
+    // the boundary counts customers, as the fallback's one did; the
+    // parts' blocks follow them. Neither path's result reads `edges`.
+    val (auths, hubs) = try EdgeBlocks.pack(edges, symmetric = false) match {
+      case Some(byC) => Using.resource(byC) { byC =>
+        Using.resource(EdgeBlocks.pack(edges.select("p", "c"), symmetric = false,
+          bounded = false).get)(hitsLocal(s, byC, _, iters))
       }
-      var hubRows: Seq[(Long, Long)] = custs.select("c").collect()
-        .map(r => (r.getLong(0), scale / math.max(nC, 1L))).toSeq
-      var authRows: Seq[(Long, Long)] = Seq.empty
-      for (_ <- 1 to iters) {
-        val roundA = edges.join(broadcast(hubRows.toDF("c", "s")), Seq("c"))
-          .groupBy("p").agg(sum("s").as("s"))
-        if (roundPlanHook ne null) roundPlanHook("q365_half_round", roundA)
-        authRows = renormLocal(roundA.collect(), "p")
-        hubRows = renormLocal(
-          edges.join(broadcast(authRows.toDF("p", "s")), Seq("p"))
-            .groupBy("c").agg(sum("s").as("s")).collect(), "c")
-      }
-      val topA = authRows.toDF("p", "s").orderBy(col("s").desc, col("p"))
-        .limit(topK)
-        .select(lit("authority").as("role"), col("p").as("node"),
-          col("s").as("score_pico"))
-      val topH = hubRows.toDF("c", "s").orderBy(col("s").desc, col("c"))
-        .limit(topK)
-        .select(lit("hub").as("role"), col("c").as("node"),
-          col("s").as("score_pico"))
-      topA.unionAll(topH).orderBy(col("role"), col("score_pico").desc, col("node"))
-    } else {
-    var hubs = custs.select(col("c"), lit(scale / math.max(nC, 1L)).as("s"))
-      .cutLineage()
-    var auths: DataFrame = null
-    // r12 OPTIMIZATION (guide §1.2, don't compute things twice): the
-    // old shape was renorm(join+agg).cutLineage() — renorm's mass-sum
-    // collect executed the edge join + rollup once, then the
-    // cutLineage checkpoint RE-executed the same join + rollup (the
-    // renorm select's lineage still held the unmaterialized subtree).
-    // Checkpointing the raw rollup FIRST makes the mass sum and the
-    // renorm select both cheap node-sized reads of checkpointed blocks:
-    // each half-round now pays its edge join exactly once (halves the
-    // per-round heavy work; ranks bit-identical, HitsSpec).
-    var prevA: DataFrame = null
-    var prevH: DataFrame = null
-    for (_ <- 1 to iters) {
-      val rawA = edges.join(hinted(hubs), Seq("c"))
-        .groupBy("p").agg(sum("s").as("s")).cutLineage()
-      if (prevA ne null) Iterate.release(prevA) // superseded half-round
-      prevA = rawA
-      auths = renorm(rawA, "p")
-      val rawH = edges.join(hinted(auths), Seq("p"))
-        .groupBy("c").agg(sum("s").as("s")).cutLineage()
-      if (prevH ne null) Iterate.release(prevH)
-      prevH = rawH
-      hubs = renorm(rawH, "c")
-    }
+      case None =>
+        val custs = edges.select("c").distinct().cutLineage()
+        val nC = custs.count()
+        // L1-renormalize to Σ = 10¹² with integer div (remainder ≤ #nodes
+        // picos — sub-ppm — vanishes identically on both recomputes). The
+        // product s·10¹² tops 64 bits (s can carry a whole round's
+        // un-normalized mass), so it rides DECIMAL(38,0) and lands back
+        // in BIGINT after the div.
+        def renorm(scores: DataFrame, key: String): DataFrame = {
+          val row = scores.agg(sum("s")).collect()(0)
+          // an empty edge set (or an all-zero round) yields a NULL/0 sum —
+          // fail with a clear message instead of an NPE / div-by-zero
+          require(!row.isNullAt(0) && row.getLong(0) > 0,
+            s"HITS renorm: total $key mass is empty or zero — graph has no edges")
+          val tot = row.getLong(0)
+          scores.select(col(key),
+            expr(s"CAST(CAST(s AS DECIMAL(38,0)) * $HitsScale div $tot AS BIGINT)")
+              .as("s"))
+        }
+        var hubs = custs.select(col("c"), lit(HitsScale / math.max(nC, 1L)).as("s"))
+          .cutLineage()
+        var auths: DataFrame = null
+        // the raw rollup is checkpointed FIRST, so the mass sum and the
+        // renorm select are both node-sized reads of checkpointed blocks
+        // and each half-round pays its edge join exactly once
+        var prevA: DataFrame = null
+        var prevH: DataFrame = null
+        for (_ <- 1 to iters) {
+          val rawA = edges.join(hubs, Seq("c"))
+            .groupBy("p").agg(sum("s").as("s")).cutLineage()
+          if (prevA ne null) Iterate.release(prevA) // superseded half-round
+          prevA = rawA
+          auths = renorm(rawA, "p")
+          val rawH = edges.join(auths, Seq("p"))
+            .groupBy("c").agg(sum("s").as("s")).cutLineage()
+          if (prevH ne null) Iterate.release(prevH)
+          prevH = rawH
+          hubs = renorm(rawH, "c")
+        }
+        (auths, hubs)
+    } finally Iterate.release(edges)
     val topA = auths.orderBy(col("s").desc, col("p"))
       .limit(topK)
       .select(lit("authority").as("role"), col("p").as("node"),
@@ -1097,6 +1012,40 @@ object Graph {
       .select(lit("hub").as("role"), col("c").as("node"),
         col("s").as("score_pico"))
     topA.unionAll(topH).orderBy(col("role"), col("score_pico").desc, col("node"))
+  }
+
+  private val HitsScale = 1000000000000L
+
+  /** q365 on edge blocks: customers' blocks (`byC`) and parts' blocks
+    * (`byP`), each half-round one block sum plus [[hitsRenorm]]; returns
+    * the authorities (p, s) and the hubs (c, s). */
+  private def hitsLocal(s: SparkSession, byC: EdgeBlocks, byP: EdgeBlocks,
+      iters: Int): (DataFrame, DataFrame) = {
+    import s.implicits._
+    val sumNbrs = (b: EdgeBlock, ids: Array[Long], x: Array[Long]) =>
+      b.perKey { (from, until) =>
+        var t = 0L
+        var e = from
+        while (e < until) { t = Math.addExact(t, x(EdgeBlocks.at(ids, b.nbr(e)))); e += 1 }
+        t
+      }
+    var hub = Array.fill(byC.size)(HitsScale / math.max(byC.size, 1L))
+    var auth = Array.emptyLongArray
+    for (_ <- 1 to iters) {
+      auth = hitsRenorm(byP.round(hub, byC)(sumNbrs), "p")
+      hub = hitsRenorm(byC.round(auth, byP)(sumNbrs), "c")
     }
+    (byP.ids.indices.map(i => (byP.ids(i), auth(i))).toDF("p", "s"),
+      byC.ids.indices.map(i => (byC.ids(i), hub(i))).toDF("c", "s"))
+  }
+
+  /** One HITS L1 renormalization to Σ = 10¹² picos, `x·10¹² div Σx` —
+    * exact, like the distributed path's DECIMAL(38,0) ride. A total past
+    * `Long.MaxValue` raises, as the distributed path's ANSI `sum` does. */
+  private[graft] def hitsRenorm(raw: Array[Long], key: String): Array[Long] = {
+    val tot = raw.foldLeft(0L)((a, x) => Math.addExact(a, x))
+    require(tot > 0,
+      s"HITS renorm: total $key mass is empty or zero — graph has no edges")
+    raw.map(x => (BigInt(x) * HitsScale / tot).toLong)
   }
 }
