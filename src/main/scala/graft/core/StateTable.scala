@@ -1,8 +1,8 @@
 package graft.core
 
 import java.util.concurrent.locks.ReentrantLock
-import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -11,12 +11,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Every key holds a hash (field → value), which covers both string
   * values (single field "value") and hash values, the two types the
-  * reference's tests exercise. All mutation goes through a single
-  * commit path under one lock, giving the reference's sync-execution
-  * atomicity (E8: sync functions run under the Redis GIL,
+  * reference's tests exercise, and/or a list. All mutation goes through
+  * a single commit path under one lock, giving the reference's
+  * sync-execution atomicity (E8: sync functions run under the Redis GIL,
   * `redisgears_core/src/lib.rs:1368-1387`) and atomic effect visibility
   * (E12: replication as MULTI/EXEC) at *transaction* granularity — the
   * documented weaker-but-equivalent guarantee from SURVEY §7.5.1.
+  *
+  * Storage mirrors Redis's `db->dict` / `db->expires` split: `entries`
+  * maps each live key to one [[StateTable.Entry]] holding its hash and
+  * list values, LRU stamp, byte footprint and owning library, and
+  * `expiries` holds deadlines for the keys that have a TTL only, so the
+  * active sweep visits just those. Both are plain hash maps: EVERY read
+  * or write of them (and of the byte counters) holds `lock`, as every
+  * Redis command runs on its main thread — no access may bypass it.
   *
   * Keyspace notifications (the R4 trigger source) are emitted
   * synchronously inside the commit, matching the reference's
@@ -33,11 +41,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final class StateTable {
   import StateTable._
 
-  private val data = TrieMap.empty[String, Map[String, String]]
-  // list values (Redis list type) — same lock, separate shape
-  private val lists = TrieMap.empty[String, Vector[String]]
+  // key -> its entry; an entry exists exactly while the key does
+  private val entries = new java.util.HashMap[String, Entry]()
   // key -> absolute expiry epoch-millis (Redis TTL semantics)
-  private val expiries = TrieMap.empty[String, Long]
+  private val expiries = scala.collection.mutable.HashMap.empty[String, Long]
   private val lock = new ReentrantLock()
   private val listSignal = lock.newCondition()
   private val subscribers = new ArrayBuffer[KeyEvent => Unit]
@@ -52,13 +59,10 @@ final class StateTable {
   // each removal fires an "evicted" event through the same subscriber
   // surface as "set"/"expired", so keyspace triggers can consume the
   // full reference event-class set. Recency is approximate LRU
-  // (touched on writes and point reads), like Redis's sampled LRU.
+  // (touched on writes and point reads), like Redis's sampled LRU: each
+  // entry carries the `touchSeq` of its last touch.
   @volatile private var maxKeys: Int = 0
-  // recency bookkeeping: every caller already holds `lock` (commit,
-  // withLock reads, list ops, expiry, enforceCap), so a plain HashMap
-  // is safe and keeps the per-access cost off the TrieMap CAS path
   private var touchSeq = 0L
-  private val touched = new java.util.HashMap[String, Long]()
 
   /** Set the eviction cap (0 disables). Takes effect on the next
     * write-bearing commit. */
@@ -68,84 +72,60 @@ final class StateTable {
   }
   def getMaxKeys: Int = maxKeys
 
-  private def touch(key: String): Unit = {
-    touchSeq += 1
-    touched.put(key, touchSeq)
-  }
-
-  // live distinct-key count across `data` and `lists`, maintained at
-  // every add/remove chokepoint (all under the lock) so the cap check
-  // on the commit hot path is O(1) — materializing and deduping the
-  // full key list per commit would tax every call the moment a cap is
-  // set. noteAdded runs BEFORE the insert; noteRemoved AFTER the
-  // removal from one map (it decrements — and drops the recency entry —
-  // only when the key is gone from BOTH maps, so a key present as
-  // string and list still counts once).
-  private var keyCount = 0
-  private def noteAdded(key: String): Unit =
-    if (!data.contains(key) && !lists.contains(key)) keyCount += 1
-  private def noteRemoved(key: String): Unit =
-    if (!data.contains(key) && !lists.contains(key)) {
-      keyCount -= 1
-      touched.remove(key)
-    }
+  private def touch(e: Entry): Unit = { touchSeq += 1; e.stamp = touchSeq }
+  private def entryFor(key: String): Entry = entries.computeIfAbsent(key, _ => new Entry)
 
   // --- memory accounting (E11: the reference caps each library's V8
   // heap, v8_backend.rs:305-393; the keyspace analogue here is exact
   // bytes-in-state per key, attributed to the library whose function
   // performed the write). Maintained incrementally at every mutation
-  // chokepoint under the lock, so reads are O(1): `keyBytes` is each
-  // key's current footprint (key name + all field names/values + all
-  // list elements, in chars ≈ bytes through the ISO-8859-1 raw
-  // bridge), `usedBytesTotal` their sum, `ownerBytes` the per-library
-  // rollup. Ownership follows the LAST LIBRARY WRITER — the
-  // attribution Redis itself cannot do and the reference approximates
-  // with per-isolate heap caps; host-code writes (no writer scope)
-  // never re-attribute: a brand-new host key is unattributed, and a
-  // host overwrite leaves the key charged to the library whose
-  // dataset it belongs to.
-  private val keyBytes = new java.util.HashMap[String, Long]()
-  private val keyOwner = new java.util.HashMap[String, String]()
+  // chokepoint, so reads are O(1): each entry's `bytes` is its key's
+  // footprint (key name + all field names/values + all list elements,
+  // in chars ≈ bytes through the ISO-8859-1 raw bridge),
+  // `usedBytesTotal` their sum, `ownerBytes` the per-library rollup.
+  // Ownership follows the LAST LIBRARY WRITER — the attribution Redis
+  // itself cannot do and the reference approximates with per-isolate
+  // heap caps; host-code writes (no writer scope) never re-attribute: a
+  // brand-new host key is unattributed, and a host overwrite leaves the
+  // key charged to the library whose dataset it belongs to.
   private val ownerBytes = new java.util.HashMap[String, Long]()
   private var usedBytesTotal = 0L
   // the writing library, set by the engine around each function
   // invocation (sync calls, async pool threads, trigger deliveries)
   private[core] val writerScope = new ThreadLocal[String]()
 
-  private def sizeOf(key: String): Long = {
-    val d = data.get(key).map(_.iterator.map { case (f, v) =>
-      f.length.toLong + v.length.toLong }.sum).getOrElse(0L)
-    val l = lists.get(key).map(_.iterator.map(_.length.toLong).sum).getOrElse(0L)
-    key.length.toLong + d + l
+  private def addOwner(o: String, delta: Long): Unit = if (o != null && delta != 0) {
+    val next = ownerBytes.getOrDefault(o, 0L) + delta
+    if (next == 0L) ownerBytes.remove(o) else ownerBytes.put(o, next)
   }
 
-  /** Re-measure `key` after a mutation and roll the delta into the
-    * global and per-owner counters; on a write, re-attribute the key
-    * to the current writer scope. Caller holds the lock. */
-  private def resize(key: String, write: Boolean = false): Unit = {
-    val present = data.contains(key) || lists.contains(key)
-    val now = if (present) sizeOf(key) else 0L
-    val prev = keyBytes.getOrDefault(key, 0L)
-    val oldOwner = keyOwner.get(key)
-    val newOwner =
-      if (!present) null
-      else if (write && writerScope.get() != null) writerScope.get()
-      else oldOwner
-    usedBytesTotal += now - prev
-    if (present) keyBytes.put(key, now) else keyBytes.remove(key)
-    def add(o: String, delta: Long): Unit = if (o != null && delta != 0) {
-      val next = ownerBytes.getOrDefault(o, 0L) + delta
-      if (next == 0L) ownerBytes.remove(o) else ownerBytes.put(o, next)
-    }
-    if (oldOwner != null && (newOwner == null || newOwner != oldOwner))
-      add(oldOwner, -prev)
-    if (newOwner != null) {
-      if (oldOwner != null && newOwner == oldOwner) add(newOwner, now - prev)
-      else add(newOwner, now)
-    }
-    if (!present) keyOwner.remove(key)
-    else if (newOwner != null) keyOwner.put(key, newOwner)
+  /** Re-measure a live key after a mutation and roll the delta into the
+    * global and per-owner counters; on a write, re-attribute the key to
+    * the current writer scope. Caller holds the lock. */
+  private def resize(key: String, e: Entry, write: Boolean = false): Unit = {
+    var now = key.length.toLong
+    if (e.hash != null) e.hash.foreach { case (f, v) => now += f.length.toLong + v.length }
+    if (e.list != null) e.list.foreach(v => now += v.length)
+    val scope = if (write) writerScope.get() else null
+    val owner = if (scope != null) scope else e.owner
+    usedBytesTotal += now - e.bytes
+    if (e.owner != null && e.owner != owner) addOwner(e.owner, -e.bytes)
+    addOwner(owner, if (owner == e.owner) now - e.bytes else now)
+    e.bytes = now
+    e.owner = owner
   }
+
+  /** Drop a key's entry and release its bytes. Caller holds the lock. */
+  private def unlink(key: String, e: Entry): Unit = {
+    entries.remove(key)
+    usedBytesTotal -= e.bytes
+    addOwner(e.owner, -e.bytes)
+  }
+
+  /** After a value of `e` shrank or was cleared: drop the key once it
+    * holds neither a hash nor a list, else re-measure it. */
+  private def shrunk(key: String, e: Entry): Unit =
+    if (e.hash == null && e.list == null) unlink(key, e) else resize(key, e)
 
   /** Total exact bytes in state (keys + fields + values + list
     * elements). O(1). */
@@ -159,26 +139,17 @@ final class StateTable {
   /** Evict least-recently-touched keys until the table fits the cap;
     * returns the eviction events to dispatch (caller holds the lock). */
   private def enforceCap(): Seq[KeyEvent] = {
-    if (maxKeys <= 0 || keyCount <= maxKeys) Seq.empty
+    val cap = maxKeys
+    val overflow = entries.size - cap
+    if (cap <= 0 || overflow <= 0) Nil
     else {
       // one key scan per overflowing commit — not one min-scan per
       // victim — so a burst shedding k keys costs O(n log n) once,
-      // not O(n·k); victims evict in recency order. The scan is also
-      // the count's self-check: keyCount re-syncs to ground truth.
-      val keys = (data.keysIterator ++ lists.keysIterator).toSeq.distinct
-      keyCount = keys.size
-      val overflow = keys.size - maxKeys
-      if (overflow <= 0) Seq.empty
-      else {
-        keyCount -= overflow
-        keys.sortBy(k => touched.getOrDefault(k, 0L)).take(overflow).map { victim =>
-          data.remove(victim)
-          lists.remove(victim)
-          expiries.remove(victim)
-          touched.remove(victim)
-          resize(victim)
-          KeyEvent("evicted", victim, System.currentTimeMillis(), None)
-        }
+      // not O(n·k); victims evict in recency order
+      entries.asScala.toSeq.sortBy(_._2.stamp).take(overflow).map { case (victim, e) =>
+        unlink(victim, e)
+        expiries.remove(victim)
+        KeyEvent("evicted", victim, System.currentTimeMillis(), None)
       }
     }
   }
@@ -210,7 +181,7 @@ final class StateTable {
       // not from post-flush state: a transaction that hdel-empties a
       // key and then recreates it must still lose the old TTL, exactly
       // as Redis clears it when the key is deleted.
-      txn.ttlCleared.foreach(expiries.remove)
+      if (expiries.nonEmpty) txn.ttlCleared.foreach(expiries.remove)
       // cap enforcement happens after the transaction's writes land, and
       // its "evicted" events dispatch in order behind the write events
       val evictions = enforceCap()
@@ -224,11 +195,7 @@ final class StateTable {
   }
 
   /** Subscribe to keyspace events (the keyspace-trigger engine hook). */
-  def subscribe(fn: KeyEvent => Unit): Unit = {
-    lock.lock()
-    try subscribers += fn
-    finally lock.unlock()
-  }
+  def subscribe(fn: KeyEvent => Unit): Unit = withLock(subscribers += fn)
 
   // --- reads: take the (reentrant) lock so a running sync function is
   // fully isolated — the GIL analogue of E8: nothing observes state
@@ -241,23 +208,27 @@ final class StateTable {
   // (like Redis's lazy path); `sweepExpired` is the active-cycle
   // analogue for callers that need timely notifications without reads.
   private def expireIfDue(key: String): Unit =
-    expiries.get(key).foreach { deadline =>
+    if (expiries.nonEmpty) expiries.get(key).foreach { deadline =>
       if (System.currentTimeMillis() >= deadline) {
         expiries.remove(key)
-        val existed = data.remove(key).isDefined | lists.remove(key).isDefined
-        if (existed) {
-          noteRemoved(key)
-          resize(key)
+        val e = entries.get(key)
+        if (e != null) {
+          unlink(key, e)
           emit(KeyEvent("expired", key, System.currentTimeMillis(), None))
         }
       }
     }
 
-  /** Set a TTL on an existing key. False if the key does not exist. */
+  /** Set a TTL on an existing key. False if the key does not exist.
+    * A deadline past the Long range is refused, as Redis refuses it. */
   def expire(key: String, ttlMs: Long): Boolean = withLock {
+    val deadline =
+      try Math.addExact(System.currentTimeMillis(), ttlMs)
+      catch { case _: ArithmeticException =>
+        throw new IllegalArgumentException(s"invalid expire time $ttlMs ms for '$key'") }
     expireIfDue(key)
-    val present = data.contains(key) || lists.contains(key)
-    if (present) expiries.put(key, System.currentTimeMillis() + ttlMs)
+    val present = entries.containsKey(key)
+    if (present) expiries.update(key, deadline)
     present
   }
 
@@ -270,37 +241,48 @@ final class StateTable {
   /** Actively expire every due key (fires "expired" events). Returns
     * the number of keys expired. */
   def sweepExpired(): Int = withLock {
-    val before = data.size + lists.size
+    val before = entries.size
     expiries.keys.toSeq.foreach(expireIfDue)
-    before - (data.size + lists.size)
+    before - entries.size
   }
 
-  def get(key: String): Option[String] =
-    withLock { expireIfDue(key)
-      val v = data.get(key).flatMap(_.get(ValueField)); if (v.isDefined) touch(key); v }
-  def hget(key: String, field: String): Option[String] =
-    withLock { expireIfDue(key)
-      val v = data.get(key).flatMap(_.get(field)); if (v.isDefined) touch(key); v }
-  def hgetall(key: String): Map[String, String] =
-    withLock { expireIfDue(key)
-      val m = data.getOrElse(key, Map.empty); if (m.nonEmpty) touch(key); m }
-  def exists(key: String): Boolean =
-    withLock { expireIfDue(key); data.contains(key) || lists.contains(key) }
+  def get(key: String): Option[String] = hget(key, ValueField)
+  def hget(key: String, field: String): Option[String] = withLock {
+    expireIfDue(key)
+    val e = entries.get(key)
+    val v = if (e == null || e.hash == null) None else e.hash.get(field)
+    if (v.isDefined) touch(e)
+    v
+  }
+  def hgetall(key: String): Map[String, String] = peek(key).getOrElse(Map.empty)
+  def exists(key: String): Boolean = withLock { expireIfDue(key); entries.containsKey(key) }
   def scan(prefix: String): Seq[String] = withLock {
     expiries.keys.toSeq.filter(_.startsWith(prefix)).foreach(expireIfDue)
-    (data.keysIterator ++ lists.keysIterator)
-      .filter(_.startsWith(prefix)).toSeq.distinct.sorted
+    entries.keySet.asScala.filter(_.startsWith(prefix)).toSeq.sorted
   }
-  def size: Int = withLock { sweepExpired(); (data.keySet ++ lists.keySet).size }
+  def size: Int = withLock { sweepExpired(); entries.size }
+
+  /** A key's hash as a transaction reads it: None when the key is
+    * absent, an empty map for a list-only key. Touches a non-empty hash,
+    * as [[hgetall]] does. */
+  private[core] def peek(key: String): Option[Map[String, String]] = withLock {
+    expireIfDue(key)
+    val e = entries.get(key)
+    if (e == null) None
+    else if (e.hash == null) Some(Map.empty)
+    else { if (e.hash.nonEmpty) touch(e); Some(e.hash) }
+  }
 
   // --- convenience single-op writes (each is its own transaction) ---
   def set(key: String, value: String): Unit = commit(_.set(key, value))
   def hset(key: String, fields: (String, String)*): Unit = commit(_.hset(key, fields: _*))
   def del(key: String): Boolean = withLock {
     expiries.remove(key)
-    val hadList = lists.remove(key).isDefined
+    val e = entries.get(key)
+    val hadList = e != null && e.list != null
     if (hadList) {
-      noteRemoved(key)
+      e.list = null
+      shrunk(key, e)
       emit(KeyEvent("del", key, System.currentTimeMillis(), None))
     }
     commit(_.del(key)) || hadList
@@ -322,47 +304,49 @@ final class StateTable {
       finally inNotification.set(false)
     }
 
+  private def push(key: String, event: String)(grow: Vector[String] => Vector[String]): Long =
+    withLock {
+      val e = entryFor(key)
+      val next = grow(if (e.list == null) Vector.empty else e.list)
+      e.list = next
+      touch(e)
+      resize(key, e, write = true)
+      listSignal.signalAll()
+      emit(KeyEvent(event, key, System.currentTimeMillis(), None))
+      enforceCap().foreach(emit)
+      next.size.toLong
+    }
+
   /** LPUSH: each value is pushed to the head in argument order (so the
     * last argument ends up first). Returns the new length. */
-  def lpush(key: String, values: String*): Long = withLock {
-    val next = values.foldLeft(lists.getOrElse(key, Vector.empty))((l, v) => v +: l)
-    noteAdded(key)
-    lists.update(key, next)
-    touch(key)
-    resize(key, write = true)
-    listSignal.signalAll()
-    emit(KeyEvent("lpush", key, System.currentTimeMillis(), None))
-    enforceCap().foreach(emit)
-    next.size.toLong
-  }
+  def lpush(key: String, values: String*): Long =
+    push(key, "lpush")(l => values.foldLeft(l)((acc, v) => v +: acc))
 
   /** RPUSH: append to the tail. Returns the new length. */
-  def rpush(key: String, values: String*): Long = withLock {
-    val next = lists.getOrElse(key, Vector.empty) ++ values
-    noteAdded(key)
-    lists.update(key, next)
-    touch(key)
-    resize(key, write = true)
-    listSignal.signalAll()
-    emit(KeyEvent("rpush", key, System.currentTimeMillis(), None))
-    enforceCap().foreach(emit)
-    next.size.toLong
+  def rpush(key: String, values: String*): Long = push(key, "rpush")(_ ++ values)
+
+  private def listOf(key: String): Vector[String] = {
+    val e = entries.get(key)
+    if (e == null || e.list == null) Vector.empty else e.list
   }
 
-  private def pop(key: String, head: Boolean): Option[String] =
-    lists.get(key).filter(_.nonEmpty).map { l =>
+  private def pop(key: String, head: Boolean): Option[String] = {
+    val l = listOf(key)
+    if (l.isEmpty) None
+    else {
+      val e = entries.get(key)
       val (v, rest) = if (head) (l.head, l.tail) else (l.last, l.init)
-      if (rest.isEmpty) { lists.remove(key); noteRemoved(key) }
-      else lists.update(key, rest)
-      resize(key)
+      e.list = if (rest.isEmpty) null else rest
+      shrunk(key, e)
       emit(KeyEvent(if (head) "lpop" else "rpop", key, System.currentTimeMillis(), None))
-      v
+      Some(v)
     }
+  }
 
   def lpop(key: String): Option[String] = withLock(pop(key, head = true))
   def rpop(key: String): Option[String] = withLock(pop(key, head = false))
-  def llen(key: String): Long = withLock(lists.get(key).map(_.size.toLong).getOrElse(0L))
-  def lrange(key: String): Seq[String] = withLock(lists.getOrElse(key, Vector.empty))
+  def llen(key: String): Long = withLock(listOf(key).size.toLong)
+  def lrange(key: String): Seq[String] = withLock(listOf(key))
 
   /** BLPOP: block until the list is non-empty or the timeout expires.
     * Refused while the caller holds the state lock (C4). */
@@ -404,21 +388,20 @@ final class StateTable {
   def snapshot(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val rows = withLock {
-      val hashRows = data.toSeq.flatMap { case (k, m) => m.map { case (f, v) => (k, f, v) } }
       // list elements, TTL deadlines and per-key library attribution
       // snapshot as pseudo-fields so the schema stays
       // (key, field, value) — RDB persists expiries too, and carrying
       // the owner keeps E11 accounting identical across a restore
-      val listRows = lists.toSeq.flatMap { case (k, l) =>
-        l.zipWithIndex.map { case (v, i) => (k, f"${StateTable.ListField}$i%09d", v) }
+      val hashRows, listRows, ownerRows = Seq.newBuilder[(String, String, String)]
+      entries.forEach { (k, e) =>
+        if (e.hash != null) e.hash.foreach { case (f, v) => hashRows += ((k, f, v)) }
+        if (e.list != null) e.list.zipWithIndex.foreach { case (v, i) =>
+          listRows += ((k, f"${StateTable.ListField}$i%09d", v))
+        }
+        if (e.owner != null) ownerRows += ((k, StateTable.OwnerField, e.owner))
       }
       val ttlRows = expiries.toSeq.map { case (k, d) => (k, StateTable.TtlField, d.toString) }
-      val ownerRows = {
-        val b = Seq.newBuilder[(String, String, String)]
-        keyOwner.forEach((k, o) => b += ((k, StateTable.OwnerField, o)))
-        b.result()
-      }
-      hashRows ++ listRows ++ ttlRows ++ ownerRows
+      hashRows.result() ++ listRows.result() ++ ttlRows ++ ownerRows.result()
     }
     rows.toDF("key", "field", "value")
   }
@@ -428,8 +411,7 @@ final class StateTable {
     val rows = df.select("key", "field", "value").collect()
     lock.lock()
     try {
-      data.clear()
-      lists.clear()
+      entries.clear()
       expiries.clear()
       val listAcc = scala.collection.mutable.Map.empty[String, ArrayBuffer[(String, String)]]
       val owners = scala.collection.mutable.Map.empty[String, String]
@@ -441,43 +423,36 @@ final class StateTable {
           owners.update(k, v)
         else if (f.startsWith(StateTable.ListField))
           listAcc.getOrElseUpdate(k, new ArrayBuffer) += (f -> v)
-        else
-          data.update(k, data.getOrElse(k, Map.empty) + (f -> v))
-      }
-      listAcc.foreach { case (k, elems) =>
-        lists.update(k, elems.sortBy(_._1).map(_._2).toVector)
-      }
-      // recency and the live count restart from the restored snapshot —
-      // stale pre-restore entries would leak and corrupt LRU order
-      touched.clear()
-      touchSeq = 0L
-      keyCount = (data.keySet ++ lists.keySet).size
-      // byte accounting rebuilds from ground truth; the snapshot's
-      // __owner__ pseudo-fields re-attach per-library attribution so
-      // E11 counters read identically after a save/load round-trip
-      // (pre-round-12 snapshots carry no owners — keys start unowned)
-      keyBytes.clear(); keyOwner.clear(); ownerBytes.clear()
-      usedBytesTotal = 0L
-      (data.keysIterator ++ lists.keysIterator).toSet.foreach(resize(_: String))
-      owners.foreach { case (k, o) =>
-        val b = keyBytes.getOrDefault(k, 0L)
-        if (b > 0L) {
-          keyOwner.put(k, o)
-          ownerBytes.put(o, ownerBytes.getOrDefault(o, 0L) + b)
+        else {
+          val e = entryFor(k)
+          e.hash = (if (e.hash == null) Map.empty[String, String] else e.hash) + (f -> v)
         }
       }
+      listAcc.foreach { case (k, elems) =>
+        entryFor(k).list = elems.sortBy(_._1).map(_._2).toVector
+      }
+      // recency restarts from the restored snapshot (every entry is
+      // fresh, stamp 0); byte accounting rebuilds from ground truth under
+      // the snapshot's __owner__ attribution, so E11 counters read
+      // identically after a save/load round-trip (pre-round-12 snapshots
+      // carry no owners — keys start unowned)
+      touchSeq = 0L
+      ownerBytes.clear()
+      usedBytesTotal = 0L
+      owners.foreach { case (k, o) => Option(entries.get(k)).foreach(_.owner = o) }
+      entries.forEach((k, e) => resize(k, e))
     } finally lock.unlock()
   }
 
   private[core] def applyWrite(key: String, fields: Map[String, String]): Unit = {
-    noteAdded(key)
-    data.update(key, fields)
-    touch(key)
-    resize(key, write = true)
+    val e = entryFor(key)
+    e.hash = fields
+    touch(e)
+    resize(key, e, write = true)
   }
   private[core] def applyDel(key: String): Unit = {
-    if (data.remove(key).isDefined) noteRemoved(key)
-    resize(key)
+    val e = entries.get(key)
+    if (e != null && e.hash != null) { e.hash = null; shrunk(key, e) }
   }
 }
 
@@ -490,6 +465,17 @@ object StateTable {
   val TtlField = "__ttl__"
   /** Pseudo-field for a key's snapshotted library attribution (E11). */
   val OwnerField = "__owner__"
+
+  /** One live key: its hash and list (either may be null, not both),
+    * the `touchSeq` of its last touch, its byte footprint and its owning
+    * library (null = unattributed). Accessed only under the lock. */
+  private final class Entry {
+    var hash: Map[String, String] = null
+    var list: Vector[String] = null
+    var stamp = 0L
+    var bytes = 0L
+    var owner: String = null
+  }
 
   /** Lossless byte<->String bridge (ISO-8859-1 maps byte n to char n). */
   private[core] def b2s(b: Array[Byte]): String =
@@ -514,10 +500,10 @@ object StateTable {
     // clearing operation HAPPENS (set/del/last-field hdel), so later
     // recreation inside the same transaction cannot resurrect the TTL
     private val ttlClears = scala.collection.mutable.LinkedHashSet.empty[String]
-    private[core] def ttlCleared: Seq[String] = ttlClears.toSeq
+    private[core] def ttlCleared: Iterable[String] = ttlClears
 
     private def current(key: String): Option[Map[String, String]] =
-      writes.getOrElse(key, if (table.exists(key)) Some(table.hgetall(key)) else None)
+      writes.getOrElse(key, table.peek(key))
 
     def get(key: String): Option[String] = { guard(key, false); current(key).flatMap(_.get(ValueField)) }
     def hget(key: String, field: String): Option[String] = { guard(key, false); current(key).flatMap(_.get(field)) }
@@ -564,10 +550,17 @@ object StateTable {
       removed
     }
 
+    /** INCRBY. A result past the Long range is refused, as Redis
+      * refuses it, before anything is buffered: the value stays as it
+      * was and no event fires. */
     def incrBy(key: String, delta: Long): Long = {
       guard(key, true); growGuard(key)
-      val next = current(key).flatMap(_.get(ValueField)).map(_.toLong).getOrElse(0L) + delta
-      writes.update(key, Some(current(key).getOrElse(Map.empty) + (ValueField -> next.toString)))
+      val cur = current(key).getOrElse(Map.empty)
+      val next =
+        try Math.addExact(cur.get(ValueField).map(_.toLong).getOrElse(0L), delta)
+        catch { case _: ArithmeticException =>
+          throw new ArithmeticException(s"increment or decrement would overflow ('$key')") }
+      writes.update(key, Some(cur + (ValueField -> next.toString)))
       events += KeyEvent("incrby", key, System.currentTimeMillis(), None)
       next
     }
