@@ -115,9 +115,11 @@ final class StateTable {
     e.owner = owner
   }
 
-  /** Drop a key's entry and release its bytes. Caller holds the lock. */
+  /** Drop a key's entry and its TTL (Redis drops a TTL with its key),
+    * and release its bytes. Caller holds the lock. */
   private def unlink(key: String, e: Entry): Unit = {
     entries.remove(key)
+    if (expiries.nonEmpty) expiries.remove(key)
     usedBytesTotal -= e.bytes
     addOwner(e.owner, -e.bytes)
   }
@@ -148,7 +150,6 @@ final class StateTable {
       // not O(n·k); victims evict in recency order
       entries.asScala.toSeq.sortBy(_._2.stamp).take(overflow).map { case (victim, e) =>
         unlink(victim, e)
-        expiries.remove(victim)
         KeyEvent("evicted", victim, System.currentTimeMillis(), None)
       }
     }

@@ -368,86 +368,12 @@ object Graph {
     core.toSeq.toDF("core")
   }
 
-  /** The Batagelj–Zaversnik BUCKET variant of [[kCoreHistogram]] —
-    * the round-6/7 dead-end ledger's third candidate (after the
-    * frontier/delta variant, measured worse): freeze every node whose
-    * value sits at the CURRENT GLOBAL MINIMUM. Proof that freezing is
-    * sound: a node v with c(v) = m = min over ALL nodes earned m by
-    * having ≥ m neighbors at ≥ m; values never drop below the global
-    * min, so those witnesses still stand and v's h stays ≥ m, while
-    * the `least(core, h)` update keeps it ≤ m — fixed. Frozen nodes
-    * leave the h-recompute (their edges anti-join away) but keep
-    * supplying neighbor VALUES through the all-nodes core table.
-    *
-    * Costs added per round: one scalar min job, one freeze filter, one
-    * anti-join shrinking the active edge set. Whether the shrink beats
-    * the overhead on the dense-basket graph (whose 84-core is most of
-    * the node set, so the freezable fringe is thin) is exactly what
-    * KcoreProbe measures — see BENCH_NOTES for the verdict. */
-  private[graft] def kCoreHistogramBucketed(pairs0: DataFrame,
-      maxRounds: Int = 100): DataFrame = {
-    val pairs = pairs0.cutLineage()
-    val bidir = pairs
-      .union(pairs.select(col("v").as("u"), col("u").as("v")))
-      .cutLineage()
-    var active = bidir.groupBy("u").agg(count(lit(1)).as("core"))
-      .cutLineage()
-    var frozenDf = active.limit(0).cutLineage() // (u, core) final
-    var activeEdges = bidir
-    var changed = 1L
-    var round = 0
-    val hExpr = expr(
-      "size(filter(transform(sort_array(ncs, false), (x, i) -> x >= i + 1)," +
-        " b -> b))")
-    while (changed > 0 && round < maxRounds) {
-      // freeze the global-minimum bucket (values ≥ global min always,
-      // so the bucket is final; frozen values keep serving as neighbor
-      // values via the all-nodes union below)
-      val m = active.agg(min("core")).head().getLong(0)
-      val freeze = active.filter(col("core") === m).cutLineage()
-      if (!freeze.isEmpty) {
-        frozenDf = frozenDf.unionByName(freeze).cutLineage()
-        active = active.filter(col("core") > m).cutLineage()
-        activeEdges = activeEdges
-          .join(freeze.select("u"), Seq("u"), "left_anti")
-          .cutLineage()
-      }
-      if (active.isEmpty) { changed = 0 }
-      else {
-        val allCore = active.unionByName(frozenDf)
-        val h = activeEdges
-          .join(allCore.select(col("u").as("v"), col("core").as("nc")), Seq("v"))
-          .groupBy("u").agg(collect_list("nc").as("ncs"))
-          .select(col("u"), hExpr.cast("long").as("h"))
-        val next = active.join(h, Seq("u"))
-          .select(col("u"), col("core"), least(col("core"), col("h")).as("nc"))
-          .cutLineage()
-        changed = next.filter(col("nc") < col("core")).count()
-        active = next.select(col("u"), col("nc").as("core"))
-        round += 1
-        if (probeHook ne null) probeHook(round, changed)
-      }
-    }
-    active.unionByName(frozenDf)
-      .groupBy("core").agg(count(lit(1)).as("n_nodes"))
-      .select(col("core").as("coreness"), col("n_nodes"))
-  }
-
   @volatile private[graft] var probeHook: (Int, Long) => Unit = null
 
   /** Observability for GraphSpec/probes: whether the last
     * [[qCopurchaseRank]] run took the edge-block path (under
     * `rankBroadcastMaxNodes`) rather than the distributed loop. */
   @volatile private[graft] var lastRankBroadcast: Boolean = true
-
-  /** Dev instrumentation for the iteration's round/frontier profile. */
-  private[graft] def kCoreProbe(s: SparkSession, d: String): Unit = {
-    val t0 = System.nanoTime()
-    probeHook = (r, n) =>
-      println(f"KCORE round=$r changed=$n t=${(System.nanoTime() - t0) / 1e9}%.2f")
-    try qKCore(s, d).collect().foreach(r => println(s"KCORE hist $r"))
-    finally probeHook = null
-  }
 
   /** q173: item–item collaborative filtering — the rec-sys primitive
     * over the co-purchase graph: each part's sparse neighbor vector

@@ -35,10 +35,8 @@ import graft.core.{HadoopFiles, StreamRecord}
   * (`fieldsRaw` base64-encoded in the JSON).
   *
   * Crash safety: compaction swaps segments through a `_compact-commit`
-  * redo log (the same protocol as
-  * [[graft.streaming.StreamTriggerEngine.compactLog]]): rewritten
-  * segments are fully staged first, then one rename publishes the
-  * commit record, then the swaps are applied — [[recover]] drives a
+  * redo log: rewritten segments are fully staged first, then one
+  * rename publishes the commit record, then the swaps are applied — [[recover]] drives a
   * crashed transaction to completion from the redo log at the next
   * append/compact, so no above-watermark record can be lost at any
   * crash point. Distributed appends stage per-task files under a

@@ -46,13 +46,13 @@ class IntegrationSpec extends AnyFunSuite {
     def attach(e: Engine) = {
       val src = spark.readStream.format("graft-log")
         .option("path", logDir).option("prefix", "m:").load().as[StreamRecord]
-      e.streams.attachBatches(src, queryCkpt) { (batch, batchId) =>
+      e.streams.attach(src, queryCkpt, dataPlane = { (batch, batchId) =>
         // data plane: per-kind counts land exactly-once per batch,
         // keyed on Spark's replay-stable batch id
         val agg = batch.select(element_at(col("fields"), "kind").as("kind"))
           .groupBy("kind").count()
         sink.write(agg, batchId)
-      }
+      })
     }
 
     // phase 1: distributed ingest (executor-written segments — the XADD

@@ -127,4 +127,19 @@ class TtlSpec extends AnyFunSuite {
     assert(seen.contains("set:sess:42") && seen.contains("expired:sess:42"))
     e.close()
   }
+
+  test("a list emptied by LPOP/RPOP loses its TTL with the key") {
+    val t = new StateTable
+    t.lpush("k", "a")
+    assert(t.expire("k", 3600000))
+    assert(t.lpop("k").contains("a")) // last element: the key is gone
+    assert(!t.exists("k") && t.ttl("k").isEmpty)
+    t.lpush("k", "b") // a new key: no inherited deadline
+    assert(t.ttl("k").isEmpty)
+    t.rpush("r", "a")
+    t.expire("r", 3600000)
+    assert(t.rpop("r").contains("a"))
+    t.rpush("r", "b")
+    assert(t.ttl("r").isEmpty)
+  }
 }

@@ -251,26 +251,6 @@ class GraphSpec extends AnyFunSuite {
     assert(got == Map(4L -> 5L, 2L -> 2L, 1L -> 3L))
   }
 
-  test("q184: the bucketed (freeze-at-min) sweep equals the dense sweep") {
-    import spark.implicits._
-    // crafted strata (exercises repeated freezes at the same level:
-    // the path tail peels node by node)
-    val clique = for (i <- 1L to 5L; j <- (i + 1) to 5L) yield (i, j)
-    val tri = Seq((5L, 10L), (10L, 11L), (5L, 11L))
-    val tail = Seq((11L, 20L), (20L, 21L), (21L, 22L))
-    val pairs = (clique ++ tri ++ tail).toDF("u", "v")
-    val bucketed = Graph.kCoreHistogramBucketed(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(bucketed == Map(4L -> 5L, 2L -> 2L, 1L -> 3L))
-    // the real sf co-purchase graph: bucketed ≡ dense, stratum by stratum
-    val edges = Graph.copurchaseEdges(spark, sf)
-    val dense = Graph.kCoreHistogram(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val bucketedSf = Graph.kCoreHistogramBucketed(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(bucketedSf == dense)
-  }
-
   test("q251: link prediction equals a sequential capped-wedge recompute") {
     val lp = Tables.lineitem(spark, sf).select("l_orderkey", "l_partkey")
       .collect().map(r => (r.getLong(0), r.getLong(1))).distinct

@@ -288,9 +288,7 @@ class StreamTriggerSpec extends AnyFunSuite {
   }
 
   test("trim action compacts the log up to the slowest trimming consumer (E6)") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val e = new Engine(spark)
+    val e = new Engine(TestSpark.spark)
     e.load(LibraryDefinition("fast", code = { b =>
       b.registerStreamTrigger("t", "s:", (_, _) => (), isStreamTrimmed = true)
     }))
@@ -306,99 +304,14 @@ class StreamTriggerSpec extends AnyFunSuite {
     assert(e.streams.trimWatermark("s:1").contains((2L, 0L)))
 
     val logDir = java.nio.file.Files.createTempDirectory("graft-log").toString + "/log"
-    records.toDS().write.parquet(logDir)
-    val removed = e.streams.compactLog(logDir)
+    val log = new graft.sources.GraftLog(logDir, TestSpark.spark.sparkContext.hadoopConfiguration)
+    log.append(records)
+    val removed = e.streams.trimLog(log)
     assert(removed == 2) // s:1 ids 1,2 trimmed
-    val left = spark.read.parquet(logDir).as[StreamRecord].collect().toSeq.sorted
+    val left = log.readSegment(0).toSeq.sorted
     assert(left.filter(_.stream == "s:1").map(_.idMs) == Seq(3, 4, 5))
     // streams without a trimming consumer keep everything
     assert(left.count(_.stream == "untracked:x") == 3)
-    e.close()
-  }
-
-  test("compactLog is incremental: only boundary files are rewritten (E6)") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val e = new Engine(spark)
-    e.load(LibraryDefinition("trim", code = { b =>
-      b.registerStreamTrigger("t", "s:", (_, r) => {
-        if (r.idMs > 20) throw new RuntimeException("behind")
-      }, isStreamTrimmed = true)
-    }))
-    intercept[StreamDeliveryException](
-      e.streams.processBatch((1L to 30L).map(i => rec("s:1", i))))
-    assert(e.streams.trimWatermark("s:1").contains((20L, 0L)))
-
-    val logDir = java.nio.file.Files.createTempDirectory("graft-clog").toString + "/log"
-    // three part files with known id ranges: fully below the watermark,
-    // straddling it, fully above it
-    (1L to 10L).map(i => rec("s:1", i)).toDS().coalesce(1)
-      .write.mode("append").parquet(logDir)
-    (11L to 25L).map(i => rec("s:1", i)).toDS().coalesce(1)
-      .write.mode("append").parquet(logDir)
-    (26L to 30L).map(i => rec("s:1", i)).toDS().coalesce(1)
-      .write.mode("append").parquet(logDir)
-    val root = new org.apache.hadoop.fs.Path(logDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def parts(): Set[String] = fs.listStatus(root).iterator
-      .map(_.getPath.getName).filter(_.endsWith(".parquet")).toSet
-    val before = parts()
-    assert(before.size == 3)
-
-    val removed = e.streams.compactLog(logDir)
-    assert(removed == 20)
-    val after = parts()
-    // exactly one original file (the fully-above one) survives by name;
-    // the straddling one was replaced by a freshly published compact-*
-    // file; the fully-below one is gone without a rewrite
-    assert((before intersect after).size == 1)
-    assert(after.count(_.startsWith("compact-")) == 1)
-    assert(spark.read.schema(StreamRecord.schema).parquet(logDir)
-      .as[StreamRecord].collect().map(_.idMs).sorted.toSeq == (21L to 30L))
-    // no transaction residue
-    assert(!fs.exists(StreamTriggerEngine.compactCommitPath(root)))
-    assert(!fs.exists(StreamTriggerEngine.compactStagePath(root)))
-    e.close()
-  }
-
-  test("a compaction that crashed at the commit point is replayed to completion") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val logDir = java.nio.file.Files.createTempDirectory("graft-crash").toString + "/log"
-    (1L to 10L).map(i => rec("s:1", i)).toDS().coalesce(1).write.parquet(logDir)
-    val root = new org.apache.hadoop.fs.Path(logDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // hand-craft the exact on-disk state of a compaction that wrote its
-    // redo log and then died before performing ANY publish or delete:
-    // staged kept rows (ids 6..10) + a commit file naming the renames
-    val stage = StreamTriggerEngine.compactStagePath(root)
-    (6L to 10L).map(i => rec("s:1", i)).toDS().coalesce(1).write.parquet(stage.toString)
-    val orig = fs.listStatus(root).iterator.map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).next()
-    val staged = fs.listStatus(stage).iterator.map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).next()
-    val dst = new org.apache.hadoop.fs.Path(root, "compact-testcrash-0.parquet")
-    val commit = s"P\t$staged\t$dst\nD\t$orig\n"
-    val cp = StreamTriggerEngine.compactCommitPath(root)
-    val out = fs.create(cp, true)
-    try out.write(commit.getBytes("UTF-8")) finally out.close()
-
-    // any later compactLog call must first drive the transaction to
-    // completion — even with no trim watermarks of its own
-    val e = new Engine(spark)
-    assert(e.streams.compactLog(logDir) == 0L)
-    assert(spark.read.schema(StreamRecord.schema).parquet(logDir)
-      .as[StreamRecord].collect().map(_.idMs).sorted.toSeq == (6L to 10L))
-    assert(!fs.exists(cp) && !fs.exists(stage))
-
-    // idempotence under a crash DURING recovery: re-create the commit
-    // with the publish already done and the staged file gone
-    val out2 = fs.create(cp, true)
-    try out2.write(s"P\t$staged\t$dst\nD\t$orig\n".getBytes("UTF-8")) finally out2.close()
-    assert(e.streams.compactLog(logDir) == 0L)
-    assert(spark.read.schema(StreamRecord.schema).parquet(logDir)
-      .as[StreamRecord].collect().map(_.idMs).sorted.toSeq == (6L to 10L))
-    assert(!fs.exists(cp))
     e.close()
   }
 
