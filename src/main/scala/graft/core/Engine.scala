@@ -75,88 +75,61 @@ final class FunctionContext private[core] (
     if (readOnly) throw new IllegalStateException(
       s"function declared ${FunctionFlags.NoWrites} attempted a write")
 
-  private def inShard(key: String): Boolean = shardScope match {
-    case Some((id, n)) => Engine.shardOf(key, n) == id
-    case None => true
-  }
-  private def checkShard(key: String): Unit = shardScope.foreach { case (id, n) =>
-    val owner = Engine.shardOf(key, n)
-    if (owner != id) throw new ShardMovedException(
-      s"MOVED: key '$key' hashes to shard $owner, this context is shard $id of $n")
-  }
-
-  // every key access is checked against the library's owning ACL user
-  // at call time (lib.rs:506-517; revocation applies immediately).
-  private def checkRead(key: String): Unit = {
-    checkAborted(); checkShard(key); engine.aclCheck(library, key, write = false)
-  }
-  private def checkWrite(key: String): Unit = {
-    checkAborted(); requireWrites(); checkShard(key)
-    engine.aclCheck(library, key, write = true)
-  }
-  /** checkWrite + the E11 per-library footprint cap — used by the
-    * GROWING write ops only: deletions and pops stay allowed while
-    * over cap (Redis exempts memory-freeing commands from DENYOOM for
-    * the same reason — an over-cap library must be able to shrink
-    * itself back under). */
-  private def checkWriteGrow(key: String): Unit = {
-    checkWrite(key)
-    engine.memCheck(library)
-  }
-
-  /** Attribute state written inside `body` to this library (E11
-    * last-writer accounting) — a thread-local scope, so it covers the
-    * sync path, pool threads, and trigger deliveries alike. */
-  private def owned[A](body: => A): A = {
-    val ws = engine.state.writerScope
-    val prev = ws.get()
-    ws.set(library)
-    try body
-    finally { if (prev == null) ws.remove() else ws.set(prev) }
+  // every key access passes one guard: the abort checkpoint, the shard
+  // scope and the library's owning ACL user, resolved at call time
+  // (lib.rs:506-517; revocation applies immediately)
+  private def guard(key: String, isWrite: Boolean): Unit = {
+    checkAborted()
+    shardScope.foreach { case (id, n) =>
+      val owner = Engine.shardOf(key, n)
+      if (owner != id) throw new ShardMovedException(
+        s"MOVED: key '$key' hashes to shard $owner, this context is shard $id of $n")
+    }
+    engine.aclCheck(library, key, isWrite)
   }
   private def canRead(key: String): Boolean =
-    inShard(key) &&
-      (try { engine.aclCheck(library, key, write = false); true }
-       catch { case _: AclException => false })
+    try { guard(key, false); true }
+    catch { case _: AclException | _: ShardMovedException => false }
 
-  def get(key: String): Option[String] = { checkRead(key); engine.state.get(key) }
-  def hget(key: String, field: String): Option[String] = { checkRead(key); engine.state.hget(key, field) }
-  def hgetall(key: String): Map[String, String] = { checkRead(key); engine.state.hgetall(key) }
+  def get(key: String): Option[String] = { guard(key, false); engine.state.get(key) }
+  def hget(key: String, field: String): Option[String] = { guard(key, false); engine.state.hget(key, field) }
+  def hgetall(key: String): Map[String, String] = { guard(key, false); engine.state.hgetall(key) }
   // scan filters out names the user may not read: even key NAMES under
   // a denied prefix are information (raw Redis SCAN would return them,
   // but this engine's prefix-rule model can and does hide them)
   def scan(prefix: String): Seq[String] = {
     checkAborted(); engine.state.scan(prefix).filter(canRead)
   }
-  def set(key: String, value: String): Unit = { checkWriteGrow(key); owned(engine.state.set(key, value)) }
-  def hset(key: String, fields: (String, String)*): Unit = { checkWriteGrow(key); owned(engine.state.hset(key, fields: _*)) }
-  def del(key: String): Boolean = { checkWrite(key); owned(engine.state.del(key)) }
-  def hdel(key: String, fields: String*): Int = { checkWrite(key); owned(engine.state.hdel(key, fields: _*)) }
-  def incrBy(key: String, delta: Long): Long = { checkWriteGrow(key); owned(engine.state.incrBy(key, delta)) }
+  def set(key: String, value: String): Unit = atomic(_.set(key, value))
+  def hset(key: String, fields: (String, String)*): Unit = atomic(_.hset(key, fields: _*))
+  def del(key: String): Boolean = atomic(_.del(key))
+  def hdel(key: String, fields: String*): Int = atomic(_.hdel(key, fields: _*))
+  def incrBy(key: String, delta: Long): Long = atomic(_.incrBy(key, delta))
   // C3 list ops + blocking pop. blpop blocks the calling thread until
   // data arrives or the timeout passes; it is refused inside a sync
   // call or atomic section (C4 isBlockAllowed) — call it from an async
   // function or an executeAsync body, like the reference's callAsync
   // for blocking commands (`v8_native_functions.rs:652-669`).
-  def lpush(key: String, values: String*): Long = { checkWriteGrow(key); owned(engine.state.lpush(key, values: _*)) }
-  def rpush(key: String, values: String*): Long = { checkWriteGrow(key); owned(engine.state.rpush(key, values: _*)) }
-  def lpop(key: String): Option[String] = { checkWrite(key); owned(engine.state.lpop(key)) }
-  def rpop(key: String): Option[String] = { checkWrite(key); owned(engine.state.rpop(key)) }
-  def llen(key: String): Long = { checkRead(key); engine.state.llen(key) }
+  def lpush(key: String, values: String*): Long = atomic(_.lpush(key, values: _*))
+  def rpush(key: String, values: String*): Long = atomic(_.rpush(key, values: _*))
+  def lpop(key: String): Option[String] = atomic(_.lpop(key))
+  def rpop(key: String): Option[String] = atomic(_.rpop(key))
+  def llen(key: String): Long = { guard(key, false); engine.state.llen(key) }
   def blpop(key: String, timeoutMs: Long): Option[String] = {
-    checkWrite(key); engine.state.blpop(key, timeoutMs)
+    requireWrites(); guard(key, true); engine.state.blpop(key, timeoutMs)
   }
   /** C4: whether a blocking call may run on this thread. */
   def isBlockAllowed: Boolean = engine.state.isBlockAllowed
   // TTL (EXPIRE/TTL; lazy expiration fires the `expired` keyspace
   // event the reference's R4 triggers subscribe to)
-  def expire(key: String, ttlMs: Long): Boolean = { checkWrite(key); engine.state.expire(key, ttlMs) }
-  def ttl(key: String): Option[Long] = { checkRead(key); engine.state.ttl(key) }
+  def expire(key: String, ttlMs: Long): Boolean = { requireWrites(); guard(key, true); engine.state.expire(key, ttlMs) }
+  def ttl(key: String): Option[Long] = { guard(key, false); engine.state.ttl(key) }
   // C2 binary-safe access (callRaw analogue)
-  def getRaw(key: String): Option[Array[Byte]] = { checkRead(key); engine.state.getRaw(key) }
-  def hgetRaw(key: String, field: String): Option[Array[Byte]] = { checkRead(key); engine.state.hgetRaw(key, field) }
-  def setRaw(key: String, value: Array[Byte]): Unit = { checkWriteGrow(key); owned(engine.state.setRaw(key, value)) }
-  def hsetRaw(key: String, fields: (String, Array[Byte])*): Unit = { checkWriteGrow(key); owned(engine.state.hsetRaw(key, fields: _*)) }
+  def getRaw(key: String): Option[Array[Byte]] = get(key).map(StateTable.s2b)
+  def hgetRaw(key: String, field: String): Option[Array[Byte]] = hget(key, field).map(StateTable.s2b)
+  def setRaw(key: String, value: Array[Byte]): Unit = set(key, StateTable.b2s(value))
+  def hsetRaw(key: String, fields: (String, Array[Byte])*): Unit =
+    hset(key, fields.map { case (f, v) => f -> StateTable.b2s(v) }: _*)
   /** Per-library config injected at load (C10). */
   def config: Map[String, String] = engine.libraryConfig(library)
   def log(msg: String): Unit = engine.log(s"[$library] $msg")
@@ -167,23 +140,24 @@ final class FunctionContext private[core] (
     * function (the reference acquires the GIL and wraps effects in
     * MULTI/EXEC, `v8_native_functions.rs:264-312`). Concurrent readers
     * observe either none or all of the transaction's writes, never a
-    * partial state. */
-  def atomic[T](body: StateTable.Txn => T): T = {
+    * partial state. Hash, string and list writes are all allowed inside,
+    * as Redis MULTI allows LPUSH/LPOP; a blocking pop is not (C4). The
+    * context's own write methods are one-op atomic sections. */
+  def atomic[T](body: StateTable#Txn => T): T = {
     requireWrites()
     // E11: the footprint cap gates each GROWING op inside the txn (the
     // growGuard below), not the transaction at entry — so an over-cap
-    // library can still run a shrink-only transaction (del/hdel) to
+    // library can still run a shrink-only transaction (del/hdel/pops) to
     // recover, matching the DENYOOM exemption for memory-freeing
     // commands. A growing txn may overshoot by one op, like a single
     // Redis command past maxmemory; the cap catches the next one. The
-    // owned scope spans the flush, so the txn's writes attribute to
-    // this library.
-    // The transaction's key accesses carry the same per-key ACL (and
-    // shard) checks as the direct context methods — plus the abort
-    // checkpoint, so a watchdogged invocation dies inside its txn too.
-    owned(engine.state.commitGuarded({ (k, w) =>
-      checkAborted(); checkShard(k); engine.aclCheck(library, k, w)
-    }, _ => engine.memCheck(library))(body))
+    // thread-local writer scope spans the flush, so the txn's writes
+    // attribute to this library (last-writer accounting).
+    val ws = engine.state.writerScope
+    val prev = ws.get()
+    ws.set(library)
+    try engine.state.commitGuarded(guard, _ => engine.memCheck(library))(body)
+    finally { if (prev == null) ws.remove() else ws.set(prev) }
   }
 
   /** C5 (`client.executeAsync`): escape from a sync function to the

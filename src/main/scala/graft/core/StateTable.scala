@@ -11,9 +11,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Every key holds a hash (field → value), which covers both string
   * values (single field "value") and hash values, the two types the
-  * reference's tests exercise, and/or a list. All mutation goes through
-  * a single commit path under one lock, giving the reference's
-  * sync-execution atomicity (E8: sync functions run under the Redis GIL,
+  * reference's tests exercise, and/or a list. Every write — SET, HSET,
+  * HDEL, INCRBY, DEL and the list pushes and pops, BLPOP's included — is
+  * a [[StateTable.Txn]] op landed by one commit path under one lock,
+  * which also clears TTLs, enforces the key cap and dispatches the
+  * keyspace events. This gives the reference's sync-execution atomicity
+  * (E8: sync functions run under the Redis GIL,
   * `redisgears_core/src/lib.rs:1368-1387`) and atomic effect visibility
   * (E12: replication as MULTI/EXEC) at *transaction* granularity — the
   * documented weaker-but-equivalent guarantee from SURVEY §7.5.1.
@@ -70,7 +73,6 @@ final class StateTable {
     require(n >= 0, s"max-keys must be non-negative, got $n")
     maxKeys = n
   }
-  def getMaxKeys: Int = maxKeys
 
   private def touch(e: Entry): Unit = { touchSeq += 1; e.stamp = touchSeq }
   private def entryFor(key: String): Entry = entries.computeIfAbsent(key, _ => new Entry)
@@ -124,11 +126,6 @@ final class StateTable {
     addOwner(e.owner, -e.bytes)
   }
 
-  /** After a value of `e` shrank or was cleared: drop the key once it
-    * holds neither a hash nor a list, else re-measure it. */
-  private def shrunk(key: String, e: Entry): Unit =
-    if (e.hash == null && e.list == null) unlink(key, e) else resize(key, e)
-
   /** Total exact bytes in state (keys + fields + values + list
     * elements). O(1). */
   def usedBytes: Long = withLock(usedBytesTotal)
@@ -163,37 +160,31 @@ final class StateTable {
     * transactions ([[FunctionContext.atomic]]) use. The guard is called
     * as (key, isWrite) before each Txn operation and may throw.
     * `growGuard(key)` additionally runs before each GROWING op
-    * (set/hset/incrBy) but not before del/hdel — so a memory-cap guard
-    * denies growth while leaving the freeing path open (DENYOOM
-    * semantics: memory-freeing commands stay allowed over cap). */
+    * (set/hset/incrBy/pushes) but not before del/hdel/pops — so a
+    * memory-cap guard denies growth while leaving the freeing path open
+    * (DENYOOM semantics: memory-freeing commands stay allowed over cap). */
   def commitGuarded[A](guard: (String, Boolean) => Unit,
       growGuard: String => Unit = StateTable.NoGrowGuard)(body: Txn => A): A = {
     lock.lock()
     try {
-      val txn = new Txn(this, guard, growGuard)
+      val txn = new Txn(guard, growGuard)
       val result = body(txn)
-      val events = txn.flush()
-      // Redis semantics: a plain SET discards the key's TTL; HSET and
-      // INCR leave it in place; DELETION always clears the TTL (else a
-      // key re-created later under the same name would inherit the old
-      // deadline and be spuriously expired) — including an HDEL that
-      // removed the hash's last field. The clear is decided AT THE
-      // MOMENT of the operation (the Txn records it in event order),
-      // not from post-flush state: a transaction that hdel-empties a
-      // key and then recreates it must still lose the old TTL, exactly
-      // as Redis clears it when the key is deleted.
-      if (expiries.nonEmpty) txn.ttlCleared.foreach(expiries.remove)
       // cap enforcement happens after the transaction's writes land, and
       // its "evicted" events dispatch in order behind the write events
-      val evictions = enforceCap()
-      if (!inNotification.get()) {
-        inNotification.set(true)
-        try (events ++ evictions).foreach(e => subscribers.foreach(_(e)))
-        finally inNotification.set(false)
-      }
+      dispatch(txn.flush() ++ enforceCap())
+      if (txn.pushed) listSignal.signalAll()
       result
     } finally lock.unlock()
   }
+
+  /** Deliver keyspace events to the subscribers, unless this thread is
+    * already inside a notification callback (caller holds the lock). */
+  private def dispatch(events: Seq[KeyEvent]): Unit =
+    if (!inNotification.get()) {
+      inNotification.set(true)
+      try events.foreach(e => subscribers.foreach(_(e)))
+      finally inNotification.set(false)
+    }
 
   /** Subscribe to keyspace events (the keyspace-trigger engine hook). */
   def subscribe(fn: KeyEvent => Unit): Unit = withLock(subscribers += fn)
@@ -215,7 +206,7 @@ final class StateTable {
         val e = entries.get(key)
         if (e != null) {
           unlink(key, e)
-          emit(KeyEvent("expired", key, System.currentTimeMillis(), None))
+          dispatch(KeyEvent("expired", key, System.currentTimeMillis(), None) :: Nil)
         }
       }
     }
@@ -266,7 +257,7 @@ final class StateTable {
   /** A key's hash as a transaction reads it: None when the key is
     * absent, an empty map for a list-only key. Touches a non-empty hash,
     * as [[hgetall]] does. */
-  private[core] def peek(key: String): Option[Map[String, String]] = withLock {
+  private def peek(key: String): Option[Map[String, String]] = withLock {
     expireIfDue(key)
     val e = entries.get(key)
     if (e == null) None
@@ -277,17 +268,7 @@ final class StateTable {
   // --- convenience single-op writes (each is its own transaction) ---
   def set(key: String, value: String): Unit = commit(_.set(key, value))
   def hset(key: String, fields: (String, String)*): Unit = commit(_.hset(key, fields: _*))
-  def del(key: String): Boolean = withLock {
-    expiries.remove(key)
-    val e = entries.get(key)
-    val hadList = e != null && e.list != null
-    if (hadList) {
-      e.list = null
-      shrunk(key, e)
-      emit(KeyEvent("del", key, System.currentTimeMillis(), None))
-    }
-    commit(_.del(key)) || hadList
-  }
+  def del(key: String): Boolean = commit(_.del(key))
   def incrBy(key: String, delta: Long): Long = commit(_.incrBy(key, delta))
   def hdel(key: String, fields: String*): Int = commit(_.hdel(key, fields: _*))
 
@@ -297,55 +278,15 @@ final class StateTable {
   // i.e. inside a sync call or an atomic section — which is exactly the
   // reference's `isBlockAllowed() == false` inside MULTI/EXEC (C4,
   // `run_ctx.rs:197-199`).
-
-  private def emit(e: KeyEvent): Unit =
-    if (!inNotification.get()) {
-      inNotification.set(true)
-      try subscribers.foreach(_(e))
-      finally inNotification.set(false)
-    }
-
-  private def push(key: String, event: String)(grow: Vector[String] => Vector[String]): Long =
-    withLock {
-      val e = entryFor(key)
-      val next = grow(if (e.list == null) Vector.empty else e.list)
-      e.list = next
-      touch(e)
-      resize(key, e, write = true)
-      listSignal.signalAll()
-      emit(KeyEvent(event, key, System.currentTimeMillis(), None))
-      enforceCap().foreach(emit)
-      next.size.toLong
-    }
-
-  /** LPUSH: each value is pushed to the head in argument order (so the
-    * last argument ends up first). Returns the new length. */
-  def lpush(key: String, values: String*): Long =
-    push(key, "lpush")(l => values.foldLeft(l)((acc, v) => v +: acc))
-
-  /** RPUSH: append to the tail. Returns the new length. */
-  def rpush(key: String, values: String*): Long = push(key, "rpush")(_ ++ values)
+  def lpush(key: String, values: String*): Long = commit(_.lpush(key, values: _*))
+  def rpush(key: String, values: String*): Long = commit(_.rpush(key, values: _*))
+  def lpop(key: String): Option[String] = commit(_.lpop(key))
+  def rpop(key: String): Option[String] = commit(_.rpop(key))
 
   private def listOf(key: String): Vector[String] = {
     val e = entries.get(key)
     if (e == null || e.list == null) Vector.empty else e.list
   }
-
-  private def pop(key: String, head: Boolean): Option[String] = {
-    val l = listOf(key)
-    if (l.isEmpty) None
-    else {
-      val e = entries.get(key)
-      val (v, rest) = if (head) (l.head, l.tail) else (l.last, l.init)
-      e.list = if (rest.isEmpty) null else rest
-      shrunk(key, e)
-      emit(KeyEvent(if (head) "lpop" else "rpop", key, System.currentTimeMillis(), None))
-      Some(v)
-    }
-  }
-
-  def lpop(key: String): Option[String] = withLock(pop(key, head = true))
-  def rpop(key: String): Option[String] = withLock(pop(key, head = false))
   def llen(key: String): Long = withLock(listOf(key).size.toLong)
   def lrange(key: String): Seq[String] = withLock(listOf(key))
 
@@ -355,16 +296,15 @@ final class StateTable {
     if (lock.isHeldByCurrentThread)
       throw new IllegalStateException(
         "blocking pop inside a sync call or atomic section (isBlockAllowed=false, C4)")
-    lock.lock()
-    try {
-      var out = pop(key, head = true)
+    withLock {
+      var out = lpop(key)
       var remaining = java.util.concurrent.TimeUnit.MILLISECONDS.toNanos(timeoutMs)
       while (out.isEmpty && remaining > 0) {
         remaining = listSignal.awaitNanos(remaining)
-        out = pop(key, head = true)
+        out = lpop(key)
       }
       out
-    } finally lock.unlock()
+    }
   }
 
   /** True when a Promise-returning (blocking) operation may run on this
@@ -445,15 +385,169 @@ final class StateTable {
     } finally lock.unlock()
   }
 
-  private[core] def applyWrite(key: String, fields: Map[String, String]): Unit = {
-    val e = entryFor(key)
-    e.hash = fields
-    touch(e)
-    resize(key, e, write = true)
+  /** A key's value as a transaction leaves it: its hash and list (null
+    * when absent); whether a write touched it, so the commit touches it
+    * and re-attributes it to the writer; whether it was deleted on the
+    * way, so its old entry goes with its owner; and whether its TTL was
+    * cleared, by a SET, an HDEL of the hash's last field or a deletion.
+    * Each flag is set AT THE MOMENT of its operation, so a transaction
+    * that empties a key and recreates it still loses the old TTL, as
+    * Redis clears a TTL with its key. */
+  private final class Pending(var hash: Map[String, String], var list: Vector[String]) {
+    var wrote = false
+    var deleted = false
+    var ttlCleared = false
   }
-  private[core] def applyDel(key: String): Unit = {
-    val e = entries.get(key)
-    if (e != null && e.hash != null) { e.hash = null; shrunk(key, e) }
+
+  /** A transaction: buffered writes + read-your-writes, flushed
+    * atomically by [[commit]]. `guard(key, isWrite)` runs
+    * before each operation (ACL hook; a no-op for [[commit]]);
+    * `growGuard(key)` runs before each growing write only (memory-cap
+    * hook — del/hdel/pops stay allowed over cap). */
+  final class Txn private[core] (guard: (String, Boolean) => Unit, growGuard: String => Unit) {
+    // each written key's pending value, in first-write order
+    private val writes = scala.collection.mutable.LinkedHashMap.empty[String, Pending]
+    private val events = new ArrayBuffer[KeyEvent]
+    // whether a push ran, so the commit wakes blocked pops
+    private[core] var pushed = false
+
+    // the key's hash as reads see it: None when the key is absent, an
+    // empty map for a list-only key (a first read touches, as hgetall does)
+    private def current(key: String): Option[Map[String, String]] = writes.get(key) match {
+      case Some(p) =>
+        if (p.hash != null) Some(p.hash) else if (p.list != null) Some(Map.empty) else None
+      case None => peek(key)
+    }
+    private def pending(key: String): Pending = writes.getOrElseUpdate(key, {
+      val e = entries.get(key)
+      if (e == null) new Pending(null, null) else new Pending(e.hash, e.list)
+    })
+    private def written(key: String): Pending = { val p = pending(key); p.wrote = true; p }
+    private def event(name: String, key: String): Unit =
+      events += KeyEvent(name, key, System.currentTimeMillis(), None)
+    // a key left without a hash and a list is deleted, and its TTL with it
+    private def dropIfEmpty(p: Pending): Unit =
+      if (p.hash == null && p.list == null) { p.deleted = true; p.ttlCleared = true }
+
+    def get(key: String): Option[String] = { guard(key, false); current(key).flatMap(_.get(ValueField)) }
+    def hget(key: String, field: String): Option[String] = { guard(key, false); current(key).flatMap(_.get(field)) }
+    def hgetall(key: String): Map[String, String] = { guard(key, false); current(key).getOrElse(Map.empty) }
+    def exists(key: String): Boolean = { guard(key, false); current(key).isDefined }
+
+    def set(key: String, value: String): Unit = {
+      guard(key, true); growGuard(key)
+      val p = written(key)
+      p.hash = Map(ValueField -> value)
+      p.ttlCleared = true
+      event("set", key)
+    }
+
+    def hset(key: String, fields: (String, String)*): Unit = {
+      guard(key, true); growGuard(key)
+      val next = current(key).getOrElse(Map.empty) ++ fields
+      written(key).hash = next
+      event("hset", key)
+    }
+
+    /** DEL: remove the whole key, hash and list, with one event. */
+    def del(key: String): Boolean = {
+      guard(key, true)
+      val existed = current(key).isDefined
+      val p = pending(key)
+      p.hash = null
+      p.list = null
+      dropIfEmpty(p)
+      if (existed) event("del", key)
+      existed
+    }
+
+    /** HDEL: remove fields from a hash; the key disappears when its
+      * last value goes (Redis semantics). Returns #fields removed. */
+    def hdel(key: String, fields: String*): Int = {
+      guard(key, true)
+      val cur = current(key).getOrElse(Map.empty)
+      val removed = fields.count(cur.contains)
+      if (removed > 0) {
+        val next = cur -- fields
+        if (next.nonEmpty) written(key).hash = next
+        else {
+          val p = pending(key)
+          p.hash = null
+          p.ttlCleared = true
+          dropIfEmpty(p)
+        }
+        event("hdel", key)
+      }
+      removed
+    }
+
+    /** INCRBY. A result past the Long range is refused, as Redis
+      * refuses it, before anything is buffered: the value stays as it
+      * was and no event fires. */
+    def incrBy(key: String, delta: Long): Long = {
+      guard(key, true); growGuard(key)
+      val cur = current(key).getOrElse(Map.empty)
+      val next =
+        try Math.addExact(cur.get(ValueField).map(_.toLong).getOrElse(0L), delta)
+        catch { case _: ArithmeticException =>
+          throw new ArithmeticException(s"increment or decrement would overflow ('$key')") }
+      written(key).hash = cur + (ValueField -> next.toString)
+      event("incrby", key)
+      next
+    }
+
+    /** LPUSH: each value is pushed to the head in argument order (so the
+      * last argument ends up first). Returns the new length. */
+    def lpush(key: String, values: String*): Long =
+      push(key, "lpush")(l => values.foldLeft(l)((acc, v) => v +: acc))
+
+    /** RPUSH: append to the tail. Returns the new length. */
+    def rpush(key: String, values: String*): Long = push(key, "rpush")(_ ++ values)
+
+    private def push(key: String, name: String)(grow: Vector[String] => Vector[String]): Long = {
+      guard(key, true); growGuard(key)
+      val p = written(key)
+      p.list = grow(if (p.list == null) Vector.empty else p.list)
+      pushed = true
+      event(name, key)
+      p.list.size.toLong
+    }
+
+    def lpop(key: String): Option[String] = pop(key, head = true)
+    def rpop(key: String): Option[String] = pop(key, head = false)
+
+    /** LPOP/RPOP: the key disappears with its last value. */
+    private def pop(key: String, head: Boolean): Option[String] = {
+      guard(key, true)
+      val p = pending(key)
+      val l = p.list
+      if (l == null || l.isEmpty) None
+      else {
+        val rest = if (head) l.tail else l.init
+        p.list = if (rest.isEmpty) null else rest
+        dropIfEmpty(p)
+        event(if (head) "lpop" else "rpop", key)
+        Some(if (head) l.head else l.last)
+      }
+    }
+
+    /** Land the pending values: a key deleted on the way loses its old
+      * entry (bytes, owner, TTL); a written key is touched and
+      * re-attributed to the writer, which pops and deletions never do. */
+    private[core] def flush(): Seq[KeyEvent] = {
+      writes.foreach { case (key, p) =>
+        if (p.deleted) { val old = entries.get(key); if (old != null) unlink(key, old) }
+        if (p.ttlCleared && expiries.nonEmpty) expiries.remove(key)
+        if (p.hash != null || p.list != null) {
+          val e = entryFor(key)
+          e.hash = p.hash
+          e.list = p.list
+          if (p.wrote) touch(e)
+          resize(key, e, write = p.wrote)
+        }
+      }
+      events.toSeq
+    }
   }
 }
 
@@ -486,92 +580,4 @@ object StateTable {
 
   private[core] val NoGuard: (String, Boolean) => Unit = (_, _) => ()
   private[core] val NoGrowGuard: String => Unit = _ => ()
-
-  /** A transaction: buffered writes + read-your-writes, flushed
-    * atomically by [[StateTable.commit]]. `guard(key, isWrite)` runs
-    * before each operation (ACL hook; no-op by default);
-    * `growGuard(key)` runs before each growing write only (memory-cap
-    * hook — del/hdel stay allowed over cap). */
-  final class Txn private[core] (table: StateTable,
-      guard: (String, Boolean) => Unit = NoGuard,
-      growGuard: String => Unit = NoGrowGuard) {
-    private val writes = scala.collection.mutable.LinkedHashMap.empty[String, Option[Map[String, String]]]
-    private val events = new ArrayBuffer[KeyEvent]
-    // keys whose TTL must be cleared at commit — recorded when the
-    // clearing operation HAPPENS (set/del/last-field hdel), so later
-    // recreation inside the same transaction cannot resurrect the TTL
-    private val ttlClears = scala.collection.mutable.LinkedHashSet.empty[String]
-    private[core] def ttlCleared: Iterable[String] = ttlClears
-
-    private def current(key: String): Option[Map[String, String]] =
-      writes.getOrElse(key, table.peek(key))
-
-    def get(key: String): Option[String] = { guard(key, false); current(key).flatMap(_.get(ValueField)) }
-    def hget(key: String, field: String): Option[String] = { guard(key, false); current(key).flatMap(_.get(field)) }
-    def hgetall(key: String): Map[String, String] = { guard(key, false); current(key).getOrElse(Map.empty) }
-    def exists(key: String): Boolean = { guard(key, false); current(key).isDefined }
-
-    def set(key: String, value: String): Unit = {
-      guard(key, true); growGuard(key)
-      writes.update(key, Some(Map(ValueField -> value)))
-      ttlClears += key // SET discards the key's TTL
-      events += KeyEvent("set", key, System.currentTimeMillis(), None)
-    }
-
-    def hset(key: String, fields: (String, String)*): Unit = {
-      guard(key, true); growGuard(key)
-      writes.update(key, Some(current(key).getOrElse(Map.empty) ++ fields))
-      events += KeyEvent("hset", key, System.currentTimeMillis(), None)
-    }
-
-    def del(key: String): Boolean = {
-      guard(key, true)
-      val existed = current(key).isDefined
-      writes.update(key, None)
-      ttlClears += key // deletion clears the TTL at the moment it happens
-      if (existed) events += KeyEvent("del", key, System.currentTimeMillis(), None)
-      existed
-    }
-
-    /** HDEL: remove fields from a hash; the key disappears when its
-      * last field goes (Redis semantics). Returns #fields removed. */
-    def hdel(key: String, fields: String*): Int = {
-      guard(key, true)
-      val cur = current(key).getOrElse(Map.empty)
-      val removed = fields.count(cur.contains)
-      if (removed > 0) {
-        val next = cur -- fields
-        writes.update(key, if (next.isEmpty) None else Some(next))
-        // an HDEL that removes the hash's last field deletes the key —
-        // and with it the TTL, even if the key is recreated later in
-        // this same transaction
-        if (next.isEmpty) ttlClears += key
-        events += KeyEvent("hdel", key, System.currentTimeMillis(), None)
-      }
-      removed
-    }
-
-    /** INCRBY. A result past the Long range is refused, as Redis
-      * refuses it, before anything is buffered: the value stays as it
-      * was and no event fires. */
-    def incrBy(key: String, delta: Long): Long = {
-      guard(key, true); growGuard(key)
-      val cur = current(key).getOrElse(Map.empty)
-      val next =
-        try Math.addExact(cur.get(ValueField).map(_.toLong).getOrElse(0L), delta)
-        catch { case _: ArithmeticException =>
-          throw new ArithmeticException(s"increment or decrement would overflow ('$key')") }
-      writes.update(key, Some(cur + (ValueField -> next.toString)))
-      events += KeyEvent("incrby", key, System.currentTimeMillis(), None)
-      next
-    }
-
-    private[core] def flush(): Seq[KeyEvent] = {
-      writes.foreach {
-        case (k, Some(m)) => table.applyWrite(k, m)
-        case (k, None) => table.applyDel(k)
-      }
-      events.toSeq
-    }
-  }
 }

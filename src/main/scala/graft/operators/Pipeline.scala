@@ -1150,29 +1150,30 @@ object Pipeline {
     * the distributed rounds exactly: code-point symbols, pair counts
     * weighted by word frequency, argmax on (count desc, pair asc under
     * UTF-8 binary collation), left-to-right non-overlapping merge
-    * application. */
+    * application. The pair counts are built once; each merge re-counts
+    * only the words it changed (their old pairs out, their new pairs
+    * in), dropping pairs whose count reaches 0. */
   private def learnBpeMergesDriver(words: Array[(String, Long)],
       numMerges: Int,
       symbolize: String => Array[String] = codePointSymbols): Seq[(Int, String, String)] = {
     val syms: Array[Array[String]] = words.map(w => symbolize(w._1))
     val cnts: Array[Long] = words.map(_._2)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String)]
+    val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
+    def addPairs(s: Array[String], c: Long): Unit = {
+      var j = 0
+      while (j < s.length - 1) {
+        val key = (s(j), s(j + 1))
+        val n = counts.getOrElse(key, 0L) + c
+        if (n == 0L) counts.remove(key) else counts.update(key, n)
+        j += 1
+      }
+    }
+    var i = 0
+    while (i < syms.length) { addPairs(syms(i), cnts(i)); i += 1 }
     var rank = 0
     var done = false
     while (rank < numMerges && !done) {
-      val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
-      var i = 0
-      while (i < syms.length) {
-        val s = syms(i)
-        val c = cnts(i)
-        var j = 0
-        while (j < s.length - 1) {
-          val key = (s(j), s(j + 1))
-          counts.update(key, counts.getOrElse(key, 0L) + c)
-          j += 1
-        }
-        i += 1
-      }
       if (counts.isEmpty) done = true
       else {
         var bestA: String = null
@@ -1199,7 +1200,9 @@ object Pipeline {
                 buf += m; p += 2
               } else { buf += s(p); p += 1 }
             }
+            addPairs(s, -cnts(i))
             syms(i) = buf.toArray
+            addPairs(syms(i), cnts(i))
           }
           i += 1
         }

@@ -55,6 +55,23 @@ class BlockingSpec extends AnyFunSuite {
     e.close()
   }
 
+  test("blpop wakes on a push made inside an atomic section") {
+    val e = new Engine(TestSpark.spark, executionThreads = 2)
+    e.load(LibraryDefinition("lib", code = { b =>
+      b.registerAsyncFunction("consume", (ctx, _) =>
+        ctx.blpop("queue", 30000).map(RespString).getOrElse(RespNull))
+      b.registerFunction("produce", (ctx, _) =>
+        RespLong(ctx.atomic { x => x.set("last", "payload"); x.rpush("queue", "payload") }))
+    }))
+    val fut = e.callAsync("lib", "consume")
+    Thread.sleep(100) // let the consumer block first
+    assert(e.call("lib", "produce") == RespLong(1))
+    // well inside blpop's own timeout: only the commit's wake-up returns it this soon
+    assert(Await.result(fut, 10.seconds) == RespString("payload"))
+    assert(e.state.llen("queue") == 0)
+    e.close()
+  }
+
   test("blpop times out to null when nothing arrives") {
     val e = new Engine(TestSpark.spark, executionThreads = 2)
     e.load(LibraryDefinition("lib", code = { b =>

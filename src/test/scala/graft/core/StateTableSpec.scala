@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** The state table against a plain sequential model (values, keyspace
-  * events, byte accounting, last-writer attribution, LRU eviction),
+  * events, TTL presence, byte accounting, last-writer attribution, LRU
+  * eviction, multi-op transactions with list writes),
   * its invariants under concurrent writers, and the Redis refusals of
   * arithmetic that would wrap (INCRBY past the Long range, EXPIRE past
   * the epoch-millis range). */
@@ -64,8 +65,12 @@ class StateTableSpec extends AnyFunSuite {
   test("property: random op sequences match a sequential model") {
     val spark = TestSpark.spark
     // no shrinking: a failing sequence is reported whole, op by op
-    val prop = Prop.forAllNoShrink(Gen.oneOf(0, 0, 3, 5), Gen.choose(0, 60).flatMap(Gen.listOfN(_, genOp))) {
-      (cap, ops) =>
+    val genRun = for {
+      cap <- Gen.oneOf(0, 0, 3, 5)
+      ops <- Gen.choose(0, 60).flatMap(Gen.listOfN(_, genOp(cap)))
+    } yield (cap, ops)
+    val prop = Prop.forAllNoShrink(genRun) {
+      case (cap, ops) =>
         val t = new StateTable
         t.setMaxKeys(cap)
         val events = recorder(t)
@@ -84,6 +89,7 @@ class StateTableSpec extends AnyFunSuite {
           Keys.foreach { k =>
             assert(t.exists(k) == m.keys.contains(k), s"exists($k) at $where")
             assert(t.lrange(k) == m.keys.get(k).flatMap(_.list).getOrElse(Vector.empty), s"lrange($k) at $where")
+            assert(t.ttl(k).isDefined == m.ttls.contains(k), s"ttl($k) at $where")
           }
           assert(t.size == m.keys.size, s"size at $where")
           assert(t.usedBytes == m.bytes(_ => true), s"usedBytes at $where")
@@ -182,12 +188,14 @@ object StateTableSpec {
   final case class Get(key: String, scope: String) extends Op
   final case class HGetAll(key: String, scope: String) extends Op
   case object SnapshotRestore extends Op { def scope: String = null }
+  /** Writes run as one transaction; every op carries the Atomic's scope. */
+  final case class Atomic(ops: List[Op], scope: String) extends Op
 
   private val genKey = Gen.oneOf(Keys)
   private val genScope = Gen.oneOf[String]("libA", "libB", null)
   private val genValue = Gen.oneOf("1", "-7", "42", "", "x", "hello")
   private val genField = Gen.oneOf("f", "g", VF)
-  private val genOp: Gen[Op] = Gen.frequency(
+  private def genWrite(genScope: Gen[String]): Gen[Op] = Gen.frequency(
     5 -> Gen.zip(genKey, genValue, genScope).map(SetOp.tupled),
     4 -> Gen.zip(genKey, Gen.nonEmptyListOf(Gen.zip(genField, genValue)).map(_.take(3)), genScope).map(HSet.tupled),
     3 -> Gen.zip(genKey, genScope).map(Del.tupled),
@@ -195,16 +203,35 @@ object StateTableSpec {
     3 -> Gen.zip(genKey, Gen.choose(-5L, 5L), genScope).map(IncrBy.tupled),
     4 -> Gen.zip(genKey, Gen.oneOf(true, false), Gen.nonEmptyListOf(genValue).map(_.take(3)), genScope)
       .map(Push.tupled),
-    3 -> Gen.zip(genKey, Gen.oneOf(true, false), genScope).map(Pop.tupled),
+    3 -> Gen.zip(genKey, Gen.oneOf(true, false), genScope).map(Pop.tupled))
+  // transactions only without a key cap, so recency order inside one
+  // (first reads touch before the commit's writes) never decides an eviction
+  private val genAtomic: Gen[Op] = for {
+    scope <- genScope
+    n <- Gen.choose(2, 3)
+    ops <- Gen.listOfN(n, genWrite(Gen.const(scope)))
+  } yield Atomic(ops, scope)
+  private def genOp(cap: Int): Gen[Op] = Gen.frequency(Seq(
+    25 -> genWrite(genScope),
     2 -> Gen.zip(genKey, genScope).map(Expire.tupled),
     2 -> Gen.zip(genKey, genScope).map(Get.tupled),
     2 -> Gen.zip(genKey, genScope).map(HGetAll.tupled),
-    1 -> Gen.const(SnapshotRestore))
+    1 -> Gen.const(SnapshotRestore)) ++ (if (cap == 0) Seq(4 -> genAtomic) else Nil): _*)
 
   /** Run `op` against the table; a refusal returns its exception class. */
   private def runOp(t: StateTable, op: Op, spark: org.apache.spark.sql.SparkSession): Any = {
     if (op.scope != null) t.writerScope.set(op.scope)
     try op match {
+      case Atomic(ops, _) => t.commit(x => ops.map {
+        case SetOp(k, v, _) => x.set(k, v)
+        case HSet(k, fs, _) => x.hset(k, fs: _*)
+        case Del(k, _) => x.del(k)
+        case HDel(k, fs, _) => x.hdel(k, fs: _*)
+        case IncrBy(k, d, _) => x.incrBy(k, d)
+        case Push(k, head, vs, _) => if (head) x.lpush(k, vs: _*) else x.rpush(k, vs: _*)
+        case Pop(k, head, _) => if (head) x.lpop(k) else x.rpop(k)
+        case other => sys.error(s"not a transaction write: $other")
+      })
       case SetOp(k, v, _) => t.set(k, v)
       case HSet(k, fs, _) => t.hset(k, fs: _*)
       case Del(k, _) => t.del(k)
@@ -229,10 +256,13 @@ object StateTableSpec {
       list.map(_.iterator.map(_.length.toLong).sum).getOrElse(0L)
   }
 
-  /** The sequential model: one map of live keys, the events the last op
-    * fired (evictions excluded), and a recency counter. */
+  /** The sequential model: one map of live keys, the keys with a TTL, the
+    * events the last op fired (evictions excluded), and a recency
+    * counter. */
   final class Model(cap: Int) {
     val keys = mutable.Map.empty[String, MKey]
+    // every TTL is the 1-hour one, so none expires during a run
+    val ttls = mutable.Set.empty[String]
     var events: Seq[String] = Nil
     private var seq = 0L
 
@@ -260,22 +290,36 @@ object StateTableSpec {
     def apply(op: Op): Any = {
       val ev = ArrayBuffer.empty[String]
       val out: Any = op match {
-        case SetOp(k, v, s) => write(k, Map(VF -> v), s); ev += s"set:$k"; ()
+        case Atomic(ops, _) =>
+          // a refused op discards the whole transaction: its writes, TTL
+          // clears and events
+          val (savedKeys, savedTtls) = (keys.clone(), ttls.clone())
+          val outs = ops.map { o => val r = apply(o); ev ++= events; r }
+          outs.collectFirst { case c: Class[_] => c } match {
+            case Some(refused) =>
+              keys.clear(); keys ++= savedKeys
+              ttls.clear(); ttls ++= savedTtls
+              ev.clear()
+              refused
+            case None => outs
+          }
+        case SetOp(k, v, s) => write(k, Map(VF -> v), s); ttls -= k; ev += s"set:$k"; ()
         case HSet(k, fs, s) => write(k, txnRead(k) ++ fs, s); ev += s"hset:$k"; ()
         case Del(k, _) =>
           val hadList = keys.get(k).exists(_.list.isDefined)
-          if (hadList) { drop(k, hashPart = false); ev += s"del:$k" }
+          if (hadList) drop(k, hashPart = false)
           txnRead(k)
           val existed = keys.contains(k)
           drop(k, hashPart = true)
-          if (existed) ev += s"del:$k"
+          if (existed || hadList) ev += s"del:$k"
+          ttls -= k
           existed || hadList
         case HDel(k, fs, s) =>
           val cur = txnRead(k)
           val removed = fs.count(cur.contains)
           if (removed > 0) {
             val next = cur -- fs
-            if (next.isEmpty) drop(k, hashPart = true) else write(k, next, s)
+            if (next.isEmpty) { drop(k, hashPart = true); ttls -= k } else write(k, next, s)
             ev += s"hdel:$k"
           }
           removed
@@ -299,11 +343,12 @@ object StateTableSpec {
             case Some(l) =>
               val (v, rest) = if (head) (l.head, l.tail) else (l.last, l.init)
               if (rest.isEmpty) drop(k, hashPart = false) else keys(k) = keys(k).copy(list = Some(rest))
+              if (!keys.contains(k)) ttls -= k
               ev += s"${if (head) "l" else "r"}pop:$k"
               Some(v)
             case None => None
           }
-        case Expire(k, _) => keys.contains(k)
+        case Expire(k, _) => if (keys.contains(k)) ttls += k; keys.contains(k)
         case Get(k, _) =>
           val v = hash(k).get(VF)
           if (v.isDefined) touch(k)
@@ -333,6 +378,7 @@ object StateTableSpec {
       assert(survivors.forall(k => stamps.forall(_ <= keys(k).stamp)),
         s"evicted $victims before a less recent key of $survivors at $where")
       keys --= victims
+      ttls --= victims
     }
   }
 }

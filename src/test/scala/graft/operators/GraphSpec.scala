@@ -68,6 +68,26 @@ class GraphSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.graph.rankBroadcastMaxNodes")
   }
 
+  test("q166/q251: the unhinted adjacency joins and the hub fallback return the default rows") {
+    def rows(df: => org.apache.spark.sql.DataFrame) = df.collect().toSeq
+    def withZero(key: String)(body: => Unit): Unit = {
+      spark.conf.set(key, "0")
+      try body finally spark.conf.unset(key)
+    }
+    val triangles = rows(Graph.qTriangleCensus(spark, sf))
+    val links = rows(Graph.qLinkPrediction(spark, sf))
+    // a non-empty graph: an edge-count gate of 0 takes the unhinted joins,
+    // a max-degree gate of 0 takes q251's window formulation
+    assert(triangles.head.getLong(1) > 0 && links.nonEmpty)
+    withZero("spark.graft.graph.adjBroadcastMaxEdges") {
+      assert(rows(Graph.qTriangleCensus(spark, sf)) == triangles)
+      assert(rows(Graph.qLinkPrediction(spark, sf)) == links)
+    }
+    withZero("spark.graft.graph.inrowAdjMaxDegree") {
+      assert(rows(Graph.qLinkPrediction(spark, sf)) == links)
+    }
+  }
+
   test("q168/q169: degree histogram and assortativity match driver references") {
     val lp = Tables.lineitem(spark, sf).select("l_orderkey", "l_partkey")
       .collect().map(r => (r.getLong(0), r.getLong(1))).distinct

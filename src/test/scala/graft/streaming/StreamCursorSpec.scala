@@ -68,6 +68,34 @@ class StreamCursorSpec extends AnyFunSuite {
     assert(ahead.isEmpty, ahead.asScala.mkString("; "))
   }
 
+  test("ids past MaxDeliveredAhead behind a failed id wait for its retry (E3/E4)") {
+    val max = StreamTriggerEngine.MaxDeliveredAhead
+    val c = new StreamCursor
+    val delivered = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def offer(ms: Long, fail: Boolean = false): Unit =
+      c.offer(StreamRecord("s:1", ms, 0L, Map.empty), window = 2, ErrorPolicy.Retry, now = 0L) {
+        if (fail) throw new RuntimeException(s"nack $ms") else delivered += ms
+      }
+    offer(1L, fail = true)
+    assert(c.pendingFailed.toSeq == Seq(StreamId(1L, 0L)))
+    // the window has room, so newer ids run ahead of the failure until the bound
+    (2L to max + 11L).foreach(offer(_))
+    assert(delivered == (2L to max + 1L))
+    assert(c.deliveredAhead.size == max)
+    assert(c.acked == StreamId.Start)
+    // the retry succeeds: the checkpoint jumps to the last id delivered ahead
+    delivered.clear()
+    offer(1L)
+    assert(delivered == Seq(1L))
+    assert(c.acked == StreamId(max + 1L, 0L))
+    assert(c.pendingFailed.isEmpty && c.deliveredAhead.isEmpty)
+    // the next pass over the whole range delivers exactly the refused ids
+    delivered.clear()
+    (1L to max + 11L).foreach(offer(_))
+    assert(delivered == (max + 2L to max + 11L))
+    assert(c.acked == StreamId(max + 11L, 0L))
+  }
+
   test("property: driver and executor delivery agree per stream (E3/E4)") {
     import org.scalacheck.{Gen, Prop}
     import org.scalacheck.Prop.propBoolean
