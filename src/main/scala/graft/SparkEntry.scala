@@ -2,15 +2,42 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
+import graft.streaming.EventTime
+import Tier._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Where a query stands in `graft.Bench`: `Headline` queries are timed
+  * and summed into the r1-comparable headline total, `Timed` queries are
+  * timed and reported beside it, `Untimed` queries are not timed. */
+sealed trait Tier
+object Tier {
+  case object Headline extends Tier
+  case object Timed extends Tier
+  case object Untimed extends Tier
+}
+
+/** One gate query: its name, its runner over an sf directory, its bench
+  * tier, and the DuckDB SQL that must return the same rows, if any. */
+final case class QuerySpec(
+    name: String,
+    run: (SparkSession, String) => DataFrame,
+    tier: Tier,
+    oracle: Option[String] = None)
+
+object QuerySpec {
+  def apply(name: String, run: (SparkSession, String) => DataFrame, tier: Tier,
+      oracle: String): QuerySpec = QuerySpec(name, run, tier, Some(oracle))
+}
+
+/** Driver contract (SURVEY.md §7).
   *
-  * `queries` is the executable operator inventory (SURVEY §2): each entry
-  * is one implemented operator; `oracleSql` carries the DuckDB-equivalent
-  * SQL for the correctness gate. Entries without an oracle are
-  * probabilistic/hash-based operators (LSH, SimHash, winnowing, stubbed
-  * decode) whose values are covered by ScalaTest against brute-force
-  * ground truth instead.
+  * `registry` declares every gate query once, in qNNN order: its runner,
+  * its bench tier and, where it has one, its DuckDB oracle SQL. `queries`
+  * (name → runner; the executable operator inventory, SURVEY §2) and
+  * `oracleSql` (name → oracle, the correctness gate) are read off it, and
+  * `graft.Bench` times every entry whose tier is not `Untimed`. Entries
+  * without an oracle are probabilistic/hash-based operators (LSH,
+  * SimHash, winnowing, stubbed decode) whose values are covered by
+  * ScalaTest against brute-force ground truth instead.
   */
 object SparkEntry {
 
@@ -18,1046 +45,72 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.qRevenueByNation(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every gate query, once. Lazy because the shared oracle pieces it
+    * reads (`q103OraclePrefix`, `pairedCountsCte`, `lpaOracle`, …) are
+    * defined below it. */
+  lazy val registry: Seq[QuerySpec] = Seq(
     // --- SURVEY §2.5 parity queries (trigger/CDC/cluster semantics) ---
-    "q01_trigger_count" -> (Relational.qTriggerCount _),
-    "q02_prefix_filter" -> (Relational.qPrefixFilter _),
-    "q03_lookup_enrich" -> (Relational.qLookupEnrich _),
-    "q04_cross_shard_sum" -> (Relational.qCrossShardSum _),
-    "q05_checkpoint_order" -> (Relational.qCheckpointOrder _),
-    "q06_stream_window" -> (Relational.qStreamWindow _),
-    // --- relational surface (SURVEY §2.4) ---
-    "q07_semi_join" -> (Relational.qSemiJoin _),
-    "q08_anti_join" -> (Relational.qAntiJoin _),
-    "q09_topk" -> (Relational.qTopK _),
-    "q10_window_rank" -> (Relational.qWindowRank _),
-    "q11_window_lag" -> (Relational.qWindowLag _),
-    "q12_rollup" -> (Relational.qRollup _),
-    "q13_cube" -> (Relational.qCube _),
-    "q14_set_intersect" -> (Relational.qSetIntersect _),
-    "q15_set_except" -> (Relational.qSetExcept _),
-    "q16_scalar_json" -> (Relational.qScalarJson _),
-    "q17_distinct_agg" -> (Relational.qDistinctAgg _),
-    "q18_pricing_summary" -> (Relational.qPricingSummary _),
-    "q19_revenue_by_nation" -> (Relational.qRevenueByNation _),
-    "q20_range_join" -> (Relational.qRangeJoin _),
-    // --- text analysis ---
-    "q21_lang_id" -> (TextAnalysis.qLangId _),
-    "q22_token_count" -> (TextAnalysis.qTokenCount _),
-    "q23_text_quality" -> (TextAnalysis.qTextQuality _),
-    "q24_quality_filter" -> (TextAnalysis.qQualityFilter _),
-    "q25_fingerprint" -> (TextAnalysis.qFingerprint _),
-    // --- dedup ---
-    "q26_dedup_exact" -> (Dedup.qExact _),
-    "q27_dedup_minhash_lsh" -> (Dedup.qMinhashLsh _),
-    "q28_dedup_simhash" -> (Dedup.qSimhash _),
-    "q29_ngram_jaccard" -> ((s, d) => Dedup.qNgramJaccard(s, d)),
-    "q30_embedding_near_dup" -> ((s, d) => Dedup.qEmbeddingNearDup(s, d)),
-    "q31_embedding_lsh_near_dup" -> ((s, d) => Dedup.qEmbeddingLshNearDup(s, d)),
-    // --- similarity search ---
-    "q32_knn_brute_force" -> (Similarity.qBruteForceTopK _),
-    "q33_knn_lsh" -> ((s, d) => Similarity.qLshTopK(s, d)),
-    "q34_label_centroids" -> (Similarity.qLabelCentroids _),
-    // --- multimodal plumbing ---
-    "q35_media_meta" -> (Multimodal.qMediaMeta _),
-    "q36_frame_sample" -> ((s, d) => Multimodal.qFrameSample(s, d)),
-    "q37_media_features" -> (Multimodal.qMediaFeatures _),
-    // --- event-time streaming (real readStream + watermark, append mode) ---
-    "q38_watermark_tumbling" -> (graft.streaming.EventTime.qWatermarkTumbling _),
-    "q39_session_window" -> (graft.streaming.EventTime.qSessionWindow _),
-    // --- training-data pipeline curation ---
-    "q40_dataset_mix" -> (Pipeline.qDatasetMix _),
-    "q41_paragraph_dedup" -> (Pipeline.qParagraphDedup _),
-    "q42_contamination" -> ((s, d) => Pipeline.qContamination(s, d)),
-    "q43_approx_distinct" -> (Pipeline.qApproxDistinct _),
-    "q44_asof_enrich" -> (Relational.qAsofEnrich _),
-    "q45_streaming_dedup" -> (graft.streaming.EventTime.qStreamingDedup _),
-    "q46_knn_ivf" -> ((s, d) => Similarity.qIvfTopK(s, d)),
-    "q47_percentiles" -> (Pipeline.qPercentiles _),
-    // q47x/q104x: integer twins of the two version-mobile oracle
-    // constructs (quantile_cont interpolation, ROUND on computed
-    // doubles — VERDICT r8 #7): discrete order statistics and exact
-    // cents, so a future oracle-engine bump degrades one row, not the
-    // percentile/winsorize family
-    "q47x_percentiles_exact" -> (Pipeline.qPercentilesExact _),
-    "q48_edit_distance" -> ((s, d) => Dedup.qEditDistance(s, d)),
-    "q49_percentile_sketch" -> ((s, d) => Pipeline.qPercentileSketch(s, d)),
-    "q50_model_score" -> (Inference.qModelScore _),
-    "q51_sliding_window" -> (graft.streaming.EventTime.qSlidingWindow _),
-    "q52_audio_features" -> (Multimodal.qAudioFeatures _),
-    "q53_video_features" -> (Multimodal.qVideoFeatures _),
-    "q54_sequence_pack" -> ((s, d) => Pipeline.qSequencePack(s, d)),
-    "q55_vocabulary" -> ((s, d) => Pipeline.qVocabulary(s, d)),
-    "q56_dedup_keep" -> (Dedup.qDedupKeep _),
-    "q57_dedup_components" -> (Dedup.qDedupComponents _),
-    "q58_pii_redact" -> (TextAnalysis.qPiiRedact _),
-    "q59_repetition" -> (TextAnalysis.qRepetition _),
-    "q60_hash_sample" -> ((s, d) => Pipeline.qHashSample(s, d)),
-    "q61_stream_stream_join" -> (graft.streaming.EventTime.qStreamStreamJoin _),
-    "q62_grouping_sets" -> (Relational.qGroupingSets _),
-    "q63_tfidf" -> (TextAnalysis.qTfidf _),
-    "q64_unigram_nll" -> (TextAnalysis.qUnigramNll _),
-    // q65: image perceptual-hash near-dup — rows-only (JPEG/PNG encode
-    // is not SQL-expressible); value-verified by ImageDedupSpec against
-    // brute-force Hamming
-    "q65_image_near_dup" -> ((s, d) => Multimodal.qImageNearDup(s, d)),
-    // q66: SQ8-quantized ANN — rows-only (quantization error makes
-    // ranks approximate); SimilaritySpec pins recall vs exact float
-    "q66_knn_sq8" -> ((s, d) => Similarity.qSq8TopK(s, d)),
-    "q67_pipeline_e2e" -> ((s, d) => Pipeline.qPipelineE2e(s, d)),
-    "q68_stream_left_outer" -> (graft.streaming.EventTime.qStreamStreamLeftOuter _),
-    "q69_incremental_dedup" -> (Dedup.qIncrementalDedup _),
-    "q70_stream_static_join" -> (graft.streaming.EventTime.qStreamStaticJoin _),
-    "q71_chunking" -> ((s, d) => Pipeline.qChunk(s, d)),
-    "q72_quantile_filter" -> ((s, d) => Pipeline.qQuantileFilter(s, d)),
-    "q73_pivot" -> (Relational.qPivot _),
-    "q74_sessionize" -> ((s, d) => Relational.qSessionize(s, d)),
-    // q75: SemDeDup-style clustered semantic dedup — rows-only (k-means
-    // codebook not SQL-expressible); SemanticDedupSpec pins precision
-    // 1.0 and a recall floor vs brute-force all-pairs cosine
-    "q75_semantic_dedup" -> ((s, d) => Dedup.qSemanticDedup(s, d)),
-    // q76: Misra-Gries heavy hitters — rows-only (estimates are
-    // merge-order-dependent within the n/m band); HeavyHittersSpec
-    // pins presence and both error bounds against exact counts
-    "q76_heavy_hitters" -> ((s, d) => TextAnalysis.qHeavyHitters(s, d)),
-    // q77: winnowing-based containment detection — rows-only (rolling-
-    // hash fingerprints not SQL-expressible); ContainmentSpec asserts
-    // every planted containment is found and the exact verify holds
-    "q77_containment" -> ((s, d) => Dedup.qContainment(s, d)),
-    // q78: BPE merge learning — rows-only (iterative training is not
-    // SQL-expressible); BpeSpec asserts the exact merge sequence
-    // against a driver-side reference implementation
-    "q78_bpe_merges" -> ((s, d) => Pipeline.qBpeMerges(s, d)),
-    "q79_bigram_nll" -> (TextAnalysis.qBigramNll _),
-    "q80_source_overlap" -> ((s, d) => Pipeline.qSourceOverlap(s, d)),
-    "q81_token_budget" -> ((s, d) => Pipeline.qTokenBudget(s, d)),
-    // q82: BPE corpus encoding — rows-only (the learned merge table is
-    // not SQL-expressible); BpeEncodeSpec asserts per-word subword
-    // sequences exactly against a plain-Scala reference encoder
-    "q82_bpe_encode" -> ((s, d) => Pipeline.qBpeEncode(s, d)),
-    "q83_oov_rate" -> ((s, d) => TextAnalysis.qOovRate(s, d)),
-    // q84: quality-classifier training — rows-only (MLlib LBFGS float
-    // reduction is partition-order sensitive); QualityClassifierSpec
-    // pins separation on crafted separable data + weak-label recovery
-    "q84_quality_classifier" -> (Inference.qQualityClassifier _),
-    "q85_corpus_stats" -> (TextAnalysis.qCorpusStats _),
-    // q86: Lee-et-al-style exact duplicate-span removal — every L-token
-    // window occurring >= 2 times in the corpus is cut from all docs
-    "q86_exact_substring" -> ((s, d) => Dedup.qExactSubstring(s, d)),
-    // q87: KMV bottom-k distinct sketch — deterministic (set-function
-    // state), so the estimate itself is hash-checked against the oracle
-    "q87_kmv_distinct" -> ((s, d) => Pipeline.qKmvDistinct(s, d)),
-    // q88: audio energy-envelope near-dup — rows-only (WAV synthesis is
-    // not SQL-expressible); AudioDedupSpec checks pair counts against
-    // brute-force Hamming and the fingerprint's gain invariance
-    "q88_audio_near_dup" -> ((s, d) => Multimodal.qAudioNearDup(s, d)),
-    // q89: ANN over the PERSISTED IVF index (build-once/query-many) —
-    // rows-only like q46; SimilaritySpec asserts parity with the
-    // in-query IVF path and partition-pruned probing
-    "q89_knn_ivf_index" -> ((s, d) => Similarity.qIvfFromIndex(s, d)),
-    // q90: n-gram novelty — the fraction of a doc's distinct 8-gram
-    // windows first seen in that doc (contribution-ordered curation)
-    "q90_novelty" -> ((s, d) => TextAnalysis.qNovelty(s, d)),
-    // q91: product-quantization ANN (ADC over 4-byte codes) through the
-    // PERSISTED PQ index (codebooks trained once at build, zero fits
-    // per query) — rows-only (quantized ranking); SimilaritySpec pins
-    // recall vs exact L2, the ADC distance error, and bit-parity with
-    // the self-contained qPqTopK path
-    "q91_knn_pq" -> ((s, d) => Similarity.qPqFromIndex(s, d)),
-    // q92: train/valid split-leakage audit — near-dup pairs (q29
-    // definition) crossing a deterministic 80/20 split
-    "q92_split_leakage" -> (Dedup.qSplitLeakage _),
-    // q93: IVF-PQ ANN (residual product quantization inside probed
-    // cells) through the PERSISTED IVF-PQ index (cell-partitioned
-    // codes: probing prunes directories) — rows-only; SimilaritySpec
-    // pins recall, re-rank exactness, and bit-parity with qIvfPqTopK
-    "q93_knn_ivfpq" -> ((s, d) => Similarity.qIvfPqFromIndex(s, d)),
-    // q94: corpus-version diff — added/removed/changed/unchanged counts
-    // between two deterministic snapshot versions
-    "q94_corpus_diff" -> (Pipeline.qCorpusDiff _),
-    // q95: single-pass per-column data profiler over lineitem
-    "q95_profile" -> ((s, d) => Pipeline.qProfile(s, d)),
-    // q96: changeset application (vanilla-Spark MERGE INTO) — output is
-    // the full resulting snapshot's (doc_id, digest)
-    "q96_apply_changeset" -> (Pipeline.qApplyChangeset _),
-    // q97: token frequency spectrum (hapax count at k=1)
-    "q97_freq_spectrum" -> (Pipeline.qFreqSpectrum _),
-    // q98: text normalization + its dedup impact (docs collapsing to
-    // the same normalized form, bytes shed) — per-source rollup
-    "q98_normalize" -> (TextAnalysis.qNormalize _),
-    // q99: fill-in-the-middle splits (prefix/middle/suffix thirds, PSM
-    // reassembly digest) — the FIM pretraining transform
-    "q99_fim_split" -> (Pipeline.qFimSplit _),
-    // q100: per-source quota sampling (deterministic-hash rank, keep
-    // first K per source) — the crawl-curation domain cap
-    "q100_source_quota" -> ((s, d) => Pipeline.qSourceQuota(s, d)),
-    // q101: leakage-safe split — train/valid assigned per near-dup
-    // COMPONENT (q57's clusters), so no eval doc has a near-copy in
-    // train by construction (the prevention counterpart of q92's audit)
-    "q101_safe_split" -> (Dedup.qLeakageSafeSplit _),
-    // q102: per-language perplexity tertiles (CCNet head/middle/tail)
-    // over q64's rounded unigram NLL
-    "q102_nll_buckets" -> ((s, d) => TextAnalysis.qNllBuckets(s, d)),
-    // q103: soft dedup — duplicates down-weighted 1/cluster-size, not
-    // dropped; per-source effective corpus size
-    "q103_soft_dedup" -> (Dedup.qSoftDedup _),
-    // q103a/q103b: diagnostic bisection of q103's driver-gate
-    // divergence (r9, VERDICT r8 #1) — same component machinery and
-    // oracle-CTE prefix, split into the no-division count clause
-    // (q103a) and the picoweight-sum clause alone (q103b)
-    "q103a_soft_dedup_counts" -> (Dedup.qSoftDedupCounts _),
-    "q103b_soft_dedup_pico" -> (Dedup.qSoftDedupPico _),
-    // q103c/d/e: single-column contingency split of q103a (r9 verdict
-    // #1) — if the r10 BIGINT cast were not the q103 fix, whichever
-    // of these comes back red names the divergent column outright
-    "q103c_soft_dedup_ndocs" -> (Dedup.qSoftDedupNDocs _),
-    "q103d_soft_dedup_nclustered" -> (Dedup.qSoftDedupNInClusters _),
-    "q103e_soft_dedup_ncomponents" -> (Dedup.qSoftDedupNComponents _),
-    // q104: group-wise winsorized stats (p05/p95 clip) — the feature
-    // outlier-clamping step
-    "q104_winsorize" -> (Pipeline.qWinsorize _),
-    "q104x_winsorize_cents" -> (Pipeline.qWinsorizeCents _),
-    // q105: nonlinear (2-layer relu MLP) model serving from a
-    // multi-tensor safetensors artifact — hash-checked end to end
-    "q105_mlp_score" -> ((s, d) => Inference.qMlpScore(s, d)),
-    // q106: per-dimension embedding standardization stats — the
-    // feature-whitening audit before trusting cosine/L2
-    "q106_embedding_stats" -> (Similarity.qEmbeddingStats _),
-    // q107: SQ8 reconstruction-error audit of q66's max-abs/127 scheme
-    "q107_sq8_error" -> (Similarity.qSq8Error _),
-    // q108: near-dup Jaccard-band histogram — the threshold-picking
-    // curve over the q29 pair machinery
-    "q108_jaccard_bands" -> ((s, d) => Dedup.qJaccardBands(s, d)),
-    // q109: curriculum sharding — per-language easy->hard round-robin
-    // deal across data-parallel workers
-    "q109_curriculum" -> ((s, d) => TextAnalysis.qCurriculumShards(s, d)),
-    // q110: incremental datasheet maintenance — delta aggregation over
-    // changeset rows only; the oracle recomputes v2 from scratch, so
-    // the gate proves delta == full rescan
-    "q110_incremental_stats" -> (Pipeline.qIncrementalStats _),
-    // q111: video near-dup — temporal-luma fingerprint through the real
-    // AVI/MJPEG decode path, completing the media dedup trio (rows-only:
-    // container synthesis isn't SQL; VideoDedupSpec proves brute-force
-    // parity and exposure invariance)
-    "q111_video_near_dup" -> ((s, d) => Multimodal.qVideoNearDup(s, d)),
-    // q112: BM25 lexical top-k retrieval (scan-time scoring; top-k via
-    // TakeOrderedAndProject, never a global sort)
-    "q112_bm25" -> ((s, d) => TextAnalysis.qBm25(s, d)),
-    // q113: corpus-adaptive stopword strip — terms in >= 80% of docs
-    // struck from every doc, order preserved (broadcast common set)
-    "q113_stopword_strip" -> ((s, d) => TextAnalysis.qStopwordStrip(s, d)),
-    // q114: DSIR-style unigram importance weights toward a target source
-    "q114_importance_weights" -> ((s, d) => TextAnalysis.qImportanceWeights(s, d)),
-    // q115: temperature-rebalanced language mixture (XLM-R sampling)
-    "q115_temperature_mix" -> ((s, d) => Pipeline.qTemperatureMix(s, d)),
-    // q116: hybrid BM25+dense retrieval fused by reciprocal rank (RRF)
-    "q116_hybrid_rrf" -> ((s, d) => Similarity.qHybridRrf(s, d)),
-    // q117: Gopher-style hand-rule quality gate (per-rule booleans);
-    // the required-word rule runs on the corpus's own function words
-    // ("the"/"a" — the only English stopwords in the synthetic vocab)
-    "q117_gopher_rules" -> ((s, d) =>
-      TextAnalysis.qGopherRules(s, d, requiredWords = Seq("the", "a"))),
-    // q118: deterministic sharded epoch shuffle (replayable training order)
-    "q118_epoch_shuffle" -> ((s, d) => Pipeline.qEpochShuffle(s, d)),
-    // q119: deterministic rejection sampling by quality ramp
-    "q119_rejection_sample" -> ((s, d) => Pipeline.qRejectionSample(s, d)),
-    // q120: Matryoshka truncation-fidelity audit over prefix dims
-    "q120_matryoshka" -> ((s, d) => Similarity.qMatryoshka(s, d)),
-    // q121: PCA explained-variance spectrum — rows-only (eigensolve is
-    // not SQL-expressible); SimilaritySpec pins variance identities
-    "q121_pca_variance" -> ((s, d) => Similarity.qPcaVariance(s, d)),
-    // q122: length-bucket padding-waste audit (batching efficiency)
-    "q122_padding_waste" -> ((s, d) => Pipeline.qPaddingWaste(s, d)),
-    // q123: tokenizer fertility + compression ratio per language
-    "q123_fertility" -> ((s, d) => TextAnalysis.qFertility(s, d)),
-    // q124: per-doc character entropy (garbage/base64/key-mash detector)
-    "q124_char_entropy" -> ((s, d) => TextAnalysis.qCharEntropy(s, d)),
-    // q125: corpus-global sentence dedup (the C4 move) — boilerplate
-    // sentences (df >= 3 docs) struck everywhere, rebuilt text
-    // hash-checked per doc
-    "q125_sentence_dedup" -> ((s, d) => Pipeline.qSentenceDedup(s, d)),
-    // q126: per-language distinct-bigram diversity (distinct-n) — the
-    // templated/synthetic-corpus detector
-    "q126_bigram_diversity" -> ((s, d) => TextAnalysis.qBigramDiversity(s, d)),
-    // q127: mixed-language segmentation — per-sentence lang ID rolled
-    // up to majority lang + mixed fraction per doc
-    "q127_lang_segments" -> ((s, d) => TextAnalysis.qLangSegments(s, d)),
-    // q128: near-dup survivor selection by quality (keep-longest per
-    // component) instead of min-id
-    "q128_dedup_keep_best" -> (Dedup.qDedupKeepBest _),
-    // q129: vocabulary coverage curve — corpus token share covered by
-    // the top-k frequent types, k in {3,10,30,100,1000,10000}
-    "q129_vocab_coverage" -> ((s, d) => Pipeline.qVocabCoverage(s, d)),
-    // q130: trailing-24h z-score anomaly detection over hourly counts
-    "q130_anomaly_hours" -> (Relational.qAnomalyHours _),
-    // q131: ordered view->click->purchase funnel inside 24 hours
-    "q131_funnel" -> (Relational.qFunnel _),
-    // q132: cohort retention (first-activity day x day offset 0..7)
-    "q132_cohort_retention" -> (Relational.qCohortRetention _),
-    // q133: q131's funnel as streaming state over a time-ordered
-    // 3-batch replay — the oracle is the BATCH funnel SQL, so the gate
-    // proves stream/batch parity bit for bit
-    "q133_streaming_funnel" -> (graft.streaming.EventTime.qStreamingFunnel _),
-    // q134: near-dup cluster-size histogram — the audit that sizes the
-    // dedup problem before running it
-    "q134_cluster_sizes" -> (Dedup.qClusterSizeHistogram _),
-    // q135: per-benchmark-example contamination fraction (the
-    // decontamination report, not just q42's binary)
-    "q135_contamination_frac" -> ((s, d) => Pipeline.qContaminationFraction(s, d)),
-    // q136: exact two-sample KS drift over doc length between corpus
-    // slices — the ingest drift alarm
-    "q136_length_drift" -> ((s, d) => Pipeline.qLengthDrift(s, d)),
-    // q137: first-order Markov transition matrix over per-user event
-    // sequences — the user-journey summary no fixed funnel captures
-    "q137_transitions" -> (Relational.qTransitionMatrix _),
-    // q138: inter-arrival regularity (CV) per user — the bot detector
-    "q138_gap_regularity" -> (Relational.qGapRegularity _),
-    // q139: salted two-phase aggregation, proven ≡ the direct agg by
-    // the oracle — the hot-key survival shape
-    "q139_salted_agg" -> (Relational.qSaltedAgg _),
-    // q140: key-skew audit (Gini / max / top-10 shares) — the
-    // partition-planning number behind the salting decision
-    "q140_key_skew" -> (Relational.qKeySkew _),
-    // q141: fuzzy name variants via blocked Levenshtein join; oracle is
-    // the unblocked all-pairs truth, proving the blocking lossless
-    "q141_name_variants" -> (Relational.qNameVariants _),
-    // q142: exact-count stratified eval/train split (hash-ranked per
-    // language) — size-exact where q60's threshold sample is not
-    "q142_stratified_split" -> ((s, d) => Pipeline.qStratifiedSplit(s, d)),
-    // q143: SCD2 versioned-dimension build from the order stream
-    "q143_scd2" -> (Relational.qScd2 _),
-    // q144: per-user interval union (gaps-and-islands coverage)
-    "q144_interval_coverage" -> (Relational.qIntervalCoverage _),
-    // q145: referential-integrity audit across the 7 FK edges
-    "q145_fk_orphans" -> (Relational.qFkOrphans _),
-    // q146: Benford first-digit distribution screen on order totals
-    "q146_benford" -> (Relational.qBenford _),
-    // q147: consecutive-month order streaks per customer
-    "q147_order_streaks" -> (Relational.qOrderStreaks _),
-    // q148: exact p50/p90/p99 by iterative threshold refinement — the
-    // exact-quantile plan that survives 100 TB (no global sort)
-    "q148_exact_quantiles" -> (Pipeline.qExactQuantiles _),
-    // q149: view→purchase conversion-latency percentiles (funnel ∘
-    // exact selection)
-    "q149_conversion_latency" -> (Pipeline.qConversionLatency _),
-    // q150: incremental IVF index maintenance — append-without-rebuild
-    // audit + centroid-drift staleness signal (rows-only: seeded
-    // KMeans codebook; IncrementalIvfSpec pins append ≡ rebuild)
-    "q150_ivf_append" -> (Similarity.qIvfAppend _),
-    // q151: systematic PPS (token-weighted) sampling per source —
-    // integer pin-crossing test, bit-deterministic selection
-    "q151_pps_sample" -> ((s, d) => Pipeline.qPpsSample(s, d)),
-    // q152: per-nation OLS revenue trend from exact sufficient sums
-    "q152_trend_ols" -> (Relational.qTrendOls _),
-    // q153: collocation mining ranked by exact integer lift (≡ PMI order)
-    "q153_collocation_lift" -> ((s, d) => TextAnalysis.qCollocationLift(s, d)),
-    // q154: Z-order (Morton) bucket map + per-bucket 2-D bounding boxes
-    "q154_zorder_layout" -> (Bucketing.qZorderStats _),
-    // q155: session entry/exit path matrix with bounce counts
-    "q155_session_paths" -> ((s, d) => Relational.qSessionPaths(s, d)),
-    // q156: telemetry throttle-dedup (same user+type within 60 s)
-    "q156_event_throttle" -> ((s, d) => Relational.qEventThrottle(s, d)),
-    // q157: lag-1 autocorrelation of daily counts per event type
-    "q157_daily_autocorr" -> (Relational.qDailyAutocorr _),
-    // q158: q156's throttle as streaming state — oracle IS q156's SQL
-    // (stream/batch parity, the q133 contract for the dedup family)
-    "q158_streaming_throttle" -> (graft.streaming.EventTime.qStreamingThrottle _),
-    // q159: lang × source independence audit (standardized residuals)
-    "q159_contingency_residuals" -> (Relational.qContingencyResiduals _),
-    // q160: per-source Gini concentration of token mass
-    "q160_gini_concentration" -> ((s, d) => Pipeline.qGiniConcentration(s, d)),
-    // q161: event-type co-occurrence with exact integer lift
-    "q161_type_cooccurrence" -> (Relational.qTypeCooccurrence _),
-    // q162: order-total vs lineitem-sum reconciliation in exact cents
-    "q162_totalprice_audit" -> (Relational.qTotalpriceAudit _),
-    // q163: co-purchase PageRank — integer-picorank power iteration;
-    // rows-only (weighted recursive iteration is not practical ANSI
-    // SQL); GraphSpec pins bit-equality against a sequential reference
-    "q163_copurchase_rank" -> ((s, d) => Graph.qCopurchaseRank(s, d)),
-    // q164: median/MAD robust outlier fence per event type (Hampel)
-    "q164_mad_outliers" -> (Relational.qMadOutliers _),
-    // q165: top event-type trigram sequences (3-step behavior paths)
-    "q165_event_trigrams" -> ((s, d) => Relational.qEventTrigrams(s, d)),
-    // q166: triangle census + global clustering of the co-purchase
-    // graph (degree-ordered orientation; id-ordered oracle)
-    "q166_triangle_census" -> (Graph.qTriangleCensus _),
-    // q167: q74's sessionization as streaming state — oracle IS q74's
-    // SQL (third bit-exact stream/batch parity beside q133/q158)
-    "q167_streaming_sessionize" -> (graft.streaming.EventTime.qStreamingSessionize _),
-    // q168: co-purchase degree distribution in power-of-2 bins
-    "q168_degree_histogram" -> (Graph.qDegreeHistogram _),
-    // q169: degree assortativity (Newman) over the co-purchase edges
-    "q169_degree_assortativity" -> (Graph.qDegreeAssortativity _),
-    // q170: Count-Min frequency ceilings vs exact top-20 — rows-only
-    // (Murmur hashing not SQL-expressible); CountMinSpec pins the
-    // ceiling guarantee, ε band, and partition-invariant linear merge
-    "q170_cms_frequency" -> ((s, d) => TextAnalysis.qCmsFrequency(s, d)),
-    // q171: BFS hop distribution from the max-degree hub (frontier-
-    // expansion joins; recursive-CTE oracle)
-    "q171_bfs_hops" -> ((s, d) => Graph.qBfsHops(s, d)),
-    // q172: peak trailing-6h event load per type (RANGE-frame window)
-    "q172_peak_window" -> ((s, d) => Relational.qPeakWindowLoad(s, d)),
-    // q173: item-item CF — top pairs by exact integer squared-cosine
-    // of capped co-purchase neighbor vectors
-    "q173_item_cf" -> ((s, d) => Graph.qItemCf(s, d)),
-    // q174: weekday seasonality index per event type (1e4-scaled)
-    "q174_weekday_seasonality" -> (Relational.qWeekdaySeasonality _),
-    // q175: Kaplan-Meier risk table (view->purchase with censoring)
-    "q175_hazard_table" -> (Relational.qHazardTable _),
-    // q176: Mann-Kendall non-parametric trend test on daily counts
-    "q176_mann_kendall" -> (Relational.qMannKendall _),
-    // q177: CUSUM changepoint (level-shift day) per event type
-    "q177_cusum_changepoint" -> (Relational.qCusumChangepoint _),
-    // q178: unpivot/melt of the exact-decimal pricing rollup
-    "q178_unpivot" -> (Stats.qUnpivot _),
-    // q179: Spearman rank correlation (tie-exact integer double-ranks)
-    "q179_spearman" -> (Stats.qSpearman _),
-    // q180: calendar gap-fill with LOCF over an in-plan day spine
-    "q180_locf_gapfill" -> (Stats.qLocfGapfill _),
-    // q181: Theil-Sen robust slope (lower-median pairwise slope)
-    "q181_theil_sen" -> (Stats.qTheilSen _),
-    // q182: Fano factor of hourly counts (all-integer dispersion)
-    "q182_fano_factor" -> (Stats.qFanoFactor _),
-    // q183: type x hour mutual information + marginal entropies
-    "q183_mutual_info" -> (Stats.qMutualInfo _),
-    // q184: k-core decomposition by distributed h-index iteration
-    // (rows-only: iterative fixpoint, spec-proven == sequential peeling)
-    "q184_kcore" -> ((s, d) => Graph.qKCore(s, d)),
-    // q185: Page CUSUM online detector via the drawdown identity
-    "q185_page_cusum" -> (Stats.qPageCusum _),
-    // q186: q185 as streaming per-type state (oracle = q185's batch
-    // SQL: the fourth bit-exact stream/batch parity statement)
-    "q186_streaming_cusum" -> (graft.streaming.EventTime.qStreamingCusum _),
-    // q187: windowed funnel (ClickHouse windowFunnel semantics)
-    "q187_window_funnel" -> ((s, d) => Stats.qWindowFunnel(s, d)),
-    // q188: EWMA spike days via exact integer dyadic weights
-    "q188_ewma_spikes" -> ((s, d) => Stats.qEwmaSpikes(s, d)),
-    // q189: fact-to-SCD2 point-in-time join (revenue by state-at-ship)
-    "q189_temporal_join" -> (Relational.qTemporalJoin _),
-    // q190: PSI drift between stream halves over first-half deciles
-    "q190_psi_drift" -> ((s, d) => Stats.qPsiDrift(s, d)),
-    // q191: NDCG@10 retrieval-quality audit vs label relevance
-    "q191_ndcg" -> ((s, d) => Similarity.qNdcg(s, d)),
-    // q192: IVF recall@10 vs brute ground truth per probe budget
-    // (rows-only: the IVF leg is not SQL-expressible; spec pins the
-    // nprobe=cells ceiling at exactly 1.0 and monotonicity)
-    "q192_ann_recall" -> ((s, d) => Similarity.qAnnRecall(s, d)),
-    // q193: HLL sketch rollup — persisted daily registers merged to
-    // lifetime distinct (rows-only: estimator not SQL-expressible;
-    // HllSketchSpec pins merge==direct bit for bit + the error band)
-    "q193_hll_rollup" -> (Stats.qHllRollup _),
-    // q194: per-user 62-day activity bitmask (popcount/streak algebra)
-    "q194_activity_bitmask" -> (Stats.qActivityBitmask _),
-    // q195: exposure->conversion two-proportion z screen
-    "q195_exposure_conversion" -> (Stats.qExposureConversion _),
-    // q196: skewness/kurtosis from exact integer power sums
-    "q196_higher_moments" -> (Stats.qHigherMoments _),
-    // q197: rolling-median (Tukey) spike flags over daily counts
-    "q197_rolling_median" -> (Stats.qRollingMedian _),
-    // q198: small-file compaction plan (size-targeted contiguous bins)
-    "q198_compaction_plan" -> ((s, d) => Bucketing.qCompactionPlan(s, d)),
-    // q199: last-touch revenue attribution within 24h
-    "q199_last_touch" -> (Stats.qLastTouch _),
-    // q200: q199 as streaming per-user touch state (oracle = q199's
-    // batch SQL: the fifth bit-exact stream/batch parity statement)
-    "q200_streaming_attribution" -> (graft.streaming.EventTime.qStreamingAttribution _),
-    // q201: incremental join-view maintenance — delta-join terms whose
-    // sum the oracle checks against the DIRECT full-join recompute
-    "q201_delta_view" -> (Relational.qDeltaView _),
-    // q202: rolling 7-day distinct users (contribution-explode form)
-    "q202_rolling_distinct" -> (Relational.qRollingDistinct _),
-    // q203: join-consistent hash sample with scale-up audit
-    "q203_join_sample" -> ((s, d) => Relational.qJoinSample(s, d)),
-    // q204: MODE with an explicit smallest-bucket tie rule
-    "q204_mode" -> (Relational.qMode _),
-    // q205: ordered string aggregation (deterministic LISTAGG)
-    "q205_listagg" -> (Relational.qListAgg _),
-    // q206: retraction-aware view maintenance (the delete half of
-    // q201; oracle derives the after-state directly)
-    "q206_retraction_view" -> (Relational.qRetractionView _),
-    // q207: functional-dependency audit over declared candidate edges
-    "q207_fd_audit" -> (Relational.qFdAudit _),
-    // q208: CUPED variance-reduced A/B readout (pooled theta/rho2)
-    "q208_cuped" -> (Stats.qCuped _),
-    // q209-q211: the recognized TPC-H probe shapes (Q3/Q10/Q14),
-    // determinized: integer revenue, key tie-breaks on the top-k cuts
-    "q209_shipping_priority" -> (Relational.qShippingPriority _),
-    "q210_returned_items" -> (Relational.qReturnedItems _),
-    "q211_promo_share" -> (Relational.qPromoShare _),
-    // q212: unigram-LM piece vocabulary (top-V + char coverage floor)
-    "q212_unigram_vocab" -> (TextAnalysis.qUnigramVocab _),
-    // q213: Viterbi segmentation under the q212 model (rows-only:
-    // the DP is not SQL-expressible; UnigramSegmentSpec pins
-    // optimality, tie order, lossless concat, interpreted==codegen)
-    "q213_unigram_segment" -> (TextAnalysis.qUnigramSegment _),
-    // q214: streaming distinct via HLL register state (rows-only;
-    // EngagementSpec pins streamed registers == batch build bit for
-    // bit — the sketch-state parity statement)
-    "q214_streaming_hll" -> (graft.streaming.EventTime.qStreamingHll _),
-    // q215: discrete percentiles at integer ranks (actual data
-    // elements — the quantile family's disc verb)
-    "q215_percentile_disc" -> (Stats.qPercentileDisc _),
-    // q216: linear-interpolation gap fill (q180 LOCF's sibling)
-    "q216_interpolate" -> (Stats.qInterpolate _),
-    // q217: MoM growth accounting (new/retained/resurrected/churned)
-    "q217_growth_accounting" -> (Stats.qGrowthAccounting _),
-    // q218: DAU/MAU stickiness in exact integers
-    "q218_stickiness" -> (Stats.qStickiness _),
-    // q219: ratio-to-report + in-group rank over one region window
-    "q219_region_share" -> (Relational.qRegionShare _),
-    // q220: token-weighted median doc length vs the unweighted median
-    "q220_weighted_median" -> (Stats.qWeightedMedian _),
-    // q221: equi-width histogram (fixed-width numeric profiling)
-    "q221_equiwidth_hist" -> (Stats.qEquiWidthHist _),
-    // q222: full-row duplicate audit per table
-    "q222_duplicate_rows" -> (Stats.qDuplicateRows _),
-    // q223: pairwise Pearson matrix from exact decimal sums, one scan
-    "q223_corr_matrix" -> (Stats.qCorrMatrix _),
-    // q224: foreachBatch incremental materialized JOIN view over a
-    // 3-batch CDC replay (q201's insert algebra + q206's retraction);
-    // oracle recomputes the view from scratch — the sixth parity
-    "q224_streaming_view" -> (graft.streaming.DeltaView.qStreamingView _),
-    // q225: the RAG retrieval pipeline end to end — chunk → embedding
-    // gate → persisted IVF-PQ retrieve → RRF with chunk-BM25 → NDCG
-    // audit (rows-only: the ANN leg is approximate; RagPipelineSpec)
-    "q225_rag_pipeline" -> ((s, d) => Similarity.qRagPipeline(s, d)),
-    // q226: TPC-H Q5 shape — the 6-table cycle join (customer nation
-    // = supplier nation inside one region)
-    "q226_local_supplier_volume" -> (Relational.qLocalSupplierVolume _),
-    // q227: TPC-H Q21 shape — the EXISTS/NOT-EXISTS pair rewritten as
-    // one per-order eager-aggregation rollup
-    "q227_waiting_suppliers" -> (Relational.qWaitingSuppliers _),
-    // q228: TPC-H Q2 shape — correlated scalar-MIN as a packed-BIGINT
-    // argmin rollup
-    "q228_min_cost_supplier" -> (Relational.qMinCostSupplier _),
-    // q229: Mann–Whitney U rank test per event type vs 'view'
-    "q229_mann_whitney" -> (Stats.qMannWhitney _),
-    // q230: calibration curve for the literal EN-stopword score
-    "q230_calibration" -> (Stats.qCalibration _),
-    // q231: precision/recall threshold sweep over the same score
-    "q231_pr_curve" -> (Stats.qPrCurve _),
-    // q232: exact tie-corrected ROC AUC from the q229 rank identity
-    "q232_roc_auc" -> (Stats.qRocAuc _),
-    // q233: Kruskal–Wallis k-group rank test across event types
-    "q233_kruskal_wallis" -> (Stats.qKruskalWallis _),
-    // q234: Welch's unequal-variance t-test per event type vs 'view'
-    "q234_welch_t" -> (Stats.qWelchT _),
-    // q235: TPC-H Q17 shape — correlated scalar-AVG, cross-multiplied
-    "q235_small_qty_revenue" -> (Relational.qSmallQtyRevenue _),
-    // q236: TPC-H Q13 shape — left-outer-join count distribution
-    "q236_cust_order_distribution" -> (Relational.qCustOrderDistribution _),
-    // q237: TPC-H Q11 shape — HAVING vs a global scalar, exact
-    "q237_important_stock" -> (Relational.qImportantStock _),
-    // q238: TPC-H Q22 shape — global-avg filter + anti join by nation
-    "q238_dormant_high_value" -> (Relational.qDormantHighValue _),
-    // q239: TPC-H Q18 shape — IN-over-grouped-HAVING via eager agg
-    "q239_large_volume_customer" -> (Relational.qLargeVolumeCustomer _),
-    // q240: TPC-H Q20 shape — nested semi-join chain, majority shipper
-    "q240_excess_shippers" -> (Relational.qExcessShippers _),
-    // q241: greedy WordPiece segmentation — the third tokenizer
-    // algorithm (rows-only: the vocab cut matches q212's gate;
-    // WordpieceSegmentSpec pins greedy ≡ brute force, interp ≡ codegen)
-    "q241_wordpiece_segment" -> (TextAnalysis.qWordpieceSegment _),
-    // q242: streaming Count-Min counter state — the seventh bit-exact
-    // stream/batch parity, second sketch-state member (rows-only:
-    // Murmur hashing is not SQL-expressible; EngagementSpec asserts
-    // the streamed matrices equal the batch build bit for bit)
-    "q242_streaming_cms" -> (graft.streaming.EventTime.qStreamingCms _),
-    // q243: chi-square independence statistic (exact floored-ppm
-    // integer arithmetic) completing q159's contingency audit
-    "q243_chi_square" -> (Stats.qChiSquare _),
-    // q244: one-way ANOVA F across event types from exact per-group
-    // sufficient statistics
-    "q244_anova_f" -> (Stats.qAnovaF _),
-    // q245: streaming KMV bottom-k distinct state — the EIGHTH
-    // bit-exact stream/batch parity, and the one sketch whose
-    // estimator the oracle can recompute exactly
-    "q245_streaming_kmv" -> (graft.streaming.EventTime.qStreamingKmv _),
-    // q246: Cramér's V effect size over q243's exact chi-square
-    "q246_cramers_v" -> (Stats.qCramersV _),
-    // q247: Cohen's kappa — predictor-vs-label agreement as an exact
-    // rational up to one final double
-    "q247_cohen_kappa" -> (Stats.qCohenKappa _),
-    // q248: Brown–Forsythe variance-homogeneity test on exact
-    // value-domain medians
-    "q248_levene" -> (Stats.qLevene _),
-    // q249: lagged cross-correlation of daily volume vs revenue
-    "q249_cross_correlation" -> (Stats.qCrossCorrelation(_, _)),
-    // q250: seasonal-naive vs naive forecast error (MASE)
-    "q250_seasonal_error" -> (Stats.qSeasonalError _),
-    // q251: common-neighbor/Jaccard link prediction on the
-    // co-purchase graph — exact integer scores, capped wedges
-    "q251_link_prediction" -> ((s, d) => Graph.qLinkPrediction(s, d)),
-    // q252: deterministic half-sample replication CI (hash-bit
-    // membership, one-pass conditional aggregates)
-    "q252_subsample_ci" -> ((s, d) => Stats.qSubsampleCi(s, d)),
-    // q253: determinized synchronous label-propagation communities
-    "q253_label_propagation" -> ((s, d) => Graph.qLabelPropagation(s, d)),
-    // q254: hard-negative mining (closest different-label vectors)
-    "q254_hard_negatives" -> ((s, d) => Similarity.qHardNegatives(s, d)),
-    // q255: pairwise source-mix Jensen–Shannon divergence
-    "q255_jsd_matrix" -> (Stats.qJsDivergence _),
-    // q256: KMV sketch set algebra — union/Jaccard estimates for
-    // every type pair from O(k) state, exact audit leg beside them
-    "q256_kmv_set_algebra" -> ((s, d) => Pipeline.qKmvSetAlgebra(s, d)),
-    // q257: held-out unigram perplexity (80/20 hash split, add-1)
-    "q257_heldout_perplexity" -> (TextAnalysis.qHeldoutPerplexity _),
-    // q258: RFM quintile segmentation via value-domain rank cuts
-    "q258_rfm_segments" -> (Stats.qRfmSegments _),
-    // q259: class-balance audit — inverse-frequency weights + ESS
-    "q259_class_balance" -> (Pipeline.qClassBalance _),
-    // q260: k-fold cross-validated nearest-centroid accuracy
-    "q260_cv_centroid" -> ((s, d) => Similarity.qCvCentroid(s, d)),
-    // q261: Dunning log-likelihood-ratio collocations
-    "q261_collocation_llr" -> ((s, d) => TextAnalysis.qCollocationLlr(s, d)),
-    // q262: weekly PSI drift timeline vs the first week's deciles
-    "q262_psi_timeline" -> ((s, d) => Stats.qPsiTimeline(s, d)),
-    // q263: two-proportion z-test on conversion between the CUPED arms
-    "q263_two_proportion" -> (Stats.qTwoProportion _),
-    // q264: week-over-week shipment-rank movers (trending items)
-    "q264_rank_movers" -> ((s, d) => Stats.qRankMovers(s, d)),
-    // q265: streaming Bloom membership state — the NINTH bit-exact
-    // stream/batch parity (bitwise-OR algebra)
-    "q265_streaming_bloom" -> (graft.streaming.EventTime.qStreamingBloom _),
-    // q266: hard-negative mining through the persisted IVF index —
-    // q254's scale path (partition-pruned candidates, label re-rank)
-    "q266_hard_negatives_ivf" -> ((s, d) => Similarity.qHardNegativesIvf(s, d)),
-    // q267: Efraimidis–Spirakis weighted sampling without replacement
-    "q267_weighted_sample" -> ((s, d) => Pipeline.qWeightedSample(s, d)),
-    // q268: weekly P50/P90 exact percentile timeline (SLO monitor)
-    "q268_percentile_timeline" -> (Stats.qPercentileTimeline _),
-    // q269: top-k WITH TIES via a broadcast threshold, no catalog rank
-    "q269_topk_ties" -> ((s, d) => Relational.qTopKTies(s, d)),
-    // q270: as-of join with a staleness tolerance (date-domain bound)
-    "q270_asof_tolerance" -> ((s, d) => Relational.qAsofTolerance(s, d)),
-    // q271: equi-depth decile edges as a first-class binning artifact
-    "q271_equidepth_edges" -> ((s, d) => Stats.qEquidepthEdges(s, d)),
-    // q272: tie-adjusted two-sample Anderson–Darling (tail-sensitive
-    // distribution compare, Scholz–Stephens midranks)
-    "q272_anderson_darling" -> ((s, d) => Stats.qAndersonDarling(s, d)),
-    // q273: Cohen's d / Hedges' g — the effect-size readout completing
-    // the A/B triplet (test q234, CI q252, magnitude here)
-    "q273_cohens_d" -> (Stats.qCohensD _),
-    // q274: blocked Levenshtein near-dup pairs — typo-level entity
-    // resolution (length-band prefilter before the O(len²) DP)
-    "q274_edit_distance_pairs" -> ((s, d) => Dedup.qEditDistancePairs(s, d)),
-    // q275: Benford first-digit forensic audit over exact cents
-    "q275_benford_audit" -> (Stats.qBenfordAudit _),
-    // q276: interval-concurrency sweep — µs-weighted histogram of
-    // concurrent-session levels via the ±1 boundary sweep
-    "q276_concurrency_sweep" -> ((s, d) => Relational.qConcurrencySweep(s, d)),
-    // q277: decile gains/lift table with deterministic exact deciles
-    "q277_decile_lift" -> (Relational.qDecileLift _),
-    // q278: Kendall τ-b per nation (exact concordance/tie counts)
-    "q278_kendall_tau" -> (Stats.qKendallTau _),
-    // q279: Wald–Wolfowitz runs test on daily revenue vs its discrete
-    // median
-    "q279_runs_test" -> (Stats.qRunsTest _),
-    // q280: blocked Jaro–Winkler pairs via the codegen'd expression,
-    // semantics pinned to DuckDB's jaro_winkler_similarity
-    "q280_jaro_winkler_pairs" -> ((s, d) => Dedup.qJaroWinklerPairs(s, d)),
-    // q281: streaming exact percentile monitor — the tenth bit-exact
-    // stream/batch parity; same oracle as the batch q268 timeline
-    "q281_streaming_percentile" -> (graft.streaming.EventTime.qStreamingPercentile _),
-    // q282: k-anonymity / l-diversity release audit over the QI
-    // (nation, segment, balance band) with order-activity sensitive
-    "q282_k_anonymity" -> ((s, d) => Pipeline.qKAnonymity(s, d)),
-    // q283: ER golden record — q274's pairs at tau=1, transitively
-    // clustered, one survivor row per multi-record cluster
-    "q283_er_golden_record" -> ((s, d) => Dedup.qGoldenRecord(s, d)),
-    // q284: week-over-week Kendall rank stability of part revenue —
-    // the second consumer of the Knight inversion device
-    "q284_rank_stability" -> (Stats.qRankStability _),
-    // q285: blocking-completeness audit — the oracle recomputes the
-    // dictionary match counts by brute force, so hash equality proves
-    // PassJoin candidate generation loses nothing, in-gate
-    "q285_blocking_audit" -> ((s, d) => Dedup.qBlockingAudit(s, d)),
-    // q286–q294: the remaining nine TPC-H shapes — with these, all 22
-    // classic queries have fixture adaptations (see the shape map in
-    // Relational.scala)
-    // q286: Q4 — EXISTS decorrelated to a left-semi join
-    "q286_priority_waiting" -> (Relational.qOrderPriorityCheck _),
-    // q287: Q6 — pure scan/filter/agg, zero shuffles (pushdown pin)
-    "q287_forecast_revenue" -> (Relational.qForecastRevenue _),
-    // q288: Q7 — two-nation trade flow, disjunctive pair predicate
-    "q288_volume_shipping" -> (Relational.qVolumeShipping _),
-    // q289: Q8 — market share as the exact (nation, total) pair
-    "q289_market_share" -> (Relational.qMarketShare _),
-    // q290: Q9 — derived profit measure over red parts
-    "q290_product_profit" -> (Relational.qProductProfit _),
-    // q291: Q12 — CASE-sum priority pivot over late lines
-    "q291_shipmode_priority" -> (Relational.qShipmodePriority _),
-    // q292: Q15 — view + scalar max, ties survive
-    "q292_top_supplier" -> (Relational.qTopSupplier _),
-    // q293: Q16 — count-distinct suppliers with an anti-join exclusion
-    "q293_part_supplier" -> (Relational.qPartSupplierRelation _),
-    // q294: Q19 — disjunction-of-conjunctions stays a hash join
-    "q294_discounted_revenue" -> (Relational.qDiscountedRevenue _),
-    // q295: Wilcoxon signed-rank — the PAIRED rank test (q229's
-    // doubled-rank device on per-customer year-over-year spend diffs)
-    "q295_wilcoxon_signed_rank" -> (Stats.qWilcoxonSignedRank _),
-    // q296: McNemar — paired binary purchase flips between month halves
-    "q296_mcnemar" -> (Stats.qMcNemar _),
-    // q297: Cochran–Armitage — return-rate trend across the ordered
-    // priority classes, from five integer sufficient sums
-    "q297_cochran_armitage" -> (Stats.qCochranArmitage _),
-    // q298: integer-EWMA spike monitor as streaming state — the
-    // ELEVENTH bit-exact stream/batch parity; oracle = a recursive
-    // CTE walking the same BIGINT recursion
-    "q298_streaming_ewma" -> (graft.streaming.EventTime.qStreamingEwma _),
-    // q298b: the batch fold through the same detector core (its own
-    // gate row so batch and streaming are pinned independently)
-    "q298b_ewma_batch" -> (Stats.qEwmaMonitor _),
-    // q299: Friedman — the k-sample paired test (q295's family at
-    // k = 3 yearly conditions per customer block)
-    "q299_friedman" -> (Stats.qFriedman _),
-    // q300: Cochran's Q — the k-sample paired-binary test (q296's
-    // family across the month's three decades)
-    "q300_cochran_q" -> (Stats.qCochranQ _),
-    // q301: Jonckheere–Terpstra — ordered-alternative k-sample rank
-    // test over the priority classes (q233 unordered / q297 binary /
-    // this continuous)
-    "q301_jonckheere_terpstra" -> (Stats.qJonckheereTerpstra _),
-    // q302: Page's L — Friedman's ordered-alternative twin on the
-    // same complete-block ranks
-    "q302_page_trend" -> (Stats.qPageTrend _),
-    // q303: log-rank test — the two-group censored time-to-event
-    // comparison the q175 KM risk table feeds
-    "q303_log_rank" -> (Stats.qLogRank _),
-    // q304: Cochran–Mantel–Haenszel — the stratified 2×2×K
-    // association test + MH common odds ratio (q243/q263's corner
-    // made Simpson's-paradox-proof)
-    "q304_cmh" -> (Stats.qCmh _),
-    // q305: Cliff's delta — the effect size q229's Mann–Whitney
-    // z-score has no magnitude for; exact pair counts off the same
-    // value-domain rollup
-    "q305_cliffs_delta" -> (Stats.qCliffsDelta _),
-    // q306: Jarque–Bera — q196's moments turned into the normality
-    // GATE, per order priority
-    "q306_jarque_bera" -> (Stats.qJarqueBera _),
-    // q307: Ljung–Box — joint white-noise test over lags 1..7 of the
-    // per-type daily series (q157's single lag made portmanteau)
-    "q307_ljung_box" -> (Stats.qLjungBox _),
-    // q308: von Neumann ratio — successive-difference randomness
-    // test, the parametric complement of q279's runs test
-    "q308_von_neumann" -> (Stats.qVonNeumann _),
-    // q309: Brier score + Murphy decomposition — the proper-scoring
-    // verdict on the q230/q231 eval harness
-    "q309_brier_decomposition" -> (Stats.qBrierDecomposition _),
-    // q310: q144's interval coverage as streaming state — the twelfth
-    // bit-exact stream/batch parity (oracle IS q144's batch SQL)
-    "q310_streaming_coverage" ->
-      (graft.streaming.EventTime.qStreamingCoverage _),
-    // q311: Zipf rank-frequency fit per source — the corpus-health
-    // law behind the vocabulary decisions (slope ~ -1 on natural text)
-    "q311_zipf" -> ((s, dir) => TextAnalysis.qZipf(s, dir)),
-    // q312: Heaps' law vocabulary-growth fit over doc-id-prefix
-    // checkpoints — prices vocabulary budgets and predicts OOV growth
-    "q312_heaps" -> (TextAnalysis.qHeaps _),
-    // q313: Woolf homogeneity of odds ratios across q304's strata —
-    // the gate on whether CMH's pooled OR is meaningful
-    "q313_woolf" -> (Stats.qWoolf _),
-    // q314: q180's LOCF gap-fill as streaming state with closed-form
-    // gap back-fill — the thirteenth bit-exact stream/batch parity
-    "q314_streaming_locf" ->
-      (graft.streaming.EventTime.qStreamingLocf _),
-    // q315: multiclass confusion audit of the q21 lang-ID classifier
-    // (per-class P/R/F1, macro-F1, accuracy)
-    "q315_lang_confusion" -> (TextAnalysis.qLangConfusion _),
-    // q316: Grubbs' single-outlier statistic — the formal test beside
-    // q164's MAD fences; exact n-scaled deviation maximum
-    "q316_grubbs" -> (Stats.qGrubbs _),
-    // q317: Cronbach's alpha over the q299 complete blocks — the
-    // reliability/internal-consistency cell
-    "q317_cronbach" -> (Stats.qCronbachAlpha _),
-    // q318: MASE — the scale-free seasonal-forecast backtest over the
-    // per-type daily series (weekly naive vs daily naive)
-    "q318_mase" -> (Stats.qMase _),
-    // q319: Bhattacharyya/Hellinger distance matrix between
-    // per-source length distributions (the metric member beside
-    // q255's JSD and q190's PSI)
-    "q319_hellinger" -> (TextAnalysis.qHellingerMatrix _),
-    // q320: Fleiss' kappa — multi-rater nominal agreement (the four
-    // lines of every 4-line order rating its return flag)
-    "q320_fleiss_kappa" -> (Stats.qFleissKappa _),
-    // q321: quadratic-weighted Cohen's kappa — ordinal agreement of
-    // year-over-year spend quintiles (tier stability vs chance)
-    "q321_weighted_kappa" -> (Stats.qWeightedKappa _),
-    // q322: Durbin–Watson on the daily trend-fit residuals — the
-    // regression-diagnostic serial-correlation cell beside q307/q308
-    "q322_durbin_watson" -> (Stats.qDurbinWatson _),
-    // q323: Pettitt's rank-based changepoint test — the nonparametric
-    // cell beside q177's CUSUM and q185's Page (no known mean needed)
-    "q323_pettitt" -> (Stats.qPettitt _),
-    // q324: Newman modularity of the brand partition on the
-    // co-purchase backbone — categorical assortativity beside q169
-    "q324_brand_modularity" -> ((s, d) => Graph.qBrandModularity(s, d)),
-    // q325: Flesch reading ease / FK grade per source — the classic
-    // readability readout beside the q23/q117 quality gates
-    "q325_flesch" -> (TextAnalysis.qFleschReadability _),
-    // q326: Simpson concentration/diversity + Berger–Parker per
-    // source — exact-rational diversity beside the entropy readouts
-    "q326_simpson" -> (TextAnalysis.qSimpsonDiversity _),
-    // q327: integer Holt linear-trend monitor as streaming state —
-    // the FOURTEENTH bit-exact stream/batch parity, first over a
-    // two-term coupled recursion; oracle = recursive CTE
-    "q327_streaming_holt" -> (graft.streaming.EventTime.qStreamingHolt _),
-    // q327b: the batch fold through the same monitor core (its own
-    // gate row so batch and streaming are pinned independently)
-    "q327b_holt_batch" -> (Stats.qHoltMonitor _),
-    // q328: partial correlation (qty~price | discount) per flag —
-    // the confounder-removal cell over q223's sufficient sums
-    "q328_partial_corr" -> (Stats.qPartialCorr _),
-    // q329: Hosmer–Lemeshow calibration test over the proxy
-    // classifier — the formal test beside q230/q309
-    "q329_hosmer_lemeshow" -> (Stats.qHosmerLemeshow _),
-    // q330: two-way RCB ANOVA over the q299 blocks — Friedman's
-    // parametric twin (treatment + block F's from exact sums)
-    "q330_two_way_anova" -> (Stats.qTwoWayAnova _),
-    // q331: Bowker's symmetry test over the q321 quintile transition
-    // matrix — the k×k McNemar (up-moves vs down-moves per pair)
-    "q331_bowker_symmetry" -> (Stats.qBowkerSymmetry _),
-    // q332: Kendall's W — the concordance effect size for q299,
-    // computed independently (spec pins the χ²_F = n(k−1)·W identity)
-    "q332_kendall_w" -> (Stats.qKendallW _),
-    // q333: ECE/MCE — the reported calibration metric beside q329's
-    // test; exact-integer gap numerators
-    "q333_calibration_error" -> (Stats.qCalibrationError _),
-    // q334: term burstiness (Church–Gale cf/df) — the clumping
-    // readout beside q182's temporal Fano factor
-    "q334_term_burstiness" -> ((s, d) => TextAnalysis.qTermBurstiness(s, d)),
-    // q335: chi-square keyness per source vs rest-of-corpus — the
-    // slice-comparison verb; LLR reported, χ² ranks (exact-rational)
-    "q335_keyness" -> ((s, d) => TextAnalysis.qKeyness(s, d)),
-    // q336: decision stump (best Gini split) over the proxy score —
-    // the one-split CART primitive beside the q231 sweep
-    "q336_decision_stump" -> (Stats.qDecisionStump _),
-    // q337: gamma method-of-moments fit per priority — the shape
-    // answer after q306's normality gate rejects
-    "q337_gamma_mom" -> (Stats.qGammaMomFit _),
-    // q338: linear multi-touch attribution — exact ppm credit split,
-    // the multi-touch sibling of q199's last-touch
-    "q338_linear_attribution" -> (Stats.qLinearAttribution _),
-    // q339: HHI + CR4 market concentration per supplier nation —
-    // the antitrust read beside q160's Gini and q289's shares
-    "q339_hhi_concentration" -> (Relational.qHhiConcentration _),
-    // q340: covariate balance SMD table — the causal "Table 1"
-    // before any exposure contrast (q208/q304's prerequisite)
-    "q340_covariate_balance" -> (Stats.qCovariateBalance _),
-    // q341: Wilson score intervals for the q263 arm conversions
-    "q341_wilson_interval" -> (Stats.qWilsonInterval _),
-    // q342: sample-ratio-mismatch health check on the arm splitter
-    "q342_srm_check" -> (Stats.qSrmCheck _),
-    // q343: isotonic (PAVA) calibration — the repair member of the
-    // calibration family (rows-only: sequential pooling isn't SQL;
-    // Round10eSpec pins isotonicity, mass conservation, and equality
-    // with an O(n^2) reference)
-    "q343_isotonic_calibration" -> (Stats.qIsotonicCalibration _),
-    // q344: stratified-adjustment effect estimate — the estimator the
-    // q340 balance table gates (Cochran's design-based adjustment)
-    "q344_stratified_effect" -> (Stats.qStratifiedEffect _),
-    // q345: sequential Misra–Gries as streaming state — the FIFTEENTH
-    // bit-exact parity, first over state with eviction (rows-only:
-    // the fold isn't SQL; Round10eSpec pins stream ≡ batch fold and
-    // the true − n/(m+1) ≤ est ≤ true guarantee)
-    "q345_streaming_mg" ->
-      (graft.streaming.EventTime.qStreamingMisraGries _),
-    // q346: Wald SPRT over enrollment order — always-valid sequential
-    // inference beside the fixed-n q263/q341 (coefficients are
-    // precomputed literals; cumulative rides the offset device)
-    "q346_sprt" -> (Stats.qSprt _),
-    // q347: delta-method CI for the revenue-per-order ratio metric
-    // with user-level clustering (the experimentation-platform number)
-    "q347_ratio_metric_ci" -> (Stats.qRatioMetricCi _),
-    // q348: Hyndman seasonal strength per type — the one-number
-    // weekly-cycle read beside q174/q318
-    "q348_seasonal_strength" -> (Stats.qSeasonalStrength _),
-    // q349: the ACF table, lags 1..14 — the Box–Jenkins first plot
-    // between q157's lag-1 and q307's portmanteau
-    "q349_acf_table" -> (Stats.qAcfTable _),
-    // q350: association rules (support/confidence/lift, Agrawal) —
-    // the merchandiser formulation of co-purchase
-    "q350_association_rules" -> ((s, d) => Relational.qAssociationRules(s, d)),
-    // q351: MRR + MAP@10 over the q191 retrieval fixture — the two
-    // remaining standard IR metrics beside NDCG
-    "q351_mrr_map" -> ((s, d) => Similarity.qMrrMap(s, d)),
-    // q352: near-dup cluster purity vs the lang label — the cluster
-    // COHERENCE audit beside q134's size census (q103's components)
-    "q352_cluster_purity" -> (Dedup.qClusterPurity _),
-    // q353: Neyman-optimal stratified allocation — the sampling
-    // DESIGN step before q142 draws
-    "q353_neyman_allocation" -> ((s, d) => Pipeline.qNeymanAllocation(s, d)),
-    // q354: seasonal Mann–Kendall — q176's trend test made
-    // seasonality-proof (within-weekday pairs, summed statistics)
-    "q354_seasonal_mk" -> (Stats.qSeasonalMannKendall _),
-    // q355: Dunn's post-hoc — the pairwise follow-up to q233's
-    // omnibus, same global ranks and tie correction
-    "q355_dunn_posthoc" -> (Stats.qDunnPosthoc _),
-    // q356: lexical richness battery (Yule's K, Guiraud R, Herdan C,
-    // hapax share) — the frequency-spectrum constants beside q326
-    "q356_lexical_richness" -> (TextAnalysis.qLexicalRichness _),
-    // q357: cohort LTV curve — the revenue half of q132's retention
-    // matrix (cumulative floored ppm-cents per cohort member)
-    "q357_cohort_ltv" -> (Stats.qCohortLtv _),
-    // q358: ABC/Pareto classification of parts by revenue — the
-    // actionable three-way split behind q160's Gini, on the offset
-    // cumulative device
-    "q358_abc_classification" -> (Relational.qAbcClassification _),
-    // q359-q364: the two-sample distribution-comparison family on the
-    // arm-vs-view design — full-distribution equality (KS / CvM /
-    // Kuiper), median equality (Mood), the variance-robust rank test
-    // (Brunner-Munzel), and the shift magnitude (Hodges-Lehmann) —
-    // all on the one value-domain integer machinery
-    "q359_ks_test" -> (Stats.qKsTest _),
-    "q360_cvm_test" -> (Stats.qCvmTest _),
-    "q361_kuiper_test" -> (Stats.qKuiperTest _),
-    "q362_mood_median" -> (Stats.qMoodMedian _),
-    "q363_brunner_munzel" -> (Stats.qBrunnerMunzel _),
-    "q364_hodges_lehmann" -> (Stats.qHodgesLehmann _),
-    // q365: HITS hubs/authorities on the customer->part bipartite
-    // graph (integer-pico rounds; rows-only — normalized mutual
-    // recursion exceeds recursive-CTE SQL; HitsSpec pins a driver
-    // recompute bit-exactly)
-    "q365_hits" -> ((s, dir) => Graph.qHits(s, dir)),
-    // q366: DCT perceptual-hash image near-dup through brightness/
-    // contrast nuisance (rows-only: PNG encode + DCT aren't SQL;
-    // PHashSpec pins invariances and brute-force recall)
-    "q366_image_phash_near_dup" -> ((s, dir) => Multimodal.qImagePhashNearDup(s, dir)),
-    // q367: category-blocklist audit (the C4/LDNOOBW filtering verb:
-    // per (source, category) hits, flagged docs, survivors)
-    "q367_blocklist_audit" -> (TextAnalysis.qBlocklistAudit _),
-    // q368: encoding-garbage audit (U+FFFD, C0 controls, the
-    // CP1252-in-UTF-8 tells; zero on this clean fixture by generator
-    // construction — the query is the harness, MojibakeSpec proves
-    // the detectors fire on crafted corruption)
-    "q368_mojibake_audit" -> (TextAnalysis.qMojibakeAudit _),
-    // q369: streaming KS drift monitor — q359 as mapGroupsWithState
-    // over the 3-file replay; final snapshot = the full-multiset
-    // statistic, so the oracle IS q359's batch SQL (the first
-    // streaming gate member with a full DuckDB oracle)
-    "q369_streaming_ks" -> (graft.streaming.EventTime.qStreamingKs _),
-    // q370: optimal length-bucket boundaries for padded batching —
-    // k-segmentation DP over the length histogram (rows-only: a DP is
-    // not SQL; BucketDpSpec pins it against brute-force enumeration)
-    "q370_bucket_boundaries" -> ((s, dir) => Pipeline.qBucketBoundaries(s, dir)),
-    // q371: Yuen's trimmed-mean test — robust two-sample location on
-    // exact trim-window order statistics and integer moments
-    "q371_yuen_trimmed" -> (Stats.qYuenTrimmed _),
-    // q372: per-user event-type transition matrix as streaming state
-    // (one carried triple per user, emission-once edges); oracle = the
-    // batch LAG() window — streaming row #2 with a full oracle
-    "q372_streaming_transitions" ->
-      (graft.streaming.EventTime.qStreamingTransitions _),
-    // q373: exact running moments per type — BIGINT (n, Σ, Σ²) state,
-    // one rounded division at the end (q312 discipline, streamed)
-    "q373_streaming_moments" ->
-      (graft.streaming.EventTime.qStreamingMoments _),
-    // q374: exact distinct users per type as id-set state — q214's
-    // question with a full oracle instead of an HLL estimate
-    "q374_streaming_distinct" ->
-      (graft.streaming.EventTime.qStreamingDistinctExact _),
-    // q375: byte-level BPE merges behind the GPT-2 pre-tokenizer —
-    // rows-only (iterative training is not SQL; ByteBpeSpec pins the
-    // exact sequence vs an independent reference implementation)
-    "q375_byte_bpe_merges" -> ((s, dir) => Pipeline.qByteBpeMerges(s, dir)),
-    // q376: byte-level BPE corpus encoding stats — rows-only
-    // (ByteBpeSpec pins losslessness + reference-encoder equality)
-    "q376_byte_bpe_encode" -> ((s, dir) => Pipeline.qByteBpeEncode(s, dir)),
-  )
-
-  /** q103's shared oracle CTE prefix (tok..sizes), verbatim the
-    * clause chain of the q103/q103a/q103b rows above — reused by the
-    * q103c/d/e single-column contingency split so all six rows run
-    * the identical component construction. */
-  private val q103OraclePrefix: String =
-    """WITH RECURSIVE tok AS (
-         SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents),
-       sh AS (
-         SELECT DISTINCT doc_id, toks[i] || ' ' || toks[i + 1] AS shingle
-         FROM (SELECT doc_id, toks, unnest(range(1, len(toks))) AS i FROM tok)
-         UNION
-         SELECT doc_id, array_to_string(toks, ' ') FROM tok WHERE len(toks) < 2),
-       cnt AS (SELECT doc_id, COUNT(*) AS nsh FROM sh GROUP BY doc_id),
-       inter AS (
-         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS ninter
-         FROM sh a JOIN sh b ON a.shingle = b.shingle
-              AND b.doc_id > a.doc_id AND b.doc_id <= a.doc_id + 64
-         GROUP BY 1, 2),
-       pairs AS (
-         SELECT doc_a, doc_b
-         FROM inter JOIN cnt ca ON ca.doc_id = inter.doc_a
-                    JOIN cnt cb ON cb.doc_id = inter.doc_b
-         WHERE ninter::DOUBLE / (ca.nsh + cb.nsh - ninter) >= 0.1),
-       edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-                 UNION SELECT doc_b, doc_a FROM pairs),
-       reach AS (
-         SELECT doc_id AS u, doc_id AS v FROM documents
-         UNION
-         SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-       comp AS (SELECT u AS doc_id, MIN(v) AS component FROM reach GROUP BY u),
-       sizes AS (SELECT component, COUNT(*) AS csize FROM comp GROUP BY component)"""
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_trigger_count" ->
-      "SELECT event_type, COUNT(*) AS n FROM events GROUP BY event_type",
-    "q02_prefix_filter" ->
-      "SELECT COUNT(*) AS n FROM events WHERE event_type LIKE 'c%'",
-    "q03_lookup_enrich" ->
+    QuerySpec("q01_trigger_count", Relational.qTriggerCount _, Headline,
+      "SELECT event_type, COUNT(*) AS n FROM events GROUP BY event_type"),
+    QuerySpec("q02_prefix_filter", Relational.qPrefixFilter _, Timed,
+      "SELECT COUNT(*) AS n FROM events WHERE event_type LIKE 'c%'"),
+    QuerySpec("q03_lookup_enrich", Relational.qLookupEnrich _, Headline,
       """SELECT o_orderpriority, ROUND(SUM(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         GROUP BY o_orderpriority""",
-    "q04_cross_shard_sum" ->
-      "SELECT ROUND(SUM(value), 2) AS sum_value, COUNT(DISTINCT user_id) AS n_users FROM events",
-    "q05_checkpoint_order" ->
+         GROUP BY o_orderpriority"""),
+    QuerySpec("q04_cross_shard_sum", Relational.qCrossShardSum _, Headline,
+      "SELECT ROUND(SUM(value), 2) AS sum_value, COUNT(DISTINCT user_id) AS n_users FROM events"),
+    QuerySpec("q05_checkpoint_order", Relational.qCheckpointOrder _, Timed,
       """SELECT user_id, CAST(FLOOR(EPOCH(MAX(ts))) AS BIGINT) AS max_ts_sec
-         FROM events GROUP BY user_id""",
-    "q06_stream_window" ->
+         FROM events GROUP BY user_id"""),
+    QuerySpec("q06_stream_window", Relational.qStreamWindow _, Headline,
       """SELECT CAST(FLOOR(EPOCH(date_trunc('hour', ts))) AS BIGINT) AS hour_ts,
                 event_type, COUNT(*) AS n, ROUND(SUM(value), 2) AS sum_value
-         FROM events GROUP BY 1, 2""",
-    "q07_semi_join" ->
+         FROM events GROUP BY 1, 2"""),
+    // --- relational surface (SURVEY §2.4) ---
+    QuerySpec("q07_semi_join", Relational.qSemiJoin _, Untimed,
       """SELECT COUNT(*) AS n, ROUND(SUM(o_totalprice), 2) AS sum_price FROM orders
-         WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)""",
-    "q08_anti_join" ->
+         WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)"""),
+    QuerySpec("q08_anti_join", Relational.qAntiJoin _, Untimed,
       """SELECT COUNT(*) AS n FROM customer
-         WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""",
-    "q09_topk" ->
+         WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)"""),
+    QuerySpec("q09_topk", Relational.qTopK _, Untimed,
       """SELECT o_orderkey, o_totalprice FROM orders
-         ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""",
-    "q10_window_rank" ->
+         ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10"""),
+    QuerySpec("q10_window_rank", Relational.qWindowRank _, Headline,
       """SELECT o_custkey, o_orderkey FROM (
            SELECT o_custkey, o_orderkey,
                   ROW_NUMBER() OVER (PARTITION BY o_custkey
                     ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-           FROM orders) WHERE rn = 1""",
-    "q11_window_lag" ->
+           FROM orders) WHERE rn = 1"""),
+    QuerySpec("q11_window_lag", Relational.qWindowLag _, Untimed,
       """SELECT COUNT(*) AS n_increases FROM (
            SELECT value, LAG(value) OVER (PARTITION BY user_id ORDER BY event_id) AS prev
-           FROM events) WHERE prev IS NOT NULL AND value > prev""",
-    "q12_rollup" ->
+           FROM events) WHERE prev IS NOT NULL AND value > prev"""),
+    QuerySpec("q12_rollup", Relational.qRollup _, Untimed,
       """SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
                 COALESCE(l_linestatus, 'ALL') AS linestatus,
                 COUNT(*) AS n, ROUND(SUM(l_quantity), 2) AS sum_qty
-         FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""",
-    "q13_cube" ->
+         FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)"""),
+    QuerySpec("q13_cube", Relational.qCube _, Untimed,
       """SELECT COALESCE(event_type, 'ALL') AS event_type,
                 COUNT(*) AS n, ROUND(SUM(value), 2) AS sum_value
-         FROM events GROUP BY CUBE(event_type)""",
-    "q14_set_intersect" ->
+         FROM events GROUP BY CUBE(event_type)"""),
+    QuerySpec("q14_set_intersect", Relational.qSetIntersect _, Untimed,
       """SELECT user_id FROM events WHERE event_type = 'click'
          INTERSECT
-         SELECT user_id FROM events WHERE event_type = 'purchase'""",
-    "q15_set_except" ->
+         SELECT user_id FROM events WHERE event_type = 'purchase'"""),
+    QuerySpec("q15_set_except", Relational.qSetExcept _, Untimed,
       """SELECT user_id FROM events WHERE event_type = 'view'
          EXCEPT
-         SELECT user_id FROM events WHERE event_type = 'purchase'""",
-    "q16_scalar_json" ->
+         SELECT user_id FROM events WHERE event_type = 'purchase'"""),
+    QuerySpec("q16_scalar_json", Relational.qScalarJson _, Untimed,
       """SELECT (json_extract(props, '$.k')::BIGINT) % 10 AS k_mod, COUNT(*) AS n
-         FROM events GROUP BY 1""",
-    "q17_distinct_agg" ->
+         FROM events GROUP BY 1"""),
+    QuerySpec("q17_distinct_agg", Relational.qDistinctAgg _, Untimed,
       """SELECT COUNT(DISTINCT l_partkey) AS n_parts,
-                COUNT(DISTINCT l_suppkey) AS n_supps FROM lineitem""",
-    "q18_pricing_summary" ->
+                COUNT(DISTINCT l_suppkey) AS n_supps FROM lineitem"""),
+    QuerySpec("q18_pricing_summary", Relational.qPricingSummary _, Headline,
       """SELECT l_returnflag, l_linestatus,
                 ROUND(SUM(l_quantity), 2) AS sum_qty,
                 ROUND(SUM(l_extendedprice), 2) AS sum_base_price,
@@ -1066,8 +119,8 @@ object SparkEntry {
                 ROUND(AVG(l_discount), 4) AS avg_disc,
                 COUNT(*) AS count_order
          FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-         GROUP BY l_returnflag, l_linestatus""",
-    "q19_revenue_by_nation" ->
+         GROUP BY l_returnflag, l_linestatus"""),
+    QuerySpec("q19_revenue_by_nation", Relational.qRevenueByNation _, Headline,
       """SELECT r_name, n_name,
                 ROUND(SUM(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
          FROM lineitem
@@ -1075,12 +128,13 @@ object SparkEntry {
          JOIN customer ON o_custkey = c_custkey
          JOIN nation ON c_nationkey = n_nationkey
          JOIN region ON n_regionkey = r_regionkey
-         GROUP BY r_name, n_name""",
-    "q20_range_join" ->
+         GROUP BY r_name, n_name"""),
+    QuerySpec("q20_range_join", Relational.qRangeJoin _, Untimed,
       """SELECT COUNT(*) AS n, ROUND(SUM(p_retailprice), 2) AS sum_price
          FROM lineitem JOIN part ON l_partkey = p_partkey AND l_quantity >= p_size
-         WHERE p_size <= 5""",
-    "q21_lang_id" ->
+         WHERE p_size <= 5"""),
+    // --- text analysis ---
+    QuerySpec("q21_lang_id", TextAnalysis.qLangId _, Untimed,
       """WITH s AS (
            SELECT len(list_intersect(toks, ['the','a','of','and','to','in','is','it'])) AS en,
                   len(list_intersect(toks, ['el','la','de','y','en','es','un','que'])) AS es,
@@ -1091,14 +145,14 @@ object SparkEntry {
                      WHEN en >= es AND en >= fr THEN 'en'
                      WHEN es >= fr THEN 'es' ELSE 'fr' END AS lang_pred,
                 COUNT(*) AS n
-         FROM s GROUP BY 1""",
-    "q22_token_count" ->
+         FROM s GROUP BY 1"""),
+    QuerySpec("q22_token_count", TextAnalysis.qTokenCount _, Untimed,
       """SELECT source,
                 CAST(SUM(len(string_split_regex(text, '\s+'))) AS BIGINT) AS sum_ws_tokens,
                 CAST(SUM(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]'))) AS BIGINT) AS sum_bpe_tokens,
                 COUNT(*) AS n_docs
-         FROM documents GROUP BY source""",
-    "q23_text_quality" ->
+         FROM documents GROUP BY source"""),
+    QuerySpec("q23_text_quality", TextAnalysis.qTextQuality _, Headline,
       """SELECT doc_id,
                 length(text) AS n_chars,
                 CAST(len(string_split_regex(text, '\s+')) AS INT) AS n_tokens,
@@ -1115,8 +169,8 @@ object SparkEntry {
                 ROUND(CASE WHEN len(rtoks) = 0 THEN 0.0
                       ELSE len(list_distinct(rtoks))::DOUBLE / len(rtoks) END, 4) AS distinct_ratio
          FROM (SELECT doc_id, text, string_split_regex(lower(text), '\s+') AS toks,
-                      string_split_regex(text, '\s+') AS rtoks FROM documents)""",
-    "q24_quality_filter" ->
+                      string_split_regex(text, '\s+') AS rtoks FROM documents)"""),
+    QuerySpec("q24_quality_filter", TextAnalysis.qQualityFilter _, Untimed,
       """SELECT COUNT(*) AS n_kept,
                 CAST(SUM(len(string_split_regex(text, '\s+'))) AS BIGINT) AS sum_tokens
          FROM documents
@@ -1124,10 +178,14 @@ object SparkEntry {
            AND len(list_distinct(string_split_regex(text, '\s+')))::DOUBLE
                / len(string_split_regex(text, '\s+')) >= 0.1
            AND length(regexp_replace(lower(text), '[a-z0-9 ]', '', 'g'))::DOUBLE
-               / length(text) <= 0.2""",
-    "q26_dedup_exact" ->
-      """SELECT COUNT(*) AS n_docs, COUNT(DISTINCT md5(text)) AS n_unique FROM documents""",
-    "q29_ngram_jaccard" ->
+               / length(text) <= 0.2"""),
+    QuerySpec("q25_fingerprint", TextAnalysis.qFingerprint _, Untimed),
+    // --- dedup ---
+    QuerySpec("q26_dedup_exact", Dedup.qExact _, Headline,
+      """SELECT COUNT(*) AS n_docs, COUNT(DISTINCT md5(text)) AS n_unique FROM documents"""),
+    QuerySpec("q27_dedup_minhash_lsh", Dedup.qMinhashLsh _, Headline),
+    QuerySpec("q28_dedup_simhash", Dedup.qSimhash _, Headline),
+    QuerySpec("q29_ngram_jaccard", (s, d) => Dedup.qNgramJaccard(s, d), Untimed,
       """WITH tok AS (
            SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents),
          sh AS (
@@ -1146,15 +204,17 @@ object SparkEntry {
                   ninter::DOUBLE / (ca.nsh + cb.nsh - ninter) AS jac
            FROM inter JOIN cnt ca ON ca.doc_id = inter.doc_a
                       JOIN cnt cb ON cb.doc_id = inter.doc_b)
-         WHERE jac >= 0.5""",
-    "q30_embedding_near_dup" ->
+         WHERE jac >= 0.5"""),
+    QuerySpec("q30_embedding_near_dup", (s, d) => Dedup.qEmbeddingNearDup(s, d), Untimed,
       """SELECT vec_a, vec_b, ROUND(cos, 4) AS cosine FROM (
            SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
                   list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) AS cos
            FROM embeddings a JOIN embeddings b
              ON b.vec_id > a.vec_id AND b.vec_id <= a.vec_id + 128)
-         WHERE cos >= 0.35""",
-    "q32_knn_brute_force" ->
+         WHERE cos >= 0.35"""),
+    QuerySpec("q31_embedding_lsh_near_dup", (s, d) => Dedup.qEmbeddingLshNearDup(s, d), Untimed),
+    // --- similarity search ---
+    QuerySpec("q32_knn_brute_force", Similarity.qBruteForceTopK _, Headline,
       """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS q_emb
                     FROM embeddings WHERE vec_id < 5)
          SELECT query_id, rank, neighbor, cosine FROM (
@@ -1164,12 +224,14 @@ object SparkEntry {
                              c.vec_id ASC) AS rank,
                   ROUND(list_cosine_similarity(q.q_emb, c.embedding::DOUBLE[]), 4) AS cosine
            FROM q, embeddings c WHERE q.query_id <> c.vec_id)
-         WHERE rank <= 10""",
-    "q34_label_centroids" ->
+         WHERE rank <= 10"""),
+    QuerySpec("q33_knn_lsh", (s, d) => Similarity.qLshTopK(s, d), Untimed),
+    QuerySpec("q34_label_centroids", Similarity.qLabelCentroids _, Untimed,
       """SELECT label, COUNT(*) AS n,
                 ROUND(SUM(list_sum(embedding::DOUBLE[])), 4) AS sum_components
-         FROM embeddings GROUP BY label""",
-    "q35_media_meta" ->
+         FROM embeddings GROUP BY label"""),
+    // --- multimodal plumbing ---
+    QuerySpec("q35_media_meta", Multimodal.qMediaMeta _, Untimed,
       """SELECT media_type, COUNT(*) AS n,
                 CAST(SUM(octet_length(payload)) AS BIGINT) AS sum_bytes,
                 COUNT(DISTINCT md5(text)) AS n_unique
@@ -1177,25 +239,27 @@ object SparkEntry {
                            WHEN doc_id % 3 = 1 THEN 'audio'
                            ELSE 'video' END AS media_type,
                       text, encode(text) AS payload FROM documents)
-         GROUP BY media_type""",
-    "q36_frame_sample" ->
+         GROUP BY media_type"""),
+    QuerySpec("q36_frame_sample", (s, d) => Multimodal.qFrameSample(s, d), Untimed,
       """SELECT media_id, CAST(len(range(0, duration_ms, 1000)) AS BIGINT) AS n_frames
          FROM (SELECT doc_id AS media_id, n_chars * 10 AS duration_ms FROM documents
-               WHERE doc_id % 3 = 2 AND n_chars * 10 >= 1000)""",
-    // q38/q39 run in APPEND mode: only windows the final watermark
-    // (max(ts) - 30 minutes) has closed are emitted, so the batch oracle
-    // applies the identical finalization cutoff.
-    "q38_watermark_tumbling" ->
+               WHERE doc_id % 3 = 2 AND n_chars * 10 >= 1000)"""),
+    QuerySpec("q37_media_features", Multimodal.qMediaFeatures _, Untimed),
+    // --- event-time streaming (real readStream + watermark, append mode) ---
+    QuerySpec("q38_watermark_tumbling", EventTime.qWatermarkTumbling _, Untimed,
+      // q38/q39 run in APPEND mode: only windows the final watermark
+      // (max(ts) - 30 minutes) has closed are emitted, so the batch oracle
+      // applies the identical finalization cutoff.
       """SELECT CAST(FLOOR(EPOCH(h)) AS BIGINT) AS hour_ts, event_type, n, sum_value FROM (
            SELECT date_trunc('hour', ts) AS h, event_type,
                   COUNT(*) AS n, ROUND(SUM(value), 2) AS sum_value
            FROM events GROUP BY 1, 2)
-         WHERE h + INTERVAL 1 HOUR <= (SELECT MAX(ts) - INTERVAL 30 MINUTE FROM events)""",
-    // session = events of one user with < 10 minutes between neighbors
-    // (Spark merges an event into a session iff it lands strictly before
-    // session end = last_ts + gap); a session is emitted once its end
-    // passed the watermark.
-    "q39_session_window" ->
+         WHERE h + INTERVAL 1 HOUR <= (SELECT MAX(ts) - INTERVAL 30 MINUTE FROM events)"""),
+    QuerySpec("q39_session_window", EventTime.qSessionWindow _, Untimed,
+      // session = events of one user with < 10 minutes between neighbors
+      // (Spark merges an event into a session iff it lands strictly before
+      // session end = last_ts + gap); a session is emitted once its end
+      // passed the watermark.
       """WITH t AS (
            SELECT user_id, ts,
                   CASE WHEN LAG(ts) OVER w IS NULL
@@ -1211,23 +275,24 @@ object SparkEntry {
                 COUNT(*) AS n_events
          FROM s GROUP BY user_id, sess
          HAVING MAX(ts) + INTERVAL 10 MINUTE <=
-                (SELECT MAX(ts) - INTERVAL 30 MINUTE FROM events)""",
-    "q40_dataset_mix" ->
+                (SELECT MAX(ts) - INTERVAL 30 MINUTE FROM events)"""),
+    // --- training-data pipeline curation ---
+    QuerySpec("q40_dataset_mix", Pipeline.qDatasetMix _, Untimed,
       """SELECT source, COUNT(*) AS n_kept,
                 CAST(SUM(len(string_split_regex(text, '\s+'))) AS BIGINT) AS sum_tokens
          FROM documents
          WHERE doc_id % 100 < CASE WHEN CAST(SUBSTR(source, 4, 10) AS INT) % 2 = 0
                                    THEN 70 ELSE 30 END
-         GROUP BY source""",
-    "q41_paragraph_dedup" ->
+         GROUP BY source"""),
+    QuerySpec("q41_paragraph_dedup", Pipeline.qParagraphDedup _, Untimed,
       """SELECT source, COUNT(*) AS n_paras,
                 COUNT(DISTINCT md5(para)) AS n_unique,
                 COUNT(*) - COUNT(DISTINCT md5(para)) AS n_dup
          FROM (SELECT source, unnest(string_split_regex(text, '\. ')) AS para
                FROM documents)
          WHERE length(para) > 0
-         GROUP BY source""",
-    "q42_contamination" ->
+         GROUP BY source"""),
+    QuerySpec("q42_contamination", (s, d) => Pipeline.qContamination(s, d), Untimed,
       """WITH d AS (
            SELECT doc_id, list_distinct(
              CASE WHEN len(toks) < 5 THEN [array_to_string(toks, ' ')]
@@ -1241,26 +306,33 @@ object SparkEntry {
                   FROM (SELECT doc_id, unnest(sh) AS g FROM d WHERE doc_id % 97 <> 0) x
                   WHERE g IN (SELECT g FROM bg))
          SELECT (SELECT COUNT(*) FROM d WHERE doc_id % 97 <> 0) AS n_docs,
-                (SELECT COUNT(*) FROM cont) AS n_contaminated""",
-    "q44_asof_enrich" ->
+                (SELECT COUNT(*) FROM cont) AS n_contaminated"""),
+    QuerySpec("q43_approx_distinct", Pipeline.qApproxDistinct _, Untimed),
+    QuerySpec("q44_asof_enrich", Relational.qAsofEnrich _, Untimed,
       """SELECT event_id, user_id,
                 CAST(FLOOR(EPOCH(o_orderdate)) AS BIGINT) AS asof_order_sec
          FROM events ASOF JOIN orders
-           ON events.user_id = orders.o_custkey AND orders.o_orderdate <= events.ts""",
-    "q45_streaming_dedup" ->
+           ON events.user_id = orders.o_custkey AND orders.o_orderdate <= events.ts"""),
+    QuerySpec("q45_streaming_dedup", EventTime.qStreamingDedup _, Untimed,
       """SELECT event_type, COUNT(DISTINCT user_id) AS n_distinct_users
-         FROM events GROUP BY event_type""",
-    "q47_percentiles" ->
+         FROM events GROUP BY event_type"""),
+    QuerySpec("q46_knn_ivf", (s, d) => Similarity.qIvfTopK(s, d), Untimed),
+    QuerySpec("q47_percentiles", Pipeline.qPercentiles _, Untimed,
       """SELECT event_type,
                 ROUND(quantile_cont(value, 0.5), 4) AS p50,
                 ROUND(quantile_cont(value, 0.9), 4) AS p90,
                 ROUND(quantile_cont(value, 0.99), 4) AS p99
-         FROM events GROUP BY event_type""",
-    // q47x: discrete (type-1) quantile twin — rank k = ceil(p*n) in
-    // DOUBLE on both engines (identical IEEE product + ceil), the
-    // selected value is an actual data element so the hash is
-    // float-stable; no interpolation, no ROUND (VERDICT r8 #7)
-    "q47x_percentiles_exact" ->
+         FROM events GROUP BY event_type"""),
+    // q47x/q104x: integer twins of the two version-mobile oracle
+    // constructs (quantile_cont interpolation, ROUND on computed
+    // doubles — VERDICT r8 #7): discrete order statistics and exact
+    // cents, so a future oracle-engine bump degrades one row, not the
+    // percentile/winsorize family
+    QuerySpec("q47x_percentiles_exact", Pipeline.qPercentilesExact _, Timed,
+      // q47x: discrete (type-1) quantile twin — rank k = ceil(p*n) in
+      // DOUBLE on both engines (identical IEEE product + ceil), the
+      // selected value is an actual data element so the hash is
+      // float-stable; no interpolation, no ROUND (VERDICT r8 #7)
       """WITH t AS (SELECT event_type, value AS v FROM events),
          c AS (SELECT event_type, COUNT(*) AS n FROM t GROUP BY event_type),
          r AS (SELECT c.event_type, p.p,
@@ -1271,38 +343,41 @@ object SparkEntry {
                       ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY v) AS rn
                FROM t)
          SELECT r.event_type, r.p, r.k, o.v AS value
-         FROM r JOIN o ON o.event_type = r.event_type AND o.rn = r.k""",
-    // batched model inference (C14 analogue): the linear model's fixed
-    // pseudo-random weights are reproduced in SQL; sigmoid(score) > 0.5
-    // is exactly score > 0. Accumulation is left-to-right double
-    // addition on both sides.
-    "q50_model_score" ->
+         FROM r JOIN o ON o.event_type = r.event_type AND o.rn = r.k"""),
+    QuerySpec("q48_edit_distance", (s, d) => Dedup.qEditDistance(s, d), Untimed,
+      """SELECT doc_a, doc_b, dist FROM (
+           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                  levenshtein(substr(a.text, 1, 24), substr(b.text, 1, 24)) AS dist
+           FROM documents a JOIN documents b
+             ON b.doc_id > a.doc_id AND b.doc_id <= a.doc_id + 8)
+         WHERE dist <= 10"""),
+    QuerySpec("q49_percentile_sketch", (s, d) => Pipeline.qPercentileSketch(s, d), Untimed),
+    QuerySpec("q50_model_score", Inference.qModelScore _, Untimed,
+      // batched model inference (C14 analogue): the linear model's fixed
+      // pseudo-random weights are reproduced in SQL; sigmoid(score) > 0.5
+      // is exactly score > 0. Accumulation is left-to-right double
+      // addition on both sides.
       """SELECT vec_id, ROUND(score, 4) AS score, CAST(score > 0 AS INT) AS positive FROM (
            SELECT vec_id, list_sum(list_transform(range(1, len(e) + 1),
                i -> e[i] * ((((i - 1) * 31 + 7) % 13) - 6) / 6.0)) AS score
-           FROM (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings))""",
-    // sliding windows: every event belongs to the 4 windows whose start
-    // is one of the 4 15-minute boundaries in (ts - 1h, ts]; epoch-second
-    // arithmetic keeps the alignment identical to Spark's epoch-aligned
-    // window() and makes the watermark cutoff integer-exact.
-    "q51_sliding_window" ->
+           FROM (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings))"""),
+    QuerySpec("q51_sliding_window", EventTime.qSlidingWindow _, Untimed,
+      // sliding windows: every event belongs to the 4 windows whose start
+      // is one of the 4 15-minute boundaries in (ts - 1h, ts]; epoch-second
+      // arithmetic keeps the alignment identical to Spark's epoch-aligned
+      // window() and makes the watermark cutoff integer-exact.
       """SELECT win_ts, event_type, n, sum_value FROM (
            SELECT (CAST(FLOOR(EPOCH(ts) / 900) AS BIGINT) - k) * 900 AS win_ts,
                   event_type, COUNT(*) AS n, ROUND(SUM(value), 2) AS sum_value
            FROM events CROSS JOIN range(4) AS t(k)
            GROUP BY 1, 2)
          WHERE win_ts + 3600 <=
-               (SELECT CAST(FLOOR(EPOCH(MAX(ts) - INTERVAL 30 MINUTE)) AS BIGINT) FROM events)""",
-    "q48_edit_distance" ->
-      """SELECT doc_a, doc_b, dist FROM (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                  levenshtein(substr(a.text, 1, 24), substr(b.text, 1, 24)) AS dist
-           FROM documents a JOIN documents b
-             ON b.doc_id > a.doc_id AND b.doc_id <= a.doc_id + 8)
-         WHERE dist <= 10""",
-    // sequence packing: bin = floor(tokens-before-this-doc / budget)
-    // over a per-source doc_id-ordered running sum (budget 1024)
-    "q54_sequence_pack" ->
+               (SELECT CAST(FLOOR(EPOCH(MAX(ts) - INTERVAL 30 MINUTE)) AS BIGINT) FROM events)"""),
+    QuerySpec("q52_audio_features", Multimodal.qAudioFeatures _, Untimed),
+    QuerySpec("q53_video_features", Multimodal.qVideoFeatures _, Untimed),
+    QuerySpec("q54_sequence_pack", (s, d) => Pipeline.qSequencePack(s, d), Untimed,
+      // sequence packing: bin = floor(tokens-before-this-doc / budget)
+      // over a per-source doc_id-ordered running sum (budget 1024)
       """SELECT source, bin, COUNT(*) AS n_docs,
                 CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens FROM (
            SELECT source, doc_id, n_tokens,
@@ -1311,18 +386,18 @@ object SparkEntry {
            FROM (SELECT source, doc_id,
                         len(string_split_regex(text, '\s+')) AS n_tokens
                  FROM documents))
-         GROUP BY source, bin""",
-    "q55_vocabulary" ->
+         GROUP BY source, bin"""),
+    QuerySpec("q55_vocabulary", (s, d) => Pipeline.qVocabulary(s, d), Untimed,
       """SELECT token, n FROM (
            SELECT token, COUNT(*) AS n
            FROM (SELECT unnest(string_split_regex(lower(text), '\s+')) AS token
                  FROM documents)
            WHERE length(token) > 0
            GROUP BY token)
-         ORDER BY n DESC, token ASC LIMIT 200""",
-    // survivor selection over the q29 pair definition: drop every doc
-    // appearing as the higher id of a qualifying near-dup pair
-    "q56_dedup_keep" ->
+         ORDER BY n DESC, token ASC LIMIT 200"""),
+    QuerySpec("q56_dedup_keep", Dedup.qDedupKeep _, Untimed,
+      // survivor selection over the q29 pair definition: drop every doc
+      // appearing as the higher id of a qualifying near-dup pair
       """WITH tok AS (
            SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents),
          sh AS (
@@ -1347,11 +422,11 @@ object SparkEntry {
                 CAST(SUM(len(string_split_regex(text, '\s+'))) AS BIGINT) AS sum_tokens
          FROM documents
          WHERE doc_id NOT IN (SELECT doc_id FROM dropped)
-         GROUP BY source""",
-    // transitive dedup clusters over the q29 pair definition at a 0.1
-    // threshold: component = min doc_id reachable through near-dup
-    // edges (recursive min-reachability closure)
-    "q57_dedup_components" ->
+         GROUP BY source"""),
+    QuerySpec("q57_dedup_components", Dedup.qDedupComponents _, Timed,
+      // transitive dedup clusters over the q29 pair definition at a 0.1
+      // threshold: component = min doc_id reachable through near-dup
+      // edges (recursive min-reachability closure)
       """WITH RECURSIVE tok AS (
            SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents),
          sh AS (
@@ -1378,13 +453,13 @@ object SparkEntry {
            SELECT doc_id AS u, doc_id AS v FROM documents
            UNION
            SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u)
-         SELECT u AS doc_id, MIN(v) AS component FROM reach GROUP BY u""",
-    // PII redaction: deterministic PII injected as a function of doc_id
-    // (identical on both sides), then redacted email→phone→ipv4; the
-    // distinct-digest of the REDACTED text checks replacement bytes.
-    // Patterns are in the Java-regex ∩ RE2 subset; DuckDB needs the 'g'
-    // flag to replace every occurrence (Spark replaces all by default).
-    "q58_pii_redact" ->
+         SELECT u AS doc_id, MIN(v) AS component FROM reach GROUP BY u"""),
+    QuerySpec("q58_pii_redact", TextAnalysis.qPiiRedact _, Timed,
+      // PII redaction: deterministic PII injected as a function of doc_id
+      // (identical on both sides), then redacted email→phone→ipv4; the
+      // distinct-digest of the REDACTED text checks replacement bytes.
+      // Patterns are in the Java-regex ∩ RE2 subset; DuckDB needs the 'g'
+      // flag to replace every occurrence (Spark replaces all by default).
       """WITH injected AS (
            SELECT doc_id, source,
                   text
@@ -1416,10 +491,10 @@ object SparkEntry {
                        + len(regexp_extract_all(redacted, '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}'))) AS BIGINT) AS n_pii_left,
                 COUNT(DISTINCT md5(redacted)) AS n_unique_redacted,
                 CAST(SUM(length(redacted)) AS BIGINT) AS sum_len_redacted
-         FROM red GROUP BY source""",
-    // Gopher-style repetition metrics: duplicate-sentence fraction and
-    // most-frequent-2-gram fraction per document
-    "q59_repetition" ->
+         FROM red GROUP BY source"""),
+    QuerySpec("q59_repetition", TextAnalysis.qRepetition _, Untimed,
+      // Gopher-style repetition metrics: duplicate-sentence fraction and
+      // most-frequent-2-gram fraction per document
       """WITH s AS (
            SELECT doc_id,
                   list_filter(string_split_regex(text, '\. '), x -> length(x) > 0) AS sents,
@@ -1441,39 +516,39 @@ object SparkEntry {
          t AS (SELECT doc_id, ROUND(MAX(cnt)::DOUBLE / SUM(cnt), 4) AS top_2gram_frac
                FROM c GROUP BY doc_id)
          SELECT sent.doc_id, sent.n_sents, sent.dup_sent_frac, t.top_2gram_frac
-         FROM sent JOIN t ON sent.doc_id = t.doc_id""",
-    // deterministic stratified hash sample: keep iff first 2 hex chars
-    // of md5(doc_id) < per-stratum threshold (even sources '80' ~50%,
-    // odd '20' ~12.5%); md5 hex + lexicographic compare is
-    // engine-independent
-    "q60_hash_sample" ->
+         FROM sent JOIN t ON sent.doc_id = t.doc_id"""),
+    QuerySpec("q60_hash_sample", (s, d) => Pipeline.qHashSample(s, d), Untimed,
+      // deterministic stratified hash sample: keep iff first 2 hex chars
+      // of md5(doc_id) < per-stratum threshold (even sources '80' ~50%,
+      // odd '20' ~12.5%); md5 hex + lexicographic compare is
+      // engine-independent
       """SELECT source, COUNT(*) AS n_kept,
                 CAST(SUM(len(string_split_regex(text, '\s+'))) AS BIGINT) AS sum_tokens
          FROM documents
          WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) <
                CASE WHEN CAST(SUBSTR(source, 4, 10) AS INT) % 2 = 0 THEN '80' ELSE '20' END
-         GROUP BY source""",
-    // stream-stream inner join: purchases attributed to same-user clicks
-    // within the preceding 30 minutes. Inner-join matches emit when both
-    // sides arrive (watermarks bound state, not emission), so the batch
-    // join is the exact oracle — no finalization cutoff.
-    "q61_stream_stream_join" ->
+         GROUP BY source"""),
+    QuerySpec("q61_stream_stream_join", EventTime.qStreamStreamJoin _, Untimed,
+      // stream-stream inner join: purchases attributed to same-user clicks
+      // within the preceding 30 minutes. Inner-join matches emit when both
+      // sides arrive (watermarks bound state, not emission), so the batch
+      // join is the exact oracle — no finalization cutoff.
       """SELECT c.event_id AS click_id, p.event_id AS purchase_id, p.user_id,
                 CAST(FLOOR(EPOCH(p.ts)) - FLOOR(EPOCH(c.ts)) AS BIGINT) AS lag_sec
          FROM events c JOIN events p
            ON c.user_id = p.user_id
           AND c.event_type = 'click' AND p.event_type = 'purchase'
-          AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 30 MINUTE""",
-    // grouping sets: two independent marginals in one pass — a shape
-    // neither rollup nor cube produces
-    "q62_grouping_sets" ->
+          AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 30 MINUTE"""),
+    QuerySpec("q62_grouping_sets", Relational.qGroupingSets _, Untimed,
+      // grouping sets: two independent marginals in one pass — a shape
+      // neither rollup nor cube produces
       """SELECT CASE WHEN GROUPING(l_returnflag) = 1 THEN 'ALL' ELSE l_returnflag END AS returnflag,
                 CASE WHEN GROUPING(l_linestatus) = 1 THEN 'ALL' ELSE l_linestatus END AS linestatus,
                 COUNT(*) AS n, ROUND(SUM(l_quantity), 2) AS sum_qty
          FROM lineitem
-         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""",
-    // TF-IDF: most characteristic term per doc, idf = ln(N/df), ties by term
-    "q63_tfidf" ->
+         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())"""),
+    QuerySpec("q63_tfidf", TextAnalysis.qTfidf _, Timed,
+      // TF-IDF: most characteristic term per doc, idf = ln(N/df), ties by term
       """WITH tf AS (
            SELECT doc_id, token AS term, COUNT(*) AS tf
            FROM (SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS token
@@ -1491,10 +566,10 @@ object SparkEntry {
                   ROW_NUMBER() OVER (PARTITION BY doc_id
                     ORDER BY tfidf DESC, term ASC) AS rn
            FROM scored)
-         WHERE rn = 1""",
-    // corpus-unigram negative log-likelihood per doc (p = cnt/total;
-    // every token is in-vocabulary by construction, no smoothing)
-    "q64_unigram_nll" ->
+         WHERE rn = 1"""),
+    QuerySpec("q64_unigram_nll", TextAnalysis.qUnigramNll _, Untimed,
+      // corpus-unigram negative log-likelihood per doc (p = cnt/total;
+      // every token is in-vocabulary by construction, no smoothing)
       """WITH toks AS (
            SELECT doc_id, token AS term
            FROM (SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS token
@@ -1505,10 +580,17 @@ object SparkEntry {
          SELECT doc_id, COUNT(*) AS n_tokens,
                 ROUND(AVG(-ln(vocab.cnt::DOUBLE / t.total)), 4) AS avg_nll
          FROM toks JOIN vocab ON toks.term = vocab.term CROSS JOIN t
-         GROUP BY doc_id""",
-    // end-to-end curation pipeline: quality filter -> transitive-dedup
-    // survivors (min-id per component) -> 1024-token packing per source
-    "q67_pipeline_e2e" ->
+         GROUP BY doc_id"""),
+    // q65: image perceptual-hash near-dup — rows-only (JPEG/PNG encode
+    // is not SQL-expressible); value-verified by ImageDedupSpec against
+    // brute-force Hamming
+    QuerySpec("q65_image_near_dup", (s, d) => Multimodal.qImageNearDup(s, d), Untimed),
+    // q66: SQ8-quantized ANN — rows-only (quantization error makes
+    // ranks approximate); SimilaritySpec pins recall vs exact float
+    QuerySpec("q66_knn_sq8", (s, d) => Similarity.qSq8TopK(s, d), Untimed),
+    QuerySpec("q67_pipeline_e2e", (s, d) => Pipeline.qPipelineE2e(s, d), Untimed,
+      // end-to-end curation pipeline: quality filter -> transitive-dedup
+      // survivors (min-id per component) -> 1024-token packing per source
       """WITH RECURSIVE kept AS (
            SELECT doc_id, source, text FROM documents
            WHERE length(text) >= 50
@@ -1555,12 +637,12 @@ object SparkEntry {
            FROM surv)
          SELECT source, COUNT(*) AS n_kept, COUNT(DISTINCT bin) AS n_bins,
                 CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens
-         FROM packed GROUP BY source""",
-    // left-outer stream-stream join: matched pairs emit on arrival;
-    // an unmatched click null-extends once the GLOBAL watermark
-    // (min of both sides' max ts, minus the delay) is strictly past
-    // its whole eligibility window (c.ts + 30 min)
-    "q68_stream_left_outer" ->
+         FROM packed GROUP BY source"""),
+    QuerySpec("q68_stream_left_outer", EventTime.qStreamStreamLeftOuter _, Untimed,
+      // left-outer stream-stream join: matched pairs emit on arrival;
+      // an unmatched click null-extends once the GLOBAL watermark
+      // (min of both sides' max ts, minus the delay) is strictly past
+      // its whole eligibility window (c.ts + 30 min)
       """WITH m AS (
            SELECT c.event_id AS click_id, p.event_id AS purchase_id,
                   c.user_id AS user_id,
@@ -1579,12 +661,12 @@ object SparkEntry {
          FROM events c, wm
          WHERE c.event_type = 'click'
            AND NOT EXISTS (SELECT 1 FROM m WHERE m.click_id = c.event_id)
-           AND c.ts + INTERVAL 30 MINUTE < wm.w""",
-    // incremental dedup: batch (doc_id % 5 = 0, every third doc's text
-    // replaced by the NEXT corpus doc's text — simulated re-crawl,
-    // injected identically on both sides) against the standing corpus;
-    // a batch doc is new iff its digest is absent from the corpus
-    "q69_incremental_dedup" ->
+           AND c.ts + INTERVAL 30 MINUTE < wm.w"""),
+    QuerySpec("q69_incremental_dedup", Dedup.qIncrementalDedup _, Timed,
+      // incremental dedup: batch (doc_id % 5 = 0, every third doc's text
+      // replaced by the NEXT corpus doc's text — simulated re-crawl,
+      // injected identically on both sides) against the standing corpus;
+      // a batch doc is new iff its digest is absent from the corpus
       """WITH corpus AS (SELECT doc_id, source, text FROM documents WHERE doc_id % 5 <> 0),
          batch AS (
            SELECT b.doc_id, b.source, COALESCE(c.text, b.text) AS text
@@ -1595,42 +677,42 @@ object SparkEntry {
                 CAST(SUM(len(string_split_regex(text, '\s+'))) AS BIGINT) AS sum_tokens
          FROM batch b
          WHERE NOT EXISTS (SELECT 1 FROM corpus c WHERE md5(c.text) = md5(b.text))
-         GROUP BY source""",
-    // stream-static join: stateless enrichment, so the batch join is
-    // the exact oracle (every event's user exists in customer)
-    "q70_stream_static_join" ->
+         GROUP BY source"""),
+    QuerySpec("q70_stream_static_join", EventTime.qStreamStaticJoin _, Untimed,
+      // stream-static join: stateless enrichment, so the batch join is
+      // the exact oracle (every event's user exists in customer)
       """SELECT e.event_id, e.user_id, c.c_mktsegment AS mktsegment
-         FROM events e JOIN customer c ON e.user_id = c.c_custkey""",
-    // overlapping chunking: starts at every multiple of 150 strictly
-    // below the doc length, chunk = 200 chars from the start (tail may
-    // be short)
-    "q71_chunking" ->
+         FROM events e JOIN customer c ON e.user_id = c.c_custkey"""),
+    QuerySpec("q71_chunking", (s, d) => Pipeline.qChunk(s, d), Untimed,
+      // overlapping chunking: starts at every multiple of 150 strictly
+      // below the doc length, chunk = 200 chars from the start (tail may
+      // be short)
       """SELECT source, COUNT(*) AS n_chunks, COUNT(DISTINCT md5(chunk)) AS n_unique,
                 CAST(SUM(length(chunk)) AS BIGINT) AS sum_chars
          FROM (SELECT source, substr(text, s + 1, 200) AS chunk
                FROM documents, unnest(range(0, length(text), 150)) AS t(s))
-         GROUP BY source""",
-    // global-quantile filter: keep docs at/above the corpus p25 of
-    // n_chars (quantile_cont bit-matches Spark's exact percentile)
-    "q72_quantile_filter" ->
+         GROUP BY source"""),
+    QuerySpec("q72_quantile_filter", (s, d) => Pipeline.qQuantileFilter(s, d), Untimed,
+      // global-quantile filter: keep docs at/above the corpus p25 of
+      // n_chars (quantile_cont bit-matches Spark's exact percentile)
       """WITH t AS (SELECT quantile_cont(n_chars, 0.25) AS thr FROM documents)
          SELECT source, COUNT(*) AS n_kept,
                 CAST(SUM(len(string_split_regex(text, '\s+'))) AS BIGINT) AS sum_tokens
-         FROM documents, t WHERE n_chars >= t.thr GROUP BY source""",
-    // pivot: one conditional count per pinned event type
-    "q73_pivot" ->
+         FROM documents, t WHERE n_chars >= t.thr GROUP BY source"""),
+    QuerySpec("q73_pivot", Relational.qPivot _, Untimed,
+      // pivot: one conditional count per pinned event type
       """SELECT CAST(FLOOR(EPOCH(date_trunc('hour', ts))) AS BIGINT) AS hour_ts,
                 CAST(COUNT(CASE WHEN event_type = 'click' THEN 1 END) AS BIGINT) AS click,
                 CAST(COUNT(CASE WHEN event_type = 'error' THEN 1 END) AS BIGINT) AS error,
                 CAST(COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT) AS purchase,
                 CAST(COUNT(CASE WHEN event_type = 'signup' THEN 1 END) AS BIGINT) AS signup,
                 CAST(COUNT(CASE WHEN event_type = 'view' THEN 1 END) AS BIGINT) AS view
-         FROM events GROUP BY 1""",
-    // batch sessionization: same 10-minute-gap session rule as q39,
-    // no watermark cutoff (every session counts); tied timestamps sit
-    // in one session regardless of tie order, so the walk is
-    // order-deterministic
-    "q74_sessionize" ->
+         FROM events GROUP BY 1"""),
+    QuerySpec("q74_sessionize", (s, d) => Relational.qSessionize(s, d), Timed,
+      // batch sessionization: same 10-minute-gap session rule as q39,
+      // no watermark cutoff (every session counts); tied timestamps sit
+      // in one session regardless of tie order, so the walk is
+      // order-deterministic
       """WITH t AS (
            SELECT user_id, ts, CASE WHEN LAG(ts) OVER w IS NULL
                   OR ts - LAG(ts) OVER w >= INTERVAL 10 MINUTE THEN 1 ELSE 0 END AS new_sess
@@ -1640,10 +722,26 @@ object SparkEntry {
          g AS (SELECT user_id, sess, COUNT(*) AS n_events FROM s GROUP BY user_id, sess)
          SELECT user_id, COUNT(*) AS n_sessions, MAX(n_events) AS max_session_events,
                 CAST(SUM(n_events) AS BIGINT) AS n_events
-         FROM g GROUP BY user_id""",
-    // bigram-LM scoring: exact MLE P(w2|w1) = c(w1,w2)/c1(w1), c1 over
-    // bigram-first positions; docs with < 2 tokens have no bigrams
-    "q79_bigram_nll" ->
+         FROM g GROUP BY user_id"""),
+    // q75: SemDeDup-style clustered semantic dedup — rows-only (k-means
+    // codebook not SQL-expressible); SemanticDedupSpec pins precision
+    // 1.0 and a recall floor vs brute-force all-pairs cosine
+    QuerySpec("q75_semantic_dedup", (s, d) => Dedup.qSemanticDedup(s, d), Timed),
+    // q76: Misra-Gries heavy hitters — rows-only (estimates are
+    // merge-order-dependent within the n/m band); HeavyHittersSpec
+    // pins presence and both error bounds against exact counts
+    QuerySpec("q76_heavy_hitters", (s, d) => TextAnalysis.qHeavyHitters(s, d), Untimed),
+    // q77: winnowing-based containment detection — rows-only (rolling-
+    // hash fingerprints not SQL-expressible); ContainmentSpec asserts
+    // every planted containment is found and the exact verify holds
+    QuerySpec("q77_containment", (s, d) => Dedup.qContainment(s, d), Timed),
+    // q78: BPE merge learning — rows-only (iterative training is not
+    // SQL-expressible); BpeSpec asserts the exact merge sequence
+    // against a driver-side reference implementation
+    QuerySpec("q78_bpe_merges", (s, d) => Pipeline.qBpeMerges(s, d), Untimed),
+    QuerySpec("q79_bigram_nll", TextAnalysis.qBigramNll _, Timed,
+      // bigram-LM scoring: exact MLE P(w2|w1) = c(w1,w2)/c1(w1), c1 over
+      // bigram-first positions; docs with < 2 tokens have no bigrams
       """WITH toks AS (
            SELECT doc_id,
                   list_filter(string_split_regex(lower(text), '\s+'),
@@ -1661,10 +759,10 @@ object SparkEntry {
                 ROUND(AVG(-ln(cb.c2::DOUBLE / cf.c1)), 4) AS avg_nll
          FROM bg JOIN cb USING (b)
                  JOIN cf ON split_part(bg.b, ' ', 1) = cf.w1
-         GROUP BY doc_id""",
-    // cross-source trigram overlap matrix: same shingle rule as q42's
-    // 5-grams (short docs contribute their whole text as one shingle)
-    "q80_source_overlap" ->
+         GROUP BY doc_id"""),
+    QuerySpec("q80_source_overlap", (s, d) => Pipeline.qSourceOverlap(s, d), Timed,
+      // cross-source trigram overlap matrix: same shingle rule as q42's
+      // 5-grams (short docs contribute their whole text as one shingle)
       """WITH d AS (
            SELECT source, list_distinct(
              CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
@@ -1680,10 +778,10 @@ object SparkEntry {
          SELECT src_a, src_b, n_common,
                 ROUND(n_common::DOUBLE / (ca.n + cb.n - n_common), 6) AS jaccard
          FROM p JOIN c ca ON p.src_a = ca.source
-                JOIN c cb ON p.src_b = cb.source""",
-    // greedy token-budget curation: longest-first prefix per source
-    // under a 2000-token budget (cumulative window sum)
-    "q81_token_budget" ->
+                JOIN c cb ON p.src_b = cb.source"""),
+    QuerySpec("q81_token_budget", (s, d) => Pipeline.qTokenBudget(s, d), Untimed,
+      // greedy token-budget curation: longest-first prefix per source
+      // under a 2000-token budget (cumulative window sum)
       """WITH t AS (SELECT source, doc_id, n_chars,
                            len(string_split_regex(text, '\s+')) AS tok
                     FROM documents),
@@ -1693,10 +791,14 @@ object SparkEntry {
                         ROWS UNBOUNDED PRECEDING) AS cum
                FROM t)
          SELECT source, COUNT(*) AS n_selected, CAST(SUM(tok) AS BIGINT) AS sum_tokens
-         FROM c WHERE cum <= 2000 GROUP BY source""",
-    // vocabulary OOV analysis: top-1000 vocab (count desc, token asc),
-    // per-source out-of-vocab token rate
-    "q83_oov_rate" ->
+         FROM c WHERE cum <= 2000 GROUP BY source"""),
+    // q82: BPE corpus encoding — rows-only (the learned merge table is
+    // not SQL-expressible); BpeEncodeSpec asserts per-word subword
+    // sequences exactly against a plain-Scala reference encoder
+    QuerySpec("q82_bpe_encode", (s, d) => Pipeline.qBpeEncode(s, d), Untimed),
+    QuerySpec("q83_oov_rate", (s, d) => TextAnalysis.qOovRate(s, d), Untimed,
+      // vocabulary OOV analysis: top-1000 vocab (count desc, token asc),
+      // per-source out-of-vocab token rate
       """WITH toks AS (
            SELECT source, t FROM (
              SELECT source, unnest(string_split_regex(lower(text), '\s+')) AS t
@@ -1709,10 +811,14 @@ object SparkEntry {
                 CAST(SUM(CASE WHEN v.t IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
                 ROUND(AVG(CASE WHEN v.t IS NULL THEN 1.0 ELSE 0.0 END), 6) AS oov_rate
          FROM toks LEFT JOIN vocab v ON toks.t = v.t
-         GROUP BY source""",
-    // per-source corpus datasheet: volume, quality aggregates, and the
-    // Shannon entropy of the language mix
-    "q85_corpus_stats" ->
+         GROUP BY source"""),
+    // q84: quality-classifier training — rows-only (MLlib LBFGS float
+    // reduction is partition-order sensitive); QualityClassifierSpec
+    // pins separation on crafted separable data + weak-label recovery
+    QuerySpec("q84_quality_classifier", Inference.qQualityClassifier _, Untimed),
+    QuerySpec("q85_corpus_stats", TextAnalysis.qCorpusStats _, Untimed,
+      // per-source corpus datasheet: volume, quality aggregates, and the
+      // Shannon entropy of the language mix
       """WITH base AS (
            SELECT source, COUNT(*) AS n_docs,
                   CAST(SUM(len(string_split_regex(text, '\s+'))) AS BIGINT) AS n_tokens,
@@ -1731,11 +837,13 @@ object SparkEntry {
                  GROUP BY source)
          SELECT base.source, base.n_docs, base.n_tokens, base.n_chars,
                 base.mean_distinct_ratio, base.mean_punct_ratio, ent.lang_entropy
-         FROM base JOIN ent ON base.source = ent.source""",
-    // exact duplicate-span removal: L=20-token windows occurring >= 2
-    // times corpus-wide mark their spans; all copies are cut; the
-    // digest of the cleaned text hash-checks the surviving bytes
-    "q86_exact_substring" ->
+         FROM base JOIN ent ON base.source = ent.source"""),
+    // q86: Lee-et-al-style exact duplicate-span removal — every L-token
+    // window occurring >= 2 times in the corpus is cut from all docs
+    QuerySpec("q86_exact_substring", (s, d) => Dedup.qExactSubstring(s, d), Timed,
+      // exact duplicate-span removal: L=20-token windows occurring >= 2
+      // times corpus-wide mark their spans; all copies are cut; the
+      // digest of the cleaned text hash-checks the surviving bytes
       """WITH toks AS (
            SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents),
          win AS (
@@ -1761,10 +869,12 @@ object SparkEntry {
                 CAST(len(t.t) AS INT) AS n_tokens,
                 CAST(len(t.t) - COALESCE(a.n_kept, 0) AS INT) AS n_removed,
                 COALESCE(a.digest, md5('')) AS clean_digest
-         FROM toks t LEFT JOIN agg a USING (doc_id)""",
-    // KMV bottom-k sketch: identical md5 bottom-k per source and the
-    // identical (k-1)/h_(k) estimator, so even the ESTIMATE hash-matches
-    "q87_kmv_distinct" ->
+         FROM toks t LEFT JOIN agg a USING (doc_id)"""),
+    // q87: KMV bottom-k distinct sketch — deterministic (set-function
+    // state), so the estimate itself is hash-checked against the oracle
+    QuerySpec("q87_kmv_distinct", (s, d) => Pipeline.qKmvDistinct(s, d), Timed,
+      // KMV bottom-k sketch: identical md5 bottom-k per source and the
+      // identical (k-1)/h_(k) estimator, so even the ESTIMATE hash-matches
       """WITH tok AS (
            SELECT DISTINCT source, md5(t) AS h
            FROM (SELECT source, unnest(string_split_regex(lower(text), '\s+')) AS t
@@ -1783,10 +893,20 @@ object SparkEntry {
                      ELSE 15.0 / (CAST('0x' || substr(k.hk, 1, 15) AS BIGINT)::DOUBLE
                                    / 1152921504606846976.0)
                 END AS kmv_estimate
-         FROM agg a LEFT JOIN kth k USING (source)""",
-    // n-gram novelty: fraction of each doc's distinct 8-gram windows
-    // whose first corpus occurrence (by doc_id) is that doc
-    "q90_novelty" ->
+         FROM agg a LEFT JOIN kth k USING (source)"""),
+    // q88: audio energy-envelope near-dup — rows-only (WAV synthesis is
+    // not SQL-expressible); AudioDedupSpec checks pair counts against
+    // brute-force Hamming and the fingerprint's gain invariance
+    QuerySpec("q88_audio_near_dup", (s, d) => Multimodal.qAudioNearDup(s, d), Untimed),
+    // q89: ANN over the PERSISTED IVF index (build-once/query-many) —
+    // rows-only like q46; SimilaritySpec asserts parity with the
+    // in-query IVF path and partition-pruned probing
+    QuerySpec("q89_knn_ivf_index", (s, d) => Similarity.qIvfFromIndex(s, d), Timed),
+    // q90: n-gram novelty — the fraction of a doc's distinct 8-gram
+    // windows first seen in that doc (contribution-ordered curation)
+    QuerySpec("q90_novelty", (s, d) => TextAnalysis.qNovelty(s, d), Untimed,
+      // n-gram novelty: fraction of each doc's distinct 8-gram windows
+      // whose first corpus occurrence (by doc_id) is that doc
       """WITH toks AS (
            SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents),
          g AS (
@@ -1798,10 +918,18 @@ object SparkEntry {
                 CAST(COUNT(*) AS BIGINT) AS n_grams,
                 ROUND(AVG(CASE WHEN fd = doc_id THEN 1.0 ELSE 0.0 END), 6) AS novelty
          FROM g JOIN fs USING (h)
-         GROUP BY doc_id""",
-    // split-leakage audit: q29's near-dup pair definition tagged with a
-    // deterministic 80/20 split; crossing pairs = eval contamination
-    "q92_split_leakage" ->
+         GROUP BY doc_id"""),
+    // q91: product-quantization ANN (ADC over 4-byte codes) through the
+    // PERSISTED PQ index (codebooks trained once at build, zero fits
+    // per query) — rows-only (quantized ranking); SimilaritySpec pins
+    // recall vs exact L2, the ADC distance error, and bit-parity with
+    // the self-contained qPqTopK path
+    QuerySpec("q91_knn_pq", (s, d) => Similarity.qPqFromIndex(s, d), Timed),
+    // q92: train/valid split-leakage audit — near-dup pairs (q29
+    // definition) crossing a deterministic 80/20 split
+    QuerySpec("q92_split_leakage", Dedup.qSplitLeakage _, Untimed,
+      // split-leakage audit: q29's near-dup pair definition tagged with a
+      // deterministic 80/20 split; crossing pairs = eval contamination
       """WITH tok AS (
            SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents),
          sh AS (
@@ -1839,10 +967,17 @@ object SparkEntry {
            (SELECT COUNT(*) FROM sp WHERE split = 'valid') AS n_valid,
            (SELECT COUNT(*) FROM tagged) AS n_pairs,
            (SELECT COUNT(*) FROM cross_p) AS n_cross_pairs,
-           (SELECT COUNT(*) FROM leaky) AS n_leaky_valid_docs""",
-    // corpus-version diff: v2 derived deterministically (drop %17,
-    // edit %13, re-add %19 under collision-proof negative ids)
-    "q94_corpus_diff" ->
+           (SELECT COUNT(*) FROM leaky) AS n_leaky_valid_docs"""),
+    // q93: IVF-PQ ANN (residual product quantization inside probed
+    // cells) through the PERSISTED IVF-PQ index (cell-partitioned
+    // codes: probing prunes directories) — rows-only; SimilaritySpec
+    // pins recall, re-rank exactness, and bit-parity with qIvfPqTopK
+    QuerySpec("q93_knn_ivfpq", (s, d) => Similarity.qIvfPqFromIndex(s, d), Timed),
+    // q94: corpus-version diff — added/removed/changed/unchanged counts
+    // between two deterministic snapshot versions
+    QuerySpec("q94_corpus_diff", Pipeline.qCorpusDiff _, Untimed,
+      // corpus-version diff: v2 derived deterministically (drop %17,
+      // edit %13, re-add %19 under collision-proof negative ids)
       """WITH v1 AS (SELECT doc_id, md5(text) AS dig1 FROM documents),
          v2 AS (
            SELECT doc_id,
@@ -1857,10 +992,11 @@ object SparkEntry {
                        WHEN dig1 = dig2 THEN 'unchanged'
                        ELSE 'changed' END AS status
            FROM v1 FULL OUTER JOIN v2 USING (doc_id))
-         GROUP BY status""",
-    // per-column profiler: long-format non-null/distinct + numeric
-    // min/max/mean over lineitem
-    "q95_profile" ->
+         GROUP BY status"""),
+    // q95: single-pass per-column data profiler over lineitem
+    QuerySpec("q95_profile", (s, d) => Pipeline.qProfile(s, d), Untimed,
+      // per-column profiler: long-format non-null/distinct + numeric
+      // min/max/mean over lineitem
       """SELECT 'l_quantity' AS column_name, COUNT(l_quantity) AS n_nonnull,
                 COUNT(DISTINCT l_quantity) AS n_distinct, MIN(l_quantity) AS min_v,
                 MAX(l_quantity) AS max_v, ROUND(AVG(l_quantity), 4) AS mean_v
@@ -1884,10 +1020,12 @@ object SparkEntry {
          UNION ALL
          SELECT 'l_linestatus', COUNT(l_linestatus), COUNT(DISTINCT l_linestatus),
                 CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-         FROM lineitem""",
-    // changeset application: the q94 changeset applied; the full v2
-    // snapshot's (doc_id, digest) hash-checks every surviving row
-    "q96_apply_changeset" ->
+         FROM lineitem"""),
+    // q96: changeset application (vanilla-Spark MERGE INTO) — output is
+    // the full resulting snapshot's (doc_id, digest)
+    QuerySpec("q96_apply_changeset", Pipeline.qApplyChangeset _, Untimed,
+      // changeset application: the q94 changeset applied; the full v2
+      // snapshot's (doc_id, digest) hash-checks every surviving row
       """SELECT doc_id, md5(text) AS digest FROM documents
          WHERE doc_id % 17 <> 0 AND doc_id % 13 <> 0
          UNION ALL
@@ -1895,43 +1033,53 @@ object SparkEntry {
          WHERE doc_id % 13 = 0 AND doc_id % 17 <> 0
          UNION ALL
          SELECT -doc_id - 1 AS doc_id, md5(text || ' new') AS digest
-         FROM documents WHERE doc_id % 19 = 0""",
-    // token frequency spectrum: token types per occurrence count
-    "q97_freq_spectrum" ->
+         FROM documents WHERE doc_id % 19 = 0"""),
+    // q97: token frequency spectrum (hapax count at k=1)
+    QuerySpec("q97_freq_spectrum", Pipeline.qFreqSpectrum _, Untimed,
+      // token frequency spectrum: token types per occurrence count
       """SELECT occurrences, CAST(COUNT(*) AS BIGINT) AS n_token_types FROM (
            SELECT t, COUNT(*) AS occurrences
            FROM (SELECT unnest(string_split_regex(lower(text), '\s+')) AS t
                  FROM documents)
            WHERE length(t) > 0
            GROUP BY t)
-         GROUP BY occurrences""",
-    // normalization impact: identical lowercase/collapse/trim + md5 on
-    // both engines, so the collapse count is exact
-    "q98_normalize" ->
+         GROUP BY occurrences"""),
+    // q98: text normalization + its dedup impact (docs collapsing to
+    // the same normalized form, bytes shed) — per-source rollup
+    QuerySpec("q98_normalize", TextAnalysis.qNormalize _, Timed,
+      // normalization impact: identical lowercase/collapse/trim + md5 on
+      // both engines, so the collapse count is exact
       """SELECT source, COUNT(*) AS n_docs,
                 COUNT(DISTINCT md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))) AS n_distinct_norm,
                 CAST(SUM(length(text) - length(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))) AS BIGINT) AS chars_shed
-         FROM documents GROUP BY source""",
-    // FIM thirds: CAST(FLOOR(..)) matches Spark's truncation (a bare
-    // CAST would round in DuckDB); psm digest checks exact bytes
-    "q99_fim_split" ->
+         FROM documents GROUP BY source"""),
+    // q99: fill-in-the-middle splits (prefix/middle/suffix thirds, PSM
+    // reassembly digest) — the FIM pretraining transform
+    QuerySpec("q99_fim_split", Pipeline.qFimSplit _, Timed,
+      // FIM thirds: CAST(FLOOR(..)) matches Spark's truncation (a bare
+      // CAST would round in DuckDB); psm digest checks exact bytes
       """SELECT doc_id,
                 length(substr(text, 1, k)) AS n_prefix,
                 length(substr(text, k + 1, k)) AS n_middle,
                 length(substr(text, 2 * k + 1)) AS n_suffix,
                 md5(substr(text, 1, k) || substr(text, 2 * k + 1) || substr(text, k + 1, k)) AS psm_digest
          FROM (SELECT doc_id, text, CAST(FLOOR(length(text) / 3.0) AS INT) AS k
-               FROM documents)""",
-    "q100_source_quota" ->
+               FROM documents)"""),
+    // q100: per-source quota sampling (deterministic-hash rank, keep
+    // first K per source) — the crawl-curation domain cap
+    QuerySpec("q100_source_quota", (s, d) => Pipeline.qSourceQuota(s, d), Timed,
       """SELECT source, doc_id, rk FROM (
            SELECT source, doc_id,
                   ROW_NUMBER() OVER (PARTITION BY source
                     ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
            FROM documents)
-         WHERE rk <= 20""",
-    // leakage-safe split: q57's recursive components, split assigned by
-    // hashing the COMPONENT id (first two md5 hex chars < 'cd' ~ 80%)
-    "q101_safe_split" ->
+         WHERE rk <= 20"""),
+    // q101: leakage-safe split — train/valid assigned per near-dup
+    // COMPONENT (q57's clusters), so no eval doc has a near-copy in
+    // train by construction (the prevention counterpart of q92's audit)
+    QuerySpec("q101_safe_split", Dedup.qLeakageSafeSplit _, Timed,
+      // leakage-safe split: q57's recursive components, split assigned by
+      // hashing the COMPONENT id (first two md5 hex chars < 'cd' ~ 80%)
       """WITH RECURSIVE tok AS (
            SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents),
          sh AS (
@@ -1967,10 +1115,12 @@ object SparkEntry {
          SELECT s.source, a.split, COUNT(*) AS n_docs,
                 COUNT(DISTINCT a.component) AS n_clusters
          FROM assigned a JOIN documents s ON a.doc_id = s.doc_id
-         GROUP BY s.source, a.split""",
-    // per-language perplexity tertiles over q64's ROUNDED nll (the
-    // rounding makes the ntile ordering engine-independent)
-    "q102_nll_buckets" ->
+         GROUP BY s.source, a.split"""),
+    // q102: per-language perplexity tertiles (CCNet head/middle/tail)
+    // over q64's rounded unigram NLL
+    QuerySpec("q102_nll_buckets", (s, d) => TextAnalysis.qNllBuckets(s, d), Timed,
+      // per-language perplexity tertiles over q64's ROUNDED nll (the
+      // rounding makes the ntile ordering engine-independent)
       """WITH toks AS (
            SELECT doc_id, token AS term
            FROM (SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS token
@@ -1989,15 +1139,17 @@ object SparkEntry {
            FROM nll n JOIN documents d2 ON n.doc_id = d2.doc_id)
          SELECT lang, bucket, COUNT(*) AS n_docs,
                 ROUND(AVG(avg_nll), 2) AS mean_nll
-         FROM scored GROUP BY lang, bucket""",
-    // soft dedup: weight 1/component-size, per-source effective size.
-    // Restated r8 with ZERO version-mobile surface: no list_intersect/
-    // list_distinct/list_transform (shingles via unnest + GROUP BY
-    // distinct counts — list-function semantics moved across DuckDB
-    // versions twice on us), and the output is the raw BIGINT
-    // picoweight sum (no ROUND, no /1e12 — nothing float to disagree
-    // on). Verified bit-identical to the r7 formulation on DuckDB 1.0.0.
-    "q103_soft_dedup" ->
+         FROM scored GROUP BY lang, bucket"""),
+    // q103: soft dedup — duplicates down-weighted 1/cluster-size, not
+    // dropped; per-source effective corpus size
+    QuerySpec("q103_soft_dedup", Dedup.qSoftDedup _, Timed,
+      // soft dedup: weight 1/component-size, per-source effective size.
+      // Restated r8 with ZERO version-mobile surface: no list_intersect/
+      // list_distinct/list_transform (shingles via unnest + GROUP BY
+      // distinct counts — list-function semantics moved across DuckDB
+      // versions twice on us), and the output is the raw BIGINT
+      // picoweight sum (no ROUND, no /1e12 — nothing float to disagree
+      // on). Verified bit-identical to the r7 formulation on DuckDB 1.0.0.
       """WITH RECURSIVE tok AS (
            SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents),
          sh AS (
@@ -2030,21 +1182,25 @@ object SparkEntry {
                   AS n_in_clusters
          FROM comp c JOIN sizes z USING (component)
               JOIN documents s ON c.doc_id = s.doc_id
-         GROUP BY s.source""",
-    // q103a/q103b: the r9 bisection of q103's driver-row divergence.
-    // CTE prefix is q103's VERBATIM (tok..sizes); only the final
-    // SELECT differs. The r9 gate landed the decisive result: q103a
-    // (counts half, with the then-uncast SUM(CASE..)) came back RED
-    // while q103b (the ::BIGINT-cast `//`-division sum) came back
-    // GREEN — localizing the divergence to the one aggregate DuckDB
-    // types as HUGEINT (uncast SUM over INTEGER), whose value
-    // rendering can differ between harnesses while sorted column
-    // names still match. r10 fix: CAST(... AS BIGINT) on that clause
-    // in q103 and q103a (the exact device that made q103b green).
-    // q103c/q103d/q103e are the single-column contingency split the
-    // r9 verdict prescribes — if q103a were still red, whichever
-    // single-column row is red names the column mechanically.
-    "q103a_soft_dedup_counts" ->
+         GROUP BY s.source"""),
+    // q103a/q103b: diagnostic bisection of q103's driver-gate
+    // divergence (r9, VERDICT r8 #1) — same component machinery and
+    // oracle-CTE prefix, split into the no-division count clause
+    // (q103a) and the picoweight-sum clause alone (q103b)
+    QuerySpec("q103a_soft_dedup_counts", Dedup.qSoftDedupCounts _, Untimed,
+      // q103a/q103b: the r9 bisection of q103's driver-row divergence.
+      // CTE prefix is q103's VERBATIM (tok..sizes); only the final
+      // SELECT differs. The r9 gate landed the decisive result: q103a
+      // (counts half, with the then-uncast SUM(CASE..)) came back RED
+      // while q103b (the ::BIGINT-cast `//`-division sum) came back
+      // GREEN — localizing the divergence to the one aggregate DuckDB
+      // types as HUGEINT (uncast SUM over INTEGER), whose value
+      // rendering can differ between harnesses while sorted column
+      // names still match. r10 fix: CAST(... AS BIGINT) on that clause
+      // in q103 and q103a (the exact device that made q103b green).
+      // q103c/q103d/q103e are the single-column contingency split the
+      // r9 verdict prescribes — if q103a were still red, whichever
+      // single-column row is red names the column mechanically.
       """WITH RECURSIVE tok AS (
            SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents),
          sh AS (
@@ -2077,8 +1233,8 @@ object SparkEntry {
                 COUNT(DISTINCT c.component) AS n_components
          FROM comp c JOIN sizes z USING (component)
               JOIN documents s ON c.doc_id = s.doc_id
-         GROUP BY s.source""",
-    "q103b_soft_dedup_pico" ->
+         GROUP BY s.source"""),
+    QuerySpec("q103b_soft_dedup_pico", Dedup.qSoftDedupPico _, Untimed,
       """WITH RECURSIVE tok AS (
            SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents),
          sh AS (
@@ -2109,30 +1265,38 @@ object SparkEntry {
                 SUM(1000000000000 // z.csize)::BIGINT AS effective_docs_pico
          FROM comp c JOIN sizes z USING (component)
               JOIN documents s ON c.doc_id = s.doc_id
-         GROUP BY s.source""",
-    "q103c_soft_dedup_ndocs" -> (q103OraclePrefix +
+         GROUP BY s.source"""),
+    // q103c/d/e: single-column contingency split of q103a (r9 verdict
+    // #1) — if the r10 BIGINT cast were not the q103 fix, whichever
+    // of these comes back red names the divergent column outright
+    QuerySpec("q103c_soft_dedup_ndocs", Dedup.qSoftDedupNDocs _, Untimed,
+      (q103OraclePrefix +
       """
          SELECT s.source, COUNT(*) AS n_docs
          FROM comp c JOIN sizes z USING (component)
               JOIN documents s ON c.doc_id = s.doc_id
-         GROUP BY s.source"""),
-    "q103d_soft_dedup_nclustered" -> (q103OraclePrefix +
+         GROUP BY s.source""")),
+    QuerySpec("q103d_soft_dedup_nclustered", Dedup.qSoftDedupNInClusters _, Untimed,
+      (q103OraclePrefix +
       """
          SELECT s.source,
                 CAST(SUM(CASE WHEN z.csize > 1 THEN 1 ELSE 0 END) AS BIGINT)
                   AS n_in_clusters
          FROM comp c JOIN sizes z USING (component)
               JOIN documents s ON c.doc_id = s.doc_id
-         GROUP BY s.source"""),
-    "q103e_soft_dedup_ncomponents" -> (q103OraclePrefix +
+         GROUP BY s.source""")),
+    QuerySpec("q103e_soft_dedup_ncomponents", Dedup.qSoftDedupNComponents _, Untimed,
+      (q103OraclePrefix +
       """
          SELECT s.source, COUNT(DISTINCT c.component) AS n_components
          FROM comp c JOIN sizes z USING (component)
               JOIN documents s ON c.doc_id = s.doc_id
-         GROUP BY s.source"""),
-    // group-wise winsorized stats: exact interpolated percentiles
-    // (both engines use the ANSI linear-interpolation definition)
-    "q104_winsorize" ->
+         GROUP BY s.source""")),
+    // q104: group-wise winsorized stats (p05/p95 clip) — the feature
+    // outlier-clamping step
+    QuerySpec("q104_winsorize", Pipeline.qWinsorize _, Timed,
+      // group-wise winsorized stats: exact interpolated percentiles
+      // (both engines use the ANSI linear-interpolation definition)
       """WITH li AS (SELECT l_returnflag AS flag, l_extendedprice AS price
                      FROM lineitem),
          b AS (SELECT flag, quantile_cont(price, 0.05) AS lo,
@@ -2144,12 +1308,12 @@ object SparkEntry {
                 ROUND(AVG(li.price), 4) AS mean_raw,
                 ROUND(AVG(GREATEST(LEAST(li.price, b.hi), b.lo)), 4) AS mean_winsor
          FROM li JOIN b USING (flag)
-         GROUP BY li.flag""",
-    // q104x: winsorize's integer twin — discrete p05/p95 bounds
-    // (ROW_NUMBER order statistics) and the clipped total as an exact
-    // BIGINT cents sum; the money→cents device is q162's (proven
-    // driver-green). No quantile_cont, no ROUND, no AVG.
-    "q104x_winsorize_cents" ->
+         GROUP BY li.flag"""),
+    QuerySpec("q104x_winsorize_cents", Pipeline.qWinsorizeCents _, Timed,
+      // q104x: winsorize's integer twin — discrete p05/p95 bounds
+      // (ROW_NUMBER order statistics) and the clipped total as an exact
+      // BIGINT cents sum; the money→cents device is q162's (proven
+      // driver-green). No quantile_cont, no ROUND, no AVG.
       """WITH li AS (SELECT l_returnflag AS flag,
                   CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
              FROM lineitem),
@@ -2172,11 +1336,13 @@ object SparkEntry {
                 CAST(SUM(GREATEST(LEAST(li.cents, b.hi), b.lo)) AS BIGINT)
                   AS sum_winsor_cents
          FROM li JOIN b USING (flag)
-         GROUP BY li.flag""",
-    // 2-layer relu MLP forward pass, weights reproduced by the same
-    // integer formulas the Spark side writes into the safetensors
-    // artifact (q50's device, one layer deeper)
-    "q105_mlp_score" ->
+         GROUP BY li.flag"""),
+    // q105: nonlinear (2-layer relu MLP) model serving from a
+    // multi-tensor safetensors artifact — hash-checked end to end
+    QuerySpec("q105_mlp_score", (s, d) => Inference.qMlpScore(s, d), Timed,
+      // 2-layer relu MLP forward pass, weights reproduced by the same
+      // integer formulas the Spark side writes into the safetensors
+      // artifact (q50's device, one layer deeper)
       """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS x FROM embeddings),
          h AS (
            SELECT vec_id,
@@ -2188,18 +1354,21 @@ object SparkEntry {
          SELECT vec_id,
                 ROUND(0.25 + list_sum(list_transform(range(0, 4),
                   j -> hid[j + 1] * ((j * 23 + 11) % 9 - 4) / 4.0)), 4) AS score
-         FROM h""",
-    // per-dimension mean/std/min/max over the unnested embeddings
-    "q106_embedding_stats" ->
+         FROM h"""),
+    // q106: per-dimension embedding standardization stats — the
+    // feature-whitening audit before trusting cosine/L2
+    QuerySpec("q106_embedding_stats", Similarity.qEmbeddingStats _, Timed,
+      // per-dimension mean/std/min/max over the unnested embeddings
       """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS x FROM embeddings),
          ex AS (SELECT generate_subscripts(x, 1) - 1 AS dim, unnest(x) AS v FROM e)
          SELECT dim, COUNT(*) AS n, ROUND(AVG(v), 4) AS mean,
                 ROUND(STDDEV(v), 4) AS std,
                 ROUND(MIN(v), 4) AS vmin, ROUND(MAX(v), 4) AS vmax
-         FROM ex GROUP BY dim""",
-    // symmetric SQ8 (scale = max-abs/127, code = round(v/scale)):
-    // per-vector reconstruction error, the same arithmetic q66 applies
-    "q107_sq8_error" ->
+         FROM ex GROUP BY dim"""),
+    // q107: SQ8 reconstruction-error audit of q66's max-abs/127 scheme
+    QuerySpec("q107_sq8_error", Similarity.qSq8Error _, Timed,
+      // symmetric SQ8 (scale = max-abs/127, code = round(v/scale)):
+      // per-vector reconstruction error, the same arithmetic q66 applies
       """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS x FROM embeddings),
          s AS (SELECT vec_id, x,
                       list_max(list_transform(x, v -> abs(v))) / 127.0 AS scale
@@ -2212,9 +1381,11 @@ object SparkEntry {
          SELECT vec_id, ROUND(ANY_VALUE(scale), 6) AS scale,
                 ROUND(AVG(ABS(v - recon)), 6) AS mean_abs_err,
                 ROUND(MAX(ABS(v - recon)), 6) AS max_abs_err
-         FROM r GROUP BY vec_id""",
-    // pair counts per 0.1-wide band of the q29 rounded Jaccard
-    "q108_jaccard_bands" ->
+         FROM r GROUP BY vec_id"""),
+    // q108: near-dup Jaccard-band histogram — the threshold-picking
+    // curve over the q29 pair machinery
+    QuerySpec("q108_jaccard_bands", (s, d) => Dedup.qJaccardBands(s, d), Timed,
+      // pair counts per 0.1-wide band of the q29 rounded Jaccard
       """WITH tok AS (
            SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents),
          sh AS (
@@ -2235,10 +1406,12 @@ object SparkEntry {
                         JOIN cnt cb ON cb.doc_id = inter.doc_b)
            WHERE jac >= 0.1)
          SELECT FLOOR(jaccard * 10) / 10 AS band, COUNT(*) AS n_pairs
-         FROM pairs GROUP BY band""",
-    // per-language easy->hard rank (q102's ordering) dealt round-robin
-    // across 8 shards; per-shard balance stats
-    "q109_curriculum" ->
+         FROM pairs GROUP BY band"""),
+    // q109: curriculum sharding — per-language easy->hard round-robin
+    // deal across data-parallel workers
+    QuerySpec("q109_curriculum", (s, d) => TextAnalysis.qCurriculumShards(s, d), Timed,
+      // per-language easy->hard rank (q102's ordering) dealt round-robin
+      // across 8 shards; per-shard balance stats
       """WITH toks AS (
            SELECT doc_id, token AS term
            FROM (SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS token
@@ -2258,10 +1431,13 @@ object SparkEntry {
          SELECT (rn - 1) % 8 AS shard, COUNT(*) AS n_docs,
                 ROUND(AVG(avg_nll), 2) AS mean_nll,
                 COUNT(DISTINCT lang) AS n_langs
-         FROM ranked GROUP BY shard""",
-    // the FULL v2 recompute (the q96 changeset semantics) — the Spark
-    // side maintains the same sheet by delta aggregation instead
-    "q110_incremental_stats" ->
+         FROM ranked GROUP BY shard"""),
+    // q110: incremental datasheet maintenance — delta aggregation over
+    // changeset rows only; the oracle recomputes v2 from scratch, so
+    // the gate proves delta == full rescan
+    QuerySpec("q110_incremental_stats", Pipeline.qIncrementalStats _, Timed,
+      // the FULL v2 recompute (the q96 changeset semantics) — the Spark
+      // side maintains the same sheet by delta aggregation instead
       """WITH v2 AS (
            SELECT doc_id, source, text FROM documents
            WHERE doc_id % 17 <> 0 AND doc_id % 13 <> 0
@@ -2275,10 +1451,17 @@ object SparkEntry {
                 CAST(SUM(len(string_split_regex(text, '\s+'))) AS BIGINT) AS n_tokens,
                 CAST(SUM(length(text)) AS BIGINT) AS n_chars,
                 ROUND(SUM(length(text))::DOUBLE / COUNT(*), 2) AS mean_chars
-         FROM v2 GROUP BY source""",
-    // BM25 with k1=1.2, b=0.75 — expression structure mirrors the Spark
-    // side term-for-term so both engines evaluate the same double ops
-    "q112_bm25" ->
+         FROM v2 GROUP BY source"""),
+    // q111: video near-dup — temporal-luma fingerprint through the real
+    // AVI/MJPEG decode path, completing the media dedup trio (rows-only:
+    // container synthesis isn't SQL; VideoDedupSpec proves brute-force
+    // parity and exposure invariance)
+    QuerySpec("q111_video_near_dup", (s, d) => Multimodal.qVideoNearDup(s, d), Untimed),
+    // q112: BM25 lexical top-k retrieval (scan-time scoring; top-k via
+    // TakeOrderedAndProject, never a global sort)
+    QuerySpec("q112_bm25", (s, d) => TextAnalysis.qBm25(s, d), Timed,
+      // BM25 with k1=1.2, b=0.75 — expression structure mirrors the Spark
+      // side term-for-term so both engines evaluate the same double ops
       """WITH toks AS (
            SELECT doc_id, token AS term
            FROM (SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS token
@@ -2299,8 +1482,10 @@ object SparkEntry {
          SELECT rank, doc_id, score FROM (
            SELECT doc_id, ROW_NUMBER() OVER (ORDER BY score DESC, doc_id ASC) AS rank,
                   ROUND(score, 4) AS score FROM scored)
-         WHERE rank <= 20""",
-    "q113_stopword_strip" ->
+         WHERE rank <= 20"""),
+    // q113: corpus-adaptive stopword strip — terms in >= 80% of docs
+    // struck from every doc, order preserved (broadcast common set)
+    QuerySpec("q113_stopword_strip", (s, d) => TextAnalysis.qStopwordStrip(s, d), Timed,
       """WITH docs AS (
            SELECT doc_id, string_split_regex(lower(text), '\s+') AS ts FROM documents),
          n AS (SELECT COUNT(*) AS n_docs FROM docs),
@@ -2314,8 +1499,9 @@ object SparkEntry {
                     AND NOT list_contains(COALESCE(cs, []), t))) AS n_kept,
                 array_to_string(list_filter(ts, t -> length(t) > 0
                     AND NOT list_contains(COALESCE(cs, []), t)), ' ') AS clean_text
-         FROM docs CROSS JOIN common""",
-    "q114_importance_weights" ->
+         FROM docs CROSS JOIN common"""),
+    // q114: DSIR-style unigram importance weights toward a target source
+    QuerySpec("q114_importance_weights", (s, d) => TextAnalysis.qImportanceWeights(s, d), Timed,
       """WITH toks AS (
            SELECT doc_id, source, token AS term
            FROM (SELECT doc_id, source,
@@ -2331,8 +1517,9 @@ object SparkEntry {
                 ROUND(AVG(ln(((c_tgt + 1)::DOUBLE / (tot_tgt + v)) /
                              ((c_all + 1)::DOUBLE / (tot_all + v)))), 4) AS dsir_weight
          FROM toks JOIN vocab USING (term) CROSS JOIN t
-         GROUP BY doc_id""",
-    "q115_temperature_mix" ->
+         GROUP BY doc_id"""),
+    // q115: temperature-rebalanced language mixture (XLM-R sampling)
+    QuerySpec("q115_temperature_mix", (s, d) => Pipeline.qTemperatureMix(s, d), Timed,
       """WITH bylang AS (
            SELECT lang, CAST(SUM(len(string_split_regex(text, '\s+'))) AS BIGINT) AS n_tokens
            FROM documents GROUP BY lang),
@@ -2347,11 +1534,12 @@ object SparkEntry {
                 ROUND(pa / z, 6) AS p_alpha,
                 ROUND(pa / z / praw, 4) AS upsample,
                 CAST(FLOOR(pa / z * 1000000) AS BIGINT) AS budget_tokens
-         FROM t2 CROSS JOIN z""",
-    // RRF fusion of a BM25 leg and a dense-cosine leg (query = vec 0);
-    // fused scores are sums of 1/(60+rank) over integer ranks, so the
-    // fusion itself is exactly deterministic across engines
-    "q116_hybrid_rrf" ->
+         FROM t2 CROSS JOIN z"""),
+    // q116: hybrid BM25+dense retrieval fused by reciprocal rank (RRF)
+    QuerySpec("q116_hybrid_rrf", (s, d) => Similarity.qHybridRrf(s, d), Timed,
+      // RRF fusion of a BM25 leg and a dense-cosine leg (query = vec 0);
+      // fused scores are sums of 1/(60+rank) over integer ranks, so the
+      // fusion itself is exactly deterministic across engines
       """WITH toks AS (
            SELECT doc_id, token AS term
            FROM (SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS token
@@ -2388,8 +1576,12 @@ object SparkEntry {
            SELECT doc_id, r_lex, r_sem,
                   ROW_NUMBER() OVER (ORDER BY rrf DESC, doc_id ASC) AS rank,
                   ROUND(rrf, 6) AS rrf FROM fused)
-         WHERE rank <= 20""",
-    "q117_gopher_rules" ->
+         WHERE rank <= 20"""),
+    // q117: Gopher-style hand-rule quality gate (per-rule booleans);
+    // the required-word rule runs on the corpus's own function words
+    // ("the"/"a" — the only English stopwords in the synthetic vocab)
+    QuerySpec("q117_gopher_rules",
+      (s, d) => TextAnalysis.qGopherRules(s, d, requiredWords = Seq("the", "a")), Timed,
       """WITH toks AS (
            SELECT doc_id,
                   list_filter(string_split_regex(lower(text), '\s+'),
@@ -2415,8 +1607,9 @@ object SparkEntry {
                   AND (mean_len >= 3.0 AND mean_len <= 10.0)
                   AND sym_ratio <= 0.1 AND alpha_ratio >= 0.9
                   AND n_stops >= 2 AS pass
-         FROM feat""",
-    "q118_epoch_shuffle" ->
+         FROM feat"""),
+    // q118: deterministic sharded epoch shuffle (replayable training order)
+    QuerySpec("q118_epoch_shuffle", (s, d) => Pipeline.qEpochShuffle(s, d), Timed,
       """WITH k AS (
            SELECT epoch, doc_id, md5(epoch || ':' || doc_id) AS h
            FROM documents CROSS JOIN (SELECT unnest([1, 2]) AS epoch)),
@@ -2427,11 +1620,12 @@ object SparkEntry {
                 ROW_NUMBER() OVER (PARTITION BY epoch, shard
                                    ORDER BY h, doc_id) AS pos,
                 doc_id
-         FROM s""",
-    // the deterministic uniform is the first 16 bits of md5(doc_id);
-    // DuckDB lacks a hex->int cast, so the four hex digits are decoded
-    // positionally — identical arithmetic to Spark's conv(...,16,10)
-    "q119_rejection_sample" ->
+         FROM s"""),
+    // q119: deterministic rejection sampling by quality ramp
+    QuerySpec("q119_rejection_sample", (s, d) => Pipeline.qRejectionSample(s, d), Timed,
+      // the deterministic uniform is the first 16 bits of md5(doc_id);
+      // DuckDB lacks a hex->int cast, so the four hex digits are decoded
+      // positionally — identical arithmetic to Spark's conv(...,16,10)
       """WITH h AS (SELECT doc_id, text, md5(doc_id::VARCHAR) AS hx FROM documents),
          u AS (SELECT doc_id, text,
                       ((strpos('0123456789abcdef', substring(hx, 1, 1)) - 1) * 4096
@@ -2446,8 +1640,9 @@ object SparkEntry {
                 ROUND(uval, 6) AS u,
                 ROUND(uval, 6) < ROUND(LEAST(1.0,
                   len(string_split_regex(text, '\s+')) / 50.0), 6) AS kept
-         FROM u""",
-    "q120_matryoshka" ->
+         FROM u"""),
+    // q120: Matryoshka truncation-fidelity audit over prefix dims
+    QuerySpec("q120_matryoshka", (s, d) => Similarity.qMatryoshka(s, d), Timed,
       """WITH p AS (
            SELECT a.vec_id, a.embedding::DOUBLE[] AS x, b.embedding::DOUBLE[] AS y
            FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1),
@@ -2461,8 +1656,12 @@ object SparkEntry {
                 ROUND(AVG(ABS(cos_trunc - cos_full)), 6) AS mean_drift,
                 ROUND(MAX(ABS(cos_trunc - cos_full)), 6) AS max_drift,
                 ROUND(AVG(cos_trunc), 6) AS mean_cos
-         FROM ex GROUP BY dprime""",
-    "q122_padding_waste" ->
+         FROM ex GROUP BY dprime"""),
+    // q121: PCA explained-variance spectrum — rows-only (eigensolve is
+    // not SQL-expressible); SimilaritySpec pins variance identities
+    QuerySpec("q121_pca_variance", (s, d) => Similarity.qPcaVariance(s, d), Timed),
+    // q122: length-bucket padding-waste audit (batching efficiency)
+    QuerySpec("q122_padding_waste", (s, d) => Pipeline.qPaddingWaste(s, d), Timed,
       """WITH t AS (SELECT len(string_split_regex(text, '\s+')) AS n FROM documents),
          b AS (SELECT n, CASE WHEN n <= 16 THEN 16 WHEN n <= 32 THEN 32
                               WHEN n <= 64 THEN 64 WHEN n <= 128 THEN 128
@@ -2473,8 +1672,9 @@ object SparkEntry {
                 CAST(SUM(n) AS BIGINT) AS sum_tokens,
                 CAST(bucket * COUNT(*) AS BIGINT) AS padded_tokens,
                 ROUND(1.0 - SUM(n)::DOUBLE / (bucket * COUNT(*)), 6) AS waste_frac
-         FROM b GROUP BY bucket""",
-    "q123_fertility" ->
+         FROM b GROUP BY bucket"""),
+    // q123: tokenizer fertility + compression ratio per language
+    QuerySpec("q123_fertility", (s, d) => TextAnalysis.qFertility(s, d), Timed,
       """SELECT lang, COUNT(*) AS n_docs,
                 CAST(SUM(len(string_split_regex(text, '\s+'))) AS BIGINT) AS sum_words,
                 CAST(SUM(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]'))) AS BIGINT) AS sum_bpe,
@@ -2482,8 +1682,9 @@ object SparkEntry {
                       / SUM(len(string_split_regex(text, '\s+'))), 6) AS fertility,
                 ROUND(SUM(length(text))::DOUBLE
                       / SUM(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]'))), 6) AS chars_per_token
-         FROM documents GROUP BY lang""",
-    "q124_char_entropy" ->
+         FROM documents GROUP BY lang"""),
+    // q124: per-doc character entropy (garbage/base64/key-mash detector)
+    QuerySpec("q124_char_entropy", (s, d) => TextAnalysis.qCharEntropy(s, d), Timed,
       """WITH ch AS (
            SELECT doc_id, unnest(regexp_extract_all(lower(text), '.')) AS c
            FROM documents),
@@ -2493,9 +1694,12 @@ object SparkEntry {
                 COUNT(*) AS n_distinct_chars,
                 ROUND((ln(SUM(cnt)) - SUM(cnt * ln(cnt)) / SUM(cnt)) / ln(2), 6)
                   AS entropy_bits
-         FROM g GROUP BY doc_id""",
-    // global sentence dedup: df-common sentences struck, rebuild hashed
-    "q125_sentence_dedup" ->
+         FROM g GROUP BY doc_id"""),
+    // q125: corpus-global sentence dedup (the C4 move) — boilerplate
+    // sentences (df >= 3 docs) struck everywhere, rebuilt text
+    // hash-checked per doc
+    QuerySpec("q125_sentence_dedup", (s, d) => Pipeline.qSentenceDedup(s, d), Timed,
+      // global sentence dedup: df-common sentences struck, rebuild hashed
       """WITH s AS (
            SELECT doc_id, generate_subscripts(parts, 1) AS pos, unnest(parts) AS sent
            FROM (SELECT doc_id, string_split_regex(text, '\. ') AS parts FROM documents)),
@@ -2512,9 +1716,11 @@ object SparkEntry {
                 COALESCE(reb.clean_md5, md5('')) AS clean_md5
          FROM documents d
          LEFT JOIN tot ON d.doc_id = tot.doc_id
-         LEFT JOIN reb ON d.doc_id = reb.doc_id""",
-    // distinct-bigram diversity per language
-    "q126_bigram_diversity" ->
+         LEFT JOIN reb ON d.doc_id = reb.doc_id"""),
+    // q126: per-language distinct-bigram diversity (distinct-n) — the
+    // templated/synthetic-corpus detector
+    QuerySpec("q126_bigram_diversity", (s, d) => TextAnalysis.qBigramDiversity(s, d), Timed,
+      // distinct-bigram diversity per language
       """WITH d AS (
            SELECT lang, string_split_regex(lower(text), '\s+') AS w
            FROM documents),
@@ -2525,9 +1731,11 @@ object SparkEntry {
          SELECT lang, COUNT(*) AS n_bigrams,
                 COUNT(DISTINCT bg) AS n_distinct,
                 ROUND(COUNT(DISTINCT bg)::DOUBLE / COUNT(*), 4) AS distinct_ratio
-         FROM bg GROUP BY lang""",
-    // per-sentence lang ID -> per-doc majority + mixed fraction
-    "q127_lang_segments" ->
+         FROM bg GROUP BY lang"""),
+    // q127: mixed-language segmentation — per-sentence lang ID rolled
+    // up to majority lang + mixed fraction per doc
+    QuerySpec("q127_lang_segments", (s, d) => TextAnalysis.qLangSegments(s, d), Timed,
+      // per-sentence lang ID -> per-doc majority + mixed fraction
       """WITH s AS (
            SELECT doc_id, unnest(string_split_regex(text, '\. ')) AS sent
            FROM documents),
@@ -2551,9 +1759,11 @@ object SparkEntry {
            FROM c)
          SELECT doc_id, slang AS main_lang, n_langs,
                 ROUND(1.0 - n::DOUBLE / tot, 4) AS mixed_frac
-         FROM r WHERE rk = 1""",
-    // keep-longest survivor per near-dup component (q101's clusters)
-    "q128_dedup_keep_best" ->
+         FROM r WHERE rk = 1"""),
+    // q128: near-dup survivor selection by quality (keep-longest per
+    // component) instead of min-id
+    QuerySpec("q128_dedup_keep_best", Dedup.qDedupKeepBest _, Timed,
+      // keep-longest survivor per near-dup component (q101's clusters)
       """WITH RECURSIVE tok AS (
            SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents),
          sh AS (
@@ -2589,9 +1799,11 @@ object SparkEntry {
          SELECT source, COUNT(*) AS n_docs,
                 CAST(SUM(CASE WHEN rk = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
                 CAST(SUM(CASE WHEN rk = 1 THEN n_chars ELSE 0 END) AS BIGINT) AS kept_chars
-         FROM ranked GROUP BY source""",
-    // vocabulary coverage curve at k in {10,100,1000,10000}
-    "q129_vocab_coverage" ->
+         FROM ranked GROUP BY source"""),
+    // q129: vocabulary coverage curve — corpus token share covered by
+    // the top-k frequent types, k in {3,10,30,100,1000,10000}
+    QuerySpec("q129_vocab_coverage", (s, d) => Pipeline.qVocabCoverage(s, d), Timed,
+      // vocabulary coverage curve at k in {10,100,1000,10000}
       """WITH v AS (
            SELECT token, COUNT(*) AS cnt
            FROM (SELECT unnest(string_split_regex(lower(text), '\s+')) AS token
@@ -2607,9 +1819,10 @@ object SparkEntry {
          SELECT CAST(k AS INT) AS k,
                 CAST(cum AS BIGINT) AS covered_tokens,
                 ROUND(cum::DOUBLE / total, 4) AS coverage
-         FROM r, t WHERE k IN (3, 10, 30, 100, 1000, 10000)""",
-    // trailing-24-observed-hours z-score anomaly flags per event type
-    "q130_anomaly_hours" ->
+         FROM r, t WHERE k IN (3, 10, 30, 100, 1000, 10000)"""),
+    // q130: trailing-24h z-score anomaly detection over hourly counts
+    QuerySpec("q130_anomaly_hours", Relational.qAnomalyHours _, Timed,
+      // trailing-24-observed-hours z-score anomaly flags per event type
       """WITH h AS (
            SELECT event_type,
                   CAST(FLOOR(EPOCH(date_trunc('hour', ts))) AS BIGINT) AS hour_ts,
@@ -2627,10 +1840,11 @@ object SparkEntry {
                   AS n_anomalous,
                 ROUND(MAX(abs((n - mu) / sd)), 4) AS max_abs_z
          FROM w WHERE n_trail >= 12 AND sd > 0
-         GROUP BY event_type""",
-    // ordered funnel: first view -> first click at/after it -> purchase
-    // inside 24 hours of the view; integer-microsecond comparisons
-    "q131_funnel" ->
+         GROUP BY event_type"""),
+    // q131: ordered view->click->purchase funnel inside 24 hours
+    QuerySpec("q131_funnel", Relational.qFunnel _, Timed,
+      // ordered funnel: first view -> first click at/after it -> purchase
+      // inside 24 hours of the view; integer-microsecond comparisons
       """WITH e AS (SELECT user_id, event_type, epoch_ns(ts) // 1000 AS us FROM events),
          v AS (SELECT user_id, MIN(us) AS v_us FROM e
                WHERE event_type = 'view' GROUP BY user_id),
@@ -2649,9 +1863,10 @@ object SparkEntry {
                 ROUND((SELECT COUNT(*) FROM c)::DOUBLE
                       / (SELECT COUNT(*) FROM v), 4) AS click_rate,
                 ROUND((SELECT COUNT(*) FROM p)::DOUBLE
-                      / (SELECT COUNT(*) FROM v), 4) AS conversion_rate""",
-    // cohort retention: first-activity day x day offset, distinct users
-    "q132_cohort_retention" ->
+                      / (SELECT COUNT(*) FROM v), 4) AS conversion_rate"""),
+    // q132: cohort retention (first-activity day x day offset 0..7)
+    QuerySpec("q132_cohort_retention", Relational.qCohortRetention _, Timed,
+      // cohort retention: first-activity day x day offset, distinct users
       """WITH days AS (
            SELECT DISTINCT user_id, date_trunc('day', ts) AS day FROM events),
          cohort AS (
@@ -2661,11 +1876,14 @@ object SparkEntry {
                 COUNT(DISTINCT d.user_id) AS n_users
          FROM days d JOIN cohort c ON d.user_id = c.user_id
          WHERE date_diff('day', c.cohort_day, d.day) <= 7
-         GROUP BY 1, 2""",
-    // the streaming funnel's oracle is the BATCH funnel SQL verbatim:
-    // the gate proves the incremental state machine reaches the batch
-    // answer exactly
-    "q133_streaming_funnel" ->
+         GROUP BY 1, 2"""),
+    // q133: q131's funnel as streaming state over a time-ordered
+    // 3-batch replay — the oracle is the BATCH funnel SQL, so the gate
+    // proves stream/batch parity bit for bit
+    QuerySpec("q133_streaming_funnel", EventTime.qStreamingFunnel _, Untimed,
+      // the streaming funnel's oracle is the BATCH funnel SQL verbatim:
+      // the gate proves the incremental state machine reaches the batch
+      // answer exactly
       """WITH e AS (SELECT user_id, event_type, epoch_ns(ts) // 1000 AS us FROM events),
          v AS (SELECT user_id, MIN(us) AS v_us FROM e
                WHERE event_type = 'view' GROUP BY user_id),
@@ -2684,9 +1902,11 @@ object SparkEntry {
                 ROUND((SELECT COUNT(*) FROM c)::DOUBLE
                       / (SELECT COUNT(*) FROM v), 4) AS click_rate,
                 ROUND((SELECT COUNT(*) FROM p)::DOUBLE
-                      / (SELECT COUNT(*) FROM v), 4) AS conversion_rate""",
-    // cluster-size histogram over the q101-family recursive components
-    "q134_cluster_sizes" ->
+                      / (SELECT COUNT(*) FROM v), 4) AS conversion_rate"""),
+    // q134: near-dup cluster-size histogram — the audit that sizes the
+    // dedup problem before running it
+    QuerySpec("q134_cluster_sizes", Dedup.qClusterSizeHistogram _, Untimed,
+      // cluster-size histogram over the q101-family recursive components
       """WITH RECURSIVE tok AS (
            SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents),
          sh AS (
@@ -2720,9 +1940,11 @@ object SparkEntry {
                           WHEN csize <= 16 THEN 16 ELSE 17 END AS BIGINT) AS size_bucket,
                 COUNT(*) AS n_clusters,
                 CAST(SUM(csize) AS BIGINT) AS n_docs
-         FROM sizes GROUP BY 1""",
-    // per-benchmark-doc 5-gram contamination fraction vs the train side
-    "q135_contamination_frac" ->
+         FROM sizes GROUP BY 1"""),
+    // q135: per-benchmark-example contamination fraction (the
+    // decontamination report, not just q42's binary)
+    QuerySpec("q135_contamination_frac", (s, d) => Pipeline.qContaminationFraction(s, d), Untimed,
+      // per-benchmark-doc 5-gram contamination fraction vs the train side
       """WITH d AS (
            SELECT doc_id, list_distinct(
              CASE WHEN len(toks) < 5 THEN [array_to_string(toks, ' ')]
@@ -2738,9 +1960,11 @@ object SparkEntry {
                   AS n_in_train,
                 ROUND(SUM(CASE WHEN g IN (SELECT g FROM tg) THEN 1 ELSE 0 END)::DOUBLE
                       / COUNT(*), 4) AS contamination
-         FROM bgr GROUP BY doc_id""",
-    // exact two-sample KS statistic over n_chars, even- vs odd-id docs
-    "q136_length_drift" ->
+         FROM bgr GROUP BY doc_id"""),
+    // q136: exact two-sample KS drift over doc length between corpus
+    // slices — the ingest drift alarm
+    QuerySpec("q136_length_drift", (s, d) => Pipeline.qLengthDrift(s, d), Untimed,
+      // exact two-sample KS statistic over n_chars, even- vs odd-id docs
       """WITH g AS (
            SELECT n_chars AS v,
                   SUM(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS ca,
@@ -2755,10 +1979,12 @@ object SparkEntry {
            FROM g)
          SELECT CAST(MAX(na) AS BIGINT) AS n_a, CAST(MAX(nb) AS BIGINT) AS n_b,
                 ROUND(MAX(ABS(cda::DOUBLE / na - cdb::DOUBLE / nb)), 6) AS ks_stat
-         FROM w""",
-    // Markov transitions: lag-1 pairs per user (µs + event_id ties),
-    // conditional probability normalized within each source type
-    "q137_transitions" ->
+         FROM w"""),
+    // q137: first-order Markov transition matrix over per-user event
+    // sequences — the user-journey summary no fixed funnel captures
+    QuerySpec("q137_transitions", Relational.qTransitionMatrix _, Untimed,
+      // Markov transitions: lag-1 pairs per user (µs + event_id ties),
+      // conditional probability normalized within each source type
       """WITH e AS (SELECT user_id, event_type, epoch_ns(ts) // 1000 AS us,
                           event_id FROM events),
          t AS (SELECT event_type AS next_type,
@@ -2769,10 +1995,11 @@ object SparkEntry {
                WHERE prev_type IS NOT NULL GROUP BY 1, 2)
          SELECT prev_type, next_type, n,
                 ROUND(n::DOUBLE / SUM(n) OVER (PARTITION BY prev_type), 6) AS p
-         FROM c""",
-    // inter-arrival regularity: CV of per-user gap distribution (µs);
-    // tie order within an equal timestamp cannot change the gap multiset
-    "q138_gap_regularity" ->
+         FROM c"""),
+    // q138: inter-arrival regularity (CV) per user — the bot detector
+    QuerySpec("q138_gap_regularity", Relational.qGapRegularity _, Untimed,
+      // inter-arrival regularity: CV of per-user gap distribution (µs);
+      // tie order within an equal timestamp cannot change the gap multiset
       """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000 AS us FROM events),
          g AS (SELECT user_id,
                       (us - LAG(us) OVER (PARTITION BY user_id ORDER BY us))::DOUBLE
@@ -2785,16 +2012,20 @@ object SparkEntry {
                 ROUND(mu / 1000000, 4) AS mean_gap_s,
                 ROUND(sd / mu, 4) AS cv,
                 (ROUND(sd / mu, 4) < 0.3) AS is_regular
-         FROM s WHERE n_gaps >= 9""",
-    // the salted-agg oracle is the DIRECT aggregation: the gate proves
-    // the two-phase salted plan reaches the one-phase answer exactly
-    "q139_salted_agg" ->
+         FROM s WHERE n_gaps >= 9"""),
+    // q139: salted two-phase aggregation, proven ≡ the direct agg by
+    // the oracle — the hot-key survival shape
+    QuerySpec("q139_salted_agg", Relational.qSaltedAgg _, Untimed,
+      // the salted-agg oracle is the DIRECT aggregation: the gate proves
+      // the two-phase salted plan reaches the one-phase answer exactly
       """SELECT event_type, ROUND(SUM(value), 4) AS sum_value,
                 COUNT(*) AS n, ROUND(SUM(value) / COUNT(*), 6) AS avg_value
-         FROM events GROUP BY event_type""",
-    // key-skew audit: Gini over per-key counts, integer until the final
-    // divisions; rank ties cannot change the Gini sum
-    "q140_key_skew" ->
+         FROM events GROUP BY event_type"""),
+    // q140: key-skew audit (Gini / max / top-10 shares) — the
+    // partition-planning number behind the salting decision
+    QuerySpec("q140_key_skew", Relational.qKeySkew _, Untimed,
+      // key-skew audit: Gini over per-key counts, integer until the final
+      // divisions; rank ties cannot change the Gini sum
       """WITH c AS (SELECT user_id, COUNT(*) AS n FROM events GROUP BY user_id),
          r AS (SELECT n, ROW_NUMBER() OVER (ORDER BY n) AS i FROM c),
          g AS (SELECT COUNT(*) AS n_keys, SUM(n) AS n_rows, MAX(n) AS max_count,
@@ -2806,20 +2037,24 @@ object SparkEntry {
                 ROUND(t10::DOUBLE / n_rows, 6) AS top10_share,
                 ROUND((2 * s2 - (n_keys + 1) * n_rows)::DOUBLE
                       / (n_keys * n_rows), 6) AS gini
-         FROM g, t""",
-    // the q141 oracle is UNBLOCKED all-pairs: a hash match proves the
-    // Spark side's last-token/length-band blocking loses no pair
-    "q141_name_variants" ->
+         FROM g, t"""),
+    // q141: fuzzy name variants via blocked Levenshtein join; oracle is
+    // the unblocked all-pairs truth, proving the blocking lossless
+    QuerySpec("q141_name_variants", Relational.qNameVariants _, Untimed,
+      // the q141 oracle is UNBLOCKED all-pairs: a hash match proves the
+      // Spark side's last-token/length-band blocking loses no pair
       """WITH n AS (SELECT p_name AS nm, COUNT(*) AS n_rows FROM part GROUP BY p_name)
          SELECT a.nm AS name_a, b.nm AS name_b,
                 levenshtein(a.nm, b.nm) AS dist,
                 a.n_rows AS rows_a, b.n_rows AS rows_b
          FROM n a JOIN n b ON a.nm < b.nm
-         WHERE levenshtein(a.nm, b.nm) <= 2""",
-    // q142: the hash rank (md5 of "strat:<id>") and the ceil threshold
-    // are computed identically on both engines; ties cannot occur
-    // (doc_id is unique within a hash)
-    "q142_stratified_split" ->
+         WHERE levenshtein(a.nm, b.nm) <= 2"""),
+    // q142: exact-count stratified eval/train split (hash-ranked per
+    // language) — size-exact where q60's threshold sample is not
+    QuerySpec("q142_stratified_split", (s, d) => Pipeline.qStratifiedSplit(s, d), Untimed,
+      // q142: the hash rank (md5 of "strat:<id>") and the ceil threshold
+      // are computed identically on both engines; ties cannot occur
+      // (doc_id is unique within a hash)
       """WITH h AS (SELECT doc_id, lang,
                            md5('strat:' || CAST(doc_id AS VARCHAR)) AS h
                     FROM documents),
@@ -2831,10 +2066,11 @@ object SparkEntry {
          SELECT doc_id, lang,
                 CASE WHEN rk <= CEIL(n_lang * 0.1) THEN 'eval'
                      ELSE 'train' END AS split
-         FROM r""",
-    // q143: epoch-second floors on both engines; the 2100-01-01
-    // sentinel closes the current version (no nullable hash compare)
-    "q143_scd2" ->
+         FROM r"""),
+    // q143: SCD2 versioned-dimension build from the order stream
+    QuerySpec("q143_scd2", Relational.qScd2 _, Untimed,
+      // q143: epoch-second floors on both engines; the 2100-01-01
+      // sentinel closes the current version (no nullable hash compare)
       """WITH o AS (SELECT o_custkey, o_orderkey,
                            o_orderpriority AS state,
                            CAST(FLOOR(EPOCH(o_orderdate)) AS BIGINT)
@@ -2850,10 +2086,11 @@ object SparkEntry {
                   AS is_current
          FROM o
          WINDOW w AS (PARTITION BY o_custkey
-                      ORDER BY valid_from_sec, o_orderkey)""",
-    // q144: half-open [s, s+300) intervals; touching intervals merge
-    // (island break only when s strictly exceeds the running max end)
-    "q144_interval_coverage" ->
+                      ORDER BY valid_from_sec, o_orderkey)"""),
+    // q144: per-user interval union (gaps-and-islands coverage)
+    QuerySpec("q144_interval_coverage", Relational.qIntervalCoverage _, Untimed,
+      // q144: half-open [s, s+300) intervals; touching intervals merge
+      // (island break only when s strictly exceeds the running max end)
       """WITH iv AS (SELECT user_id, epoch_ns(ts) // 1000000000 AS s,
                             epoch_ns(ts) // 1000000000 + 300 AS e
                      FROM events),
@@ -2877,9 +2114,10 @@ object SparkEntry {
                FROM isl GROUP BY user_id, island)
          SELECT user_id, COUNT(*) AS n_islands,
                 CAST(SUM(i_end - i_start) AS BIGINT) AS covered_sec
-         FROM g GROUP BY user_id""",
-    // q145: one left-join + aggregate per FK edge, UNION ALL'd
-    "q145_fk_orphans" ->
+         FROM g GROUP BY user_id"""),
+    // q145: referential-integrity audit across the 7 FK edges
+    QuerySpec("q145_fk_orphans", Relational.qFkOrphans _, Untimed,
+      // q145: one left-join + aggregate per FK edge, UNION ALL'd
       """WITH e AS (
            SELECT 'lineitem->orders' AS relation, COUNT(*) AS n_rows,
                   SUM(CASE WHEN p.o_orderkey IS NULL THEN 1 ELSE 0 END) AS orph
@@ -2911,10 +2149,11 @@ object SparkEntry {
          SELECT relation, CAST(n_rows AS BIGINT) AS n_rows,
                 CAST(orph AS BIGINT) AS n_orphans,
                 ROUND(orph::DOUBLE / n_rows, 6) AS orphan_share
-         FROM e""",
-    // q146: digit via floor/log10/power arithmetic (identical double
-    // semantics on both engines; no string formatting)
-    "q146_benford" ->
+         FROM e"""),
+    // q146: Benford first-digit distribution screen on order totals
+    QuerySpec("q146_benford", Relational.qBenford _, Untimed,
+      // q146: digit via floor/log10/power arithmetic (identical double
+      // semantics on both engines; no string formatting)
       """WITH m AS (SELECT o_totalprice
                              / POWER(10, FLOOR(LOG10(o_totalprice))) AS m0
                     FROM orders WHERE o_totalprice > 0),
@@ -2928,9 +2167,10 @@ object SparkEntry {
                 ROUND(LOG10(1.0 + 1.0 / digit), 6) AS benford_p,
                 ROUND(ROUND(n::DOUBLE / SUM(n) OVER (), 6)
                       - ROUND(LOG10(1.0 + 1.0 / digit), 6), 6) AS excess
-         FROM c""",
-    // q147: islands by month_index - row_number; integer throughout
-    "q147_order_streaks" ->
+         FROM c"""),
+    // q147: consecutive-month order streaks per customer
+    QuerySpec("q147_order_streaks", Relational.qOrderStreaks _, Untimed,
+      // q147: islands by month_index - row_number; integer throughout
       """WITH m AS (SELECT DISTINCT o_custkey AS k,
                            CAST(YEAR(o_orderdate) * 12 + MONTH(o_orderdate)
                                 AS BIGINT) AS midx
@@ -2945,21 +2185,25 @@ object SparkEntry {
                 CAST(SUM(run_len) AS BIGINT) AS n_active_months,
                 COUNT(*) AS n_streaks,
                 CAST(MAX(run_len) AS BIGINT) AS longest_streak
-         FROM r GROUP BY k""",
-    // q148: rank k = ceil(p*n) computed in DOUBLE on both engines
-    // (identical IEEE product + ceil), value selected by ROW_NUMBER —
-    // an actual data element, so the hash is float-stable
-    "q148_exact_quantiles" ->
+         FROM r GROUP BY k"""),
+    // q148: exact p50/p90/p99 by iterative threshold refinement — the
+    // exact-quantile plan that survives 100 TB (no global sort)
+    QuerySpec("q148_exact_quantiles", Pipeline.qExactQuantiles _, Timed,
+      // q148: rank k = ceil(p*n) computed in DOUBLE on both engines
+      // (identical IEEE product + ceil), value selected by ROW_NUMBER —
+      // an actual data element, so the hash is float-stable
       """WITH t AS (SELECT l_extendedprice AS v FROM lineitem),
          c AS (SELECT COUNT(*) AS n FROM t),
          r AS (SELECT p, GREATEST(1, CAST(CEIL(p * n) AS BIGINT)) AS k
                FROM (SELECT unnest([CAST(0.5 AS DOUBLE), CAST(0.9 AS DOUBLE),
                                     CAST(0.99 AS DOUBLE)]) AS p), c),
          o AS (SELECT v, ROW_NUMBER() OVER (ORDER BY v) AS rn FROM t)
-         SELECT r.p, r.k, o.v AS value FROM r JOIN o ON o.rn = r.k""",
-    // q149: first view per user, earliest purchase at-or-after it,
-    // latency in µs; percentiles by the same exact-rank construction
-    "q149_conversion_latency" ->
+         SELECT r.p, r.k, o.v AS value FROM r JOIN o ON o.rn = r.k"""),
+    // q149: view→purchase conversion-latency percentiles (funnel ∘
+    // exact selection)
+    QuerySpec("q149_conversion_latency", Pipeline.qConversionLatency _, Timed,
+      // q149: first view per user, earliest purchase at-or-after it,
+      // latency in µs; percentiles by the same exact-rank construction
       """WITH fv AS (SELECT user_id, MIN(ts) AS fv FROM events
                      WHERE event_type = 'view' GROUP BY user_id),
          conv AS (SELECT e.user_id,
@@ -2973,11 +2217,17 @@ object SparkEntry {
                                     CAST(0.99 AS DOUBLE)]) AS p), c),
          o AS (SELECT lat, ROW_NUMBER() OVER (ORDER BY lat) AS rn FROM conv)
          SELECT r.p, r.k, CAST(o.lat AS BIGINT) AS latency_us
-         FROM r JOIN o ON o.rn = r.k""",
-    // q151: systematic PPS sampling — k=16 equally-spaced pins on each
-    // source's token-cumsum line; the pin-crossing test is pure integer
-    // division, bit-identical in both engines
-    "q151_pps_sample" ->
+         FROM r JOIN o ON o.rn = r.k"""),
+    // q150: incremental IVF index maintenance — append-without-rebuild
+    // audit + centroid-drift staleness signal (rows-only: seeded
+    // KMeans codebook; IncrementalIvfSpec pins append ≡ rebuild)
+    QuerySpec("q150_ivf_append", Similarity.qIvfAppend _, Timed),
+    // q151: systematic PPS (token-weighted) sampling per source —
+    // integer pin-crossing test, bit-deterministic selection
+    QuerySpec("q151_pps_sample", (s, d) => Pipeline.qPpsSample(s, d), Timed,
+      // q151: systematic PPS sampling — k=16 equally-spaced pins on each
+      // source's token-cumsum line; the pin-crossing test is pure integer
+      // division, bit-identical in both engines
       """WITH d AS (
            SELECT source, doc_id,
                   CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS w
@@ -2995,11 +2245,12 @@ object SparkEntry {
                 CAST(SUM(CASE WHEN sel THEN 1 ELSE 0 END) AS BIGINT) AS n_selected,
                 CAST(MAX(tw) AS BIGINT) AS tokens_total,
                 CAST(SUM(CASE WHEN sel THEN w ELSE 0 END) AS BIGINT) AS tokens_selected
-         FROM s GROUP BY source""",
-    // q152: groupwise OLS from exact sufficient sums (integer x = days
-    // since 1995-01-01, DECIMAL(18,2) y); only the final scalar formula
-    // is double (IEEE-exact +,*,/ — no libm)
-    "q152_trend_ols" ->
+         FROM s GROUP BY source"""),
+    // q152: per-nation OLS revenue trend from exact sufficient sums
+    QuerySpec("q152_trend_ols", Relational.qTrendOls _, Timed,
+      // q152: groupwise OLS from exact sufficient sums (integer x = days
+      // since 1995-01-01, DECIMAL(18,2) y); only the final scalar formula
+      // is double (IEEE-exact +,*,/ — no libm)
       """WITH t AS (
            SELECT n_name AS g,
                   CAST(date_diff('day', DATE '1995-01-01',
@@ -3017,11 +2268,12 @@ object SparkEntry {
                          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 6)
                   AS slope_per_day,
                 ROUND(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE), 2) AS avg_y
-         FROM a""",
-    // q153: collocations ranked by exact integer 1e6-scaled lift
-    // (order-equivalent to PMI); bigrams via the q126 concat idiom
-    // (tokens contain no whitespace, so the split is unambiguous)
-    "q153_collocation_lift" ->
+         FROM a"""),
+    // q153: collocation mining ranked by exact integer lift (≡ PMI order)
+    QuerySpec("q153_collocation_lift", (s, d) => TextAnalysis.qCollocationLift(s, d), Timed,
+      // q153: collocations ranked by exact integer 1e6-scaled lift
+      // (order-equivalent to PMI); bigrams via the q126 concat idiom
+      // (tokens contain no whitespace, so the split is unambiguous)
       """WITH t AS (
            SELECT string_split_regex(lower(text), '\s+') AS w FROM documents),
          u AS (SELECT t2 AS tok, COUNT(*) AS c1
@@ -3042,12 +2294,13 @@ object SparkEntry {
            JOIN u ua ON b.w1 = ua.tok
            JOIN u ub ON b.w2 = ub.tok
            CROSS JOIN n
-         ORDER BY lift_ppm DESC, w1, w2 LIMIT 20""",
-    // q154: Morton/Z-order bucket map — 16-bit grid cells by exact
-    // integer min/max scaling, then the identical magic-mask spread
-    // chain in SQL (masks 0x00FF00FF / 0x0F0F0F0F / 0x33333333 /
-    // 0x55555555), pure integer bit arithmetic
-    "q154_zorder_layout" ->
+         ORDER BY lift_ppm DESC, w1, w2 LIMIT 20"""),
+    // q154: Z-order (Morton) bucket map + per-bucket 2-D bounding boxes
+    QuerySpec("q154_zorder_layout", Bucketing.qZorderStats _, Timed,
+      // q154: Morton/Z-order bucket map — 16-bit grid cells by exact
+      // integer min/max scaling, then the identical magic-mask spread
+      // chain in SQL (masks 0x00FF00FF / 0x0F0F0F0F / 0x33333333 /
+      // 0x55555555), pure integer bit arithmetic
       """WITH mm AS (
            SELECT MIN(l_partkey) AS pmin, MAX(l_partkey) AS pmax,
                   MIN(l_suppkey) AS smin, MAX(l_suppkey) AS smax
@@ -3078,10 +2331,11 @@ object SparkEntry {
          SELECT CAST(zb AS INT) AS zbucket, COUNT(*) AS n,
                 MIN(l_partkey) AS min_part, MAX(l_partkey) AS max_part,
                 MIN(l_suppkey) AS min_supp, MAX(l_suppkey) AS max_supp
-         FROM z GROUP BY 1""",
-    // q155: session entry/exit matrix — q74's gaps-and-islands core with
-    // a (ts, event_id) total order, first/last event type per session
-    "q155_session_paths" ->
+         FROM z GROUP BY 1"""),
+    // q155: session entry/exit path matrix with bounce counts
+    QuerySpec("q155_session_paths", (s, d) => Relational.qSessionPaths(s, d), Timed,
+      // q155: session entry/exit matrix — q74's gaps-and-islands core with
+      // a (ts, event_id) total order, first/last event type per session
       """WITH t AS (
            SELECT user_id, ts, event_id, event_type,
                   CASE WHEN LAG(ts) OVER w IS NULL
@@ -3104,10 +2358,11 @@ object SparkEntry {
                 CAST(SUM(CASE WHEN n_ev = 1 THEN 1 ELSE 0 END) AS BIGINT)
                   AS n_bounces,
                 ROUND(CAST(SUM(n_ev) AS DOUBLE) / COUNT(*), 4) AS avg_events
-         FROM g GROUP BY entry_type, exit_type""",
-    // q156: throttle-dedup — same (user, type) within 60 s of the
-    // previous raw firing; µs-exact comparison
-    "q156_event_throttle" ->
+         FROM g GROUP BY entry_type, exit_type"""),
+    // q156: telemetry throttle-dedup (same user+type within 60 s)
+    QuerySpec("q156_event_throttle", (s, d) => Relational.qEventThrottle(s, d), Timed,
+      // q156: throttle-dedup — same (user, type) within 60 s of the
+      // previous raw firing; µs-exact comparison
       """WITH l AS (
            SELECT event_type, ts,
                   LAG(ts) OVER (PARTITION BY user_id, event_type
@@ -3121,11 +2376,12 @@ object SparkEntry {
                             AND epoch_us(ts) - epoch_us(prev) < 60000000
                             THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*), 4)
                   AS drop_share
-         FROM l GROUP BY event_type""",
-    // q157: lag-1 autocorrelation of the daily count series per type —
-    // integer sufficient sums, scalar Pearson in IEEE-exact +,*,/,sqrt;
-    // zero-variance series yields NULL on both engines
-    "q157_daily_autocorr" ->
+         FROM l GROUP BY event_type"""),
+    // q157: lag-1 autocorrelation of daily counts per event type
+    QuerySpec("q157_daily_autocorr", Relational.qDailyAutocorr _, Timed,
+      // q157: lag-1 autocorrelation of the daily count series per type —
+      // integer sufficient sums, scalar Pearson in IEEE-exact +,*,/,sqrt;
+      // zero-variance series yields NULL on both engines
       """WITH d AS (
            SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS c
            FROM events GROUP BY event_type, day),
@@ -3145,11 +2401,13 @@ object SparkEntry {
                            / SQRT(CAST(m * sxx - sx * sx AS DOUBLE)
                                   * CAST(m * syy - sy * sy AS DOUBLE))
                       END, 6) AS lag1_autocorr
-         FROM a""",
-    // q158: the streaming throttle's oracle IS the batch q156 SQL —
-    // the incremental per-(user,type) state must reach the identical
-    // per-type report (stream/batch parity, bit for bit)
-    "q158_streaming_throttle" ->
+         FROM a"""),
+    // q158: q156's throttle as streaming state — oracle IS q156's SQL
+    // (stream/batch parity, the q133 contract for the dedup family)
+    QuerySpec("q158_streaming_throttle", EventTime.qStreamingThrottle _, Untimed,
+      // q158: the streaming throttle's oracle IS the batch q156 SQL —
+      // the incremental per-(user,type) state must reach the identical
+      // per-type report (stream/batch parity, bit for bit)
       """WITH l AS (
            SELECT event_type, ts,
                   LAG(ts) OVER (PARTITION BY user_id, event_type
@@ -3163,11 +2421,12 @@ object SparkEntry {
                             AND epoch_us(ts) - epoch_us(prev) < 60000000
                             THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*), 4)
                   AS drop_share
-         FROM l GROUP BY event_type""",
-    // q159: per-cell standardized Pearson residuals vs independence —
-    // margins and N exact integers; e and the residual are per-row
-    // IEEE scalar math (no order-dependent double summation)
-    "q159_contingency_residuals" ->
+         FROM l GROUP BY event_type"""),
+    // q159: lang × source independence audit (standardized residuals)
+    QuerySpec("q159_contingency_residuals", Relational.qContingencyResiduals _, Timed,
+      // q159: per-cell standardized Pearson residuals vs independence —
+      // margins and N exact integers; e and the residual are per-row
+      // IEEE scalar math (no order-dependent double summation)
       """WITH cells AS (
            SELECT lang, source, COUNT(*) AS n FROM documents
            GROUP BY lang, source),
@@ -3179,10 +2438,11 @@ object SparkEntry {
                 ROUND((CAST(cells.n AS DOUBLE)
                        - CAST(r.r * c.c AS DOUBLE) / tot)
                       / SQRT(CAST(r.r * c.c AS DOUBLE) / tot), 4) AS std_residual
-         FROM cells JOIN r USING (lang) JOIN c USING (source) CROSS JOIN t""",
-    // q160: Gini by the order-statistic identity — integer rank/weight
-    // sums, closed-form scalar double at the end
-    "q160_gini_concentration" ->
+         FROM cells JOIN r USING (lang) JOIN c USING (source) CROSS JOIN t"""),
+    // q160: per-source Gini concentration of token mass
+    QuerySpec("q160_gini_concentration", (s, d) => Pipeline.qGiniConcentration(s, d), Timed,
+      // q160: Gini by the order-statistic identity — integer rank/weight
+      // sums, closed-form scalar double at the end
       """WITH d AS (
            SELECT source, doc_id,
                   CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS w
@@ -3197,10 +2457,11 @@ object SparkEntry {
          SELECT source, n AS n_docs, sw AS sum_tokens,
                 ROUND((2.0 * CAST(siw AS DOUBLE)) / CAST(n * sw AS DOUBLE)
                       - CAST(n + 1 AS DOUBLE) / CAST(n AS DOUBLE), 6) AS gini
-         FROM a""",
-    // q161: unordered type pairs co-performed by the same user, with
-    // exact integer 1e6-scaled lift vs independence
-    "q161_type_cooccurrence" ->
+         FROM a"""),
+    // q161: event-type co-occurrence with exact integer lift
+    QuerySpec("q161_type_cooccurrence", Relational.qTypeCooccurrence _, Timed,
+      // q161: unordered type pairs co-performed by the same user, with
+      // exact integer 1e6-scaled lift vs independence
       """WITH ut AS (SELECT DISTINCT user_id, event_type FROM events),
          nu AS (SELECT COUNT(DISTINCT user_id) AS nu FROM ut),
          m AS (SELECT event_type, COUNT(*) AS cnt FROM ut GROUP BY event_type),
@@ -3214,9 +2475,10 @@ object SparkEntry {
                   AS lift_ppm
          FROM p JOIN m ma ON p.type_a = ma.event_type
                 JOIN m mb ON p.type_b = mb.event_type
-                CROSS JOIN nu""",
-    // q162: exact-cents reconciliation of o_totalprice vs lineitem sums
-    "q162_totalprice_audit" ->
+                CROSS JOIN nu"""),
+    // q162: order-total vs lineitem-sum reconciliation in exact cents
+    QuerySpec("q162_totalprice_audit", Relational.qTotalpriceAudit _, Timed,
+      // q162: exact-cents reconciliation of o_totalprice vs lineitem sums
       """WITH li AS (
            SELECT l_orderkey,
                   SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
@@ -3235,17 +2497,19 @@ object SparkEntry {
                 CAST(SUM(CASE WHEN ABS(diff_cents) > 100 THEN 1 ELSE 0 END)
                   AS BIGINT) AS n_over_dollar,
                 CAST(MAX(ABS(diff_cents)) AS BIGINT) AS max_abs_cents
-         FROM d GROUP BY o_orderpriority""",
-    // q163: 15 integer-picorank power-iteration rounds unrolled as
-    // chained materialized CTEs — all-integer, so bit-exact cross-engine
-    "q163_copurchase_rank" -> pagerankOracle,
-    // q253: 5 synchronous LPA rounds unrolled; plurality vote with
-    // min-label ties = windowed max + MIN(label), all-integer
-    "q253_label_propagation" -> lpaOracle,
-    // q164: median/MAD fence — quantile_cont is DuckDB's exact
-    // interpolated percentile, the same ANSI definition Spark's
-    // percentile() uses (the q104 parity)
-    "q164_mad_outliers" ->
+         FROM d GROUP BY o_orderpriority"""),
+    // q163: co-purchase PageRank — integer-picorank power iteration;
+    // rows-only (weighted recursive iteration is not practical ANSI
+    // SQL); GraphSpec pins bit-equality against a sequential reference
+    QuerySpec("q163_copurchase_rank", (s, d) => Graph.qCopurchaseRank(s, d), Timed,
+      // q163: 15 integer-picorank power-iteration rounds unrolled as
+      // chained materialized CTEs — all-integer, so bit-exact cross-engine
+      pagerankOracle),
+    // q164: median/MAD robust outlier fence per event type (Hampel)
+    QuerySpec("q164_mad_outliers", Relational.qMadOutliers _, Timed,
+      // q164: median/MAD fence — quantile_cont is DuckDB's exact
+      // interpolated percentile, the same ANSI definition Spark's
+      // percentile() uses (the q104 parity)
       """WITH ev AS (SELECT event_type, value FROM events),
          m AS (SELECT event_type, quantile_cont(value, 0.5) AS med
                FROM ev GROUP BY event_type),
@@ -3262,9 +2526,10 @@ object SparkEntry {
                 ROUND(CAST(SUM(CASE WHEN d.adev > 5.0 * md.mad THEN 1 ELSE 0 END)
                         AS DOUBLE) / COUNT(*), 4) AS outlier_share
          FROM d JOIN md USING (event_type)
-         GROUP BY d.event_type""",
-    // q165: per-user time-ordered 3-step paths, deterministic top-25
-    "q165_event_trigrams" ->
+         GROUP BY d.event_type"""),
+    // q165: top event-type trigram sequences (3-step behavior paths)
+    QuerySpec("q165_event_trigrams", (s, d) => Relational.qEventTrigrams(s, d), Timed,
+      // q165: per-user time-ordered 3-step paths, deterministic top-25
       """WITH s AS (
            SELECT event_type AS e1,
                   LEAD(event_type, 1) OVER w AS e2,
@@ -3274,11 +2539,13 @@ object SparkEntry {
          SELECT e1, e2, e3, COUNT(*) AS n
          FROM s WHERE e3 IS NOT NULL
          GROUP BY e1, e2, e3
-         ORDER BY n DESC, e1, e2, e3 LIMIT 25""",
-    // q166: id-ordered triple-join triangle count over the same
-    // co-purchase edge set (orientation is a plan choice, the census
-    // is invariant); wedges from undirected degrees
-    "q166_triangle_census" ->
+         ORDER BY n DESC, e1, e2, e3 LIMIT 25"""),
+    // q166: triangle census + global clustering of the co-purchase
+    // graph (degree-ordered orientation; id-ordered oracle)
+    QuerySpec("q166_triangle_census", Graph.qTriangleCensus _, Timed,
+      // q166: id-ordered triple-join triangle count over the same
+      // co-purchase edge set (orientation is a plan choice, the census
+      // is invariant); wedges from undirected degrees
       """WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
                      FROM lineitem),
          e AS (SELECT DISTINCT a.p AS u, b.p AS v
@@ -3297,9 +2564,11 @@ object SparkEntry {
          SELECT s.n_nodes, m.n_edges, t.tri AS n_triangles,
                 s.wedges AS n_wedges,
                 ROUND(3.0 * t.tri / s.wedges, 6) AS clustering
-         FROM s, m, t""",
-    // q167: streaming sessionization's oracle IS batch q74's SQL
-    "q167_streaming_sessionize" ->
+         FROM s, m, t"""),
+    // q167: q74's sessionization as streaming state — oracle IS q74's
+    // SQL (third bit-exact stream/batch parity beside q133/q158)
+    QuerySpec("q167_streaming_sessionize", EventTime.qStreamingSessionize _, Untimed,
+      // q167: streaming sessionization's oracle IS batch q74's SQL
       """WITH t AS (
            SELECT user_id, ts, CASE WHEN LAG(ts) OVER w IS NULL
                   OR ts - LAG(ts) OVER w >= INTERVAL 10 MINUTE THEN 1 ELSE 0 END AS new_sess
@@ -3309,10 +2578,11 @@ object SparkEntry {
          g AS (SELECT user_id, sess, COUNT(*) AS n_events FROM s GROUP BY user_id, sess)
          SELECT user_id, COUNT(*) AS n_sessions, MAX(n_events) AS max_session_events,
                 CAST(SUM(n_events) AS BIGINT) AS n_events
-         FROM g GROUP BY user_id""",
-    // q168: degree histogram — highest-set-bit bin via length(bin(d)),
-    // pure string length of the binary literal (no log2)
-    "q168_degree_histogram" ->
+         FROM g GROUP BY user_id"""),
+    // q168: co-purchase degree distribution in power-of-2 bins
+    QuerySpec("q168_degree_histogram", Graph.qDegreeHistogram _, Timed,
+      // q168: degree histogram — highest-set-bit bin via length(bin(d)),
+      // pure string length of the binary literal (no log2)
       """WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
                      FROM lineitem),
          e AS (SELECT DISTINCT a.p AS u, b.p AS v
@@ -3324,11 +2594,12 @@ object SparkEntry {
          SELECT CAST(1 << (bits - 1) AS BIGINT) AS bucket_lo,
                 COUNT(*) AS n_nodes,
                 MIN(d) AS min_degree, MAX(d) AS max_degree
-         FROM b GROUP BY bits""",
-    // q169: endpoint-degree Pearson over the bidirectional edge list —
-    // DECIMAL(38,0) sufficient sums (the m·Σ products overflow BIGINT
-    // past ~1e6 edges), scalar IEEE formula at the end
-    "q169_degree_assortativity" ->
+         FROM b GROUP BY bits"""),
+    // q169: degree assortativity (Newman) over the co-purchase edges
+    QuerySpec("q169_degree_assortativity", Graph.qDegreeAssortativity _, Timed,
+      // q169: endpoint-degree Pearson over the bidirectional edge list —
+      // DECIMAL(38,0) sufficient sums (the m·Σ products overflow BIGINT
+      // past ~1e6 edges), scalar IEEE formula at the end
       """WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
                      FROM lineitem),
          e AS (SELECT DISTINCT a.p AS u, b.p AS v
@@ -3353,11 +2624,17 @@ object SparkEntry {
                            / SQRT(CAST(CAST(m AS DECIMAL(38,0)) * sxx - sx * sx AS DOUBLE)
                                   * CAST(CAST(m AS DECIMAL(38,0)) * syy - sy * sy AS DOUBLE))
                       END, 6) AS assortativity
-         FROM a""",
-    // q171: recursive-CTE BFS — UNION dedups (node, hop) pairs, the
-    // outer MIN picks each node's first hop; source = max-degree, id
-    // tie-break; unreached reported as hop -1 (possibly 0 nodes)
-    "q171_bfs_hops" ->
+         FROM a"""),
+    // q170: Count-Min frequency ceilings vs exact top-20 — rows-only
+    // (Murmur hashing not SQL-expressible); CountMinSpec pins the
+    // ceiling guarantee, ε band, and partition-invariant linear merge
+    QuerySpec("q170_cms_frequency", (s, d) => TextAnalysis.qCmsFrequency(s, d), Untimed),
+    // q171: BFS hop distribution from the max-degree hub (frontier-
+    // expansion joins; recursive-CTE oracle)
+    QuerySpec("q171_bfs_hops", (s, d) => Graph.qBfsHops(s, d), Timed,
+      // q171: recursive-CTE BFS — UNION dedups (node, hop) pairs, the
+      // outer MIN picks each node's first hop; source = max-degree, id
+      // tie-break; unreached reported as hop -1 (possibly 0 nodes)
       """WITH RECURSIVE lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
                      FROM lineitem),
          e AS (SELECT DISTINCT a.p AS u, b.p AS v
@@ -3374,11 +2651,12 @@ object SparkEntry {
          SELECT hop, COUNT(*) AS n_nodes FROM m GROUP BY hop
          UNION ALL
          SELECT -1 AS hop,
-                (SELECT COUNT(*) FROM deg) - (SELECT COUNT(*) FROM m) AS n_nodes""",
-    // q172: RANGE frame over µs — (t-6h, t] trailing count (peers at
-    // equal us included identically by both engines), peak + earliest
-    // achieving timestamp
-    "q172_peak_window" ->
+                (SELECT COUNT(*) FROM deg) - (SELECT COUNT(*) FROM m) AS n_nodes"""),
+    // q172: peak trailing-6h event load per type (RANGE-frame window)
+    QuerySpec("q172_peak_window", (s, d) => Relational.qPeakWindowLoad(s, d), Timed,
+      // q172: RANGE frame over µs — (t-6h, t] trailing count (peers at
+      // equal us included identically by both engines), peak + earliest
+      // achieving timestamp
       """WITH e AS (SELECT event_type, epoch_us(ts) AS us FROM events),
          w AS (SELECT event_type, us,
                       COUNT(*) OVER (PARTITION BY event_type ORDER BY us
@@ -3390,11 +2668,13 @@ object SparkEntry {
                 MIN(w.us) AS peak_at_us
          FROM w JOIN p USING (event_type)
          WHERE w.w6 = p.pk
-         GROUP BY w.event_type""",
-    // q173: identical vector truncation (ROW_NUMBER by weight desc, id)
-    // then the common-neighbor wedge join; ranking by exact integer
-    // squared cosine — no float anywhere
-    "q173_item_cf" ->
+         GROUP BY w.event_type"""),
+    // q173: item-item CF — top pairs by exact integer squared-cosine
+    // of capped co-purchase neighbor vectors
+    QuerySpec("q173_item_cf", (s, d) => Graph.qItemCf(s, d), Timed,
+      // q173: identical vector truncation (ROW_NUMBER by weight desc, id)
+      // then the common-neighbor wedge join; ranking by exact integer
+      // squared cosine — no float anywhere
       """WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
                      FROM lineitem),
          pr AS (SELECT a.p AS u, b.p AS v, COUNT(*) AS w
@@ -3421,10 +2701,11 @@ object SparkEntry {
                   AS BIGINT) AS cos2_ppm
          FROM wd JOIN nrm nu ON wd.u = nu.item
                  JOIN nrm nv ON wd.v = nv.item
-         ORDER BY cos2_ppm DESC, u, v LIMIT 20""",
-    // q174: Spark's dayofweek is 1=Sunday..7; DuckDB's is 0=Sunday..6,
-    // hence the +1. Index = exact integer (s·ndt·1e4) div (nd·st)
-    "q174_weekday_seasonality" ->
+         ORDER BY cos2_ppm DESC, u, v LIMIT 20"""),
+    // q174: weekday seasonality index per event type (1e4-scaled)
+    QuerySpec("q174_weekday_seasonality", Relational.qWeekdaySeasonality _, Timed,
+      // q174: Spark's dayofweek is 1=Sunday..7; DuckDB's is 0=Sunday..6,
+      // hence the +1. Index = exact integer (s·ndt·1e4) div (nd·st)
       """WITH daily AS (
            SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS c
            FROM events GROUP BY event_type, day),
@@ -3438,12 +2719,13 @@ object SparkEntry {
                 bd.s AS n_events, bd.nd AS n_days,
                 CAST((bd.s * t.ndt * 10000) // (bd.nd * t.st) AS BIGINT)
                   AS seasonality_idx
-         FROM bd JOIN t USING (event_type)""",
-    // q175: KM ingredients — viewers with a qualifying purchase are
-    // events at that duration, the rest censor at last observed
-    // activity; risk set = reverse cumsum over hour cells; hazard is
-    // exact integer d*1e6 div n_risk
-    "q175_hazard_table" ->
+         FROM bd JOIN t USING (event_type)"""),
+    // q175: Kaplan-Meier risk table (view->purchase with censoring)
+    QuerySpec("q175_hazard_table", Relational.qHazardTable _, Timed,
+      // q175: KM ingredients — viewers with a qualifying purchase are
+      // events at that duration, the rest censor at last observed
+      // activity; risk set = reverse cumsum over hour cells; hazard is
+      // exact integer d*1e6 div n_risk
       """WITH fv AS (SELECT user_id, MIN(epoch_us(ts)) AS fv FROM events
                      WHERE event_type = 'view' GROUP BY user_id),
          conv AS (SELECT e.user_id,
@@ -3472,10 +2754,11 @@ object SparkEntry {
                FROM cells)
          SELECT dur_h, n_risk, n_events, n_censored,
                 CAST((n_events * 1000000) // n_risk AS BIGINT) AS hazard_ppm
-         FROM r WHERE n_events > 0""",
-    // q176: S and 18·Var as exact integers (tie-corrected), z with
-    // continuity correction — only the final ÷/√ are double
-    "q176_mann_kendall" ->
+         FROM r WHERE n_events > 0"""),
+    // q176: Mann-Kendall non-parametric trend test on daily counts
+    QuerySpec("q176_mann_kendall", Relational.qMannKendall _, Timed,
+      // q176: S and 18·Var as exact integers (tie-corrected), z with
+      // continuity correction — only the final ÷/√ are double
       """WITH daily AS (
            SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS c
            FROM events GROUP BY event_type, day),
@@ -3500,10 +2783,11 @@ object SparkEntry {
                       / SQRT(CAST(tie.n_days * (tie.n_days - 1)
                                * (2 * tie.n_days + 5) - tie.tie_term
                                AS DOUBLE) / 18.0), 4) AS z
-         FROM s JOIN tie USING (event_type)""",
-    // q177: integer CUSUM |n·cum_k − k·S| argmax (earliest-day
-    // tie-break), segment means from exact sums
-    "q177_cusum_changepoint" ->
+         FROM s JOIN tie USING (event_type)"""),
+    // q177: CUSUM changepoint (level-shift day) per event type
+    QuerySpec("q177_cusum_changepoint", Relational.qCusumChangepoint _, Timed,
+      // q177: integer CUSUM |n·cum_k − k·S| argmax (earliest-day
+      // tie-break), segment means from exact sums
       """WITH daily AS (
            SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS c
            FROM events GROUP BY event_type, day),
@@ -3522,10 +2806,11 @@ object SparkEntry {
                 CAST(dev AS BIGINT) AS abs_dev,
                 ROUND(CAST(cum AS DOUBLE) / k, 4) AS mean_before,
                 ROUND(CAST(s - cum AS DOUBLE) / (n - k), 4) AS mean_after
-         FROM pick WHERE rn = 1""",
-    // q178: portable UNION-ALL melt of the exact-decimal rollup; value
-    // = CAST(decimal AS DOUBLE) (correctly rounded, engine-identical)
-    "q178_unpivot" ->
+         FROM pick WHERE rn = 1"""),
+    // q178: unpivot/melt of the exact-decimal pricing rollup
+    QuerySpec("q178_unpivot", Stats.qUnpivot _, Timed,
+      // q178: portable UNION-ALL melt of the exact-decimal rollup; value
+      // = CAST(decimal AS DOUBLE) (correctly rounded, engine-identical)
       """WITH w AS (
            SELECT l_returnflag, l_linestatus,
                   CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)))
@@ -3548,10 +2833,11 @@ object SparkEntry {
                 CAST(sum_disc_price AS DOUBLE) FROM w
          UNION ALL
          SELECT l_returnflag, l_linestatus, 'n_rows',
-                CAST(n_rows AS DOUBLE) FROM w""",
-    // q179: tie-exact integer doubled average ranks (2r+c-1), HUGEINT
-    // sufficient sums (engine-exact), one IEEE sqrt/div at the end
-    "q179_spearman" ->
+                CAST(n_rows AS DOUBLE) FROM w"""),
+    // q179: Spearman rank correlation (tie-exact integer double-ranks)
+    QuerySpec("q179_spearman", Stats.qSpearman _, Timed,
+      // q179: tie-exact integer doubled average ranks (2r+c-1), HUGEINT
+      // sufficient sums (engine-exact), one IEEE sqrt/div at the end
       """WITH r AS (
            SELECT l_returnflag AS flag,
                   2 * RANK() OVER (PARTITION BY l_returnflag
@@ -3577,10 +2863,11 @@ object SparkEntry {
                            / SQRT(CAST(n * sxx - sx * sx AS DOUBLE)
                                   * CAST(n * syy - sy * sy AS DOUBLE))
                       END, 6) AS spearman_rho
-         FROM s""",
-    // q180: in-SQL day spine + IGNORE NULLS LOCF; all values as exact
-    // integer cents, checksum = sum(idx * filled_cents) in BIGINT
-    "q180_locf_gapfill" ->
+         FROM s"""),
+    // q180: calendar gap-fill with LOCF over an in-plan day spine
+    QuerySpec("q180_locf_gapfill", Stats.qLocfGapfill _, Timed,
+      // q180: in-SQL day spine + IGNORE NULLS LOCF; all values as exact
+      // integer cents, checksum = sum(idx * filled_cents) in BIGINT
       """WITH daily AS (
            SELECT n_name, o_orderpriority AS pri,
                   CAST(o_orderdate AS DATE) AS day,
@@ -3609,10 +2896,11 @@ object SparkEntry {
                 COUNT(rev_c) AS n_obs,
                 COUNT(*) - COUNT(rev_c) AS n_filled,
                 CAST(SUM(idx * filled) AS BIGINT) AS locf_checksum
-         FROM f GROUP BY 1, 2""",
-    // q181: lower-median pairwise slope via ROW_NUMBER over the IEEE
-    // slope (identical division both engines), (d1,d2) tie-break
-    "q181_theil_sen" ->
+         FROM f GROUP BY 1, 2"""),
+    // q181: Theil-Sen robust slope (lower-median pairwise slope)
+    QuerySpec("q181_theil_sen", Stats.qTheilSen _, Timed,
+      // q181: lower-median pairwise slope via ROW_NUMBER over the IEEE
+      // slope (identical division both engines), (d1,d2) tie-break
       """WITH daily AS (
            SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS c
            FROM events GROUP BY event_type, day),
@@ -3630,9 +2918,10 @@ object SparkEntry {
                FROM p)
          SELECT event_type, n_pairs, dc AS med_dc, dd AS med_dd,
                 ROUND(slope, 6) AS theil_sen_slope
-         FROM o WHERE rn = (n_pairs + 1) // 2""",
-    // q182: all-integer dispersion: (n·Σc² − (Σc)²)·1e4 div ((n−1)·Σc)
-    "q182_fano_factor" ->
+         FROM o WHERE rn = (n_pairs + 1) // 2"""),
+    // q182: Fano factor of hourly counts (all-integer dispersion)
+    QuerySpec("q182_fano_factor", Stats.qFanoFactor _, Timed,
+      // q182: all-integer dispersion: (n·Σc² − (Σc)²)·1e4 div ((n−1)·Σc)
       """WITH hourly AS (
            SELECT event_type, date_trunc('hour', ts) AS h, COUNT(*) AS c
            FROM events GROUP BY 1, 2),
@@ -3644,10 +2933,11 @@ object SparkEntry {
                 CAST(sc * 100 // n_hours AS BIGINT) AS mean_x100,
                 CAST((n_hours * scc - sc * sc) * 10000
                   // ((n_hours - 1) * sc) AS BIGINT) AS fano_x10000
-         FROM s WHERE n_hours > 1""",
-    // q183: exact integer cells/marginals; MI and entropies fold ≤120
-    // double terms (the q64 ln precedent), rounded at 6
-    "q183_mutual_info" ->
+         FROM s WHERE n_hours > 1"""),
+    // q183: type x hour mutual information + marginal entropies
+    QuerySpec("q183_mutual_info", Stats.qMutualInfo _, Timed,
+      // q183: exact integer cells/marginals; MI and entropies fold ≤120
+      // double terms (the q64 ln precedent), rounded at 6
       """WITH cells AS (
            SELECT event_type AS t, EXTRACT(hour FROM ts) AS hh,
                   COUNT(*) AS c
@@ -3672,10 +2962,14 @@ object SparkEntry {
                  FROM colm, tot)
          SELECT tot.n_cells, tot.nn AS n_events, mi.mi_nats,
                 ht.h_type, hh2.h_hour
-         FROM tot, mi, ht, hh2""",
-    // q185: Page CUSUM via the drawdown identity S = P − min(0, min P)
-    // — exact integers end to end, same identity as the Spark plan
-    "q185_page_cusum" ->
+         FROM tot, mi, ht, hh2"""),
+    // q184: k-core decomposition by distributed h-index iteration
+    // (rows-only: iterative fixpoint, spec-proven == sequential peeling)
+    QuerySpec("q184_kcore", (s, d) => Graph.qKCore(s, d), Untimed),
+    // q185: Page CUSUM online detector via the drawdown identity
+    QuerySpec("q185_page_cusum", Stats.qPageCusum _, Timed,
+      // q185: Page CUSUM via the drawdown identity S = P − min(0, min P)
+      // — exact integers end to end, same identity as the Spark plan
       """WITH daily AS (
            SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS c
            FROM events GROUP BY event_type, day),
@@ -3707,10 +3001,12 @@ object SparkEntry {
                   'none') AS first_alarm_day,
                 COALESCE(MAX(CASE WHEN alarm AND arn = 1 THEN s_stat END),
                   -1) AS s_at_alarm
-         FROM al GROUP BY event_type""",
-    // q186: the oracle IS q185's batch SQL — stream/batch parity for
-    // the Page detector (recursion vs drawdown identity)
-    "q186_streaming_cusum" ->
+         FROM al GROUP BY event_type"""),
+    // q186: q185 as streaming per-type state (oracle = q185's batch
+    // SQL: the fourth bit-exact stream/batch parity statement)
+    QuerySpec("q186_streaming_cusum", EventTime.qStreamingCusum _, Untimed,
+      // q186: the oracle IS q185's batch SQL — stream/batch parity for
+      // the Page detector (recursion vs drawdown identity)
       """WITH daily AS (
            SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS c
            FROM events GROUP BY event_type, day),
@@ -3742,10 +3038,11 @@ object SparkEntry {
                   'none') AS first_alarm_day,
                 COALESCE(MAX(CASE WHEN alarm AND arn = 1 THEN s_stat END),
                   -1) AS s_at_alarm
-         FROM al GROUP BY event_type""",
-    // q187: greedy-earliest chain (MIN click per view, MIN purchase
-    // after it) is depth-maximal for a view-anchored window
-    "q187_window_funnel" ->
+         FROM al GROUP BY event_type"""),
+    // q187: windowed funnel (ClickHouse windowFunnel semantics)
+    QuerySpec("q187_window_funnel", (s, d) => Stats.qWindowFunnel(s, d), Timed,
+      // q187: greedy-earliest chain (MIN click per view, MIN purchase
+      // after it) is depth-maximal for a view-anchored window
       """WITH v AS (SELECT user_id AS u, epoch_us(ts) AS tv FROM events
                     WHERE event_type = 'view'),
          c AS (SELECT user_id AS u, epoch_us(ts) AS tc FROM events
@@ -3767,10 +3064,11 @@ object SparkEntry {
                      WHEN h2 IS NOT NULL THEN 2 ELSE 1 END AS depth,
                 COUNT(*) AS n_users
          FROM du LEFT JOIN d2 USING (u) LEFT JOIN d3 USING (u)
-         GROUP BY 1""",
-    // q188: 2^30-scaled integer dyadic weighted sum; spike test is
-    // pure integer shift arithmetic on both engines
-    "q188_ewma_spikes" ->
+         GROUP BY 1"""),
+    // q188: EWMA spike days via exact integer dyadic weights
+    QuerySpec("q188_ewma_spikes", (s, d) => Stats.qEwmaSpikes(s, d), Timed,
+      // q188: 2^30-scaled integer dyadic weighted sum; spike test is
+      // pure integer shift arithmetic on both engines
       """WITH daily AS (
            SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS c
            FROM events GROUP BY event_type, day),
@@ -3792,11 +3090,12 @@ object SparkEntry {
                   AS n_spike_days,
                 COALESCE(MIN(CASE WHEN spike
                   THEN CAST(day AS VARCHAR) END), 'none') AS first_spike_day
-         FROM scored GROUP BY event_type""",
-    // q189: each fact matches at most one SCD2 version; pre-history
-    // ships land in the explicit 'NONE' bucket; revenue in exact
-    // integer 1e-4-dollar units
-    "q189_temporal_join" ->
+         FROM scored GROUP BY event_type"""),
+    // q189: fact-to-SCD2 point-in-time join (revenue by state-at-ship)
+    QuerySpec("q189_temporal_join", Relational.qTemporalJoin _, Timed,
+      // q189: each fact matches at most one SCD2 version; pre-history
+      // ships land in the explicit 'NONE' bucket; revenue in exact
+      // integer 1e-4-dollar units
       """WITH dim AS (
            SELECT o_custkey AS ck, o_orderpriority AS state,
                   CAST(epoch(o_orderdate) AS BIGINT) AS vf,
@@ -3817,10 +3116,11 @@ object SparkEntry {
                 CAST(SUM(fact.rev_e4) AS BIGINT) AS revenue_e4
          FROM fact LEFT JOIN dim ON fact.ck = dim.ck
           AND fact.ship_sec >= dim.vf AND fact.ship_sec < dim.vt
-         GROUP BY 1""",
-    // q190: first-half ntile decile edges, strict-below band
-    // assignment, Laplace-smoothed 10-term PSI fold
-    "q190_psi_drift" ->
+         GROUP BY 1"""),
+    // q190: PSI drift between stream halves over first-half deciles
+    QuerySpec("q190_psi_drift", (s, d) => Stats.qPsiDrift(s, d), Timed,
+      // q190: first-half ntile decile edges, strict-below band
+      // assignment, Laplace-smoothed 10-term PSI fold
       """WITH ev AS (SELECT event_type, value, event_id,
                             CAST(ts AS DATE) AS day FROM events),
          b AS (SELECT event_type,
@@ -3856,11 +3156,12 @@ object SparkEntry {
                            / (CAST(c.cs + 1 AS DOUBLE) / (t.ns + 10)))), 6)
                   AS psi
          FROM cells c JOIN tot t USING (event_type)
-         GROUP BY c.event_type""",
-    // q191: per-rank relevance pivoted to columns so DCG/IDCG are
-    // fixed-order folds (ln-base cancels in the ratio); cosine ties
-    // broken by vec_id (the q32 rule)
-    "q191_ndcg" ->
+         GROUP BY c.event_type"""),
+    // q191: NDCG@10 retrieval-quality audit vs label relevance
+    QuerySpec("q191_ndcg", (s, d) => Similarity.qNdcg(s, d), Timed,
+      // q191: per-rank relevance pivoted to columns so DCG/IDCG are
+      // fixed-order folds (ln-base cancels in the ratio); cosine ties
+      // broken by vec_id (the q32 rule)
       """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS q_emb,
                            label AS q_label
                     FROM embeddings WHERE vec_id < 100),
@@ -3914,10 +3215,19 @@ object SparkEntry {
                          + CASE WHEN cs.csize - 1 >= 9 THEN 1.0 / LN(10.0) ELSE 0.0 END
                          + CASE WHEN cs.csize - 1 >= 10 THEN 1.0 / LN(11.0) ELSE 0.0 END),
                       6) AS ndcg_at_10
-         FROM flags f JOIN cs USING (q_label)""",
-    // q194: summing 2^idx over DISTINCT (user, idx) IS the bitwise OR;
-    // xor() spelled as a function (DuckDB's ^ is exponentiation)
-    "q194_activity_bitmask" ->
+         FROM flags f JOIN cs USING (q_label)"""),
+    // q192: IVF recall@10 vs brute ground truth per probe budget
+    // (rows-only: the IVF leg is not SQL-expressible; spec pins the
+    // nprobe=cells ceiling at exactly 1.0 and monotonicity)
+    QuerySpec("q192_ann_recall", (s, d) => Similarity.qAnnRecall(s, d), Timed),
+    // q193: HLL sketch rollup — persisted daily registers merged to
+    // lifetime distinct (rows-only: estimator not SQL-expressible;
+    // HllSketchSpec pins merge==direct bit for bit + the error band)
+    QuerySpec("q193_hll_rollup", Stats.qHllRollup _, Timed),
+    // q194: per-user 62-day activity bitmask (popcount/streak algebra)
+    QuerySpec("q194_activity_bitmask", Stats.qActivityBitmask _, Timed,
+      // q194: summing 2^idx over DISTINCT (user, idx) IS the bitwise OR;
+      // xor() spelled as a function (DuckDB's ^ is exponentiation)
       """WITH anchor AS (SELECT MAX(CAST(ts AS DATE)) AS a FROM events),
          act AS (SELECT DISTINCT user_id,
                         date_diff('day', CAST(ts AS DATE),
@@ -3933,10 +3243,11 @@ object SparkEntry {
                 CAST(bit_count(xor(active_mask, active_mask + 1)) - 1
                   AS BIGINT) AS streak_now,
                 CAST(bit_count(active_mask & 127) AS BIGINT) AS n_last7
-         FROM m""",
-    // q195: z from exact integer counts; formula written identically
-    // to the Spark plan so the doubles agree bit for bit
-    "q195_exposure_conversion" ->
+         FROM m"""),
+    // q195: exposure->conversion two-proportion z screen
+    QuerySpec("q195_exposure_conversion", Stats.qExposureConversion _, Timed,
+      // q195: z from exact integer counts; formula written identically
+      // to the Spark plan so the doubles agree bit for bit
       """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us,
                            MIN(epoch_us(ts)) OVER (PARTITION BY user_id)
                              + 259200000000 AS cut
@@ -3978,11 +3289,12 @@ object SparkEntry {
                          * (1.0 / CAST(n_exposed AS DOUBLE)
                             + 1.0 / CAST(n_unexposed AS DOUBLE)))
                   ELSE 0.0 END, 6) AS z_score
-         FROM rows_""",
-    // q196: HUGEINT power sums mirror Spark's DECIMAL(38,0); the
-    // centered combinations A2/A3/A4 are exact integers on both
-    // engines, so only the final correctly-rounded scalars are doubles
-    "q196_higher_moments" ->
+         FROM rows_"""),
+    // q196: skewness/kurtosis from exact integer power sums
+    QuerySpec("q196_higher_moments", Stats.qHigherMoments _, Timed,
+      // q196: HUGEINT power sums mirror Spark's DECIMAL(38,0); the
+      // centered combinations A2/A3/A4 are exact integers on both
+      // engines, so only the final correctly-rounded scalars are doubles
       """WITH s AS (SELECT event_type, CAST(COUNT(*) AS HUGEINT) AS n,
                            SUM(v) AS s1, SUM(v * v) AS s2,
                            SUM(v * v * v) AS s3, SUM(v * v * v * v) AS s4
@@ -4005,10 +3317,11 @@ object SparkEntry {
                 ROUND(SQRT(a2) / nd / 100.0, 6) AS sd_pop,
                 ROUND(a3 / (a2 * SQRT(a2)), 6) AS skewness,
                 ROUND(a4 / (a2 * a2) - 3.0, 6) AS kurtosis_excess
-         FROM a""",
-    // q197: both engines carry the +/-3-row frame as a sorted list and
-    // index its lower middle — exact integers end to end
-    "q197_rolling_median" ->
+         FROM a"""),
+    // q197: rolling-median (Tukey) spike flags over daily counts
+    QuerySpec("q197_rolling_median", Stats.qRollingMedian _, Timed,
+      // q197: both engines carry the +/-3-row frame as a sorted list and
+      // index its lower middle — exact integers end to end
       """WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
                                COUNT(*) AS cnt
                         FROM events GROUP BY 1, 2),
@@ -4024,10 +3337,11 @@ object SparkEntry {
          SELECT event_type, day, cnt, med7,
                 CAST(CASE WHEN cnt > 2 * med7 THEN 1 ELSE 0 END AS BIGINT)
                   AS is_spike
-         FROM m""",
-    // q198: bin-by-cumulative-offset is plain window arithmetic on
-    // both engines; all-integer outputs
-    "q198_compaction_plan" ->
+         FROM m"""),
+    // q198: small-file compaction plan (size-targeted contiguous bins)
+    QuerySpec("q198_compaction_plan", (s, d) => Bucketing.qCompactionPlan(s, d), Timed,
+      // q198: bin-by-cumulative-offset is plain window arithmetic on
+      // both engines; all-integer outputs
       """WITH files AS (SELECT source, doc_id // 50 AS file_id,
                                COUNT(*) AS n_docs,
                                CAST(SUM(n_chars) AS BIGINT) AS bytes
@@ -4043,10 +3357,11 @@ object SparkEntry {
                 CAST(SUM(n_docs) AS BIGINT) AS n_docs,
                 CAST(SUM(bytes) AS BIGINT) AS bin_bytes,
                 CAST(SUM(bytes) AS BIGINT) * 10000 // 65536 AS fill_bp
-         FROM pc GROUP BY 1, 2""",
-    // q199: the packed us*8+code long makes "latest touch, clicks over
-    // views on ties" one integer window max on both engines
-    "q199_last_touch" ->
+         FROM pc GROUP BY 1, 2"""),
+    // q199: last-touch revenue attribution within 24h
+    QuerySpec("q199_last_touch", Stats.qLastTouch _, Timed,
+      // q199: the packed us*8+code long makes "latest touch, clicks over
+      // views on ties" one integer window max on both engines
       """WITH ev AS (SELECT user_id, event_id, event_type, value,
                             epoch_us(ts) AS us
                      FROM events),
@@ -4066,10 +3381,12 @@ object SparkEntry {
                FROM t WHERE event_type = 'purchase')
          SELECT attributed_type, COUNT(*) AS n_purchases,
                 CAST(SUM(cents) AS BIGINT) AS revenue_cents
-         FROM p GROUP BY attributed_type""",
-    // q200: the oracle IS q199's batch SQL — the fifth bit-exact
-    // stream/batch parity statement
-    "q200_streaming_attribution" ->
+         FROM p GROUP BY attributed_type"""),
+    // q200: q199 as streaming per-user touch state (oracle = q199's
+    // batch SQL: the fifth bit-exact stream/batch parity statement)
+    QuerySpec("q200_streaming_attribution", EventTime.qStreamingAttribution _, Untimed,
+      // q200: the oracle IS q199's batch SQL — the fifth bit-exact
+      // stream/batch parity statement
       """WITH ev AS (SELECT user_id, event_id, event_type, value,
                             epoch_us(ts) AS us
                      FROM events),
@@ -4089,11 +3406,13 @@ object SparkEntry {
                FROM t WHERE event_type = 'purchase')
          SELECT attributed_type, COUNT(*) AS n_purchases,
                 CAST(SUM(cents) AS BIGINT) AS revenue_cents
-         FROM p GROUP BY attributed_type""",
-    // q201: rev_total/n_lines come from the DIRECT full join here,
-    // while Spark sums its three delta terms — the hash match proves
-    // the IVM decomposition equals the direct recompute cross-engine
-    "q201_delta_view" ->
+         FROM p GROUP BY attributed_type"""),
+    // q201: incremental join-view maintenance — delta-join terms whose
+    // sum the oracle checks against the DIRECT full-join recompute
+    QuerySpec("q201_delta_view", Relational.qDeltaView _, Timed,
+      // q201: rev_total/n_lines come from the DIRECT full join here,
+      // while Spark sums its three delta terms — the hash match proves
+      // the IVM decomposition equals the direct recompute cross-engine
       """WITH li AS (SELECT l_orderkey,
                             CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
                               AS BIGINT)
@@ -4126,11 +3445,12 @@ object SparkEntry {
          FROM tot t
          LEFT JOIN base USING (o_orderpriority)
          LEFT JOIN d1 USING (o_orderpriority)
-         LEFT JOIN d2 USING (o_orderpriority)""",
-    // q202: the oracle uses the direct range-join formulation — a
-    // DIFFERENT plan shape than Spark's contribution explode, so the
-    // hash match checks the semantics, not the same code twice
-    "q202_rolling_distinct" ->
+         LEFT JOIN d2 USING (o_orderpriority)"""),
+    // q202: rolling 7-day distinct users (contribution-explode form)
+    QuerySpec("q202_rolling_distinct", Relational.qRollingDistinct _, Timed,
+      // q202: the oracle uses the direct range-join formulation — a
+      // DIFFERENT plan shape than Spark's contribution explode, so the
+      // hash match checks the semantics, not the same code twice
       """WITH du AS (SELECT DISTINCT event_type, CAST(ts AS DATE) AS day,
                             user_id
                      FROM events),
@@ -4145,10 +3465,11 @@ object SparkEntry {
                    FROM du GROUP BY 1, 2)
          SELECT r.event_type, CAST(r.end_day AS VARCHAR) AS end_day,
                 rolling_users, n_users_today
-         FROM roll r JOIN today USING (event_type, end_day)""",
-    // q203: the '0c' cut is ⌊5·256/100⌋ = 12 as two lowercase hex
-    // chars — fixed-width lexicographic compare == numeric compare
-    "q203_join_sample" ->
+         FROM roll r JOIN today USING (event_type, end_day)"""),
+    // q203: join-consistent hash sample with scale-up audit
+    QuerySpec("q203_join_sample", (s, d) => Relational.qJoinSample(s, d), Timed,
+      // q203: the '0c' cut is ⌊5·256/100⌋ = 12 as two lowercase hex
+      // chars — fixed-width lexicographic compare == numeric compare
       """WITH li AS (SELECT l_orderkey,
                             CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
                               AS BIGINT)
@@ -4178,10 +3499,11 @@ object SparkEntry {
                            THEN CAST(rev_total_x1e4 AS DOUBLE)
                                 / CAST(rev_sampled_x1e4 AS DOUBLE)
                            ELSE 0.0 END, 6) AS scale_ratio
-         FROM f LEFT JOIN sp USING (o_orderpriority)""",
-    // q204: explicit windowed mode (native mode() leaves ties
-    // unspecified on both engines; smallest modal bucket wins here)
-    "q204_mode" ->
+         FROM f LEFT JOIN sp USING (o_orderpriority)"""),
+    // q204: MODE with an explicit smallest-bucket tie rule
+    QuerySpec("q204_mode", Relational.qMode _, Timed,
+      // q204: explicit windowed mode (native mode() leaves ties
+      // unspecified on both engines; smallest modal bucket wins here)
       """WITH c AS (SELECT event_type, CAST(FLOOR(value) AS BIGINT) AS bucket,
                            COUNT(*) AS n
                     FROM events GROUP BY 1, 2),
@@ -4193,19 +3515,22 @@ object SparkEntry {
                 m.modal_n AS modal_n, t.n_ties
          FROM c JOIN m USING (event_type) JOIN t USING (event_type)
          WHERE c.n = m.modal_n
-         GROUP BY c.event_type, m.modal_n, t.n_ties""",
-    // q205: both engines sort the collected list before slicing —
-    // the only reproducible string_agg
-    "q205_listagg" ->
+         GROUP BY c.event_type, m.modal_n, t.n_ties"""),
+    // q205: ordered string aggregation (deterministic LISTAGG)
+    QuerySpec("q205_listagg", Relational.qListAgg _, Timed,
+      // q205: both engines sort the collected list before slicing —
+      // the only reproducible string_agg
       """SELECT n_name, COUNT(*) AS n_customers,
                 array_to_string((list_sort(list(c_name)))[1:5], ',')
                   AS first5_names
          FROM customer JOIN nation ON c_nationkey = n_nationkey
-         GROUP BY n_name""",
-    // q206: the oracle's after-state comes from the DIRECT filtered
-    // join while Spark subtracts its retraction term — the hash match
-    // proves M - agg(delta) == re-derivation
-    "q206_retraction_view" ->
+         GROUP BY n_name"""),
+    // q206: retraction-aware view maintenance (the delete half of
+    // q201; oracle derives the after-state directly)
+    QuerySpec("q206_retraction_view", Relational.qRetractionView _, Timed,
+      // q206: the oracle's after-state comes from the DIRECT filtered
+      // join while Spark subtracts its retraction term — the hash match
+      // proves M - agg(delta) == re-derivation
       """WITH li AS (SELECT l_orderkey,
                             CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
                               AS BIGINT)
@@ -4224,10 +3549,11 @@ object SparkEntry {
          SELECT f.o_orderpriority, rev_full, rev_retracted,
                 COALESCE(rev_after, 0) AS rev_after,
                 COALESCE(n_lines_after, 0) AS n_lines_after
-         FROM f LEFT JOIN a USING (o_orderpriority)""",
-    // q207: rhs casts to VARCHAR only to unify the union's type — any
-    // injective representation preserves the distinct counts
-    "q207_fd_audit" ->
+         FROM f LEFT JOIN a USING (o_orderpriority)"""),
+    // q207: functional-dependency audit over declared candidate edges
+    QuerySpec("q207_fd_audit", Relational.qFdAudit _, Timed,
+      // q207: rhs casts to VARCHAR only to unify the union's type — any
+      // injective representation preserves the distinct counts
       """WITH pairs AS (
            SELECT 'o_orderkey->o_orderpriority' AS fd, o_orderkey AS l,
                   CAST(o_orderpriority AS VARCHAR) AS r FROM orders
@@ -4249,10 +3575,11 @@ object SparkEntry {
                 CAST(MAX(nr) AS BIGINT) AS max_rhs_per_lhs,
                 CAST(CASE WHEN SUM(CASE WHEN nr > 1 THEN 1 ELSE 0 END) = 0
                           THEN 1 ELSE 0 END AS BIGINT) AS fd_holds
-         FROM agg GROUP BY fd""",
-    // q208: HUGEINT sufficient sums; theta/rho2/adjusted means are
-    // final doubles written in the identical operation order
-    "q208_cuped" ->
+         FROM agg GROUP BY fd"""),
+    // q208: CUPED variance-reduced A/B readout (pooled theta/rho2)
+    QuerySpec("q208_cuped", Stats.qCuped _, Timed,
+      // q208: HUGEINT sufficient sums; theta/rho2/adjusted means are
+      // final doubles written in the identical operation order
       """WITH b AS (SELECT MIN(CAST(ts AS DATE))
                       + CAST(date_diff('day', MIN(CAST(ts AS DATE)),
                           MAX(CAST(ts AS DATE))) // 2 AS INT) AS pv
@@ -4299,10 +3626,12 @@ object SparkEntry {
                       / CAST(n_users AS DOUBLE) / 100.0, 6) AS mean_adjusted,
                 ROUND(theta, 6) AS theta,
                 ROUND(rho2, 4) AS rho2_pct
-         FROM arms, pt""",
-    // q209-q211: the classic shapes with exact integer revenue and
-    // total-order top-k cuts
-    "q209_shipping_priority" ->
+         FROM arms, pt"""),
+    // q209-q211: the recognized TPC-H probe shapes (Q3/Q10/Q14),
+    // determinized: integer revenue, key tie-breaks on the top-k cuts
+    QuerySpec("q209_shipping_priority", Relational.qShippingPriority _, Timed,
+      // q209-q211: the classic shapes with exact integer revenue and
+      // total-order top-k cuts
       """WITH li AS (SELECT l_orderkey,
                             CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
                               AS BIGINT)
@@ -4321,8 +3650,8 @@ object SparkEntry {
                  JOIN c ON o_custkey = c_custkey
          GROUP BY 1, 2, 3
          ORDER BY revenue_x1e4 DESC, l_orderkey
-         LIMIT 10""",
-    "q210_returned_items" ->
+         LIMIT 10"""),
+    QuerySpec("q210_returned_items", Relational.qReturnedItems _, Timed,
       """WITH li AS (SELECT l_orderkey,
                             CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
                               AS BIGINT)
@@ -4341,8 +3670,8 @@ object SparkEntry {
          FROM agg JOIN customer ON o_custkey = c_custkey
                   JOIN nation ON c_nationkey = n_nationkey
          ORDER BY lost_rev_x1e4 DESC, c_custkey
-         LIMIT 20""",
-    "q211_promo_share" ->
+         LIMIT 20"""),
+    QuerySpec("q211_promo_share", Relational.qPromoShare _, Timed,
       """WITH li AS (SELECT l_partkey,
                             CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
                               AS BIGINT)
@@ -4363,13 +3692,14 @@ object SparkEntry {
          SELECT ship_month, promo_x1e4, total_x1e4,
                 ROUND(CAST(promo_x1e4 AS DOUBLE)
                       / CAST(total_x1e4 AS DOUBLE), 6) AS promo_share
-         FROM agg""",
-    // q212: substring explode via nested LATERAL ranges; the top-V
-    // cut is totally ordered by (count desc, piece) and the single
-    // chars union in with identical counts, so UNION dedup is exact;
-    // the char union carries the same totally-ordered 2^16 coverage
-    // cap as the Spark side (SentencePiece character_coverage)
-    "q212_unigram_vocab" ->
+         FROM agg"""),
+    // q212: unigram-LM piece vocabulary (top-V + char coverage floor)
+    QuerySpec("q212_unigram_vocab", TextAnalysis.qUnigramVocab _, Timed,
+      // q212: substring explode via nested LATERAL ranges; the top-V
+      // cut is totally ordered by (count desc, piece) and the single
+      // chars union in with identical counts, so UNION dedup is exact;
+      // the char union carries the same totally-ordered 2^16 coverage
+      // cap as the Spark side (SentencePiece character_coverage)
       """WITH words AS (SELECT unnest(regexp_split_to_array(lower(text),
                           '\s+')) AS w
                         FROM documents),
@@ -4387,10 +3717,20 @@ object SparkEntry {
          chars AS (SELECT piece, n FROM counts WHERE len(piece) = 1
                    ORDER BY n DESC, piece LIMIT 65536)
          SELECT piece, n, CAST(len(piece) AS BIGINT) AS piece_len
-         FROM (SELECT * FROM top UNION SELECT * FROM chars)""",
-    // q215: both engines spell the rank window out — native
-    // percentile_disc implementations differ on tie/order edges
-    "q215_percentile_disc" ->
+         FROM (SELECT * FROM top UNION SELECT * FROM chars)"""),
+    // q213: Viterbi segmentation under the q212 model (rows-only:
+    // the DP is not SQL-expressible; UnigramSegmentSpec pins
+    // optimality, tie order, lossless concat, interpreted==codegen)
+    QuerySpec("q213_unigram_segment", TextAnalysis.qUnigramSegment _, Timed),
+    // q214: streaming distinct via HLL register state (rows-only;
+    // EngagementSpec pins streamed registers == batch build bit for
+    // bit — the sketch-state parity statement)
+    QuerySpec("q214_streaming_hll", EventTime.qStreamingHll _, Untimed),
+    // q215: discrete percentiles at integer ranks (actual data
+    // elements — the quantile family's disc verb)
+    QuerySpec("q215_percentile_disc", Stats.qPercentileDisc _, Timed,
+      // q215: both engines spell the rank window out — native
+      // percentile_disc implementations differ on tie/order edges
       """WITH r AS (SELECT event_type, value,
                            ROW_NUMBER() OVER (PARTITION BY event_type
                              ORDER BY value, event_id) AS rn,
@@ -4402,10 +3742,11 @@ object SparkEntry {
                   AS p90_disc,
                 MAX(CASE WHEN rn = (99 * n + 99) // 100 THEN value END)
                   AS p99_disc
-         FROM r GROUP BY event_type""",
-    // q216: weighted-endpoint integer interpolation (nonneg numerator
-    // so // == div); gate hashes per-type invariants, not the series
-    "q216_interpolate" ->
+         FROM r GROUP BY event_type"""),
+    // q216: linear-interpolation gap fill (q180 LOCF's sibling)
+    QuerySpec("q216_interpolate", Stats.qInterpolate _, Timed,
+      // q216: weighted-endpoint integer interpolation (nonneg numerator
+      // so // == div); gate hashes per-type invariants, not the series
       """WITH daily AS (SELECT event_type,
                                date_diff('day', DATE '1970-01-01',
                                  CAST(ts AS DATE)) AS t,
@@ -4449,10 +3790,11 @@ object SparkEntry {
                 CAST(SUM(interp) AS BIGINT) AS n_interpolated,
                 CAST(SUM(filled) AS BIGINT) AS sum_filled_cents,
                 CAST(SUM(filled * (t % 997)) AS BIGINT) AS pos_checksum
-         FROM f GROUP BY event_type""",
-    // q217: one user-keyed window gives first-seen/prev/next presence;
-    // weeks are epoch-day // 7 (nonnegative, so // matches div)
-    "q217_growth_accounting" ->
+         FROM f GROUP BY event_type"""),
+    // q217: MoM growth accounting (new/retained/resurrected/churned)
+    QuerySpec("q217_growth_accounting", Stats.qGrowthAccounting _, Timed,
+      // q217: one user-keyed window gives first-seen/prev/next presence;
+      // weeks are epoch-day // 7 (nonnegative, so // matches div)
       """WITH weekly AS (SELECT DISTINCT user_id,
                                 date_diff('day', DATE '1970-01-01',
                                   CAST(ts AS DATE)) // 7 AS widx
@@ -4482,10 +3824,11 @@ object SparkEntry {
                 CAST(SUM(is_ret) AS BIGINT) AS n_retained,
                 CAST(SUM(is_res) AS BIGINT) AS n_resurrected,
                 CAST(SUM(is_churn) AS BIGINT) AS n_churned_out
-         FROM fl GROUP BY widx""",
-    // q218: integer Σdau·1e4 div (days·wau) — the exact ratio, not a
-    // float mean of per-day ratios
-    "q218_stickiness" ->
+         FROM fl GROUP BY widx"""),
+    // q218: DAU/MAU stickiness in exact integers
+    QuerySpec("q218_stickiness", Stats.qStickiness _, Timed,
+      // q218: integer Σdau·1e4 div (days·wau) — the exact ratio, not a
+      // float mean of per-day ratios
       """WITH du AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day,
                             date_diff('day', DATE '1970-01-01',
                               CAST(ts AS DATE)) // 7 AS widx
@@ -4502,10 +3845,11 @@ object SparkEntry {
                 n_days, wau, sum_dau,
                 CAST(sum_dau * 10000 // (n_days * wau) AS BIGINT)
                   AS stickiness_bp
-         FROM dm JOIN wau USING (widx)""",
-    // q219: HUGEINT-widened ppm (rev * 1e6 tops BIGINT); rank with a
-    // name tie-break is a total order
-    "q219_region_share" ->
+         FROM dm JOIN wau USING (widx)"""),
+    // q219: ratio-to-report + in-group rank over one region window
+    QuerySpec("q219_region_share", Relational.qRegionShare _, Timed,
+      // q219: HUGEINT-widened ppm (rev * 1e6 tops BIGINT); rank with a
+      // name tie-break is a total order
       """WITH li AS (SELECT l_orderkey,
                             CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
                               AS BIGINT)
@@ -4531,10 +3875,11 @@ object SparkEntry {
                 CAST(CAST(rev_x1e4 AS HUGEINT) * 1000000
                      // region_total_x1e4 AS BIGINT) AS share_ppm,
                 rank_in_region
-         FROM w""",
-    // q220: the 2*cum >= total crossing is pure integer comparison;
-    // token weights use the q22-proven split parity
-    "q220_weighted_median" ->
+         FROM w"""),
+    // q220: token-weighted median doc length vs the unweighted median
+    QuerySpec("q220_weighted_median", Stats.qWeightedMedian _, Timed,
+      // q220: the 2*cum >= total crossing is pure integer comparison;
+      // token weights use the q22-proven split parity
       """WITH docs AS (SELECT source, doc_id, n_chars,
                              CAST(len(string_split_regex(text, '\s+'))
                                AS BIGINT) AS w
@@ -4555,10 +3900,11 @@ object SparkEntry {
                   AS BIGINT) AS wmedian_chars,
                 CAST(MAX(CASE WHEN rn = (n + 1) // 2 THEN n_chars END)
                   AS BIGINT) AS median_chars
-         FROM wnd GROUP BY source""",
-    // q221: (v-mn)*10 // (mx-mn+1) — nonnegative integers, +1 keeps
-    // the max inside bin 9
-    "q221_equiwidth_hist" ->
+         FROM wnd GROUP BY source"""),
+    // q221: equi-width histogram (fixed-width numeric profiling)
+    QuerySpec("q221_equiwidth_hist", Stats.qEquiWidthHist _, Timed,
+      // q221: (v-mn)*10 // (mx-mn+1) — nonnegative integers, +1 keeps
+      // the max inside bin 9
       """WITH ev AS (SELECT event_type,
                             CAST(ROUND(value * 100, 0) AS BIGINT) AS v
                      FROM events),
@@ -4569,9 +3915,10 @@ object SparkEntry {
                 COUNT(*) AS n,
                 MIN(v) AS lo_cents, MAX(v) AS hi_cents
          FROM ev JOIN mm USING (event_type)
-         GROUP BY 1, 2""",
-    // q222: total vs distinct full rows per table
-    "q222_duplicate_rows" ->
+         GROUP BY 1, 2"""),
+    // q222: full-row duplicate audit per table
+    QuerySpec("q222_duplicate_rows", Stats.qDuplicateRows _, Timed,
+      // q222: total vs distinct full rows per table
       """SELECT 'events' AS table_name, COUNT(*) AS n_rows,
                 (SELECT COUNT(*) FROM (SELECT DISTINCT * FROM events))
                   AS n_distinct,
@@ -4596,10 +3943,11 @@ object SparkEntry {
                 (SELECT COUNT(*) FROM (SELECT DISTINCT * FROM documents)),
                 COUNT(*) - (SELECT COUNT(*)
                             FROM (SELECT DISTINCT * FROM documents))
-         FROM documents""",
-    // q223: HUGEINT sufficient sums; denominators convert to double
-    // BEFORE multiplying (their product exceeds 38 digits)
-    "q223_corr_matrix" ->
+         FROM documents"""),
+    // q223: pairwise Pearson matrix from exact decimal sums, one scan
+    QuerySpec("q223_corr_matrix", Stats.qCorrMatrix _, Timed,
+      // q223: HUGEINT sufficient sums; denominators convert to double
+      // BEFORE multiplying (their product exceeds 38 digits)
       """WITH b AS (SELECT CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100
                              AS HUGEINT) AS x,
                            CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
@@ -4638,12 +3986,15 @@ object SparkEntry {
                 ROUND(CASE WHEN vy > 0 AND vz > 0
                            THEN cyz / SQRT(vy) / SQRT(vz)
                            ELSE 0.0 END, 6)
-         FROM rr""",
-    // q224: the incrementally-maintained view must equal the direct
-    // from-scratch recompute — full lineitem join against the orders
-    // that survive the replay's final-batch deletes (key%13=0 orders
-    // inserted before the final batch, i.e. key%3 <> 2)
-    "q224_streaming_view" ->
+         FROM rr"""),
+    // q224: foreachBatch incremental materialized JOIN view over a
+    // 3-batch CDC replay (q201's insert algebra + q206's retraction);
+    // oracle recomputes the view from scratch — the sixth parity
+    QuerySpec("q224_streaming_view", graft.streaming.DeltaView.qStreamingView _, Untimed,
+      // q224: the incrementally-maintained view must equal the direct
+      // from-scratch recompute — full lineitem join against the orders
+      // that survive the replay's final-batch deletes (key%13=0 orders
+      // inserted before the final batch, i.e. key%3 <> 2)
       """WITH li AS (SELECT l_orderkey,
                             CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
                               AS BIGINT)
@@ -4655,10 +4006,16 @@ object SparkEntry {
          SELECT o_orderpriority, CAST(SUM(rev) AS BIGINT) AS rev_x1e4,
                 COUNT(*) AS n_lines
          FROM li JOIN o ON l_orderkey = o_orderkey
-         GROUP BY 1""",
-    // q226: TPC-H Q5 — the cycle constraint c_nationkey = s_nationkey
-    // rides the supplier join on both engines
-    "q226_local_supplier_volume" ->
+         GROUP BY 1"""),
+    // q225: the RAG retrieval pipeline end to end — chunk → embedding
+    // gate → persisted IVF-PQ retrieve → RRF with chunk-BM25 → NDCG
+    // audit (rows-only: the ANN leg is approximate; RagPipelineSpec)
+    QuerySpec("q225_rag_pipeline", (s, d) => Similarity.qRagPipeline(s, d), Timed),
+    // q226: TPC-H Q5 shape — the 6-table cycle join (customer nation
+    // = supplier nation inside one region)
+    QuerySpec("q226_local_supplier_volume", Relational.qLocalSupplierVolume _, Timed,
+      // q226: TPC-H Q5 — the cycle constraint c_nationkey = s_nationkey
+      // rides the supplier join on both engines
       """SELECT n_name,
                 CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
                            AS BIGINT)
@@ -4674,10 +4031,12 @@ object SparkEntry {
          JOIN region ON n_regionkey = r_regionkey
          WHERE r_name = 'ASIA'
            AND o_orderdate >= '1996-01-01' AND o_orderdate < '1997-01-01'
-         GROUP BY n_name""",
-    // q227: TPC-H Q21 shape — EXISTS/NOT-EXISTS as one per-order
-    // rollup: late ∧ n_supp ≥ 2 ∧ n_late = 1
-    "q227_waiting_suppliers" ->
+         GROUP BY n_name"""),
+    // q227: TPC-H Q21 shape — the EXISTS/NOT-EXISTS pair rewritten as
+    // one per-order eager-aggregation rollup
+    QuerySpec("q227_waiting_suppliers", Relational.qWaitingSuppliers _, Timed,
+      // q227: TPC-H Q21 shape — EXISTS/NOT-EXISTS as one per-order
+      // rollup: late ∧ n_supp ≥ 2 ∧ n_late = 1
       """WITH lo AS (
            SELECT l_orderkey, l_suppkey,
                   CASE WHEN l_shipdate > o_orderdate + INTERVAL 60 DAY
@@ -4698,11 +4057,13 @@ object SparkEntry {
                 JOIN nation ON s_nationkey = n_nationkey
          GROUP BY 1, 2
          ORDER BY wait_orders DESC, s_name
-         LIMIT 20""",
-    // q228: TPC-H Q2 shape — the same packed-BIGINT argmin (shift
-    // keeps the balance component nonnegative; % and div then agree
-    // with Spark's % and div on both engines)
-    "q228_min_cost_supplier" ->
+         LIMIT 20"""),
+    // q228: TPC-H Q2 shape — correlated scalar-MIN as a packed-BIGINT
+    // argmin rollup
+    QuerySpec("q228_min_cost_supplier", Relational.qMinCostSupplier _, Timed,
+      // q228: TPC-H Q2 shape — the same packed-BIGINT argmin (shift
+      // keeps the balance component nonnegative; % and div then agree
+      // with Spark's % and div on both engines)
       """WITH eur AS (
            SELECT s_suppkey, s_name, n_name,
                   CAST(CAST(s_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -4727,11 +4088,12 @@ object SparkEntry {
          FROM un JOIN eur ON best_suppkey = s_suppkey
                  JOIN part ON l_partkey = p_partkey
          ORDER BY best_bal_cents DESC, best_suppkey, p_partkey
-         LIMIT 100""",
-    // q229: doubled ranks keep the tie-averaged rank sums in BIGINT;
-    // the variance widens to HUGEINT (mirrors Spark's DECIMAL(38,0));
-    // z is the one double, spelled identically
-    "q229_mann_whitney" ->
+         LIMIT 100"""),
+    // q229: Mann–Whitney U rank test per event type vs 'view'
+    QuerySpec("q229_mann_whitney", Stats.qMannWhitney _, Timed,
+      // q229: doubled ranks keep the tie-averaged rank sums in BIGINT;
+      // the variance widens to HUGEINT (mirrors Spark's DECIMAL(38,0));
+      // z is the one double, spelled identically
       """WITH ev AS (SELECT event_type,
                             CAST(ROUND(value * 100, 0) AS BIGINT) AS v
                      FROM events),
@@ -4769,13 +4131,14 @@ object SparkEntry {
                     * SQRT(3.0 * CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE))
                     / SQRT(CAST(var12 AS DOUBLE))
                   ELSE 0.0 END, 6) AS z_score
-         FROM fin""",
-    // q230: the literal proxy score (list functions only in
-    // len()/pure-map positions — the audited-stable class); the label
-    // is the length proxy n_chars ≥ 300 (this fixture's text is a
-    // uniform word bag with lang independent of it, so a language
-    // label would be flat by construction)
-    "q230_calibration" ->
+         FROM fin"""),
+    // q230: calibration curve for the literal EN-stopword score
+    QuerySpec("q230_calibration", Stats.qCalibration _, Timed,
+      // q230: the literal proxy score (list functions only in
+      // len()/pure-map positions — the audited-stable class); the label
+      // is the length proxy n_chars ≥ 300 (this fixture's text is a
+      // uniform word bag with lang independent of it, so a language
+      // label would be flat by construction)
       """WITH sc AS (
            SELECT doc_id,
                   CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END AS is_pos,
@@ -4803,10 +4166,11 @@ object SparkEntry {
                   AS avg_score_milli,
                 CAST(MIN(score_milli) AS BIGINT) AS min_score,
                 CAST(MAX(score_milli) AS BIGINT) AS max_score
-         FROM ranked GROUP BY 1""",
-    // q231: thresholds, cuts and counts all ride the score-domain
-    // rollup; the pick-1 row per k is the highest qualifying score
-    "q231_pr_curve" ->
+         FROM ranked GROUP BY 1"""),
+    // q231: precision/recall threshold sweep over the same score
+    QuerySpec("q231_pr_curve", Stats.qPrCurve _, Timed,
+      // q231: thresholds, cuts and counts all ride the score-domain
+      // rollup; the pick-1 row per k is the highest qualifying score
       """WITH sc AS (
            SELECT CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END AS is_pos,
                   n_toks * 100 + hits * 10 + dhits AS score_milli
@@ -4849,10 +4213,11 @@ object SparkEntry {
                         THEN 2 * precision_ppm * recall_ppm
                              // (precision_ppm + recall_ppm)
                         ELSE 0 END AS BIGINT) AS f1_ppm
-         FROM pts""",
-    // q232: doubled tie-averaged ranks on the score-domain rollup;
-    // the ppm division widened to HUGEINT (mirrors Spark's DECIMAL)
-    "q232_roc_auc" ->
+         FROM pts"""),
+    // q232: exact tie-corrected ROC AUC from the q229 rank identity
+    QuerySpec("q232_roc_auc", Stats.qRocAuc _, Timed,
+      // q232: doubled tie-averaged ranks on the score-domain rollup;
+      // the ppm division widened to HUGEINT (mirrors Spark's DECIMAL)
       """WITH sc AS (
            SELECT CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END AS is_pos,
                   n_toks * 100 + hits * 10 + dhits AS score_milli
@@ -4886,11 +4251,12 @@ object SparkEntry {
          SELECT CAST(n_pos AS BIGINT) AS n_pos, CAST(n_neg AS BIGINT) AS n_neg,
                 CAST(two_u AS BIGINT) AS two_u, auc_ppm,
                 2 * auc_ppm - 1000000 AS gini_ppm
-         FROM fin""",
-    // q233: global doubled ranks on the value domain; H is the one
-    // final double folded from exact integer group sums (q183
-    // precedent), spelled identically on both engines
-    "q233_kruskal_wallis" ->
+         FROM fin"""),
+    // q233: Kruskal–Wallis k-group rank test across event types
+    QuerySpec("q233_kruskal_wallis", Stats.qKruskalWallis _, Timed,
+      // q233: global doubled ranks on the value domain; H is the one
+      // final double folded from exact integer group sums (q183
+      // precedent), spelled identically on both engines
       """WITH ev AS (SELECT event_type,
                             CAST(ROUND(value * 100, 0) AS BIGINT) AS v
                      FROM events),
@@ -4919,10 +4285,11 @@ object SparkEntry {
          SELECT event_type, CAST(n_i AS BIGINT) AS n_i,
                 CAST(two_r AS BIGINT) AS two_r, CAST(n AS BIGINT) AS n,
                 CAST(tie_term AS BIGINT) AS tie_term, h_stat
-         FROM pg, gl, h""",
-    // q234: exact integer sufficient statistics (Σv² widened); t and
-    // the Welch–Satterthwaite df are the two final doubles
-    "q234_welch_t" ->
+         FROM pg, gl, h"""),
+    // q234: Welch's unequal-variance t-test per event type vs 'view'
+    QuerySpec("q234_welch_t", Stats.qWelchT _, Timed,
+      // q234: exact integer sufficient statistics (Σv² widened); t and
+      // the Welch–Satterthwaite df are the two final doubles
       """WITH ev AS (SELECT event_type,
                             CAST(ROUND(value * 100, 0) AS BIGINT) AS v
                      FROM events),
@@ -4958,10 +4325,11 @@ object SparkEntry {
                       / (va * va / (CAST(n1 AS DOUBLE) - 1.0)
                          + vb * vb / (CAST(n2 AS DOUBLE) - 1.0)), 4)
                   AS welch_df
-         FROM fin""",
-    // q235: the correlated scalar-AVG cross-multiplied into integers
-    // (5·qty·n < Σqty — no float average exists on either engine)
-    "q235_small_qty_revenue" ->
+         FROM fin"""),
+    // q235: TPC-H Q17 shape — correlated scalar-AVG, cross-multiplied
+    QuerySpec("q235_small_qty_revenue", Relational.qSmallQtyRevenue _, Timed,
+      // q235: the correlated scalar-AVG cross-multiplied into integers
+      // (5·qty·n < Σqty — no float average exists on either engine)
       """WITH pts AS (SELECT p_partkey FROM part
                       WHERE p_brand = 'Brand#1'),
          li AS (SELECT l_partkey,
@@ -4979,18 +4347,20 @@ object SparkEntry {
                 CAST(COUNT(DISTINCT li.l_partkey) AS BIGINT) AS n_parts,
                 CAST(SUM(rev) AS BIGINT) AS small_rev_x1e4
          FROM li JOIN pp ON li.l_partkey = pp.l_partkey
-         WHERE 5 * qty_c * n_lines < sum_qty_c""",
-    // q236: the LEFT join is the point — k = 0 customers must appear
-    "q236_cust_order_distribution" ->
+         WHERE 5 * qty_c * n_lines < sum_qty_c"""),
+    // q236: TPC-H Q13 shape — left-outer-join count distribution
+    QuerySpec("q236_cust_order_distribution", Relational.qCustOrderDistribution _, Timed,
+      // q236: the LEFT join is the point — k = 0 customers must appear
       """WITH cnt AS (
            SELECT c_custkey, COUNT(o_orderkey) AS c_count
            FROM customer LEFT JOIN orders
              ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
            GROUP BY 1)
-         SELECT c_count, COUNT(*) AS custdist FROM cnt GROUP BY 1""",
-    // q237: HAVING vs the global mean, cross-multiplied
-    // (value·n_parts·10 > total·12)
-    "q237_important_stock" ->
+         SELECT c_count, COUNT(*) AS custdist FROM cnt GROUP BY 1"""),
+    // q237: TPC-H Q11 shape — HAVING vs a global scalar, exact
+    QuerySpec("q237_important_stock", Relational.qImportantStock _, Timed,
+      // q237: HAVING vs the global mean, cross-multiplied
+      // (value·n_parts·10 > total·12)
       """WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
          v AS (SELECT l_partkey,
                       SUM(CAST(CAST(s_acctbal AS DECIMAL(18,2)) * 100
@@ -5005,10 +4375,11 @@ object SparkEntry {
          FROM v, t
          WHERE value_cents * n_parts * 10 > total_cents * 12
          ORDER BY value_cents DESC, l_partkey
-         LIMIT 100""",
-    // q238: global positive-balance average cross-multiplied
-    // (bal·n > Σbal); the NOT EXISTS is the anti join
-    "q238_dormant_high_value" ->
+         LIMIT 100"""),
+    // q238: TPC-H Q22 shape — global-avg filter + anti join by nation
+    QuerySpec("q238_dormant_high_value", Relational.qDormantHighValue _, Timed,
+      // q238: global positive-balance average cross-multiplied
+      // (bal·n > Σbal); the NOT EXISTS is the anti join
       """WITH pa AS (SELECT SUM(CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100
                               AS BIGINT)) AS pos_sum,
                             COUNT(*) AS pos_n
@@ -5023,10 +4394,11 @@ object SparkEntry {
          WHERE CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
                  * pos_n > pos_sum
            AND NOT EXISTS (SELECT 1 FROM rec WHERE o_custkey = c_custkey)
-         GROUP BY 1""",
-    // q239: IN-over-grouped-HAVING via eager aggregation; top-100
-    // under the (qty, orderkey) total order
-    "q239_large_volume_customer" ->
+         GROUP BY 1"""),
+    // q239: TPC-H Q18 shape — IN-over-grouped-HAVING via eager agg
+    QuerySpec("q239_large_volume_customer", Relational.qLargeVolumeCustomer _, Timed,
+      // q239: IN-over-grouped-HAVING via eager aggregation; top-100
+      // under the (qty, orderkey) total order
       """WITH big AS (
            SELECT l_orderkey,
                   SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100
@@ -5039,10 +4411,11 @@ object SparkEntry {
          FROM big JOIN orders ON l_orderkey = o_orderkey
                   JOIN customer ON o_custkey = c_custkey
          ORDER BY sum_qty_c DESC, o_orderkey
-         LIMIT 100""",
-    // q240: the nested semi-join chain; majority cross-multiplied
-    // (2·pair > part total)
-    "q240_excess_shippers" ->
+         LIMIT 100"""),
+    // q240: TPC-H Q20 shape — nested semi-join chain, majority shipper
+    QuerySpec("q240_excess_shippers", Relational.qExcessShippers _, Timed,
+      // q240: the nested semi-join chain; majority cross-multiplied
+      // (2·pair > part total)
       """WITH li AS (
            SELECT l_partkey, l_suppkey,
                   CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -5065,10 +4438,21 @@ object SparkEntry {
                 CAST(SUM(dominated_qty_c) AS BIGINT) AS dominated_qty_c
          FROM ps JOIN supplier ON l_suppkey = s_suppkey
                  JOIN nation ON s_nationkey = n_nationkey
-         GROUP BY 1""",
-    // q243: every numerator/denominator exact integer; each cell a
-    // FLOORED ppm division widened to HUGEINT, the statistic their sum
-    "q243_chi_square" ->
+         GROUP BY 1"""),
+    // q241: greedy WordPiece segmentation — the third tokenizer
+    // algorithm (rows-only: the vocab cut matches q212's gate;
+    // WordpieceSegmentSpec pins greedy ≡ brute force, interp ≡ codegen)
+    QuerySpec("q241_wordpiece_segment", TextAnalysis.qWordpieceSegment _, Timed),
+    // q242: streaming Count-Min counter state — the seventh bit-exact
+    // stream/batch parity, second sketch-state member (rows-only:
+    // Murmur hashing is not SQL-expressible; EngagementSpec asserts
+    // the streamed matrices equal the batch build bit for bit)
+    QuerySpec("q242_streaming_cms", EventTime.qStreamingCms _, Untimed),
+    // q243: chi-square independence statistic (exact floored-ppm
+    // integer arithmetic) completing q159's contingency audit
+    QuerySpec("q243_chi_square", Stats.qChiSquare _, Timed,
+      // q243: every numerator/denominator exact integer; each cell a
+      // FLOORED ppm division widened to HUGEINT, the statistic their sum
       """WITH cells AS (SELECT lang, source, COUNT(*) AS o
                         FROM documents GROUP BY 1, 2),
          r AS (SELECT lang, SUM(o) AS r FROM cells GROUP BY 1),
@@ -5086,10 +4470,12 @@ object SparkEntry {
                      * ((SELECT COUNT(*) FROM c) - 1) AS BIGINT) AS dof,
                 CAST((SELECT SUM(cell_ppm) FROM contrib) AS BIGINT)
                   AS chi2_ppm
-         FROM t""",
-    // q244: exact per-group (n, Σv) + widened Σv²; F is the one final
-    // double, spelled identically
-    "q244_anova_f" ->
+         FROM t"""),
+    // q244: one-way ANOVA F across event types from exact per-group
+    // sufficient statistics
+    QuerySpec("q244_anova_f", Stats.qAnovaF _, Timed,
+      // q244: exact per-group (n, Σv) + widened Σv²; F is the one final
+      // double, spelled identically
       """WITH ev AS (SELECT event_type,
                             CAST(ROUND(value * 100, 0) AS BIGINT) AS v
                      FROM events),
@@ -5112,12 +4498,15 @@ object SparkEntry {
          SELECT event_type, CAST(n_i AS BIGINT) AS n_i,
                 CAST(s_i AS BIGINT) AS sum_cents,
                 CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k, f_stat
-         FROM g, fs""",
-    // q245: the oracle recomputes the streamed KMV state's readout
-    // from scratch — bottom-16 of the distinct md5 domain per type,
-    // the k-th hash verbatim (the bit-exactness witness) and the
-    // (k−1)/h_(k) estimate spelled as in KmvSketch.finish
-    "q245_streaming_kmv" ->
+         FROM g, fs"""),
+    // q245: streaming KMV bottom-k distinct state — the EIGHTH
+    // bit-exact stream/batch parity, and the one sketch whose
+    // estimator the oracle can recompute exactly
+    QuerySpec("q245_streaming_kmv", EventTime.qStreamingKmv _, Untimed,
+      // q245: the oracle recomputes the streamed KMV state's readout
+      // from scratch — bottom-16 of the distinct md5 domain per type,
+      // the k-th hash verbatim (the bit-exactness witness) and the
+      // (k−1)/h_(k) estimate spelled as in KmvSketch.finish
       """WITH u AS (SELECT DISTINCT event_type,
                            md5(CAST(user_id AS VARCHAR)) AS h
                     FROM events),
@@ -5139,10 +4528,11 @@ object SparkEntry {
                                    / 1152921504606846976.0)
                 END AS kmv_estimate
          FROM agg a JOIN n USING (event_type)
-         LEFT JOIN kth k USING (event_type)""",
-    // q246: V = sqrt(chi2/(N·min(r−1,c−1))) — chi2 is q243's exact
-    // floored-ppm integer sum, V the one final double
-    "q246_cramers_v" ->
+         LEFT JOIN kth k USING (event_type)"""),
+    // q246: Cramér's V effect size over q243's exact chi-square
+    QuerySpec("q246_cramers_v", Stats.qCramersV _, Timed,
+      // q246: V = sqrt(chi2/(N·min(r−1,c−1))) — chi2 is q243's exact
+      // floored-ppm integer sum, V the one final double
       """WITH cells AS (SELECT lang, source, COUNT(*) AS o
                         FROM documents GROUP BY 1, 2),
          r AS (SELECT lang, SUM(o) AS r FROM cells GROUP BY 1),
@@ -5163,11 +4553,13 @@ object SparkEntry {
                 ROUND(sqrt(CAST(agg.chi2_ppm AS DOUBLE) / 1000000.0
                            / (CAST(t.n AS DOUBLE) * CAST(dims.m AS DOUBLE))),
                       6) AS cramers_v
-         FROM t, agg, dims""",
-    // q247: kappa's exact rational — marginal products over the UNION
-    // of label spaces, widened to HUGEINT; the predictor restates
-    // q21's stopword-overlap argmax without list_intersect
-    "q247_cohen_kappa" ->
+         FROM t, agg, dims"""),
+    // q247: Cohen's kappa — predictor-vs-label agreement as an exact
+    // rational up to one final double
+    QuerySpec("q247_cohen_kappa", Stats.qCohenKappa _, Timed,
+      // q247: kappa's exact rational — marginal products over the UNION
+      // of label spaces, widened to HUGEINT; the predictor restates
+      // q21's stopword-overlap argmax without list_intersect
       """WITH tok AS (SELECT doc_id,
                              unnest(list_distinct(
                                string_split_regex(lower(text), '\s+'))) AS t
@@ -5204,10 +4596,12 @@ object SparkEntry {
                            - pe_num AS DOUBLE)
                       / CAST(CAST(n AS HUGEINT) * CAST(n AS HUGEINT)
                              - pe_num AS DOUBLE), 6) AS kappa
-         FROM tot, pe""",
-    // q248: exact lower median off the value-domain rollup
-    // (2·cum ≥ n), then q244's F fold on absolute deviations
-    "q248_levene" ->
+         FROM tot, pe"""),
+    // q248: Brown–Forsythe variance-homogeneity test on exact
+    // value-domain medians
+    QuerySpec("q248_levene", Stats.qLevene _, Timed,
+      // q248: exact lower median off the value-domain rollup
+      // (2·cum ≥ n), then q244's F fold on absolute deviations
       """WITH ev AS (SELECT event_type,
                             CAST(ROUND(value * 100, 0) AS BIGINT) AS v
                      FROM events),
@@ -5243,10 +4637,11 @@ object SparkEntry {
                 CAST(g.med AS BIGINT) AS med_cents,
                 CAST(g.s_i AS BIGINT) AS sum_absdev,
                 CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k, w_stat
-         FROM g, fs""",
-    // q249: per-lag Pearson sufficient statistics as exact integers
-    // (HUGEINT-widened products), r the one final double
-    "q249_cross_correlation" ->
+         FROM g, fs"""),
+    // q249: lagged cross-correlation of daily volume vs revenue
+    QuerySpec("q249_cross_correlation", Stats.qCrossCorrelation(_, _), Timed,
+      // q249: per-lag Pearson sufficient statistics as exact integers
+      // (HUGEINT-widened products), r the one final double
       """WITH daily AS (SELECT CAST(ts AS DATE) AS day, COUNT(*) AS x,
                                SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS y
                         FROM events GROUP BY 1),
@@ -5268,10 +4663,11 @@ object SparkEntry {
                              * CAST(CAST(n_days AS HUGEINT) * sbb
                                     - CAST(sb AS HUGEINT) * sb AS DOUBLE)),
                       6) AS ccf
-         FROM g""",
-    // q250: exact absolute-error sums over calendar-matched pairs;
-    // the scaled MAE ratio is the one final double
-    "q250_seasonal_error" ->
+         FROM g"""),
+    // q250: seasonal-naive vs naive forecast error (MASE)
+    QuerySpec("q250_seasonal_error", Stats.qSeasonalError _, Timed,
+      // q250: exact absolute-error sums over calendar-matched pairs;
+      // the scaled MAE ratio is the one final double
       """WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
                                COUNT(*) AS y
                         FROM events GROUP BY 1, 2),
@@ -5291,12 +4687,14 @@ object SparkEntry {
                 ROUND((CAST(sae7 AS DOUBLE) / CAST(n7 AS DOUBLE))
                       / (CAST(sae1 AS DOUBLE) / CAST(n1 AS DOUBLE)), 6)
                   AS mase
-         FROM e1 JOIN e7 USING (event_type)""",
-    // q251: the oracle mirrors the capped wedge rule exactly
-    // (row_number ≤ 64 per middle node, neighbors id-ascending);
-    // degrees full-graph; NOT EXISTS instead of ANTI JOIN for
-    // portability
-    "q251_link_prediction" ->
+         FROM e1 JOIN e7 USING (event_type)"""),
+    // q251: common-neighbor/Jaccard link prediction on the
+    // co-purchase graph — exact integer scores, capped wedges
+    QuerySpec("q251_link_prediction", (s, d) => Graph.qLinkPrediction(s, d), Timed,
+      // q251: the oracle mirrors the capped wedge rule exactly
+      // (row_number ≤ 64 per middle node, neighbors id-ascending);
+      // degrees full-graph; NOT EXISTS instead of ANTI JOIN for
+      // portability
       """WITH li AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
                      FROM lineitem),
          e AS (SELECT DISTINCT a.p AS u, b.p AS v
@@ -5321,11 +4719,13 @@ object SparkEntry {
                 CAST(ne.cn * 1000000 // (da.dg + db.dg - ne.cn) AS BIGINT)
                   AS jaccard_ppm
          FROM ne JOIN deg da ON da.u = ne.a JOIN deg db ON db.u = ne.b
-         ORDER BY jaccard_ppm DESC, cn DESC, a, b LIMIT 20""",
-    // q252: the oracle takes the 32× explode formulation (same math,
-    // deliberately different plan than the one-pass conditional
-    // aggregates); hash-bit membership off the md5 prefix
-    "q252_subsample_ci" ->
+         ORDER BY jaccard_ppm DESC, cn DESC, a, b LIMIT 20"""),
+    // q252: deterministic half-sample replication CI (hash-bit
+    // membership, one-pass conditional aggregates)
+    QuerySpec("q252_subsample_ci", (s, d) => Stats.qSubsampleCi(s, d), Timed,
+      // q252: the oracle takes the 32× explode formulation (same math,
+      // deliberately different plan than the one-pass conditional
+      // aggregates); hash-bit membership off the md5 prefix
       """WITH ev AS (SELECT event_type,
                             CAST(ROUND(value * 100, 0) AS BIGINT) AS v,
                             CAST('0x' || substr(md5(CAST(event_id AS VARCHAR)),
@@ -5352,10 +4752,16 @@ object SparkEntry {
                   AS mean,
                 ROUND(sel.lo / 100.0, 6) AS ci_lo,
                 ROUND(sel.hi / 100.0, 6) AS ci_hi
-         FROM tot t JOIN sel USING (event_type)""",
-    // q254: q32's brute-force device plus the label-inequality
-    // predicate — double cosine, vec_id ties, rank ≤ 10
-    "q254_hard_negatives" ->
+         FROM tot t JOIN sel USING (event_type)"""),
+    // q253: determinized synchronous label-propagation communities
+    QuerySpec("q253_label_propagation", (s, d) => Graph.qLabelPropagation(s, d), Timed,
+      // q253: 5 synchronous LPA rounds unrolled; plurality vote with
+      // min-label ties = windowed max + MIN(label), all-integer
+      lpaOracle),
+    // q254: hard-negative mining (closest different-label vectors)
+    QuerySpec("q254_hard_negatives", (s, d) => Similarity.qHardNegatives(s, d), Timed,
+      // q254: q32's brute-force device plus the label-inequality
+      // predicate — double cosine, vec_id ties, rank ≤ 10
       """WITH q AS (SELECT vec_id AS query_id, label AS q_label,
                            embedding::DOUBLE[] AS q_emb
                     FROM embeddings WHERE vec_id < 5)
@@ -5369,10 +4775,11 @@ object SparkEntry {
                   ROUND(list_cosine_similarity(q.q_emb,
                           c.embedding::DOUBLE[]), 4) AS cosine
            FROM q, embeddings c WHERE c.label <> q.q_label)
-         WHERE rank <= 10""",
-    // q255: zero-filled grid, p·ln(p/m) terms guarded at the zero
-    // limit, ≤2·|langs| term fold per pair
-    "q255_jsd_matrix" ->
+         WHERE rank <= 10"""),
+    // q255: pairwise source-mix Jensen–Shannon divergence
+    QuerySpec("q255_jsd_matrix", Stats.qJsDivergence _, Timed,
+      // q255: zero-filled grid, p·ln(p/m) terms guarded at the zero
+      // limit, ≤2·|langs| term fold per pair
       """WITH cells AS (SELECT source, lang, COUNT(*) AS c
                         FROM documents GROUP BY 1, 2),
          grid AS (SELECT s.source, l.lang, coalesce(c.c, 0) AS c
@@ -5401,11 +4808,13 @@ object SparkEntry {
                                / 2.0))
                      ELSE 0.0 END)) / 2.0, 6) AS jsd_nats
          FROM g a JOIN g b ON a.lang = b.lang AND a.source < b.source
-         GROUP BY 1, 2""",
-    // q256: the oracle recomputes the whole sketch algebra from
-    // scratch — per-type bottom-16 via window ranks, merged-union
-    // ranks per pair, sketch-membership match counts, q87's estimator
-    "q256_kmv_set_algebra" ->
+         GROUP BY 1, 2"""),
+    // q256: KMV sketch set algebra — union/Jaccard estimates for
+    // every type pair from O(k) state, exact audit leg beside them
+    QuerySpec("q256_kmv_set_algebra", (s, d) => Pipeline.qKmvSetAlgebra(s, d), Timed,
+      // q256: the oracle recomputes the whole sketch algebra from
+      // scratch — per-type bottom-16 via window ranks, merged-union
+      // ranks per pair, sketch-membership match counts, q87's estimator
       """WITH u AS (SELECT DISTINCT event_type AS t,
                            md5(CAST(user_id AS VARCHAR)) AS h
                     FROM events),
@@ -5450,10 +4859,11 @@ object SparkEntry {
          JOIN nd nb ON nb.t = p.tb
          LEFT JOIN inter i ON i.ta = p.ta AND i.tb = p.tb
          JOIN kth k ON k.ta = p.ta AND k.tb = p.tb
-         LEFT JOIN mt ON mt.ta = p.ta AND mt.tb = p.tb""",
-    // q257: 80/20 md5-prefix split, add-1 unigram LM on train,
-    // per-source held-out NLL/token + OOV over test
-    "q257_heldout_perplexity" ->
+         LEFT JOIN mt ON mt.ta = p.ta AND mt.tb = p.tb"""),
+    // q257: held-out unigram perplexity (80/20 hash split, add-1)
+    QuerySpec("q257_heldout_perplexity", TextAnalysis.qHeldoutPerplexity _, Timed,
+      // q257: 80/20 md5-prefix split, add-1 unigram LM on train,
+      // per-source held-out NLL/token + OOV over test
       """WITH tk AS (SELECT doc_id, source,
                  CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)
                       AS INT) % 5 AS bucket,
@@ -5474,10 +4884,11 @@ object SparkEntry {
                               / (n + v)::DOUBLE)) / COUNT(*), 6)
                   AS nll_per_token
          FROM test LEFT JOIN cnts USING (w), nv
-         GROUP BY source""",
-    // q258: quintile cut points off each metric's value-domain rollup
-    // (5·cum ≥ q·n), membership by threshold compare — no user sort
-    "q258_rfm_segments" ->
+         GROUP BY source"""),
+    // q258: RFM quintile segmentation via value-domain rank cuts
+    QuerySpec("q258_rfm_segments", Stats.qRfmSegments _, Timed,
+      // q258: quintile cut points off each metric's value-domain rollup
+      // (5·cum ≥ q·n), membership by threshold compare — no user sort
       """WITH pu AS (SELECT user_id, MAX(epoch_us(ts)) AS last_us,
                             COUNT(*) AS freq,
                             SUM(CAST(ROUND(value * 100, 0) AS BIGINT))
@@ -5524,10 +4935,11 @@ object SparkEntry {
                  1 + (money > m1)::INT + (money > m2)::INT
                    + (money > m3)::INT + (money > m4)::INT AS m_q
                FROM m, rcut, fcut, mcut)
-         GROUP BY 1, 2, 3""",
-    // q259: balanced weights as exact floored ppm; ESS via the Kish
-    // closed form k²/Σ(1/n_cell)
-    "q259_class_balance" ->
+         GROUP BY 1, 2, 3"""),
+    // q259: class-balance audit — inverse-frequency weights + ESS
+    QuerySpec("q259_class_balance", Pipeline.qClassBalance _, Timed,
+      // q259: balanced weights as exact floored ppm; ESS via the Kish
+      // closed form k²/Σ(1/n_cell)
       """WITH cells AS (SELECT source, lang, COUNT(*) AS n_cell
                         FROM documents GROUP BY 1, 2),
          tot AS (SELECT SUM(n_cell) AS n, COUNT(*) AS k,
@@ -5539,11 +4951,12 @@ object SparkEntry {
                 ROUND(k::DOUBLE * k::DOUBLE / inv_sum, 2) AS ess,
                 ROUND(k::DOUBLE * k::DOUBLE / inv_sum / n::DOUBLE, 6)
                   AS ess_ratio
-         FROM cells, tot""",
-    // q260: leave-fold-out centroids via the algebraic complement
-    // (total − fold)/(n − n_fold); cosine via a dim join; argmax by
-    // (cosine desc, label asc)
-    "q260_cv_centroid" ->
+         FROM cells, tot"""),
+    // q260: k-fold cross-validated nearest-centroid accuracy
+    QuerySpec("q260_cv_centroid", (s, d) => Similarity.qCvCentroid(s, d), Timed,
+      // q260: leave-fold-out centroids via the algebraic complement
+      // (total − fold)/(n − n_fold); cosine via a dim join; argmax by
+      // (cosine desc, label asc)
       """WITH v AS (SELECT vec_id, label, embedding::DOUBLE[] AS e,
                  CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 4)
                       AS INT) % 5 AS fold
@@ -5575,10 +4988,11 @@ object SparkEntry {
                   AS BIGINT) AS n_correct,
                 CAST(SUM(CASE WHEN label = pred THEN 1 ELSE 0 END)
                      * 1000000 // COUNT(*) AS BIGINT) AS acc_ppm
-         FROM pred GROUP BY 1""",
-    // q261: q153's bigram rollup with Dunning's G² in place of lift;
-    // zero cells contribute the 0·ln0 = 0 limit
-    "q261_collocation_llr" ->
+         FROM pred GROUP BY 1"""),
+    // q261: Dunning log-likelihood-ratio collocations
+    QuerySpec("q261_collocation_llr", (s, d) => TextAnalysis.qCollocationLlr(s, d), Timed,
+      // q261: q153's bigram rollup with Dunning's G² in place of lift;
+      // zero cells contribute the 0·ln0 = 0 limit
       """WITH t AS (
            SELECT string_split_regex(lower(text), '\s+') AS w FROM documents),
          bg AS (
@@ -5612,10 +5026,11 @@ object SparkEntry {
                     ELSE 0.0 END), 4) AS llr
          FROM bc JOIN r USING (w1) JOIN c USING (w2), tot
          WHERE o11 >= 5
-         ORDER BY llr DESC, w1, w2 LIMIT 20""",
-    // q262: deciles fit on week 0 only (q190's device), full
-    // (type, week, band) grid so empty bands keep their smoothed term
-    "q262_psi_timeline" ->
+         ORDER BY llr DESC, w1, w2 LIMIT 20"""),
+    // q262: weekly PSI drift timeline vs the first week's deciles
+    QuerySpec("q262_psi_timeline", (s, d) => Stats.qPsiTimeline(s, d), Timed,
+      // q262: deciles fit on week 0 only (q190's device), full
+      // (type, week, band) grid so empty bands keep their smoothed term
       """WITH ev AS (SELECT event_type, value, event_id,
                             CAST(ts AS DATE) AS day FROM events),
          st AS (SELECT MIN(day) AS d0 FROM ev),
@@ -5657,9 +5072,10 @@ object SparkEntry {
                            / (CAST(g.cb + 1 AS DOUBLE) / (t.nb + 10)))), 6)
                   AS psi
          FROM grid g JOIN tots t USING (event_type, week)
-         GROUP BY 1, 2""",
-    // q263: exact per-arm converter counts, pooled z the one double
-    "q263_two_proportion" ->
+         GROUP BY 1, 2"""),
+    // q263: two-proportion z-test on conversion between the CUPED arms
+    QuerySpec("q263_two_proportion", Stats.qTwoProportion _, Timed,
+      // q263: exact per-arm converter counts, pooled z the one double
       """WITH pu AS (SELECT user_id,
                             MAX(CASE WHEN event_type = 'purchase'
                                      AND value >= 95
@@ -5682,10 +5098,11 @@ object SparkEntry {
                                       / (n_a + n_b)::DOUBLE)
                              * (1.0 / n_a::DOUBLE + 1.0 / n_b::DOUBLE)),
                           0.0), 6) AS z
-         FROM a, b""",
-    // q264: per-week rank under (count desc, part), top-100 cut,
-    // consecutive-week join, top-10 climbers total order
-    "q264_rank_movers" ->
+         FROM a, b"""),
+    // q264: week-over-week shipment-rank movers (trending items)
+    QuerySpec("q264_rank_movers", (s, d) => Stats.qRankMovers(s, d), Timed,
+      // q264: per-week rank under (count desc, part), top-100 cut,
+      // consecutive-week join, top-10 climbers total order
       """WITH li AS (SELECT l_partkey AS part,
                             CAST(l_shipdate AS DATE) AS day
                      FROM lineitem),
@@ -5706,10 +5123,17 @@ object SparkEntry {
                 CAST(p.cnt AS BIGINT) AS prev_cnt
          FROM top c JOIN top p
            ON p.part = c.part AND p.week = c.week - 1
-         ORDER BY delta DESC, week, part LIMIT 10""",
-    // q267: A-Res keys ln(u)/w with u = (md5₁₅+1)/16¹⁵ ∈ (0,1],
-    // ordered by the unrounded key, doc_id ties
-    "q267_weighted_sample" ->
+         ORDER BY delta DESC, week, part LIMIT 10"""),
+    // q265: streaming Bloom membership state — the NINTH bit-exact
+    // stream/batch parity (bitwise-OR algebra)
+    QuerySpec("q265_streaming_bloom", EventTime.qStreamingBloom _, Untimed),
+    // q266: hard-negative mining through the persisted IVF index —
+    // q254's scale path (partition-pruned candidates, label re-rank)
+    QuerySpec("q266_hard_negatives_ivf", (s, d) => Similarity.qHardNegativesIvf(s, d), Timed),
+    // q267: Efraimidis–Spirakis weighted sampling without replacement
+    QuerySpec("q267_weighted_sample", (s, d) => Pipeline.qWeightedSample(s, d), Timed,
+      // q267: A-Res keys ln(u)/w with u = (md5₁₅+1)/16¹⁵ ∈ (0,1],
+      // ordered by the unrounded key, doc_id ties
       """WITH t AS (SELECT doc_id,
                            len(string_split_regex(text, '\s+')) AS w,
                            CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)),
@@ -5721,10 +5145,11 @@ object SparkEntry {
          FROM t WHERE w > 0
          ORDER BY LN((h + 1)::DOUBLE / 1152921504606846976.0) / w::DOUBLE
                   DESC, doc_id
-         LIMIT 20""",
-    // q268: exact ranked-element weekly percentiles (2·cum ≥ n and
-    // 10·cum ≥ 9n off the value-domain rollup)
-    "q268_percentile_timeline" ->
+         LIMIT 20"""),
+    // q268: weekly P50/P90 exact percentile timeline (SLO monitor)
+    QuerySpec("q268_percentile_timeline", Stats.qPercentileTimeline _, Timed,
+      // q268: exact ranked-element weekly percentiles (2·cum ≥ n and
+      // 10·cum ≥ 9n off the value-domain rollup)
       """WITH ev AS (SELECT event_type, CAST(ts AS DATE) AS day,
                             CAST(ROUND(value * 100, 0) AS BIGINT) AS v
                      FROM events),
@@ -5748,10 +5173,11 @@ object SparkEntry {
                 CAST(MIN(CASE WHEN cum * 10 >= n * 9 THEN v END) AS BIGINT)
                   AS p90_cents
          FROM cum c JOIN ns n USING (event_type, week)
-         GROUP BY 1, 2""",
-    // q269: threshold = the k-th qty under (qty desc, part); keep
-    // qty ≥ threshold, RANK over survivors only
-    "q269_topk_ties" ->
+         GROUP BY 1, 2"""),
+    // q269: top-k WITH TIES via a broadcast threshold, no catalog rank
+    QuerySpec("q269_topk_ties", (s, d) => Relational.qTopKTies(s, d), Timed,
+      // q269: threshold = the k-th qty under (qty desc, part); keep
+      // qty ≥ threshold, RANK over survivors only
       """WITH qty AS (SELECT l_partkey AS part,
                              CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2))
                                            * 100 AS BIGINT)) AS BIGINT)
@@ -5762,10 +5188,11 @@ object SparkEntry {
                    ORDER BY qty_x100 DESC, part LIMIT 10))
          SELECT CAST(rank() OVER (ORDER BY qty_x100 DESC) AS INT) AS rank,
                 part, qty_x100
-         FROM qty, thr WHERE qty_x100 >= thr""",
-    // q270: DuckDB native ASOF LEFT JOIN against the second-deduped
-    // purchase side + the same integer staleness predicate
-    "q270_asof_tolerance" ->
+         FROM qty, thr WHERE qty_x100 >= thr"""),
+    // q270: as-of join with a staleness tolerance (date-domain bound)
+    QuerySpec("q270_asof_tolerance", (s, d) => Relational.qAsofTolerance(s, d), Timed,
+      // q270: DuckDB native ASOF LEFT JOIN against the second-deduped
+      // purchase side + the same integer staleness predicate
       """WITH purch AS (SELECT user_id AS p_user,
                                CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS p_sec,
                                MAX(CAST(ROUND(value * 100, 0) AS BIGINT))
@@ -5786,9 +5213,10 @@ object SparkEntry {
                 CASE WHEN p_sec IS NOT NULL AND e_sec - p_sec <= 172800
                      THEN 1 ELSE 0 END AS matched
          FROM le ASOF LEFT JOIN p2
-           ON le.user_id = p2.p_user AND p2.p_ts <= le.ts""",
-    // q271: edge j = smallest v with 10·cum ≥ j·n, per type
-    "q271_equidepth_edges" ->
+           ON le.user_id = p2.p_user AND p2.p_ts <= le.ts"""),
+    // q271: equi-depth decile edges as a first-class binning artifact
+    QuerySpec("q271_equidepth_edges", (s, d) => Stats.qEquidepthEdges(s, d), Timed,
+      // q271: edge j = smallest v with 10·cum ≥ j·n, per type
       """WITH ev AS (SELECT event_type,
                             CAST(ROUND(value * 100, 0) AS BIGINT) AS v
                      FROM events),
@@ -5804,11 +5232,13 @@ object SparkEntry {
                 CAST(MIN(c.v) AS BIGINT) AS edge_cents
          FROM cum c JOIN ns n USING (event_type), js j
          WHERE c.cum * 10 >= j.j * n.n
-         GROUP BY 1, 2""",
-    // q272: the doubled-midrank reduction — per distinct-value block
-    // X = N·2B̄ − n_a·2H̄ and Y = 2H̄(2N−2H̄) − N·h, term = h·X²/Y;
-    // A² = (N−1)/N² · Σ_a Σ_j term/n_a
-    "q272_anderson_darling" ->
+         GROUP BY 1, 2"""),
+    // q272: tie-adjusted two-sample Anderson–Darling (tail-sensitive
+    // distribution compare, Scholz–Stephens midranks)
+    QuerySpec("q272_anderson_darling", (s, d) => Stats.qAndersonDarling(s, d), Timed,
+      // q272: the doubled-midrank reduction — per distinct-value block
+      // X = N·2B̄ − n_a·2H̄ and Y = 2H̄(2N−2H̄) − N·h, term = h·X²/Y;
+      // A² = (N−1)/N² · Σ_a Σ_j term/n_a
       """WITH ev AS (SELECT event_type,
                             CAST(ROUND(value * 100, 0) AS BIGINT) AS v
                      FROM events
@@ -5848,10 +5278,12 @@ object SparkEntry {
                       * ((SELECT SUM(ta) FROM terms) / t.na::DOUBLE
                          + (SELECT SUM(tb) FROM terms) / t.nb::DOUBLE), 6)
                   AS a2
-         FROM tot t""",
-    // q273: pooled-SD effect size from q234's exact sufficient sums;
-    // d and Hedges' g are the final doubles, NULLed-denominator guard
-    "q273_cohens_d" ->
+         FROM tot t"""),
+    // q273: Cohen's d / Hedges' g — the effect-size readout completing
+    // the A/B triplet (test q234, CI q252, magnitude here)
+    QuerySpec("q273_cohens_d", Stats.qCohensD _, Timed,
+      // q273: pooled-SD effect size from q234's exact sufficient sums;
+      // d and Hedges' g are the final doubles, NULLed-denominator guard
       """WITH ev AS (SELECT event_type,
                             CAST(ROUND(value * 100, 0) AS BIGINT) AS v
                      FROM events),
@@ -5886,22 +5318,25 @@ object SparkEntry {
                                     / (n1::DOUBLE + n2::DOUBLE - 2.0)), 0.0)
                       * (1.0 - 3.0 / (4.0 * (n1::DOUBLE + n2::DOUBLE) - 9.0)),
                       6) AS hedges_g
-         FROM st""",
-    // q274: blocked Levenshtein pairs — both engines implement classic
-    // unweighted edit distance, so the gate hashes exact integers;
-    // the length-band prefilter is part of the semantics (a lower
-    // bound on the distance, so it drops nothing under the threshold)
-    "q274_edit_distance_pairs" ->
+         FROM st"""),
+    // q274: blocked Levenshtein near-dup pairs — typo-level entity
+    // resolution (length-band prefilter before the O(len²) DP)
+    QuerySpec("q274_edit_distance_pairs", (s, d) => Dedup.qEditDistancePairs(s, d), Timed,
+      // q274: blocked Levenshtein pairs — both engines implement classic
+      // unweighted edit distance, so the gate hashes exact integers;
+      // the length-band prefilter is part of the semantics (a lower
+      // bound on the distance, so it drops nothing under the threshold)
       """SELECT a.p_brand, a.p_partkey AS partkey_a, b.p_partkey AS partkey_b,
                 CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS edit_dist
          FROM part a JOIN part b
            ON a.p_brand = b.p_brand AND b.p_partkey > a.p_partkey
          WHERE abs(length(a.p_name) - length(b.p_name)) <= 4
-           AND levenshtein(a.p_name, b.p_name) <= 4""",
-    // q275: Benford — the digit comes from the BIGINT cents STRING
-    // (integer rendering is engine-invariant; double rendering is
-    // not); log10 is the single final libm step, spelled identically
-    "q275_benford_audit" ->
+           AND levenshtein(a.p_name, b.p_name) <= 4"""),
+    // q275: Benford first-digit forensic audit over exact cents
+    QuerySpec("q275_benford_audit", Stats.qBenfordAudit _, Timed,
+      // q275: Benford — the digit comes from the BIGINT cents STRING
+      // (integer rendering is engine-invariant; double rendering is
+      // not); log10 is the single final libm step, spelled identically
       """WITH c AS (SELECT CAST(substr(CAST(CAST(CAST(l_extendedprice
                       AS DECIMAL(18,2)) * 100 AS BIGINT) AS VARCHAR), 1, 1)
                       AS INT) AS digit
@@ -5912,12 +5347,14 @@ object SparkEntry {
          SELECT digit, CAST(n_obs AS BIGINT) AS n_obs,
                 n_obs::DOUBLE / t.n_total::DOUBLE AS obs_freq,
                 LOG10(1.0 + 1.0 / digit::DOUBLE) AS expected_freq
-         FROM g, t""",
-    // q276: the ±1 sweep; ties order by (t, delta DESC) and the
-    // running sum uses the default RANGE frame on BOTH engines, so
-    // peer rows share the post-peer-group sum and the (level,
-    // duration) multiset is tie-order-invariant
-    "q276_concurrency_sweep" ->
+         FROM g, t"""),
+    // q276: interval-concurrency sweep — µs-weighted histogram of
+    // concurrent-session levels via the ±1 boundary sweep
+    QuerySpec("q276_concurrency_sweep", (s, d) => Relational.qConcurrencySweep(s, d), Timed,
+      // q276: the ±1 sweep; ties order by (t, delta DESC) and the
+      // running sum uses the default RANGE frame on BOTH engines, so
+      // peer rows share the post-peer-group sum and the (level,
+      // duration) multiset is tie-order-invariant
       """WITH t AS (
            SELECT user_id, ts, CASE WHEN LAG(ts) OVER w IS NULL
                   OR ts - LAG(ts) OVER w >= INTERVAL 30 MINUTE THEN 1 ELSE 0 END
@@ -5936,12 +5373,13 @@ object SparkEntry {
                 FROM pts)
          SELECT conc AS concurrency, CAST(SUM(dur_us) AS BIGINT) AS total_us
          FROM sw WHERE dur_us IS NOT NULL AND dur_us > 0
-         GROUP BY conc""",
-    // q277: deciles from ROW_NUMBER over (spend DESC, custkey) — fully
-    // deterministic under ties (NTILE's remainder placement is not
-    // contract-stable across engines); floor division on nonnegative
-    // numerators agrees between Spark div and DuckDB //
-    "q277_decile_lift" ->
+         GROUP BY conc"""),
+    // q277: decile gains/lift table with deterministic exact deciles
+    QuerySpec("q277_decile_lift", Relational.qDecileLift _, Timed,
+      // q277: deciles from ROW_NUMBER over (spend DESC, custkey) — fully
+      // deterministic under ties (NTILE's remainder placement is not
+      // contract-stable across engines); floor division on nonnegative
+      // numerators agrees between Spark div and DuckDB //
       """WITH spend AS (SELECT o_custkey,
                   SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
                     AS cents
@@ -5957,11 +5395,12 @@ object SparkEntry {
                 CAST(sum_cents AS BIGINT) AS sum_cents,
                 CAST(SUM(sum_cents) OVER (ORDER BY decile
                   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_cents
-         FROM g""",
-    // q278: Kendall τ-b — concordance over nation-blocked pairs of the
-    // per-customer aggregate; SIGN on doubles (cents < 2^53, exact);
-    // τ-b denominator NULLed at zero on both engines
-    "q278_kendall_tau" ->
+         FROM g"""),
+    // q278: Kendall τ-b per nation (exact concordance/tie counts)
+    QuerySpec("q278_kendall_tau", Stats.qKendallTau _, Timed,
+      // q278: Kendall τ-b — concordance over nation-blocked pairs of the
+      // per-customer aggregate; SIGN on doubles (cents < 2^53, exact);
+      // τ-b denominator NULLed at zero on both engines
       """WITH spend AS (SELECT o_custkey, COUNT(*) AS x,
                   SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
                     AS y
@@ -5989,11 +5428,13 @@ object SparkEntry {
                 NULLIF(SQRT((n_conc::DOUBLE + n_disc::DOUBLE + n_tie_x::DOUBLE)
                   * (n_conc::DOUBLE + n_disc::DOUBLE + n_tie_y::DOUBLE)), 0.0)
                   AS tau_b
-         FROM g""",
-    // q279: runs test — the median is the DISCRETE k=ceil(n/2)-th
-    // order statistic (an actual element, no interpolation); the z
-    // arithmetic mirrors the Spark expression term-for-term
-    "q279_runs_test" ->
+         FROM g"""),
+    // q279: Wald–Wolfowitz runs test on daily revenue vs its discrete
+    // median
+    QuerySpec("q279_runs_test", Stats.qRunsTest _, Timed,
+      // q279: runs test — the median is the DISCRETE k=ceil(n/2)-th
+      // order statistic (an actual element, no interpolation); the z
+      // arithmetic mirrors the Spark expression term-for-term
       """WITH daily AS (SELECT o_orderdate,
                   SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
                     AS cents
@@ -6023,20 +5464,24 @@ object SparkEntry {
                    / ((n_above::DOUBLE + n_below::DOUBLE)
                       * (n_above::DOUBLE + n_below::DOUBLE)
                       * (n_above::DOUBLE + n_below::DOUBLE - 1.0))), 0.0) AS z
-         FROM agg""",
-    // q280: the Spark side's JaroWinklerExpr is pinned to DuckDB's
-    // jaro_winkler_similarity semantics (boost only when jaro > 0.7);
-    // the threshold keeps a measured 0.005 margin above any ulp-level
-    // divergence, and the score column rides the 1e-6 rtol
-    "q280_jaro_winkler_pairs" ->
+         FROM agg"""),
+    // q280: blocked Jaro–Winkler pairs via the codegen'd expression,
+    // semantics pinned to DuckDB's jaro_winkler_similarity
+    QuerySpec("q280_jaro_winkler_pairs", (s, d) => Dedup.qJaroWinklerPairs(s, d), Timed,
+      // q280: the Spark side's JaroWinklerExpr is pinned to DuckDB's
+      // jaro_winkler_similarity semantics (boost only when jaro > 0.7);
+      // the threshold keeps a measured 0.005 margin above any ulp-level
+      // divergence, and the score column rides the 1e-6 rtol
       """SELECT a.p_brand, a.p_partkey AS partkey_a, b.p_partkey AS partkey_b,
                 jaro_winkler_similarity(a.p_name, b.p_name) AS jw
          FROM part a JOIN part b
            ON a.p_brand = b.p_brand AND b.p_partkey > a.p_partkey
-         WHERE jaro_winkler_similarity(a.p_name, b.p_name) >= 0.9""",
-    // q281: the streamed exact percentile monitor must equal the BATCH
-    // q268 timeline — its oracle verbatim is the parity's second gate
-    "q281_streaming_percentile" ->
+         WHERE jaro_winkler_similarity(a.p_name, b.p_name) >= 0.9"""),
+    // q281: streaming exact percentile monitor — the tenth bit-exact
+    // stream/batch parity; same oracle as the batch q268 timeline
+    QuerySpec("q281_streaming_percentile", EventTime.qStreamingPercentile _, Untimed,
+      // q281: the streamed exact percentile monitor must equal the BATCH
+      // q268 timeline — its oracle verbatim is the parity's second gate
       """WITH ev AS (SELECT event_type, CAST(ts AS DATE) AS day,
                             CAST(ROUND(value * 100, 0) AS BIGINT) AS v
                      FROM events),
@@ -6060,11 +5505,13 @@ object SparkEntry {
                 CAST(MIN(CASE WHEN cum * 10 >= n * 9 THEN v END) AS BIGINT)
                   AS p90_cents
          FROM cum c JOIN ns n USING (event_type, week)
-         GROUP BY 1, 2""",
-    // q282: exact integer privacy audit; FLOOR on nonnegative-or-
-    // negative acctbal/6000 agrees (IEEE floor, both engines), the
-    // band is a BIGINT on both sides
-    "q282_k_anonymity" ->
+         GROUP BY 1, 2"""),
+    // q282: k-anonymity / l-diversity release audit over the QI
+    // (nation, segment, balance band) with order-activity sensitive
+    QuerySpec("q282_k_anonymity", (s, d) => Pipeline.qKAnonymity(s, d), Timed,
+      // q282: exact integer privacy audit; FLOOR on nonnegative-or-
+      // negative acctbal/6000 agrees (IEEE floor, both engines), the
+      // band is a BIGINT on both sides
       """WITH oc AS (SELECT o_custkey, COUNT(*) AS n_ord
                      FROM orders GROUP BY o_custkey),
          c AS (SELECT c_nationkey AS nation, c_mktsegment AS segment,
@@ -6079,12 +5526,14 @@ object SparkEntry {
                 CAST(l_div AS BIGINT) AS l_div,
                 CAST(group_size >= 5 AS INT) AS k_anonymous,
                 CAST(l_div >= 2 AS INT) AS l_diverse
-         FROM g""",
-    // q283: the ER clustering closure at tau=1 (the q103 recursive-CTE
-    // device on the part table); mode name via ROW_NUMBER (count DESC,
-    // name) — identical deterministic tie-break on both engines; every
-    // aggregate BIGINT-cast (the q103 HUGEINT lesson)
-    "q283_er_golden_record" ->
+         FROM g"""),
+    // q283: ER golden record — q274's pairs at tau=1, transitively
+    // clustered, one survivor row per multi-record cluster
+    QuerySpec("q283_er_golden_record", (s, d) => Dedup.qGoldenRecord(s, d), Timed,
+      // q283: the ER clustering closure at tau=1 (the q103 recursive-CTE
+      // device on the part table); mode name via ROW_NUMBER (count DESC,
+      // name) — identical deterministic tie-break on both engines; every
+      // aggregate BIGINT-cast (the q103 HUGEINT lesson)
       """WITH RECURSIVE pr AS (
            SELECT a.p_partkey AS pa, b.p_partkey AS pb
            FROM part a JOIN part b
@@ -6116,13 +5565,15 @@ object SparkEntry {
          SELECT a.cluster, a.n_records, a.n_names, a.canonical_partkey,
                 a.price_spread_cents, c.canonical_name
          FROM agg a JOIN canon c ON a.cluster = c.cluster AND c.rn = 1
-         WHERE a.n_records > 1""",
-    // q284: Kendall τ-b per consecutive-week pair, oracle in the
-    // direct pair-join form (quadratic is fine at oracle scale; the
-    // Spark side runs the Knight device) — week epoch from the global
-    // min order date, every count clause BIGINT-cast, weeks whose
-    // shared-part set yields zero pairs kept via the left join
-    "q284_rank_stability" ->
+         WHERE a.n_records > 1"""),
+    // q284: week-over-week Kendall rank stability of part revenue —
+    // the second consumer of the Knight inversion device
+    QuerySpec("q284_rank_stability", Stats.qRankStability _, Timed,
+      // q284: Kendall τ-b per consecutive-week pair, oracle in the
+      // direct pair-join form (quadratic is fine at oracle scale; the
+      // Spark side runs the Knight device) — week epoch from the global
+      // min order date, every count clause BIGINT-cast, weeks whose
+      // shared-part set yields zero pairs kept via the left join
       """WITH d0 AS (SELECT MIN(CAST(o_orderdate AS DATE)) AS d0 FROM orders),
          rev AS (SELECT date_diff('day', d0.d0, CAST(o.o_orderdate AS DATE)) // 7 AS week,
                         l.l_partkey AS pk,
@@ -6159,11 +5610,14 @@ object SparkEntry {
                          + COALESCE(pp.n_tie_x, 0))::DOUBLE
                       * (COALESCE(pp.n_conc, 0) + COALESCE(pp.n_disc, 0)
                          + COALESCE(pp.n_tie_y, 0))::DOUBLE), 0.0) AS tau_b
-         FROM base LEFT JOIN pp ON base.week = pp.week""",
-    // q285: the oracle side is the BRUTE-FORCE dictionary cross join —
-    // a different algorithm than the Spark side's PassJoin-blocked
-    // pipeline, so the hash match IS the completeness proof
-    "q285_blocking_audit" ->
+         FROM base LEFT JOIN pp ON base.week = pp.week"""),
+    // q285: blocking-completeness audit — the oracle recomputes the
+    // dictionary match counts by brute force, so hash equality proves
+    // PassJoin candidate generation loses nothing, in-gate
+    QuerySpec("q285_blocking_audit", (s, d) => Dedup.qBlockingAudit(s, d), Timed,
+      // q285: the oracle side is the BRUTE-FORCE dictionary cross join —
+      // a different algorithm than the Spark side's PassJoin-blocked
+      // pipeline, so the hash match IS the completeness proof
       """WITH dict AS (SELECT DISTINCT p_name AS name FROM part),
          n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_names FROM dict),
          pairs AS (SELECT levenshtein(a.name, b.name) AS d
@@ -6173,20 +5627,25 @@ object SparkEntry {
          SELECT CAST(e.tau AS BIGINT) AS tau, n.n_names,
                 (n.n_names * (n.n_names - 1)) // 2 AS n_possible_pairs,
                 CAST(COUNT(*) AS BIGINT) AS n_matching_pairs
-         FROM e, n GROUP BY 1, 2, 3""",
-    // q286: TPC-H Q4 shape — the correlated EXISTS spelled literally;
-    // the Spark side decorrelates it to a left-semi join
-    "q286_priority_waiting" ->
+         FROM e, n GROUP BY 1, 2, 3"""),
+    // q286–q294: the remaining nine TPC-H shapes — with these, all 22
+    // classic queries have fixture adaptations (see the shape map in
+    // Relational.scala)
+    // q286: Q4 — EXISTS decorrelated to a left-semi join
+    QuerySpec("q286_priority_waiting", Relational.qOrderPriorityCheck _, Timed,
+      // q286: TPC-H Q4 shape — the correlated EXISTS spelled literally;
+      // the Spark side decorrelates it to a left-semi join
       """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS order_count
          FROM orders o
          WHERE o_orderdate >= '1996-01-01' AND o_orderdate < '1996-04-01'
            AND EXISTS (SELECT 1 FROM lineitem l
                        WHERE l.l_orderkey = o.o_orderkey
                          AND l.l_shipdate > o.o_orderdate + INTERVAL 30 DAY)
-         GROUP BY o_orderpriority""",
-    // q287: TPC-H Q6 shape — scan/filter/agg; the discount band
-    // compares exact integer points on both engines
-    "q287_forecast_revenue" ->
+         GROUP BY o_orderpriority"""),
+    // q287: Q6 — pure scan/filter/agg, zero shuffles (pushdown pin)
+    QuerySpec("q287_forecast_revenue", Relational.qForecastRevenue _, Timed,
+      // q287: TPC-H Q6 shape — scan/filter/agg; the discount band
+      // compares exact integer points on both engines
       """SELECT CAST(SUM(
                   CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
                   * CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT))
@@ -6196,9 +5655,10 @@ object SparkEntry {
          WHERE l_shipdate >= '1997-01-01' AND l_shipdate < '1998-01-01'
            AND l_quantity < 24
            AND CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT)
-               BETWEEN 4 AND 6""",
-    // q288: TPC-H Q7 shape — two-nation trade flow, either direction
-    "q288_volume_shipping" ->
+               BETWEEN 4 AND 6"""),
+    // q288: Q7 — two-nation trade flow, disjunctive pair predicate
+    QuerySpec("q288_volume_shipping", Relational.qVolumeShipping _, Timed,
+      // q288: TPC-H Q7 shape — two-nation trade flow, either direction
       """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
                 CAST(year(l_shipdate) AS BIGINT) AS l_year,
                 CAST(SUM(
@@ -6215,10 +5675,11 @@ object SparkEntry {
          WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1998-01-01'
            AND ((sn.n_name = 'NATION_1' AND cn.n_name = 'NATION_2')
              OR (sn.n_name = 'NATION_2' AND cn.n_name = 'NATION_1'))
-         GROUP BY 1, 2, 3""",
-    // q289: TPC-H Q8 shape — market share as the exact (nation, total)
-    // sufficient-statistic pair (the q211 discipline)
-    "q289_market_share" ->
+         GROUP BY 1, 2, 3"""),
+    // q289: Q8 — market share as the exact (nation, total) pair
+    QuerySpec("q289_market_share", Relational.qMarketShare _, Timed,
+      // q289: TPC-H Q8 shape — market share as the exact (nation, total)
+      // sufficient-statistic pair (the q211 discipline)
       """WITH li AS (
            SELECT l_orderkey, l_partkey, l_suppkey,
                   CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -6239,10 +5700,11 @@ object SparkEntry {
          JOIN nation sn ON s_nationkey = sn.n_nationkey
          WHERE p_type = 'MEDIUM' AND r_name = 'ASIA'
            AND o_orderdate >= '1996-01-01' AND o_orderdate < '1998-01-01'
-         GROUP BY 1""",
-    // q290: TPC-H Q9 shape — derived profit (retail price plays unit
-    // cost; the sum may legitimately be negative)
-    "q290_product_profit" ->
+         GROUP BY 1"""),
+    // q290: Q9 — derived profit measure over red parts
+    QuerySpec("q290_product_profit", Relational.qProductProfit _, Timed,
+      // q290: TPC-H Q9 shape — derived profit (retail price plays unit
+      // cost; the sum may legitimately be negative)
       """SELECT n_name, CAST(year(o_orderdate) AS BIGINT) AS o_year,
                 CAST(SUM(
                   CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -6258,10 +5720,11 @@ object SparkEntry {
          JOIN supplier ON l_suppkey = s_suppkey
          JOIN nation ON s_nationkey = n_nationkey
          WHERE p_name LIKE '%red%'
-         GROUP BY 1, 2""",
-    // q291: TPC-H Q12 shape — CASE-sum pivot over late 1997 lines
-    // (l_returnflag plays l_shipmode)
-    "q291_shipmode_priority" ->
+         GROUP BY 1, 2"""),
+    // q291: Q12 — CASE-sum priority pivot over late lines
+    QuerySpec("q291_shipmode_priority", Relational.qShipmodePriority _, Timed,
+      // q291: TPC-H Q12 shape — CASE-sum pivot over late 1997 lines
+      // (l_returnflag plays l_shipmode)
       """SELECT l_returnflag,
                 CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                               THEN 1 ELSE 0 END) AS BIGINT)
@@ -6272,9 +5735,10 @@ object SparkEntry {
          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
          WHERE l_shipdate >= '1997-01-01' AND l_shipdate < '1998-01-01'
            AND l_shipdate > o_orderdate + INTERVAL 60 DAY
-         GROUP BY 1""",
-    // q292: TPC-H Q15 shape — view + scalar max; ties all survive
-    "q292_top_supplier" ->
+         GROUP BY 1"""),
+    // q292: Q15 — view + scalar max, ties survive
+    QuerySpec("q292_top_supplier", Relational.qTopSupplier _, Timed,
+      // q292: TPC-H Q15 shape — view + scalar max; ties all survive
       """WITH rev AS (
            SELECT l_suppkey,
                   CAST(SUM(
@@ -6288,10 +5752,11 @@ object SparkEntry {
          SELECT s_suppkey, s_name, total_rev_x1e4
          FROM rev JOIN supplier ON l_suppkey = s_suppkey
          WHERE total_rev_x1e4 = (SELECT MAX(total_rev_x1e4) FROM rev)
-         ORDER BY s_suppkey""",
-    // q293: TPC-H Q16 shape — NOT-IN as an exclusion over the distinct
-    // (part, supplier) pair relation
-    "q293_part_supplier" ->
+         ORDER BY s_suppkey"""),
+    // q293: Q16 — count-distinct suppliers with an anti-join exclusion
+    QuerySpec("q293_part_supplier", Relational.qPartSupplierRelation _, Timed,
+      // q293: TPC-H Q16 shape — NOT-IN as an exclusion over the distinct
+      // (part, supplier) pair relation
       """SELECT p_brand, p_type, p_size,
                 CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
          FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
@@ -6302,10 +5767,11 @@ object SparkEntry {
            AND p_size IN (1, 5, 10, 15, 20, 25, 30, 35)
          GROUP BY 1, 2, 3
          ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-         LIMIT 100""",
-    // q294: TPC-H Q19 shape — OR-of-ANDs across both join sides;
-    // quantities compare as exact centi-units
-    "q294_discounted_revenue" ->
+         LIMIT 100"""),
+    // q294: Q19 — disjunction-of-conjunctions stays a hash join
+    QuerySpec("q294_discounted_revenue", Relational.qDiscountedRevenue _, Timed,
+      // q294: TPC-H Q19 shape — OR-of-ANDs across both join sides;
+      // quantities compare as exact centi-units
       """WITH li AS (
            SELECT l_partkey,
                   CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -6322,10 +5788,12 @@ object SparkEntry {
             OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10
                 AND qty_c BETWEEN 1000 AND 2000)
             OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
-                AND qty_c BETWEEN 2000 AND 3000)""",
-    // q295: Wilcoxon signed-rank via the q229 doubled-average-rank
-    // device on the |diff| value-domain rollup
-    "q295_wilcoxon_signed_rank" ->
+                AND qty_c BETWEEN 2000 AND 3000)"""),
+    // q295: Wilcoxon signed-rank — the PAIRED rank test (q229's
+    // doubled-rank device on per-customer year-over-year spend diffs)
+    QuerySpec("q295_wilcoxon_signed_rank", Stats.qWilcoxonSignedRank _, Timed,
+      // q295: Wilcoxon signed-rank via the q229 doubled-average-rank
+      // device on the |diff| value-domain rollup
       """WITH spend AS (
            SELECT o_custkey,
                   SUM(CASE WHEN year(o_orderdate) = 1996
@@ -6374,9 +5842,10 @@ object SparkEntry {
                                    * (2 * n_pairs + 1) - tie_term
                                AS DOUBLE) / 12)
                   ELSE 0.0 END, 6) AS z_score
-         FROM agg""",
-    // q296: McNemar — only the discordant cells carry signal
-    "q296_mcnemar" ->
+         FROM agg"""),
+    // q296: McNemar — paired binary purchase flips between month halves
+    QuerySpec("q296_mcnemar", Stats.qMcNemar _, Timed,
+      // q296: McNemar — only the discordant cells carry signal
       """WITH pu AS (
            SELECT user_id,
                   MAX(CASE WHEN event_type = 'purchase'
@@ -6401,10 +5870,12 @@ object SparkEntry {
                             * (n_early_only - n_late_only) AS DOUBLE)
                        / CAST(n_early_only + n_late_only AS DOUBLE)
                   ELSE 0.0 END, 6) AS chi2
-         FROM cells""",
-    // q297: Cochran–Armitage — five integer sufficient sums; products
-    // stay in doubles for the one final z
-    "q297_cochran_armitage" ->
+         FROM cells"""),
+    // q297: Cochran–Armitage — return-rate trend across the ordered
+    // priority classes, from five integer sufficient sums
+    QuerySpec("q297_cochran_armitage", Stats.qCochranArmitage _, Timed,
+      // q297: Cochran–Armitage — five integer sufficient sums; products
+      // stay in doubles for the one final z
       """WITH ret AS (
            SELECT l_orderkey,
                   MAX(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS r
@@ -6438,15 +5909,24 @@ object SparkEntry {
                                    * CAST(sum_sn AS DOUBLE))
                               / CAST(n_orders AS DOUBLE))
                   ELSE 0.0 END, 6) AS z_score
-         FROM agg""",
-    // q298/q298b: the recursive CTE walks the literal integer EWMA
-    // recursion hour by hour — same BIGINT arithmetic as the Spark
-    // folds, so the hash match is a three-way parity statement
-    "q298_streaming_ewma" -> ewmaOracle,
-    "q298b_ewma_batch" -> ewmaOracle,
-    // q299/q302: complete-block doubled within-customer ranks of
-    // yearly spend (2·avg-rank = 2·rank + ties − 1, at block scope)
-    "q299_friedman" ->
+         FROM agg"""),
+    // q298: integer-EWMA spike monitor as streaming state — the
+    // ELEVENTH bit-exact stream/batch parity; oracle = a recursive
+    // CTE walking the same BIGINT recursion
+    QuerySpec("q298_streaming_ewma", EventTime.qStreamingEwma _, Untimed,
+      // q298/q298b: the recursive CTE walks the literal integer EWMA
+      // recursion hour by hour — same BIGINT arithmetic as the Spark
+      // folds, so the hash match is a three-way parity statement
+      ewmaOracle),
+    // q298b: the batch fold through the same detector core (its own
+    // gate row so batch and streaming are pinned independently)
+    QuerySpec("q298b_ewma_batch", Stats.qEwmaMonitor _, Timed,
+      ewmaOracle),
+    // q299: Friedman — the k-sample paired test (q295's family at
+    // k = 3 yearly conditions per customer block)
+    QuerySpec("q299_friedman", Stats.qFriedman _, Timed,
+      // q299/q302: complete-block doubled within-customer ranks of
+      // yearly spend (2·avg-rank = 2·rank + ties − 1, at block scope)
       s"""$yearRankCte
          py AS (SELECT yr, CAST(SUM(dij) AS BIGINT) AS d_sum
                 FROM ranked GROUP BY 1),
@@ -6464,48 +5944,12 @@ object SparkEntry {
                        / (CAST(g.sum_d_sq AS DOUBLE)
                           - 48.0 * CAST(g.n_blocks AS DOUBLE))
                   ELSE 0.0 END, 6) AS chi2_f
-         FROM py, g, num ORDER BY py.yr""",
-    "q302_page_trend" ->
-      s"""$yearRankCte
-         g AS (SELECT CAST(COUNT(*) // 3 AS BIGINT) AS n_blocks,
-                      CAST(SUM((yr - 1995) * dij) AS BIGINT) AS two_l
-               FROM ranked)
-         SELECT n_blocks, two_l,
-                ROUND(CASE WHEN n_blocks > 0
-                  THEN (CAST(two_l AS DOUBLE) / 2.0
-                        - 12.0 * CAST(n_blocks AS DOUBLE))
-                       / SQRT(2.0 * CAST(n_blocks AS DOUBLE))
-                  ELSE 0.0 END, 6) AS z_page
-         FROM g""",
-    // q332: column rank sums + per-block raw tie sums on the shared
-    // rank CTE; W is one DECIMAL-widened division
-    "q332_kendall_w" ->
-      s"""$yearRankCte
-         py AS (SELECT yr, CAST(SUM(dij) AS BIGINT) AS d_sum
-                FROM ranked GROUP BY 1),
-         g AS (SELECT CAST(COUNT(*) // 3 AS BIGINT) AS n_blocks
-               FROM ranked),
-         tie AS (SELECT CAST(SUM(t * t * t - t) AS BIGINT) AS tie_sum
-                 FROM (SELECT o_custkey, v, COUNT(*) AS t
-                       FROM blocks GROUP BY 1, 2)),
-         sp AS (SELECT g.n_blocks,
-                       CAST(SUM((py.d_sum - 4 * g.n_blocks)
-                                * (py.d_sum - 4 * g.n_blocks)) AS BIGINT)
-                         AS s_prime
-                FROM py, g GROUP BY g.n_blocks)
-         SELECT sp.n_blocks, sp.s_prime, tie.tie_sum,
-                ROUND(CASE WHEN 24 * CAST(sp.n_blocks AS HUGEINT)
-                             * sp.n_blocks
-                           - CAST(sp.n_blocks AS HUGEINT) * tie.tie_sum > 0
-                  THEN CAST(3 * CAST(sp.s_prime AS HUGEINT) AS DOUBLE)
-                       / CAST(24 * CAST(sp.n_blocks AS HUGEINT) * sp.n_blocks
-                              - CAST(sp.n_blocks AS HUGEINT) * tie.tie_sum
-                         AS DOUBLE)
-                  ELSE 0.0 END, 6) AS kendall_w
-         FROM sp CROSS JOIN tie""",
-    // q300: Cochran's Q — column totals + row-total moments from one
-    // user rollup; N/k eliminated algebraically
-    "q300_cochran_q" ->
+         FROM py, g, num ORDER BY py.yr"""),
+    // q300: Cochran's Q — the k-sample paired-binary test (q296's
+    // family across the month's three decades)
+    QuerySpec("q300_cochran_q", Stats.qCochranQ _, Timed,
+      // q300: Cochran's Q — column totals + row-total moments from one
+      // user rollup; N/k eliminated algebraically
       """WITH flags AS (
            SELECT user_id,
                   MAX(CASE WHEN event_type = 'purchase'
@@ -6533,11 +5977,14 @@ object SparkEntry {
                               - CAST(sum_l AS DOUBLE) * sum_l)
                        / CAST(3 * sum_l - sum_l_sq AS DOUBLE)
                   ELSE 0.0 END, 6) AS q_stat
-         FROM g""",
-    // q301: Jonckheere–Terpstra via the value-domain pivot +
-    // strict-predecessor cumulatives; z from the no-tie moments in
-    // doubles over the same exact counts
-    "q301_jonckheere_terpstra" ->
+         FROM g"""),
+    // q301: Jonckheere–Terpstra — ordered-alternative k-sample rank
+    // test over the priority classes (q233 unordered / q297 binary /
+    // this continuous)
+    QuerySpec("q301_jonckheere_terpstra", Stats.qJonckheereTerpstra _, Timed,
+      // q301: Jonckheere–Terpstra via the value-domain pivot +
+      // strict-predecessor cumulatives; z from the no-tie moments in
+      // doubles over the same exact counts
       """WITH base AS (
            SELECT CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS g,
                   CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
@@ -6589,13 +6036,29 @@ object SparkEntry {
                         + CAST(n3 AS DOUBLE) * n3 * (2.0 * n3 + 3.0)
                         + CAST(n4 AS DOUBLE) * n4 * (2.0 * n4 + 3.0)
                         + CAST(n5 AS DOUBLE) * n5 * (2.0 * n5 + 3.0) AS s3
-               FROM agg)""",
-    // q303: log-rank — q175's subject construction plus the
-    // hash-assigned A/B arm tag (user_id parity); hypergeometric cells
-    // per distinct event hour from reverse-cumulative at-risk counts;
-    // z/chi2 from the rounded E1/V exactly as the Spark side computes
-    // them
-    "q303_log_rank" ->
+               FROM agg)"""),
+    // q302: Page's L — Friedman's ordered-alternative twin on the
+    // same complete-block ranks
+    QuerySpec("q302_page_trend", Stats.qPageTrend _, Timed,
+      s"""$yearRankCte
+         g AS (SELECT CAST(COUNT(*) // 3 AS BIGINT) AS n_blocks,
+                      CAST(SUM((yr - 1995) * dij) AS BIGINT) AS two_l
+               FROM ranked)
+         SELECT n_blocks, two_l,
+                ROUND(CASE WHEN n_blocks > 0
+                  THEN (CAST(two_l AS DOUBLE) / 2.0
+                        - 12.0 * CAST(n_blocks AS DOUBLE))
+                       / SQRT(2.0 * CAST(n_blocks AS DOUBLE))
+                  ELSE 0.0 END, 6) AS z_page
+         FROM g"""),
+    // q303: log-rank test — the two-group censored time-to-event
+    // comparison the q175 KM risk table feeds
+    QuerySpec("q303_log_rank", Stats.qLogRank _, Timed,
+      // q303: log-rank — q175's subject construction plus the
+      // hash-assigned A/B arm tag (user_id parity); hypergeometric cells
+      // per distinct event hour from reverse-cumulative at-risk counts;
+      // z/chi2 from the rounded E1/V exactly as the Spark side computes
+      // them
       """WITH fv AS (
            SELECT user_id, MIN(epoch_us(ts)) AS fv
            FROM events WHERE event_type = 'view' GROUP BY 1),
@@ -6651,11 +6114,14 @@ object SparkEntry {
                   THEN (CAST(o1 AS DOUBLE) - e1)
                        * (CAST(o1 AS DOUBLE) - e1) / v
                   ELSE 0.0 END, 6) AS chi2
-         FROM agg""",
-    // q304: exact BIGINT cells per stratum; E/V/OR terms fold K=5
-    // bounded doubles rounded 6; chi2/OR from the ROUNDED sums — the
-    // q303 device
-    "q304_cmh" ->
+         FROM agg"""),
+    // q304: Cochran–Mantel–Haenszel — the stratified 2×2×K
+    // association test + MH common odds ratio (q243/q263's corner
+    // made Simpson's-paradox-proof)
+    QuerySpec("q304_cmh", Stats.qCmh _, Timed,
+      // q304: exact BIGINT cells per stratum; E/V/OR terms fold K=5
+      // bounded doubles rounded 6; chi2/OR from the ROUNDED sums — the
+      // q303 device
       """WITH ret AS (
            SELECT l_orderkey,
                   MAX(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS r
@@ -6697,10 +6163,13 @@ object SparkEntry {
                   ELSE 0.0 END, 6) AS chi2_cmh,
                 ROUND(CASE WHEN sum_rd > 0 THEN sum_rn / sum_rd
                   ELSE 0.0 END, 6) AS or_mh
-         FROM cells CROSS JOIN gtot""",
-    // q305: greater/less/tie pair counts are exact BIGINTs off the
-    // value-domain rollup; one final division rounded 6
-    "q305_cliffs_delta" ->
+         FROM cells CROSS JOIN gtot"""),
+    // q305: Cliff's delta — the effect size q229's Mann–Whitney
+    // z-score has no magnitude for; exact pair counts off the same
+    // value-domain rollup
+    QuerySpec("q305_cliffs_delta", Stats.qCliffsDelta _, Timed,
+      // q305: greater/less/tie pair counts are exact BIGINTs off the
+      // value-domain rollup; one final division rounded 6
       """WITH tagged AS (
            SELECT 'click' AS pair,
                   CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS in_arm,
@@ -6743,12 +6212,14 @@ object SparkEntry {
                   THEN CAST(n_gt - (n1 * n2 - n_gt - n_tie) AS DOUBLE)
                        / (CAST(n1 AS DOUBLE) * n2)
                   ELSE 0.0 END, 6) AS cliffs_delta
-         FROM agg""",
-    // q306: two-pass integer-mean pre-shift (|SUM(w)| < n), exact
-    // HUGEINT shifted power sums, double central moments and jb from
-    // the ROUNDED g1/g2 — every step spelled identically on both
-    // engines
-    "q306_jarque_bera" ->
+         FROM agg"""),
+    // q306: Jarque–Bera — q196's moments turned into the normality
+    // GATE, per order priority
+    QuerySpec("q306_jarque_bera", Stats.qJarqueBera _, Timed,
+      // q306: two-pass integer-mean pre-shift (|SUM(w)| < n), exact
+      // HUGEINT shifted power sums, double central moments and jb from
+      // the ROUNDED g1/g2 — every step spelled identically on both
+      // engines
       """WITH base AS (
            SELECT o_orderpriority,
                   CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
@@ -6796,11 +6267,13 @@ object SparkEntry {
                 ROUND(CAST(n AS DOUBLE) *
                   (skewness * skewness / 6.0 +
                    kurtosis_excess * kurtosis_excess / 24.0), 6) AS jb
-         FROM g""",
-    // q307: every rho_k a ratio of exact BIGINTs (n^2-scaled
-    // autocovariance with full-series mean); Q folds the ROUNDED
-    // rho's in fixed lag order
-    "q307_ljung_box" ->
+         FROM g"""),
+    // q307: Ljung–Box — joint white-noise test over lags 1..7 of the
+    // per-type daily series (q157's single lag made portmanteau)
+    QuerySpec("q307_ljung_box", Stats.qLjungBox _, Timed,
+      // q307: every rho_k a ratio of exact BIGINTs (n^2-scaled
+      // autocovariance with full-series mean); Q folds the ROUNDED
+      // rho's in fixed lag order
       """WITH daily AS (
            SELECT event_type, CAST(ts AS DATE) AS day,
                   CAST(COUNT(*) AS BIGINT) AS x
@@ -6850,11 +6323,13 @@ object SparkEntry {
                    + MAX(CASE WHEN k = 6 THEN rho * rho / CAST(n - 6 AS DOUBLE) END)
                    + MAX(CASE WHEN k = 7 THEN rho * rho / CAST(n - 7 AS DOUBLE) END)),
                   6) AS q_lb
-         FROM rho GROUP BY 1""",
-    // q308: Sum-of-squared-differences and the variance term are
-    // exact BIGINTs; eta and z are single spelled-identically
-    // divisions
-    "q308_von_neumann" ->
+         FROM rho GROUP BY 1"""),
+    // q308: von Neumann ratio — successive-difference randomness
+    // test, the parametric complement of q279's runs test
+    QuerySpec("q308_von_neumann", Stats.qVonNeumann _, Timed,
+      // q308: Sum-of-squared-differences and the variance term are
+      // exact BIGINTs; eta and z are single spelled-identically
+      // divisions
       """WITH daily AS (
            SELECT event_type, CAST(ts AS DATE) AS day,
                   CAST(COUNT(*) AS BIGINT) AS x
@@ -6881,10 +6356,12 @@ object SparkEntry {
                        / SQRT(4.0 * CAST(n_days - 2 AS DOUBLE)
                               / (CAST(n_days AS DOUBLE) * n_days - 1.0))
                   ELSE 0.0 END, 6) AS z_vn
-         FROM agg""",
-    // q309: q230's scorer CTE verbatim; the Brier numerator is one
-    // exact BIGINT; REL/RES fold score-domain doubles rounded 6
-    "q309_brier_decomposition" ->
+         FROM agg"""),
+    // q309: Brier score + Murphy decomposition — the proper-scoring
+    // verdict on the q230/q231 eval harness
+    QuerySpec("q309_brier_decomposition", Stats.qBrierDecomposition _, Timed,
+      // q309: q230's scorer CTE verbatim; the Brier numerator is one
+      // exact BIGINT; REL/RES fold score-domain doubles rounded 6
       """WITH sc AS (
            SELECT doc_id,
                   CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END AS is_pos,
@@ -6927,10 +6404,12 @@ object SparkEntry {
                 ROUND((CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE))
                   * (1.0 - CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE)), 6)
                   AS uncertainty
-         FROM agg""",
-    // q310: the oracle IS q144's batch interval-union SQL — the
-    // twelfth stream/batch parity statement
-    "q310_streaming_coverage" ->
+         FROM agg"""),
+    // q310: q144's interval coverage as streaming state — the twelfth
+    // bit-exact stream/batch parity (oracle IS q144's batch SQL)
+    QuerySpec("q310_streaming_coverage", EventTime.qStreamingCoverage _, Untimed,
+      // q310: the oracle IS q144's batch interval-union SQL — the
+      // twelfth stream/batch parity statement
       """WITH iv AS (SELECT user_id, epoch_ns(ts) // 1000000000 AS s,
                             epoch_ns(ts) // 1000000000 + 300 AS e
                      FROM events),
@@ -6954,10 +6433,12 @@ object SparkEntry {
                FROM isl GROUP BY user_id, island)
          SELECT user_id, COUNT(*) AS n_islands,
                 CAST(SUM(i_end - i_start) AS BIGINT) AS covered_sec
-         FROM g GROUP BY user_id""",
-    // q311: exact integer ranks/frequencies (tie order pinned on the
-    // term); the ln-ln OLS folds <=1000 bounded doubles rounded 6
-    "q311_zipf" ->
+         FROM g GROUP BY user_id"""),
+    // q311: Zipf rank-frequency fit per source — the corpus-health
+    // law behind the vocabulary decisions (slope ~ -1 on natural text)
+    QuerySpec("q311_zipf", (s, dir) => TextAnalysis.qZipf(s, dir), Timed,
+      // q311: exact integer ranks/frequencies (tie order pinned on the
+      // term); the ln-ln OLS folds <=1000 bounded doubles rounded 6
       """WITH tok AS (
            SELECT source,
                   unnest(string_split_regex(lower(text), '\s+')) AS w
@@ -6990,12 +6471,14 @@ object SparkEntry {
                        / ((CAST(n_top AS DOUBLE) * sxx - sx * sx)
                           * (CAST(n_top AS DOUBLE) * syy - sy * sy))
                   ELSE 0.0 END, 6) AS fit_r2
-         FROM sums""",
-    // q312: checkpoint membership is the integer predicate
-    // 8*first_doc <= i*max_doc; counts exact BIGINT. The (beta, lnK)
-    // OLS tail is transcendental and is spec-pinned, not hashed
-    // (round-10 ulp knife-edge; VERDICT r10 #1)
-    "q312_heaps" ->
+         FROM sums"""),
+    // q312: Heaps' law vocabulary-growth fit over doc-id-prefix
+    // checkpoints — prices vocabulary budgets and predicts OOV growth
+    QuerySpec("q312_heaps", TextAnalysis.qHeaps _, Timed,
+      // q312: checkpoint membership is the integer predicate
+      // 8*first_doc <= i*max_doc; counts exact BIGINT. The (beta, lnK)
+      // OLS tail is transcendental and is spec-pinned, not hashed
+      // (round-10 ulp knife-edge; VERDICT r10 #1)
       """WITH tk AS (
            SELECT CAST(doc_id AS BIGINT) AS doc_id, w
            FROM (SELECT doc_id,
@@ -7022,10 +6505,12 @@ object SparkEntry {
            SELECT t.cut, (m.mx * t.cut) // 8 AS threshold_doc,
                   t.n_tokens, v.n_types
            FROM tc t JOIN vc v ON t.cut = v.cut CROSS JOIN mxt m)
-         SELECT cut, threshold_doc, n_tokens, n_types FROM pts""",
-    // q313: q304's cells CTE verbatim; OR/weight/ln per stratum, the
-    // three-sum dispersion identity over K=5 bounded terms rounded 6
-    "q313_woolf" ->
+         SELECT cut, threshold_doc, n_tokens, n_types FROM pts"""),
+    // q313: Woolf homogeneity of odds ratios across q304's strata —
+    // the gate on whether CMH's pooled OR is meaningful
+    QuerySpec("q313_woolf", Stats.qWoolf _, Timed,
+      // q313: q304's cells CTE verbatim; OR/weight/ln per stratum, the
+      // three-sum dispersion identity over K=5 bounded terms rounded 6
       """WITH ret AS (
            SELECT l_orderkey,
                   MAX(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS r
@@ -7077,12 +6562,14 @@ object SparkEntry {
                   ELSE 0.0 END, 6) AS woolf_chi2,
                 ROUND(CASE WHEN sw > 0 THEN swl / sw
                   ELSE 0.0 END, 6) AS ln_or_pooled
-         FROM w CROSS JOIN g""",
-    // q314: the oracle IS q180's spine + IGNORE-NULLS window shape
-    // over the per-type daily counts — the thirteenth stream/batch
-    // parity; the stream never materializes a gap day, the checksums
-    // agree exactly
-    "q314_streaming_locf" ->
+         FROM w CROSS JOIN g"""),
+    // q314: q180's LOCF gap-fill as streaming state with closed-form
+    // gap back-fill — the thirteenth bit-exact stream/batch parity
+    QuerySpec("q314_streaming_locf", EventTime.qStreamingLocf _, Untimed,
+      // q314: the oracle IS q180's spine + IGNORE-NULLS window shape
+      // over the per-type daily counts — the thirteenth stream/batch
+      // parity; the stream never materializes a gap day, the checksums
+      // agree exactly
       """WITH daily AS (
            SELECT event_type, CAST(ts AS DATE) AS day,
                   CAST(COUNT(*) AS BIGINT) AS c
@@ -7104,10 +6591,12 @@ object SparkEntry {
          SELECT event_type, COUNT(*) AS n_days, COUNT(c) AS n_obs,
                 COUNT(*) - COUNT(c) AS n_filled,
                 CAST(SUM(idx * lvl) AS BIGINT) AS locf_checksum
-         FROM f GROUP BY 1""",
-    // q315: q21's scorer CTE per document, exact integer
-    // cells/margins/diagonal, guarded divisions rounded 6
-    "q315_lang_confusion" ->
+         FROM f GROUP BY 1"""),
+    // q315: multiclass confusion audit of the q21 lang-ID classifier
+    // (per-class P/R/F1, macro-F1, accuracy)
+    QuerySpec("q315_lang_confusion", TextAnalysis.qLangConfusion _, Timed,
+      // q315: q21's scorer CTE per document, exact integer
+      // cells/margins/diagonal, guarded divisions rounded 6
       """WITH s AS (
            SELECT lang AS actual,
                   CASE WHEN greatest(en, es, fr) = 0 THEN 'und'
@@ -7158,10 +6647,12 @@ object SparkEntry {
          SELECT cls, n_actual, n_pred, tp,
                 ROUND(praw, 6) AS prec, ROUND(rraw, 6) AS rec,
                 ROUND(f1raw, 6) AS f1, n_classes, macro_f1, accuracy
-         FROM m2 CROSS JOIN g""",
-    // q316: deviation max over exact n-scaled BIGINTs (no division
-    // inside the max); G divides exact integers under one sqrt
-    "q316_grubbs" ->
+         FROM m2 CROSS JOIN g"""),
+    // q316: Grubbs' single-outlier statistic — the formal test beside
+    // q164's MAD fences; exact n-scaled deviation maximum
+    QuerySpec("q316_grubbs", Stats.qGrubbs _, Timed,
+      // q316: deviation max over exact n-scaled BIGINTs (no division
+      // inside the max); G divides exact integers under one sqrt
       """WITH base AS (
            SELECT o_orderpriority,
                   CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
@@ -7190,10 +6681,12 @@ object SparkEntry {
                             / (CAST(t.n AS DOUBLE) * (t.n - 1))))
                   ELSE 0.0 END, 6) AS grubbs_g
          FROM tot t JOIN dev d
-           ON t.o_orderpriority = d.o_orderpriority""",
-    // q317: exact HUGEINT variance combos (block totals square past
-    // BIGINT); the sample 1/(n-1) cancels in the ratio
-    "q317_cronbach" ->
+           ON t.o_orderpriority = d.o_orderpriority"""),
+    // q317: Cronbach's alpha over the q299 complete blocks — the
+    // reliability/internal-consistency cell
+    QuerySpec("q317_cronbach", Stats.qCronbachAlpha _, Timed,
+      // q317: exact HUGEINT variance combos (block totals square past
+      // BIGINT); the sample 1/(n-1) cancels in the ratio
       """WITH spend AS (
            SELECT o_custkey, CAST(year(o_orderdate) AS BIGINT) AS yr,
                   CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
@@ -7237,10 +6730,12 @@ object SparkEntry {
                 ROUND(CASE WHEN vt > 0
                   THEN 1.5 * (1.0 - (v1 + v2 + v3) / vt)
                   ELSE 0.0 END, 6) AS cronbach_alpha
-         FROM vv""",
-    // q318: both error sums exact BIGINT; MASE cross-multiplies the
-    // integer counts so exactly one division happens
-    "q318_mase" ->
+         FROM vv"""),
+    // q318: MASE — the scale-free seasonal-forecast backtest over the
+    // per-type daily series (weekly naive vs daily naive)
+    QuerySpec("q318_mase", Stats.qMase _, Timed,
+      // q318: both error sums exact BIGINT; MASE cross-multiplies the
+      // integer counts so exactly one division happens
       """WITH daily AS (
            SELECT event_type, CAST(ts AS DATE) AS day,
                   CAST(COUNT(*) AS BIGINT) AS x
@@ -7264,11 +6759,14 @@ object SparkEntry {
                   THEN CAST(sum_abs_d7 * (n_days - 1) AS DOUBLE)
                        / CAST(sum_abs_d1 * (n_days - 7) AS DOUBLE)
                   ELSE 0.0 END, 6) AS mase
-         FROM agg""",
-    // q319: exact bucket cells; each pair folds <=7 sqrt terms with
-    // identical spelling (absent buckets contribute exactly 0 — the
-    // inner bucket join IS the fold)
-    "q319_hellinger" ->
+         FROM agg"""),
+    // q319: Bhattacharyya/Hellinger distance matrix between
+    // per-source length distributions (the metric member beside
+    // q255's JSD and q190's PSI)
+    QuerySpec("q319_hellinger", TextAnalysis.qHellingerMatrix _, Timed,
+      // q319: exact bucket cells; each pair folds <=7 sqrt terms with
+      // identical spelling (absent buckets contribute exactly 0 — the
+      // inner bucket join IS the fold)
       """WITH cells AS (
            SELECT source,
                   CAST(CASE WHEN n_chars <= 64 THEN 64
@@ -7293,10 +6791,12 @@ object SparkEntry {
          SELECT src_a, src_b, CAST(COUNT(*) AS BIGINT) AS n_buckets_common,
                 ROUND(SUM(term), 6) AS bhattacharyya,
                 ROUND(1.0 - SUM(term), 6) AS hellinger_sq
-         FROM p GROUP BY 1, 2""",
-    // q320: S2 and category totals exact BIGINT; kappa is one
-    // cross-multiplied division over HUGEINT products
-    "q320_fleiss_kappa" ->
+         FROM p GROUP BY 1, 2"""),
+    // q320: Fleiss' kappa — multi-rater nominal agreement (the four
+    // lines of every 4-line order rating its return flag)
+    QuerySpec("q320_fleiss_kappa", Stats.qFleissKappa _, Timed,
+      // q320: S2 and category totals exact BIGINT; kappa is one
+      // cross-multiplied division over HUGEINT products
       """WITH nij AS (
            SELECT l_orderkey AS k, l_returnflag AS cat,
                   CAST(COUNT(*) AS BIGINT) AS nij
@@ -7325,10 +6825,12 @@ object SparkEntry {
                               * (16 * CAST(n_subjects AS HUGEINT) * n_subjects
                                  - c2) AS DOUBLE)
                   ELSE 0.0 END, 6) AS fleiss_kappa
-         FROM tot CROSS JOIN c2t""",
-    // q321: per-year discrete-order-statistic quintile cuts (the
-    // q104x ROW_NUMBER = k device); all agreement sums exact
-    "q321_weighted_kappa" ->
+         FROM tot CROSS JOIN c2t"""),
+    // q321: quadratic-weighted Cohen's kappa — ordinal agreement of
+    // year-over-year spend quintiles (tier stability vs chance)
+    QuerySpec("q321_weighted_kappa", Stats.qWeightedKappa _, Timed,
+      // q321: per-year discrete-order-statistic quintile cuts (the
+      // q104x ROW_NUMBER = k device); all agreement sums exact
       """WITH spend AS (
            SELECT o_custkey, CAST(year(o_orderdate) AS BIGINT) AS yr,
                   CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
@@ -7382,10 +6884,12 @@ object SparkEntry {
                   THEN 1.0 - CAST(CAST(n AS HUGEINT) * sum_w_obs AS DOUBLE)
                              / CAST(sum_w_exp AS DOUBLE)
                   ELSE 1.0 END, 6) AS weighted_kappa
-         FROM tot CROSS JOIN wexp""",
-    // q322: exact integer-scaled residuals via the centered regressor
-    // (scale factor n*Suu cancels in the ratio); HUGEINT sums
-    "q322_durbin_watson" ->
+         FROM tot CROSS JOIN wexp"""),
+    // q322: Durbin–Watson on the daily trend-fit residuals — the
+    // regression-diagnostic serial-correlation cell beside q307/q308
+    QuerySpec("q322_durbin_watson", Stats.qDurbinWatson _, Timed,
+      // q322: exact integer-scaled residuals via the centered regressor
+      // (scale factor n*Suu cancels in the ratio); HUGEINT sums
       """WITH daily AS (
            SELECT event_type, CAST(ts AS DATE) AS day,
                   CAST(COUNT(*) AS BIGINT) AS x
@@ -7432,11 +6936,13 @@ object SparkEntry {
                 ROUND(CASE WHEN sse > 0
                   THEN CAST(scross AS DOUBLE) / CAST(sse AS DOUBLE)
                   ELSE 0.0 END, 6) AS rho1_resid
-         FROM sums""",
-    // q323: U_t telescopes to a positional cumulative of exact
-    // value-domain ranks; K exact BIGINT, p the one libm call (round
-    // 4, the ln precedent)
-    "q323_pettitt" ->
+         FROM sums"""),
+    // q323: Pettitt's rank-based changepoint test — the nonparametric
+    // cell beside q177's CUSUM and q185's Page (no known mean needed)
+    QuerySpec("q323_pettitt", Stats.qPettitt _, Timed,
+      // q323: U_t telescopes to a positional cumulative of exact
+      // value-domain ranks; K exact BIGINT, p the one libm call (round
+      // 4, the ln precedent)
       """WITH daily AS (
            SELECT event_type, CAST(ts AS DATE) AS day,
                   CAST(COUNT(*) AS BIGINT) AS x
@@ -7484,10 +6990,12 @@ object SparkEntry {
                        * CAST(k.n_days AS DOUBLE)
                      + CAST(k.n_days AS DOUBLE) * CAST(k.n_days AS DOUBLE))),
                   4) AS p_approx
-         FROM k JOIN cp ON k.event_type = cp.event_type""",
-    // q324: exact edge/degree counts; each contribution is one
-    // HUGEINT cross-multiplication and one division
-    "q324_brand_modularity" ->
+         FROM k JOIN cp ON k.event_type = cp.event_type"""),
+    // q324: Newman modularity of the brand partition on the
+    // co-purchase backbone — categorical assortativity beside q169
+    QuerySpec("q324_brand_modularity", (s, d) => Graph.qBrandModularity(s, d), Timed,
+      // q324: exact edge/degree counts; each contribution is one
+      // HUGEINT cross-multiplication and one division
       """WITH li AS (
            SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
          bb AS (
@@ -7510,11 +7018,13 @@ object SparkEntry {
                       - CAST(dg.d_c AS HUGEINT) * dg.d_c AS DOUBLE)
                   / CAST(4 * CAST(m.m_edges AS HUGEINT) * m.m_edges
                     AS DOUBLE), 6) AS q_contrib
-         FROM dg LEFT JOIN mi ON dg.brand = mi.brand CROSS JOIN m""",
-    // q325: all three counts exact integers (syllables = vowel-group
-    // runs + vowel-less words = sum of per-word max(1, runs)); both
-    // scores spelled-identical double formulas
-    "q325_flesch" ->
+         FROM dg LEFT JOIN mi ON dg.brand = mi.brand CROSS JOIN m"""),
+    // q325: Flesch reading ease / FK grade per source — the classic
+    // readability readout beside the q23/q117 quality gates
+    QuerySpec("q325_flesch", TextAnalysis.qFleschReadability _, Timed,
+      // q325: all three counts exact integers (syllables = vowel-group
+      // runs + vowel-less words = sum of per-word max(1, runs)); both
+      // scores spelled-identical double formulas
       """WITH perdoc AS (
            SELECT source,
                   CAST(len(regexp_extract_all(lower(text), '\S+'))
@@ -7547,10 +7057,12 @@ object SparkEntry {
                                  / CAST(n_words AS DOUBLE))
                        - 15.59
                   ELSE 0.0 END, 6) AS fk_grade
-         FROM agg""",
-    // q326: exact-rational diversity — no logarithm anywhere, so the
-    // gate checks at full hash strength
-    "q326_simpson" ->
+         FROM agg"""),
+    // q326: Simpson concentration/diversity + Berger–Parker per
+    // source — exact-rational diversity beside the entropy readouts
+    QuerySpec("q326_simpson", TextAnalysis.qSimpsonDiversity _, Timed,
+      // q326: exact-rational diversity — no logarithm anywhere, so the
+      // gate checks at full hash strength
       """WITH tok AS (
            SELECT source, unnest(regexp_split_to_array(lower(text),
              '\s+')) AS w
@@ -7578,16 +7090,25 @@ object SparkEntry {
                 ROUND(CASE WHEN n_tokens > 0
                   THEN CAST(max_c AS DOUBLE) / CAST(n_tokens AS DOUBLE)
                   ELSE 0.0 END, 6) AS berger_parker
-         FROM agg""",
-    // q327/q327b: the recursive CTE walks the literal two-term Holt
-    // recursion hour by hour — `//` truncates toward zero exactly
-    // like the Scala folds' Long division (b's numerator can be
-    // negative; floor semantics would diverge there)
-    "q327_streaming_holt" -> holtOracle,
-    "q327b_holt_batch" -> holtOracle,
-    // q328: q223's exact sufficient sums per flag; the partial folds
-    // the ROUNDED r's in a spelled-identical expression
-    "q328_partial_corr" ->
+         FROM agg"""),
+    // q327: integer Holt linear-trend monitor as streaming state —
+    // the FOURTEENTH bit-exact stream/batch parity, first over a
+    // two-term coupled recursion; oracle = recursive CTE
+    QuerySpec("q327_streaming_holt", EventTime.qStreamingHolt _, Untimed,
+      // q327/q327b: the recursive CTE walks the literal two-term Holt
+      // recursion hour by hour — `//` truncates toward zero exactly
+      // like the Scala folds' Long division (b's numerator can be
+      // negative; floor semantics would diverge there)
+      holtOracle),
+    // q327b: the batch fold through the same monitor core (its own
+    // gate row so batch and streaming are pinned independently)
+    QuerySpec("q327b_holt_batch", Stats.qHoltMonitor _, Timed,
+      holtOracle),
+    // q328: partial correlation (qty~price | discount) per flag —
+    // the confounder-removal cell over q223's sufficient sums
+    QuerySpec("q328_partial_corr", Stats.qPartialCorr _, Timed,
+      // q328: q223's exact sufficient sums per flag; the partial folds
+      // the ROUNDED r's in a spelled-identical expression
       """WITH b AS (SELECT l_returnflag AS flag,
                            CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100
                              AS HUGEINT) AS x,
@@ -7628,11 +7149,13 @@ object SparkEntry {
                   THEN (r_xy - r_xz * r_yz)
                        / SQRT((1.0 - r_xz * r_xz) * (1.0 - r_yz * r_yz))
                   ELSE 0.0 END, 6) AS partial_xy_z
-         FROM r3""",
-    // q329: q230's scorer CTE verbatim (clamped at 9000); deciles via
-    // the q104x ROW_NUMBER = k cut device; each HL term is one
-    // exact-integer ratio
-    "q329_hosmer_lemeshow" ->
+         FROM r3"""),
+    // q329: Hosmer–Lemeshow calibration test over the proxy
+    // classifier — the formal test beside q230/q309
+    QuerySpec("q329_hosmer_lemeshow", Stats.qHosmerLemeshow _, Timed,
+      // q329: q230's scorer CTE verbatim (clamped at 9000); deciles via
+      // the q104x ROW_NUMBER = k cut device; each HL term is one
+      // exact-integer ratio
       """WITH sc AS (
            SELECT doc_id,
                   CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END AS is_pos,
@@ -7692,10 +7215,12 @@ object SparkEntry {
                        / CAST(CAST(pred_milli AS HUGEINT)
                               * (9000 * n_g - pred_milli) AS DOUBLE)
                   ELSE 0.0 END, 6) AS hl_term
-         FROM agg""",
-    // q330: four exact sufficient rollups (T, Q, ΣT_j², ΣB_i²); every
-    // SS and both F's are spelled-identical double compositions
-    "q330_two_way_anova" ->
+         FROM agg"""),
+    // q330: two-way RCB ANOVA over the q299 blocks — Friedman's
+    // parametric twin (treatment + block F's from exact sums)
+    QuerySpec("q330_two_way_anova", Stats.qTwoWayAnova _, Timed,
+      // q330: four exact sufficient rollups (T, Q, ΣT_j², ΣB_i²); every
+      // SS and both F's are spelled-identical double compositions
       """WITH spend AS (
            SELECT o_custkey, CAST(year(o_orderdate) AS BIGINT) AS yr,
                   CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
@@ -7749,10 +7274,12 @@ object SparkEntry {
                   THEN (ss_block / (CAST(n_blocks AS DOUBLE) - 1.0))
                        / (ss_error / (2.0 * (CAST(n_blocks AS DOUBLE) - 1.0)))
                   ELSE 0.0 END, 6) AS f_block
-         FROM sse""",
-    // q331: q321's transition-cell chain verbatim, folded to
-    // off-diagonal pair rows — each term one exact-integer ratio
-    "q331_bowker_symmetry" ->
+         FROM sse"""),
+    // q331: Bowker's symmetry test over the q321 quintile transition
+    // matrix — the k×k McNemar (up-moves vs down-moves per pair)
+    QuerySpec("q331_bowker_symmetry", Stats.qBowkerSymmetry _, Timed,
+      // q331: q321's transition-cell chain verbatim, folded to
+      // off-diagonal pair rows — each term one exact-integer ratio
       """WITH spend AS (
            SELECT o_custkey, CAST(year(o_orderdate) AS BIGINT) AS yr,
                   CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
@@ -7805,10 +7332,40 @@ object SparkEntry {
                   THEN CAST((n_up - n_down) * (n_up - n_down) AS DOUBLE)
                        / CAST(n_up + n_down AS DOUBLE)
                   ELSE 0.0 END, 6) AS term
-         FROM pairs""",
-    // q333: ECE's numerator is one BIGINT sum of per-bin |9000·O − S|
-    // gaps; MCE the max of the same exact integers divided per bin
-    "q333_calibration_error" ->
+         FROM pairs"""),
+    // q332: Kendall's W — the concordance effect size for q299,
+    // computed independently (spec pins the χ²_F = n(k−1)·W identity)
+    QuerySpec("q332_kendall_w", Stats.qKendallW _, Timed,
+      // q332: column rank sums + per-block raw tie sums on the shared
+      // rank CTE; W is one DECIMAL-widened division
+      s"""$yearRankCte
+         py AS (SELECT yr, CAST(SUM(dij) AS BIGINT) AS d_sum
+                FROM ranked GROUP BY 1),
+         g AS (SELECT CAST(COUNT(*) // 3 AS BIGINT) AS n_blocks
+               FROM ranked),
+         tie AS (SELECT CAST(SUM(t * t * t - t) AS BIGINT) AS tie_sum
+                 FROM (SELECT o_custkey, v, COUNT(*) AS t
+                       FROM blocks GROUP BY 1, 2)),
+         sp AS (SELECT g.n_blocks,
+                       CAST(SUM((py.d_sum - 4 * g.n_blocks)
+                                * (py.d_sum - 4 * g.n_blocks)) AS BIGINT)
+                         AS s_prime
+                FROM py, g GROUP BY g.n_blocks)
+         SELECT sp.n_blocks, sp.s_prime, tie.tie_sum,
+                ROUND(CASE WHEN 24 * CAST(sp.n_blocks AS HUGEINT)
+                             * sp.n_blocks
+                           - CAST(sp.n_blocks AS HUGEINT) * tie.tie_sum > 0
+                  THEN CAST(3 * CAST(sp.s_prime AS HUGEINT) AS DOUBLE)
+                       / CAST(24 * CAST(sp.n_blocks AS HUGEINT) * sp.n_blocks
+                              - CAST(sp.n_blocks AS HUGEINT) * tie.tie_sum
+                         AS DOUBLE)
+                  ELSE 0.0 END, 6) AS kendall_w
+         FROM sp CROSS JOIN tie"""),
+    // q333: ECE/MCE — the reported calibration metric beside q329's
+    // test; exact-integer gap numerators
+    QuerySpec("q333_calibration_error", Stats.qCalibrationError _, Timed,
+      // q333: ECE's numerator is one BIGINT sum of per-bin |9000·O − S|
+      // gaps; MCE the max of the same exact integers divided per bin
       """WITH sc AS (
            SELECT CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END AS is_pos,
                   LEAST(n_toks * 100 + hits * 10 + dhits, 9000) AS sm
@@ -7845,10 +7402,12 @@ object SparkEntry {
                 ROUND(CAST(t.gap_sum AS DOUBLE)
                       / (9000.0 * CAST(t.n AS DOUBLE)), 6) AS ece,
                 ROUND(mx.mce_raw, 6) AS mce
-         FROM gaps g CROSS JOIN tot t CROSS JOIN mx""",
-    // q334: cf/df is an exact-rational-valued double — deterministic
-    // (burstiness DESC, term) total order
-    "q334_term_burstiness" ->
+         FROM gaps g CROSS JOIN tot t CROSS JOIN mx"""),
+    // q334: term burstiness (Church–Gale cf/df) — the clumping
+    // readout beside q182's temporal Fano factor
+    QuerySpec("q334_term_burstiness", (s, d) => TextAnalysis.qTermBurstiness(s, d), Timed,
+      // q334: cf/df is an exact-rational-valued double — deterministic
+      // (burstiness DESC, term) total order
       """WITH tok AS (
            SELECT doc_id, source,
                   unnest(regexp_split_to_array(lower(text), '\s+')) AS w
@@ -7868,10 +7427,12 @@ object SparkEntry {
                     ORDER BY burstiness DESC, w) AS BIGINT) AS rank
            FROM scored)
          SELECT source, rank, w AS term, cf, df, burstiness
-         FROM ranked WHERE rank <= 5""",
-    // q335: χ² keyness ranks (exact-rational double); LLR reported
-    // at round 4 (the ln precedent) but never orders
-    "q335_keyness" ->
+         FROM ranked WHERE rank <= 5"""),
+    // q335: chi-square keyness per source vs rest-of-corpus — the
+    // slice-comparison verb; LLR reported, χ² ranks (exact-rational)
+    QuerySpec("q335_keyness", (s, d) => TextAnalysis.qKeyness(s, d), Timed,
+      // q335: χ² keyness ranks (exact-rational double); LLR reported
+      // at round 4 (the ln precedent) but never orders
       """WITH tok AS (
            SELECT source,
                   unnest(regexp_split_to_array(lower(text), '\s+')) AS w
@@ -7922,10 +7483,12 @@ object SparkEntry {
            FROM scored)
          SELECT source, rank, w AS term, a AS cf_in, bb AS cf_rest,
                 chi2_keyness, llr
-         FROM ranked WHERE rank <= 5""",
-    // q336: cumulatives over the bounded score domain; the argmin
-    // orders by the ROUNDED impurity then the smallest threshold
-    "q336_decision_stump" ->
+         FROM ranked WHERE rank <= 5"""),
+    // q336: decision stump (best Gini split) over the proxy score —
+    // the one-split CART primitive beside the q231 sweep
+    QuerySpec("q336_decision_stump", Stats.qDecisionStump _, Timed,
+      // q336: cumulatives over the bounded score domain; the argmin
+      // orders by the ROUNDED impurity then the smallest threshold
       """WITH sc AS (
            SELECT CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END AS is_pos,
                   n_toks * 100 + hits * 10 + dhits AS score_milli
@@ -7978,9 +7541,11 @@ object SparkEntry {
                 gini_before, gini_after,
                 ROUND(gini_before - gini_after, 6) AS gini_gain
          FROM scored
-         ORDER BY gini_after ASC, score_milli ASC LIMIT 1""",
-    // q337: k and theta from the three exact sums; V = nS2 - S1^2
-    "q337_gamma_mom" ->
+         ORDER BY gini_after ASC, score_milli ASC LIMIT 1"""),
+    // q337: gamma method-of-moments fit per priority — the shape
+    // answer after q306's normality gate rejects
+    QuerySpec("q337_gamma_mom", Stats.qGammaMomFit _, Timed,
+      // q337: k and theta from the three exact sums; V = nS2 - S1^2
       """WITH base AS (
            SELECT o_orderpriority,
                   CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
@@ -8006,10 +7571,12 @@ object SparkEntry {
                   THEN CAST(var_num AS DOUBLE)
                        / (CAST(n - 1 AS DOUBLE) * CAST(s1 AS DOUBLE))
                   ELSE 0.0 END, 6) AS gamma_theta_cents
-         FROM vv""",
-    // q338: integer ppm credit — floor share per touch, remainder to
-    // the last touch, so each attributed purchase sums to exactly 1e6
-    "q338_linear_attribution" ->
+         FROM vv"""),
+    // q338: linear multi-touch attribution — exact ppm credit split,
+    // the multi-touch sibling of q199's last-touch
+    QuerySpec("q338_linear_attribution", Stats.qLinearAttribution _, Timed,
+      // q338: integer ppm credit — floor share per touch, remainder to
+      // the last touch, so each attributed purchase sums to exactly 1e6
       """WITH ev AS (
            SELECT user_id, event_id, event_type,
                   CAST(epoch_us(ts) AS BIGINT) AS us
@@ -8046,10 +7613,12 @@ object SparkEntry {
                 CAST(SUM(credit_ppm) AS BIGINT) AS credit_ppm_total,
                 CAST(SUM(is_touch) AS BIGINT) AS n_credited_touches,
                 CAST(COUNT(DISTINCT p_id) AS BIGINT) AS n_purchases
-         FROM pay GROUP BY 1""",
-    // q339: HHI one division of HUGEINT-widened integers; CR4 an
-    // exact top-4 fold via the deterministic (v DESC, suppkey) rank
-    "q339_hhi_concentration" ->
+         FROM pay GROUP BY 1"""),
+    // q339: HHI + CR4 market concentration per supplier nation —
+    // the antitrust read beside q160's Gini and q289's shares
+    QuerySpec("q339_hhi_concentration", Relational.qHhiConcentration _, Timed,
+      // q339: HHI one division of HUGEINT-widened integers; CR4 an
+      // exact top-4 fold via the deterministic (v DESC, suppkey) rank
       """WITH rev AS (
            SELECT l_suppkey,
                   CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
@@ -8077,10 +7646,12 @@ object SparkEntry {
                 CAST(CASE WHEN v_total > 0
                   THEN CAST(top4_v AS HUGEINT) * 1000000 // v_total
                   ELSE 0 END AS BIGINT) AS cr4_ppm
-         FROM agg""",
-    // q340: exact (n, S1, S2) per cell; means/variances/SMD
-    // spelled-identical doubles
-    "q340_covariate_balance" ->
+         FROM agg"""),
+    // q340: covariate balance SMD table — the causal "Table 1"
+    // before any exposure contrast (q208/q304's prerequisite)
+    QuerySpec("q340_covariate_balance", Stats.qCovariateBalance _, Timed,
+      // q340: exact (n, S1, S2) per cell; means/variances/SMD
+      // spelled-identical doubles
       """WITH spend AS (
            SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n_orders,
                   CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
@@ -8125,10 +7696,11 @@ object SparkEntry {
                   ELSE 0.0 END, 6) AS smd
          FROM m e1 JOIN m e0
            ON e1.covariate = e0.covariate
-          AND e1.exposed = 1 AND e0.exposed = 0""",
-    // q341: exact p-hat rationals through the fixed Wilson algebra
-    // (z = 1.959964 the same literal on both engines)
-    "q341_wilson_interval" ->
+          AND e1.exposed = 1 AND e0.exposed = 0"""),
+    // q341: Wilson score intervals for the q263 arm conversions
+    QuerySpec("q341_wilson_interval", Stats.qWilsonInterval _, Timed,
+      // q341: exact p-hat rationals through the fixed Wilson algebra
+      // (z = 1.959964 the same literal on both engines)
       """WITH arms AS (
            SELECT user_id,
                   MAX(CASE WHEN event_type = 'purchase' AND value >= 95
@@ -8161,9 +7733,10 @@ object SparkEntry {
                       / (4.0 * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
                     / (1.0 + 1.959964 * 1.959964 / CAST(n AS DOUBLE)), 6)
                   AS wilson_hi
-         FROM cnt""",
-    // q342: the splitter-health chi-square, one division
-    "q342_srm_check" ->
+         FROM cnt"""),
+    // q342: sample-ratio-mismatch health check on the arm splitter
+    QuerySpec("q342_srm_check", Stats.qSrmCheck _, Timed,
+      // q342: the splitter-health chi-square, one division
       """WITH arms AS (
            SELECT CAST(user_id % 2 AS BIGINT) AS arm,
                   CAST(COUNT(*) AS BIGINT) AS n
@@ -8175,10 +7748,17 @@ object SparkEntry {
                            / CAST(a.n + b.n AS DOUBLE) > 10.83
                      THEN 1 ELSE 0 END AS BIGINT) AS srm_alarm
          FROM arms a CROSS JOIN arms b
-         WHERE a.arm = 0 AND b.arm = 1""",
-    // q344: quintile strata via the q104x cut device; stratum
-    // contrasts and the weighted combination as spelled doubles
-    "q344_stratified_effect" ->
+         WHERE a.arm = 0 AND b.arm = 1"""),
+    // q343: isotonic (PAVA) calibration — the repair member of the
+    // calibration family (rows-only: sequential pooling isn't SQL;
+    // Round10eSpec pins isotonicity, mass conservation, and equality
+    // with an O(n^2) reference)
+    QuerySpec("q343_isotonic_calibration", Stats.qIsotonicCalibration _, Timed),
+    // q344: stratified-adjustment effect estimate — the estimator the
+    // q340 balance table gates (Cochran's design-based adjustment)
+    QuerySpec("q344_stratified_effect", Stats.qStratifiedEffect _, Timed,
+      // q344: quintile strata via the q104x cut device; stratum
+      // contrasts and the weighted combination as spelled doubles
       """WITH spend AS (
            SELECT o_custkey,
                   CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
@@ -8232,11 +7812,19 @@ object SparkEntry {
                 d.s1, d.s0,
                 ROUND(d.diff_raw, 6) AS diff_cents,
                 ROUND(a.ate_raw, 6) AS adjusted_diff_cents
-         FROM diffs d CROSS JOIN ate a""",
-    // q346: the LLR walk over enrollment order — coefficients are the
-    // SAME precomputed double literals as the Spark plan (in-engine
-    // ln() could differ in ulps); cumulative integers exact
-    "q346_sprt" ->
+         FROM diffs d CROSS JOIN ate a"""),
+    // q345: sequential Misra–Gries as streaming state — the FIFTEENTH
+    // bit-exact parity, first over state with eviction (rows-only:
+    // the fold isn't SQL; Round10eSpec pins stream ≡ batch fold and
+    // the true − n/(m+1) ≤ est ≤ true guarantee)
+    QuerySpec("q345_streaming_mg", EventTime.qStreamingMisraGries _, Untimed),
+    // q346: Wald SPRT over enrollment order — always-valid sequential
+    // inference beside the fixed-n q263/q341 (coefficients are
+    // precomputed literals; cumulative rides the offset device)
+    QuerySpec("q346_sprt", Stats.qSprt _, Timed,
+      // q346: the LLR walk over enrollment order — coefficients are the
+      // SAME precomputed double literals as the Spark plan (in-engine
+      // ln() could differ in ulps); cumulative integers exact
       """WITH per_user AS (
            SELECT user_id,
                   MAX(CASE WHEN event_type = 'purchase' AND value >= 95
@@ -8276,10 +7864,12 @@ object SparkEntry {
                 ROUND(fin.llr_last, 6) AS llr_final,
                 COALESCE(decide.first_cross_k, -1) AS first_cross_k,
                 COALESCE(decide.decision, 0) AS decision
-         FROM fin LEFT JOIN decide ON fin.arm = decide.arm""",
-    // q347: six exact sums per arm; R, the delta-method variance and
-    // the z-interval as spelled doubles (z = 1.959964)
-    "q347_ratio_metric_ci" ->
+         FROM fin LEFT JOIN decide ON fin.arm = decide.arm"""),
+    // q347: delta-method CI for the revenue-per-order ratio metric
+    // with user-level clustering (the experimentation-platform number)
+    QuerySpec("q347_ratio_metric_ci", Stats.qRatioMetricCi _, Timed,
+      // q347: six exact sums per arm; R, the delta-method variance and
+      // the z-interval as spelled doubles (z = 1.959964)
       """WITH per_user AS (
            SELECT user_id, CAST(COUNT(*) AS BIGINT) AS x,
                   CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT)
@@ -8318,10 +7908,12 @@ object SparkEntry {
                 ROUND(sed, 6) AS se_delta,
                 ROUND(r - 1.959964 * sed, 6) AS ci_lo,
                 ROUND(r + 1.959964 * sed, 6) AS ci_hi
-         FROM se""",
-    // q348: F_s = (n·Σ S_w²/n_w − S²)/(n·Q − S²) — the weekday term a
-    // ≤7-element double fold of exact integers (the q319 precedent)
-    "q348_seasonal_strength" ->
+         FROM se"""),
+    // q348: Hyndman seasonal strength per type — the one-number
+    // weekly-cycle read beside q174/q318
+    QuerySpec("q348_seasonal_strength", Stats.qSeasonalStrength _, Timed,
+      // q348: F_s = (n·Σ S_w²/n_w − S²)/(n·Q − S²) — the weekday term a
+      // ≤7-element double fold of exact integers (the q319 precedent)
       """WITH daily AS (
            SELECT event_type, CAST(ts AS DATE) AS day,
                   CAST(COUNT(*) AS BIGINT) AS x
@@ -8353,9 +7945,11 @@ object SparkEntry {
                     / (CAST(CAST(n_days AS HUGEINT) * q2 AS DOUBLE)
                        - CAST(CAST(s1 AS HUGEINT) * s1 AS DOUBLE)))
                   ELSE 0.0 END, 6) AS seasonal_strength
-         FROM agg""",
-    // q349: q307's exact rho construction, lags 1..14, long form
-    "q349_acf_table" ->
+         FROM agg"""),
+    // q349: the ACF table, lags 1..14 — the Box–Jenkins first plot
+    // between q157's lag-1 and q307's portmanteau
+    QuerySpec("q349_acf_table", Stats.qAcfTable _, Timed,
+      // q349: q307's exact rho construction, lags 1..14, long form
       """WITH daily AS (
            SELECT event_type, CAST(ts AS DATE) AS day,
                   CAST(COUNT(*) AS BIGINT) AS x
@@ -8392,10 +7986,12 @@ object SparkEntry {
                            * (CAST(g.n AS HUGEINT) * g.q2
                               - CAST(g.s AS HUGEINT) * g.s) AS DOUBLE)
                   ELSE 0.0 END, 6) AS rho
-         FROM pairs pr JOIN totals g ON pr.event_type = g.event_type""",
-    // q350: lift is an exact-rational double; the top-10 is a
-    // deterministic (lift DESC, ante, cons) cut
-    "q350_association_rules" ->
+         FROM pairs pr JOIN totals g ON pr.event_type = g.event_type"""),
+    // q350: association rules (support/confidence/lift, Agrawal) —
+    // the merchandiser formulation of co-purchase
+    QuerySpec("q350_association_rules", (s, d) => Relational.qAssociationRules(s, d), Timed,
+      // q350: lift is an exact-rational double; the top-10 is a
+      // deterministic (lift DESC, ante, cons) cut
       """WITH li AS (
            SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
          n AS (SELECT CAST(COUNT(DISTINCT o) AS BIGINT) AS n_orders FROM li),
@@ -8424,10 +8020,12 @@ object SparkEntry {
          SELECT ante, cons, c_ab AS support, c_ante, c_cons,
                 confidence_ppm, lift
          FROM scored
-         ORDER BY lift DESC, ante, cons LIMIT 10""",
-    // q351: q191's rank-flag construction verbatim; first-hit a fixed
-    // CASE chain, AP a fixed ten-term fold of exact 0/1 integers
-    "q351_mrr_map" ->
+         ORDER BY lift DESC, ante, cons LIMIT 10"""),
+    // q351: MRR + MAP@10 over the q191 retrieval fixture — the two
+    // remaining standard IR metrics beside NDCG
+    QuerySpec("q351_mrr_map", (s, d) => Similarity.qMrrMap(s, d), Timed,
+      // q351: q191's rank-flag construction verbatim; first-hit a fixed
+      // CASE chain, AP a fixed ten-term fold of exact 0/1 integers
       """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS q_emb,
                            label AS q_label
                     FROM embeddings WHERE vec_id < 100),
@@ -8483,10 +8081,36 @@ object SparkEntry {
                     * (r1 + r2 + r3 + r4 + r5 + r6 + r7 + r8 + r9 + r10)
                     / 10.0)
                   / CAST(LEAST(10, csize - 1) AS DOUBLE), 6) AS ap_at_10
-         FROM hit""",
-    // q353: sigma doubles of exact sums; floor allocation
-    // deterministic (sqrt/mul/div all correctly rounded IEEE)
-    "q353_neyman_allocation" ->
+         FROM hit"""),
+    // q352: near-dup cluster purity vs the lang label — the cluster
+    // COHERENCE audit beside q134's size census (q103's components)
+    QuerySpec("q352_cluster_purity", Dedup.qClusterPurity _, Timed,
+      // q352: q103's component chain verbatim + two cluster-keyed
+      // rollups; purity one division
+      (q103OraclePrefix +
+      """,
+         lab AS (
+           SELECT c.component, s.lang, COUNT(*) AS cnt
+           FROM comp c JOIN sizes z USING (component)
+                JOIN documents s ON c.doc_id = s.doc_id
+           WHERE z.csize > 1
+           GROUP BY 1, 2),
+         mj AS (
+           SELECT component, MAX(cnt) AS maj, SUM(cnt) AS members
+           FROM lab GROUP BY 1)
+         SELECT CAST(COUNT(*) AS BIGINT) AS n_clusters,
+                CAST(SUM(members) AS BIGINT) AS n_docs_in_clusters,
+                CAST(SUM(maj) AS BIGINT) AS sum_majority,
+                ROUND(CASE WHEN SUM(members) > 0
+                  THEN CAST(SUM(maj) AS DOUBLE)
+                       / CAST(SUM(members) AS DOUBLE)
+                  ELSE 0.0 END, 6) AS purity
+         FROM mj""")),
+    // q353: Neyman-optimal stratified allocation — the sampling
+    // DESIGN step before q142 draws
+    QuerySpec("q353_neyman_allocation", (s, d) => Pipeline.qNeymanAllocation(s, d), Timed,
+      // q353: sigma doubles of exact sums; floor allocation
+      // deterministic (sqrt/mul/div all correctly rounded IEEE)
       """WITH sums AS (
            SELECT source, CAST(COUNT(*) AS BIGINT) AS n_s,
                   CAST(SUM(n_chars) AS BIGINT) AS s1,
@@ -8508,30 +8132,11 @@ object SparkEntry {
                 CAST(CASE WHEN t.w_tot > 0
                   THEN FLOOR(10000.0 * w.wt / t.w_tot) ELSE 0 END AS BIGINT)
                   AS alloc
-         FROM w CROSS JOIN t""",
-    // q352: q103's component chain verbatim + two cluster-keyed
-    // rollups; purity one division
-    "q352_cluster_purity" -> (q103OraclePrefix +
-      """,
-         lab AS (
-           SELECT c.component, s.lang, COUNT(*) AS cnt
-           FROM comp c JOIN sizes z USING (component)
-                JOIN documents s ON c.doc_id = s.doc_id
-           WHERE z.csize > 1
-           GROUP BY 1, 2),
-         mj AS (
-           SELECT component, MAX(cnt) AS maj, SUM(cnt) AS members
-           FROM lab GROUP BY 1)
-         SELECT CAST(COUNT(*) AS BIGINT) AS n_clusters,
-                CAST(SUM(members) AS BIGINT) AS n_docs_in_clusters,
-                CAST(SUM(maj) AS BIGINT) AS sum_majority,
-                ROUND(CASE WHEN SUM(members) > 0
-                  THEN CAST(SUM(maj) AS DOUBLE)
-                       / CAST(SUM(members) AS DOUBLE)
-                  ELSE 0.0 END, 6) AS purity
-         FROM mj"""),
-    // q354: q176's exact S/Var discipline per weekday series, summed
-    "q354_seasonal_mk" ->
+         FROM w CROSS JOIN t"""),
+    // q354: seasonal Mann–Kendall — q176's trend test made
+    // seasonality-proof (within-weekday pairs, summed statistics)
+    QuerySpec("q354_seasonal_mk", Stats.qSeasonalMannKendall _, Timed,
+      // q354: q176's exact S/Var discipline per weekday series, summed
       """WITH daily AS (
            SELECT event_type, CAST(ts AS DATE) AS day,
                   CAST(COUNT(*) AS BIGINT) AS c,
@@ -8570,9 +8175,11 @@ object SparkEntry {
                        / SQRT(CAST(v.var_base - t.tie_term AS DOUBLE) / 18.0)
                   ELSE 0.0 END, 4) AS z
          FROM sstat s JOIN varw v ON s.event_type = v.event_type
-              JOIN ties t ON s.event_type = t.event_type""",
-    // q355: q233's doubled global ranks + tie correction, paired
-    "q355_dunn_posthoc" ->
+              JOIN ties t ON s.event_type = t.event_type"""),
+    // q355: Dunn's post-hoc — the pairwise follow-up to q233's
+    // omnibus, same global ranks and tie correction
+    QuerySpec("q355_dunn_posthoc", Stats.qDunnPosthoc _, Timed,
+      // q355: q233's doubled global ranks + tie correction, paired
       """WITH ev AS (
            SELECT event_type, CAST(ROUND(value * 100, 0) AS BIGINT) AS v
            FROM events),
@@ -8615,10 +8222,12 @@ object SparkEntry {
                   ELSE 0.0 END, 6) AS z_dunn,
                 CAST(kk.k * (kk.k - 1) / 2 AS BIGINT) AS m_comparisons
          FROM pergroup a JOIN pergroup b ON a.event_type < b.event_type
-         CROSS JOIN g CROSS JOIN kk""",
-    // q356: exact spectrum integers; K/hapax exact-rational, R one
-    // sqrt, C the one ln pair at round 4
-    "q356_lexical_richness" ->
+         CROSS JOIN g CROSS JOIN kk"""),
+    // q356: lexical richness battery (Yule's K, Guiraud R, Herdan C,
+    // hapax share) — the frequency-spectrum constants beside q326
+    QuerySpec("q356_lexical_richness", TextAnalysis.qLexicalRichness _, Timed,
+      // q356: exact spectrum integers; K/hapax exact-rational, R one
+      // sqrt, C the one ln pair at round 4
       """WITH tf AS (
            SELECT source, w, CAST(COUNT(*) AS BIGINT) AS m
            FROM (SELECT source,
@@ -8648,10 +8257,12 @@ object SparkEntry {
                 CAST(CASE WHEN v_types > 0
                   THEN v1_hapax * 1000000 // v_types ELSE 0 END AS BIGINT)
                   AS hapax_ppm
-         FROM agg""",
-    // q357: the q132 cohort join + an offset-ordered cumulative over
-    // the (cohorts × 8)-bounded rollup; LTV floored ppm-cents
-    "q357_cohort_ltv" ->
+         FROM agg"""),
+    // q357: cohort LTV curve — the revenue half of q132's retention
+    // matrix (cumulative floored ppm-cents per cohort member)
+    QuerySpec("q357_cohort_ltv", Stats.qCohortLtv _, Timed,
+      // q357: the q132 cohort join + an offset-ordered cumulative over
+      // the (cohorts × 8)-bounded rollup; LTV floored ppm-cents
       """WITH ev AS (
            SELECT user_id, date_trunc('day', ts) AS day,
                   CASE WHEN event_type = 'purchase'
@@ -8683,10 +8294,13 @@ object SparkEntry {
                 m.day_offset, s.cohort_users, m.revenue_cents, m.cum_cents,
                 CAST(CAST(m.cum_cents AS HUGEINT) * 1000000
                      // s.cohort_users AS BIGINT) AS ltv_ppm_cents
-         FROM cum m JOIN sized s USING (cohort_day)""",
-    // q358: class boundaries compare exact integers on the unique
-    // (revenue DESC, partkey) cumulative; shares floored ppm
-    "q358_abc_classification" ->
+         FROM cum m JOIN sized s USING (cohort_day)"""),
+    // q358: ABC/Pareto classification of parts by revenue — the
+    // actionable three-way split behind q160's Gini, on the offset
+    // cumulative device
+    QuerySpec("q358_abc_classification", Relational.qAbcClassification _, Timed,
+      // q358: class boundaries compare exact integers on the unique
+      // (revenue DESC, partkey) cumulative; shares floored ppm
       """WITH rev AS (
            SELECT l_partkey AS p,
                   CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
@@ -8716,28 +8330,26 @@ object SparkEntry {
                 CAST(CAST(COUNT(*) AS HUGEINT) * 1000000 // t.n_tot
                   AS BIGINT) AS part_share_ppm
          FROM cls CROSS JOIN tot t
-         GROUP BY abc_class, t.v_tot, t.n_tot""",
-    // q359-q364: shared value-domain ECDF machinery (pairedEcdfCte);
-    // every hashed statistic is an exact integer / decimal or a
-    // single correctly-rounded cast/division of exact values — no
-    // transcendentals, no reordered float sums (the q312 lesson)
-    "q359_ks_test" -> (pairedEcdfCte +
+         GROUP BY abc_class, t.v_tot, t.n_tot"""),
+    // q359-q364: the two-sample distribution-comparison family on the
+    // arm-vs-view design — full-distribution equality (KS / CvM /
+    // Kuiper), median equality (Mood), the variance-robust rank test
+    // (Brunner-Munzel), and the shift magnitude (Hodges-Lehmann) —
+    // all on the one value-domain integer machinery
+    QuerySpec("q359_ks_test", Stats.qKsTest _, Timed,
+      // q359-q364: shared value-domain ECDF machinery (pairedEcdfCte);
+      // every hashed statistic is an exact integer / decimal or a
+      // single correctly-rounded cast/division of exact values — no
+      // transcendentals, no reordered float sums (the q312 lesson)
+      (pairedEcdfCte +
       """SELECT pair, n1, n2, d_num,
                 ROUND(CAST(d_num AS DOUBLE)
                   / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)), 6) AS ks_d
          FROM (SELECT pair, MAX(n1) AS n1, MAX(n2) AS n2,
                       CAST(MAX(ABS(diff)) AS BIGINT) AS d_num
-               FROM ecdf GROUP BY 1)"""),
-    // q369: the streaming fold's final snapshot is the full-multiset
-    // statistic — the oracle is q359's batch SQL verbatim
-    "q369_streaming_ks" -> (pairedEcdfCte +
-      """SELECT pair, n1, n2, d_num,
-                ROUND(CAST(d_num AS DOUBLE)
-                  / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)), 6) AS ks_d
-         FROM (SELECT pair, MAX(n1) AS n1, MAX(n2) AS n2,
-                      CAST(MAX(ABS(diff)) AS BIGINT) AS d_num
-               FROM ecdf GROUP BY 1)"""),
-    "q360_cvm_test" -> (pairedEcdfCte +
+               FROM ecdf GROUP BY 1)""")),
+    QuerySpec("q360_cvm_test", Stats.qCvmTest _, Timed,
+      (pairedEcdfCte +
       """SELECT pair, n1, n2, CAST(t_num AS DOUBLE) AS t_num,
                 ROUND(CAST(t_num AS DOUBLE)
                   / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)
@@ -8746,16 +8358,18 @@ object SparkEntry {
          FROM (SELECT pair, MAX(n1) AS n1, MAX(n2) AS n2,
                       SUM(CAST(c1 + c2 AS HUGEINT) * CAST(diff AS HUGEINT)
                           * CAST(diff AS HUGEINT)) AS t_num
-               FROM ecdf GROUP BY 1)"""),
-    "q361_kuiper_test" -> (pairedEcdfCte +
+               FROM ecdf GROUP BY 1)""")),
+    QuerySpec("q361_kuiper_test", Stats.qKuiperTest _, Timed,
+      (pairedEcdfCte +
       """SELECT pair, n1, n2, dplus_num, dminus_num,
                 ROUND((CAST(dplus_num AS DOUBLE) + CAST(dminus_num AS DOUBLE))
                   / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)), 6) AS kuiper_v
          FROM (SELECT pair, MAX(n1) AS n1, MAX(n2) AS n2,
                       CAST(GREATEST(MAX(diff), 0) AS BIGINT) AS dplus_num,
                       CAST(GREATEST(MAX(-diff), 0) AS BIGINT) AS dminus_num
-               FROM ecdf GROUP BY 1)"""),
-    "q362_mood_median" -> (pairedEcdfCte +
+               FROM ecdf GROUP BY 1)""")),
+    QuerySpec("q362_mood_median", Stats.qMoodMedian _, Timed,
+      (pairedEcdfCte +
       """, med AS (SELECT pair, MIN(v) AS v_med FROM ecdf
                    WHERE 2 * (cum1 + cum2) >= n1 + n2 GROUP BY 1),
          cells AS (
@@ -8780,8 +8394,9 @@ object SparkEntry {
                         * CAST(a_above + b_above AS DOUBLE)
                         * CAST((n1 - a_above) + (n2 - b_above) AS DOUBLE)
                         AS denom
-               FROM cells)"""),
-    "q363_brunner_munzel" -> (pairedCountsCte +
+               FROM cells)""")),
+    QuerySpec("q363_brunner_munzel", Stats.qBrunnerMunzel _, Timed,
+      (pairedCountsCte +
       """, cums AS (
            SELECT pair, v, c1, c2,
                   CAST(SUM(c1) OVER (PARTITION BY pair ORDER BY v
@@ -8834,8 +8449,8 @@ object SparkEntry {
                           * SQRT(CAST(n1 AS DOUBLE) * s1sq
                                  + CAST(n2 AS DOUBLE) * s2sq))
                   ELSE 0.0 END, 6) AS w_bm
-         FROM fin"""),
-    "q364_hodges_lehmann" ->
+         FROM fin""")),
+    QuerySpec("q364_hodges_lehmann", Stats.qHodgesLehmann _, Timed,
       """WITH ev AS (SELECT event_type,
                             CAST(FLOOR(value) AS BIGINT) AS v FROM events),
          arms AS (SELECT unnest(['click', 'error', 'signup', 'purchase'])
@@ -8868,11 +8483,104 @@ object SparkEntry {
                 WHERE cum >= npairs // 2 + 1 GROUP BY 1)
          SELECT t.pair, t.npairs, l.hl_lo,
                 COALESCE(h.hl_hi_raw, l.hl_lo) AS hl_hi
-         FROM tot t JOIN lo l USING (pair) LEFT JOIN hi h USING (pair)""",
-    // q371: trim window via clamped cumulative counts; order stats
-    // L/H off the same cumulative; winsorized moments derived exactly;
-    // t is one spelled composition of the hashed integers
-    "q371_yuen_trimmed" -> (pairedCountsCte +
+         FROM tot t JOIN lo l USING (pair) LEFT JOIN hi h USING (pair)"""),
+    // q365: HITS hubs/authorities on the customer->part bipartite
+    // graph (integer-pico rounds; rows-only — normalized mutual
+    // recursion exceeds recursive-CTE SQL; HitsSpec pins a driver
+    // recompute bit-exactly)
+    QuerySpec("q365_hits", (s, dir) => Graph.qHits(s, dir), Timed,
+      // q365: 12 HITS iterations unrolled with exact-integer L1 renorm
+      // per half-round (HUGEINT product // total == Spark's DECIMAL div)
+      hitsOracle),
+    // q366: DCT perceptual-hash image near-dup through brightness/
+    // contrast nuisance (rows-only: PNG encode + DCT aren't SQL;
+    // PHashSpec pins invariances and brute-force recall)
+    QuerySpec("q366_image_phash_near_dup",
+      (s, dir) => Multimodal.qImagePhashNearDup(s, dir), Timed),
+    // q367: category-blocklist audit (the C4/LDNOOBW filtering verb:
+    // per (source, category) hits, flagged docs, survivors)
+    QuerySpec("q367_blocklist_audit", TextAnalysis.qBlocklistAudit _, Timed,
+      // q367: broadcast literal blocklist join; all counts exact BIGINT
+      """WITH block AS (
+           SELECT * FROM (VALUES
+             ('latency', 'slow'), ('latency', 'lag'), ('latency', 'wait'),
+             ('ops', 'spill'), ('ops', 'error'), ('ops', 'retry'),
+             ('infra', 'disk'), ('infra', 'cpu'), ('infra', 'memory'))
+             AS v(category, w)),
+         toks AS (SELECT doc_id, source,
+                         unnest(string_split_regex(lower(text), '\s+')) AS w
+                  FROM documents),
+         tk AS (SELECT * FROM toks WHERE len(w) > 0),
+         totals AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_tokens,
+                           CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
+                    FROM tk GROUP BY 1),
+         hits AS (SELECT t.source, b.category,
+                         CAST(COUNT(*) AS BIGINT) AS n_hits,
+                         CAST(COUNT(DISTINCT t.doc_id) AS BIGINT)
+                           AS n_docs_flagged
+                  FROM tk t JOIN block b ON t.w = b.w GROUP BY 1, 2)
+         SELECT h.source, h.category, h.n_hits, h.n_docs_flagged,
+                CAST(h.n_hits * 1000000 // tt.n_tokens AS BIGINT) AS hit_ppm,
+                tt.n_docs - h.n_docs_flagged AS n_docs_surviving
+         FROM hits h JOIN totals tt USING (source)"""),
+    // q368: encoding-garbage audit (U+FFFD, C0 controls, the
+    // CP1252-in-UTF-8 tells; zero on this clean fixture by generator
+    // construction — the query is the harness, MojibakeSpec proves
+    // the detectors fire on crafted corruption)
+    QuerySpec("q368_mojibake_audit", TextAnalysis.qMojibakeAudit _, Timed,
+      // q368: char-count deltas through identical regexes (DuckDB
+      // regexp_replace needs the 'g' flag — Spark's is global by
+      // default); integer ppm
+      """WITH per AS (
+           SELECT doc_id, source, CAST(len(text) AS BIGINT) AS n_chars,
+                  CAST(len(text) - len(regexp_replace(text, '�', '', 'g'))
+                    AS BIGINT) AS n_fffd,
+                  CAST(len(text) - len(regexp_replace(text,
+                    '[\x00-\x08\x0B\x0C\x0E-\x1F]', '', 'g'))
+                    AS BIGINT) AS n_ctrl,
+                  CAST(len(text) - len(regexp_replace(text, '[ÂÃ]', '', 'g'))
+                    AS BIGINT) AS n_c1tell
+           FROM documents)
+         SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+                CAST(SUM(n_chars) AS BIGINT) AS n_chars,
+                CAST(SUM(n_fffd) AS BIGINT) AS n_fffd,
+                CAST(SUM(n_ctrl) AS BIGINT) AS n_ctrl,
+                CAST(SUM(n_c1tell) AS BIGINT) AS n_c1tell,
+                CAST(SUM(CASE WHEN n_fffd + n_ctrl + n_c1tell > 0
+                  THEN 1 ELSE 0 END) AS BIGINT) AS n_docs_suspect,
+                CAST(CASE WHEN SUM(n_chars) > 0
+                  THEN (SUM(n_fffd) + SUM(n_ctrl) + SUM(n_c1tell))
+                       * 1000000 // SUM(n_chars)
+                  ELSE 0 END AS BIGINT) AS garbage_ppm
+         FROM per GROUP BY 1"""),
+    // q369: streaming KS drift monitor — q359 as mapGroupsWithState
+    // over the 3-file replay; final snapshot = the full-multiset
+    // statistic, so the oracle IS q359's batch SQL (the first
+    // streaming gate member with a full DuckDB oracle)
+    QuerySpec("q369_streaming_ks", EventTime.qStreamingKs _, Timed,
+      // q369: the streaming fold's final snapshot is the full-multiset
+      // statistic — the oracle is q359's batch SQL verbatim
+      (pairedEcdfCte +
+      """SELECT pair, n1, n2, d_num,
+                ROUND(CAST(d_num AS DOUBLE)
+                  / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)), 6) AS ks_d
+         FROM (SELECT pair, MAX(n1) AS n1, MAX(n2) AS n2,
+                      CAST(MAX(ABS(diff)) AS BIGINT) AS d_num
+               FROM ecdf GROUP BY 1)""")),
+    // q370: optimal length-bucket boundaries for padded batching —
+    // k-segmentation DP over the length histogram (rows-only: a DP is
+    // not SQL; BucketDpSpec pins it against brute-force enumeration)
+    QuerySpec("q370_bucket_boundaries", (s, dir) => Pipeline.qBucketBoundaries(s, dir), Timed,
+      // q370: the k=8 length-bucket segmentation DP, unrolled dp levels
+      // + first-wins traceback — all-integer, bit-exact cross-engine
+      bucketDpOracle),
+    // q371: Yuen's trimmed-mean test — robust two-sample location on
+    // exact trim-window order statistics and integer moments
+    QuerySpec("q371_yuen_trimmed", Stats.qYuenTrimmed _, Timed,
+      // q371: trim window via clamped cumulative counts; order stats
+      // L/H off the same cumulative; winsorized moments derived exactly;
+      // t is one spelled composition of the hashed integers
+      (pairedCountsCte +
       """, cums AS (
            SELECT c.pair, c.v, c.c1, c.c2,
                   CAST(SUM(c.c1) OVER (PARTITION BY c.pair ORDER BY c.v
@@ -8933,16 +8641,13 @@ object SparkEntry {
                 ROUND(CASE WHEN d1 + d2 > 0
                   THEN (tm1 - tm2) / SQRT(d1 + d2) ELSE 0.0 END, 6)
                   AS t_yuen
-         FROM fin3"""),
-    // q365: 12 HITS iterations unrolled with exact-integer L1 renorm
-    // per half-round (HUGEINT product // total == Spark's DECIMAL div)
-    "q365_hits" -> hitsOracle,
-    // q370: the k=8 length-bucket segmentation DP, unrolled dp levels
-    // + first-wins traceback — all-integer, bit-exact cross-engine
-    "q370_bucket_boundaries" -> bucketDpOracle,
-    // q372: the carried-state stream must reproduce the batch LAG()
-    // window bit for bit (ts ties broken by the unique event_id)
-    "q372_streaming_transitions" ->
+         FROM fin3""")),
+    // q372: per-user event-type transition matrix as streaming state
+    // (one carried triple per user, emission-once edges); oracle = the
+    // batch LAG() window — streaming row #2 with a full oracle
+    QuerySpec("q372_streaming_transitions", EventTime.qStreamingTransitions _, Timed,
+      // q372: the carried-state stream must reproduce the batch LAG()
+      // window bit for bit (ts ties broken by the unique event_id)
       """WITH ordered AS (
            SELECT user_id, event_type,
                   LAG(event_type) OVER (PARTITION BY user_id
@@ -8950,11 +8655,13 @@ object SparkEntry {
            FROM events)
          SELECT prev AS from_type, event_type AS to_type,
                 CAST(COUNT(*) AS BIGINT) AS n
-         FROM ordered WHERE prev IS NOT NULL GROUP BY 1, 2""",
-    // q373: exact BIGINT sufficient statistics; variance is one
-    // rounded double division of exact integers (HUGEINT products on
-    // the DuckDB side mirror Spark's DECIMAL(38,0))
-    "q373_streaming_moments" ->
+         FROM ordered WHERE prev IS NOT NULL GROUP BY 1, 2"""),
+    // q373: exact running moments per type — BIGINT (n, Σ, Σ²) state,
+    // one rounded division at the end (q312 discipline, streamed)
+    QuerySpec("q373_streaming_moments", EventTime.qStreamingMoments _, Timed,
+      // q373: exact BIGINT sufficient statistics; variance is one
+      // rounded double division of exact integers (HUGEINT products on
+      // the DuckDB side mirror Spark's DECIMAL(38,0))
       """WITH c AS (SELECT event_type,
                            CAST(ROUND(value * 100, 0) AS BIGINT) AS v
                     FROM events),
@@ -8967,64 +8674,64 @@ object SparkEntry {
                            - CAST(sum_cents AS HUGEINT) * sum_cents AS DOUBLE)
                       / CAST(CAST(n_events AS HUGEINT) * n_events AS DOUBLE),
                       6) AS var_cents2
-         FROM agg""",
-    // q374: the exact-distinct state's final snapshot is plain
-    // COUNT(DISTINCT) — q214's HLL estimates what this pins exactly
-    "q374_streaming_distinct" ->
+         FROM agg"""),
+    // q374: exact distinct users per type as id-set state — q214's
+    // question with a full oracle instead of an HLL estimate
+    QuerySpec("q374_streaming_distinct", EventTime.qStreamingDistinctExact _, Timed,
+      // q374: the exact-distinct state's final snapshot is plain
+      // COUNT(DISTINCT) — q214's HLL estimates what this pins exactly
       """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
                 CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-         FROM events GROUP BY event_type""",
-    // q367: broadcast literal blocklist join; all counts exact BIGINT
-    "q367_blocklist_audit" ->
-      """WITH block AS (
-           SELECT * FROM (VALUES
-             ('latency', 'slow'), ('latency', 'lag'), ('latency', 'wait'),
-             ('ops', 'spill'), ('ops', 'error'), ('ops', 'retry'),
-             ('infra', 'disk'), ('infra', 'cpu'), ('infra', 'memory'))
-             AS v(category, w)),
-         toks AS (SELECT doc_id, source,
-                         unnest(string_split_regex(lower(text), '\s+')) AS w
-                  FROM documents),
-         tk AS (SELECT * FROM toks WHERE len(w) > 0),
-         totals AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-                           CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
-                    FROM tk GROUP BY 1),
-         hits AS (SELECT t.source, b.category,
-                         CAST(COUNT(*) AS BIGINT) AS n_hits,
-                         CAST(COUNT(DISTINCT t.doc_id) AS BIGINT)
-                           AS n_docs_flagged
-                  FROM tk t JOIN block b ON t.w = b.w GROUP BY 1, 2)
-         SELECT h.source, h.category, h.n_hits, h.n_docs_flagged,
-                CAST(h.n_hits * 1000000 // tt.n_tokens AS BIGINT) AS hit_ppm,
-                tt.n_docs - h.n_docs_flagged AS n_docs_surviving
-         FROM hits h JOIN totals tt USING (source)""",
-    // q368: char-count deltas through identical regexes (DuckDB
-    // regexp_replace needs the 'g' flag — Spark's is global by
-    // default); integer ppm
-    "q368_mojibake_audit" ->
-      """WITH per AS (
-           SELECT doc_id, source, CAST(len(text) AS BIGINT) AS n_chars,
-                  CAST(len(text) - len(regexp_replace(text, '�', '', 'g'))
-                    AS BIGINT) AS n_fffd,
-                  CAST(len(text) - len(regexp_replace(text,
-                    '[\x00-\x08\x0B\x0C\x0E-\x1F]', '', 'g'))
-                    AS BIGINT) AS n_ctrl,
-                  CAST(len(text) - len(regexp_replace(text, '[ÂÃ]', '', 'g'))
-                    AS BIGINT) AS n_c1tell
-           FROM documents)
-         SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-                CAST(SUM(n_chars) AS BIGINT) AS n_chars,
-                CAST(SUM(n_fffd) AS BIGINT) AS n_fffd,
-                CAST(SUM(n_ctrl) AS BIGINT) AS n_ctrl,
-                CAST(SUM(n_c1tell) AS BIGINT) AS n_c1tell,
-                CAST(SUM(CASE WHEN n_fffd + n_ctrl + n_c1tell > 0
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_docs_suspect,
-                CAST(CASE WHEN SUM(n_chars) > 0
-                  THEN (SUM(n_fffd) + SUM(n_ctrl) + SUM(n_c1tell))
-                       * 1000000 // SUM(n_chars)
-                  ELSE 0 END AS BIGINT) AS garbage_ppm
-         FROM per GROUP BY 1""",
+         FROM events GROUP BY event_type"""),
+    // q375: byte-level BPE merges behind the GPT-2 pre-tokenizer —
+    // rows-only (iterative training is not SQL; ByteBpeSpec pins the
+    // exact sequence vs an independent reference implementation)
+    QuerySpec("q375_byte_bpe_merges", (s, dir) => Pipeline.qByteBpeMerges(s, dir), Timed),
+    // q376: byte-level BPE corpus encoding stats — rows-only
+    // (ByteBpeSpec pins losslessness + reference-encoder equality)
+    QuerySpec("q376_byte_bpe_encode", (s, dir) => Pipeline.qByteBpeEncode(s, dir), Timed),
   )
+
+  /** Name → runner for every registry entry. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.run).toMap
+
+  /** Name → DuckDB oracle SQL for every entry that has one. */
+  lazy val oracleSql: Map[String, String] =
+    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** q103's shared oracle CTE prefix (tok..sizes), verbatim the
+    * clause chain of the q103/q103a/q103b rows above — reused by the
+    * q103c/d/e single-column contingency split so all six rows run
+    * the identical component construction. */
+  private val q103OraclePrefix: String =
+    """WITH RECURSIVE tok AS (
+         SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents),
+       sh AS (
+         SELECT DISTINCT doc_id, toks[i] || ' ' || toks[i + 1] AS shingle
+         FROM (SELECT doc_id, toks, unnest(range(1, len(toks))) AS i FROM tok)
+         UNION
+         SELECT doc_id, array_to_string(toks, ' ') FROM tok WHERE len(toks) < 2),
+       cnt AS (SELECT doc_id, COUNT(*) AS nsh FROM sh GROUP BY doc_id),
+       inter AS (
+         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS ninter
+         FROM sh a JOIN sh b ON a.shingle = b.shingle
+              AND b.doc_id > a.doc_id AND b.doc_id <= a.doc_id + 64
+         GROUP BY 1, 2),
+       pairs AS (
+         SELECT doc_a, doc_b
+         FROM inter JOIN cnt ca ON ca.doc_id = inter.doc_a
+                    JOIN cnt cb ON cb.doc_id = inter.doc_b
+         WHERE ninter::DOUBLE / (ca.nsh + cb.nsh - ninter) >= 0.1),
+       edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
+                 UNION SELECT doc_b, doc_a FROM pairs),
+       reach AS (
+         SELECT doc_id AS u, doc_id AS v FROM documents
+         UNION
+         SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
+       comp AS (SELECT u AS doc_id, MIN(v) AS component FROM reach GROUP BY u),
+       sizes AS (SELECT component, COUNT(*) AS csize FROM comp GROUP BY component)"""
+
 
   /** Shared CTE prefix for q359-q363: per-(arm vs view) value-domain
     * counts — the oracle mirror of Stats.pairedValueCounts at cent

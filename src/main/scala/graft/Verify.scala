@@ -1,11 +1,22 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each SparkEntry.registry result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // dev-only subset (comma-separated names); the driver never sets it,
+    // so its runs always dump the full surface. A name the registry does
+    // not know is refused before any work, never filtered away.
+    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val unknown = only.toSeq.flatten.filterNot(SparkEntry.queries.contains).sorted
+    if (unknown.nonEmpty) {
+      System.err.println("[verify] unknown names in SPARK_GRAFT_VERIFY_ONLY: " +
+        unknown.mkString(", "))
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -31,14 +42,9 @@ object Verify {
     // failure in _failures.json (name → exception class + first line) so
     // a regression shows up as an explicit red row, never as an absence.
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // dev-only subset (comma-separated names); the driver never sets it,
-    // so its runs always dump the full surface
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    SparkEntry.registry.filter(q => only.forall(_.contains(q.name))).foreach { q =>
+      val name = q.name
+      try q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         val msg = s"${e.getClass.getSimpleName}: " +

@@ -287,8 +287,8 @@ final class StateTable {
     val e = entries.get(key)
     if (e == null || e.list == null) Vector.empty else e.list
   }
-  def llen(key: String): Long = withLock(listOf(key).size.toLong)
-  def lrange(key: String): Seq[String] = withLock(listOf(key))
+  def llen(key: String): Long = withLock { expireIfDue(key); listOf(key).size.toLong }
+  def lrange(key: String): Seq[String] = withLock { expireIfDue(key); listOf(key) }
 
   /** BLPOP: block until the list is non-empty or the timeout expires.
     * Refused while the caller holds the state lock (C4). */
@@ -418,7 +418,9 @@ final class StateTable {
         if (p.hash != null) Some(p.hash) else if (p.list != null) Some(Map.empty) else None
       case None => peek(key)
     }
+    // a key is loaded once per transaction, after lazy expiry
     private def pending(key: String): Pending = writes.getOrElseUpdate(key, {
+      expireIfDue(key)
       val e = entries.get(key)
       if (e == null) new Pending(null, null) else new Pending(e.hash, e.list)
     })

@@ -43,7 +43,7 @@ class BlockingSpec extends AnyFunSuite {
     val e = new Engine(TestSpark.spark, executionThreads = 2)
     e.load(LibraryDefinition("lib", code = { b =>
       b.registerAsyncFunction("consume", (ctx, _) =>
-        ctx.blpop("queue", 5000).map(RespString).getOrElse(RespNull))
+        ctx.blpop("queue", 30000).map(RespString).getOrElse(RespNull))
       b.registerFunction("produce", (ctx, args) => {
         RespLong(ctx.lpush("queue", args.head.asInstanceOf[RespString].v))
       })
@@ -51,6 +51,7 @@ class BlockingSpec extends AnyFunSuite {
     val fut = e.callAsync("lib", "consume")
     Thread.sleep(100) // let the consumer block first
     e.call("lib", "produce", Seq(RespString("payload")))
+    // well inside blpop's own timeout: only the push's wake-up returns it this soon
     assert(Await.result(fut, 10.seconds) == RespString("payload"))
     e.close()
   }

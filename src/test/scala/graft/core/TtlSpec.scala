@@ -142,4 +142,35 @@ class TtlSpec extends AnyFunSuite {
     t.rpush("r", "b")
     assert(t.ttl("r").isEmpty)
   }
+
+  test("a due key expires before a write or a list read touches it") {
+    val t = new StateTable
+    val events = ArrayBuffer.empty[String]
+    t.subscribe(e => events += s"${e.event}:${e.key}")
+    // `a` fired, and before the latest `b`
+    def before(a: String, b: String): Boolean =
+      events.indexOf(a) >= 0 && events.indexOf(a) < events.lastIndexOf(b)
+    def due(key: String): Unit = {
+      t.rpush(key, "old")
+      assert(t.expire(key, 20))
+      Thread.sleep(40)
+    }
+    due("push")
+    assert(t.rpush("push", "new") == 1) // a fresh list, not the dead one
+    assert(before("expired:push", "rpush:push"))
+    assert(t.lrange("push") == Seq("new") && t.ttl("push").isEmpty)
+    due("pop")
+    assert(t.lpop("pop").isEmpty)
+    assert(events.contains("expired:pop") && !events.contains("lpop:pop"))
+    due("read")
+    assert(t.llen("read") == 0)
+    assert(events.contains("expired:read"))
+    due("range")
+    assert(t.lrange("range").isEmpty)
+    assert(events.contains("expired:range"))
+    due("str")
+    t.set("str", "v")
+    assert(t.lrange("str").isEmpty && t.get("str").contains("v"))
+    assert(before("expired:str", "set:str"))
+  }
 }

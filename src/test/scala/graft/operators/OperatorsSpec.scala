@@ -25,6 +25,19 @@ class OperatorsSpec extends AnyFunSuite {
   test("every oracleSql key has a queries entry") {
     val missing = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
     assert(missing.isEmpty, s"oracle without query: $missing")
+    // the registry is the one declaration: a duplicate name would be
+    // silently collapsed by the derived maps
+    val names = SparkEntry.registry.map(_.name)
+    val dups = names.diff(names.distinct)
+    assert(dups.isEmpty, s"declared twice: $dups")
+    val blank = SparkEntry.registry.filter(_.oracle.exists(_.trim.isEmpty)).map(_.name)
+    assert(blank.isEmpty, s"blank oracle: $blank")
+    // the headline tier is the r1 baseline's 12 queries, nothing else
+    assert(SparkEntry.registry.filter(_.tier == graft.Tier.Headline).map(_.name).toSet == Set(
+      "q01_trigger_count", "q03_lookup_enrich", "q04_cross_shard_sum",
+      "q06_stream_window", "q10_window_rank", "q18_pricing_summary",
+      "q19_revenue_by_nation", "q23_text_quality", "q26_dedup_exact",
+      "q27_dedup_minhash_lsh", "q28_dedup_simhash", "q32_knn_brute_force"))
   }
 
   test("entry returns rows (driver smoke contract)") {
