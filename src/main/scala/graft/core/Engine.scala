@@ -1082,6 +1082,7 @@ final class Engine(val spark: SparkSession,
     org.slf4j.LoggerFactory.getLogger("graft.Engine").info(msg)
 
   override def close(): Unit = {
+    streams.stopTails()
     watchdogRunning = false // sweeper exits at its next 20 ms tick
     pool.shutdown()
     remotePool.shutdown()

@@ -43,7 +43,9 @@ import graft.core.{HadoopFiles, StreamRecord}
   * batch-unique `.staging-*` directory (invisible to readers); a crash
   * mid-publish leaves a prefix of the batch's segments committed and
   * the rest as inert staging — the same partial-ingest outcome as a
-  * crash between two driver-side `append` calls.
+  * crash between two driver-side `append` calls. A reader can likewise
+  * find a publish in progress part-way (see [[appendDistributed]] on
+  * record order).
   *
   * Concurrency: one writer JVM per log directory (appends and
   * compaction serialize on the instance lock; segment numbering is
@@ -83,6 +85,7 @@ final class GraftLog(val dir: String, hadoopConf: Configuration) extends Seriali
     } finally out.close()
     if (!fs.rename(tmp, segPath(next)))
       throw new java.io.IOException(s"concurrent append to $dir at segment $next")
+    GraftLog.wake()
     next + 1
   }
 
@@ -95,11 +98,16 @@ final class GraftLog(val dir: String, hadoopConf: Configuration) extends Seriali
     * deterministic). Only the per-partition (id, name, count) triples —
     * a few bytes each — are collected.
     *
-    * Record order: segment order follows partition order of `ds`;
-    * callers that need a stream's records id-ordered across segments
-    * should sort/partition `ds` accordingly (delivery itself orders by
-    * record id within each micro-batch, so the trigger engine does not
-    * require it). Returns the new segment count. */
+    * Record order: segment order follows partition order of `ds`. The
+    * trigger engine orders a stream's records across every segment one
+    * read finds (a micro-batch, or a round of its driver-side tail), but
+    * it skips a record at or below the stream's acked id. The segments
+    * are published one rename at a time, so a reader can find only the
+    * first of them; a stream whose ids do not ascend in partition order
+    * then has its lower ids skipped when the rest arrive. Callers that
+    * feed a stream trigger while it runs should give `ds` ascending ids
+    * in partition order, e.g. with `orderBy("stream", "idMs", "idSeq")`.
+    * Returns the new segment count. */
   def appendDistributed(ds: Dataset[StreamRecord]): Long = {
     require(!ds.isStreaming,
       "appendDistributed ingests a batch Dataset; for continuous ingest, " +
@@ -121,13 +129,20 @@ final class GraftLog(val dir: String, hadoopConf: Configuration) extends Seriali
             throw new java.io.IOException(s"concurrent append to $d at segment $next")
           next += 1
         }
-      } finally fs.delete(stageDir, true)
+      } finally {
+        fs.delete(stageDir, true)
+        GraftLog.wake()
+      }
       next
     }
   }
 
+  /** Whether segment `i` is committed. */
+  def hasSegment(i: Long): Boolean = fs.exists(segPath(i))
+
   /** Read segment `i` — used by the DSv2 partition readers (one call
-    * per segment of their range, executor-side) and by tests. */
+    * per segment of their range, executor-side), by the trigger
+    * engine's driver-side tail and by tests. */
   def readSegment(i: Long): Iterator[StreamRecord] =
     new String(HadoopFiles.readAll(fs, segPath(i)), UTF_8)
       .linesIterator.filter(_.nonEmpty).map(GraftLog.fromJsonLine)
@@ -230,6 +245,29 @@ object GraftLog {
   private[sources] val SegmentName = """seg-(\d{10})\.jsonl""".r
   private[sources] val TmpCompactName = """^\.tmp-compact-\d{10}$""".r
   private val mapper = new ObjectMapper()
+
+  // JVM-wide append signal: every committed append bumps the count and
+  // wakes the driver-side tails waiting in `awaitAppend`
+  private val appendSignal = new Object
+  @volatile private var appendCount = 0L
+
+  /** Appends committed in this JVM so far. A reader takes it BEFORE it
+    * probes for new segments, so an append that lands after the probe
+    * has already changed it and `awaitAppend` does not sleep. */
+  private[graft] def appends: Long = appendCount
+
+  /** Bump the append count and wake every waiting tail: after each
+    * committed append, and by a tail that is stopping. */
+  private[graft] def wake(): Unit = appendSignal.synchronized {
+    appendCount += 1
+    appendSignal.notifyAll()
+  }
+
+  /** Wait until the append count moves past `seen`, or `timeoutMs`
+    * pass: the fallback that sees appends made by another JVM. */
+  private[graft] def awaitAppend(seen: Long, timeoutMs: Long): Unit = appendSignal.synchronized {
+    if (appendCount == seen) appendSignal.wait(timeoutMs)
+  }
 
   private[sources] def stageDirPath(root: Path, batchId: String): Path =
     new Path(root, s".staging-$batchId")

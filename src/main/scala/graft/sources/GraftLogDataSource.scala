@@ -50,6 +50,12 @@ import graft.core.StreamRecord
   *   checkpoint — together with the engine's durable ack store this is
   *   the E5/E7 resume path on a source the engine also retains/trims
   *   ([[GraftLog.compact]]).
+  * - `StreamTriggerEngine.attach` runs no micro-batch query over a
+  *   bare stream of this source (unless it is given a `dataPlane`): it
+  *   reads the [[GraftLogTable]]'s `path` and `prefix` and tails the
+  *   log on the driver. This source serves every other streaming use
+  *   (operators on top, a `dataPlane`, `attachDistributed`) and batch
+  *   reads.
   */
 final class GraftLogDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-log"
@@ -64,7 +70,7 @@ final class GraftLogDataSource extends TableProvider with DataSourceRegister {
   }
 }
 
-final class GraftLogTable(path: String, prefix: String) extends Table with SupportsRead {
+final class GraftLogTable(val path: String, val prefix: String) extends Table with SupportsRead {
   override def name(): String = s"graft-log(`$path`, prefix='$prefix')"
   override def schema(): StructType = StreamRecord.schema
   override def capabilities(): util.Set[TableCapability] =

@@ -58,7 +58,8 @@ final class CheckpointStore(dir: String, hadoopConf: Configuration, keep: Int = 
         .mkString("\n")
       out.write(body.getBytes(UTF_8))
     } finally out.close()
-    fs.rename(tmp, file(v))
+    if (!fs.rename(tmp, file(v)))
+      throw new java.io.IOException(s"cannot publish checkpoint ${file(v)}")
     version = v
     listVersions().dropRight(keep).foreach(old => fs.delete(file(old), false))
   }

@@ -4,10 +4,12 @@ import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{Dataset, DataFrame}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.catalyst.streaming.StreamingRelationV2
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core._
 import graft.core.LibraryBuilder.StreamTriggerDef
+import graft.sources.{GraftLog, GraftLogTable}
 
 /** The stream-trigger engine (R3 + E1-E7): continuous, prefix-subscribed,
   * per-stream-ordered, checkpointed delivery of [[StreamRecord]]s to
@@ -203,18 +205,16 @@ final class StreamTriggerEngine(engine: Engine) {
       .repartition(col("stream"))
       .sortWithinPartitions("stream", "idMs", "idSeq")
     val it = ordered.toLocalIterator()
-    val chunk = new ArrayBuffer[StreamRecord](ChunkSize)
+    val chunk = new ArrayBuffer[StreamRecord](StreamTriggerEngine.ChunkSize)
     while (it.hasNext) {
       chunk += it.next()
-      if (chunk.size >= ChunkSize) {
+      if (chunk.size >= StreamTriggerEngine.ChunkSize) {
         processBatch(chunk.toSeq)
         chunk.clear()
       }
     }
     if (chunk.nonEmpty) processBatch(chunk.toSeq)
   }
-
-  private val ChunkSize = 10000
 
   /** All streams currently tracked by trimming consumers, with their
     * trim watermarks. */
@@ -236,7 +236,33 @@ final class StreamTriggerEngine(engine: Engine) {
     * batch is not committed, the source replays it after restart, and
     * the id checkpoint dedupes already-acked records.
     *
-    * `dataPlane` gets each micro-batch DataFrame AND its Structured
+    * A bare `graft-log` stream (`readStream.format("graft-log")…load()`,
+    * optionally `.as[StreamRecord]`, with no operator on top) is not run
+    * as a micro-batch query: a [[GraftLogTail]] thread on the driver
+    * follows the log and delivers each round of new segments through
+    * [[processBatch]] with no Spark job, so a record reaches its
+    * callback right after its append. A round orders each stream's
+    * records across all of its segments, as a micro-batch does across
+    * its batch. Its offset (the next segment) and query id are kept
+    * under `checkpointDir`, the offset written after the round's acks.
+    * Its `recentProgress` is empty, as there are no micro-batches, and
+    * `spark.streams` does not list it. Every other input keeps
+    * `writeStream.foreachBatch`. [[Engine.close]] stops the tails. */
+  def attach(ds: Dataset[StreamRecord], checkpointDir: String): StreamingQuery =
+    ds.queryExecution.analyzed match {
+      case StreamingRelationV2(_, _, t: GraftLogTable, _, _, _, _, _) =>
+        val spark = ds.sparkSession
+        val log = new GraftLog(t.path, spark.sparkContext.hadoopConfiguration)
+        val tail = GraftLogTail.start(spark, log, t.prefix, checkpointDir)(processBatch, tails.remove(_))
+        tails.add(tail)
+        // it may have ended before the add: then onEnd's remove missed it
+        if (!tail.isActive) tails.remove(tail)
+        tail
+      case _ => attach(ds, checkpointDir, (_, _) => ())
+    }
+
+  /** [[attach]] as a micro-batch query whatever the input, with
+    * `dataPlane` getting each micro-batch DataFrame AND its Structured
     * Streaming batch id before the driver-side routing, for a
     * declarative operator pipeline that runs on executors (e.g. running
     * aggregations into an exactly-once sink keyed on that id). The
@@ -245,16 +271,20 @@ final class StreamTriggerEngine(engine: Engine) {
     * (`rdb.rs:74-91`) — so a [[TransactionalSink]] keyed on it dedupes
     * replays without deriving a surrogate key from the data. */
   def attach(ds: Dataset[StreamRecord], checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
-      dataPlane: (DataFrame, Long) => Unit = (_, _) => ()): StreamingQuery =
+      dataPlane: (DataFrame, Long) => Unit): StreamingQuery =
     ds.writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
       .foreachBatch { (batch: Dataset[StreamRecord], batchId: Long) =>
         dataPlane(batch.toDF(), batchId)
         processBatchChunked(batch)
       }
       .start()
+
+  // the driver-side tails attached through this engine, until each ends
+  private val tails = java.util.concurrent.ConcurrentHashMap.newKeySet[GraftLogTail]()
+
+  /** Stop every tail attached through this engine (from [[Engine.close]]). */
+  private[graft] def stopTails(): Unit = tails.forEach(_.stop())
 
   /** Executor-side delivery (the scale path for heavy callbacks): the
     * batch is hash-partitioned on the stream key and SORTED WITHIN
@@ -362,6 +392,10 @@ final class StreamTriggerEngine(engine: Engine) {
 }
 
 object StreamTriggerEngine {
+  /** Records per [[processBatch]] call: a micro-batch or a tail round
+    * is ordered whole, then delivered in chunks of at most this many. */
+  private[graft] val ChunkSize = 10000
+
   /** Memory bound on per-stream delivered-but-unackable records held
     * behind a nacked record (see [[StreamCursor]]). */
   val MaxDeliveredAhead = 4096

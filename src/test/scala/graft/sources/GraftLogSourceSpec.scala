@@ -183,6 +183,166 @@ class GraftLogSourceSpec extends AnyFunSuite {
     e.close()
   }
 
+  private def graftLogStream(dir: String, prefix: String = "s:") = {
+    import spark.implicits._
+    spark.readStream.format("graft-log")
+      .option("path", dir).option("prefix", prefix).load().as[StreamRecord]
+  }
+
+  /** Whether the driver-side tail thread of `q` is running. */
+  private def tailAlive(q: org.apache.spark.sql.streaming.StreamingQuery): Boolean = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.getName == s"graft-log-tail-${q.runId}" && t.isAlive)
+  }
+
+  test("tail: appends through a second GraftLog, or by another writer, are delivered within a second") {
+    val dir = tmpDir("glog") + "/log"
+    newLog(dir).append(Seq(rec("s:1", 1)))
+    val e = new Engine(spark)
+    val seen = new java.util.concurrent.LinkedBlockingQueue[java.lang.Long]()
+    e.load(LibraryDefinition("lib", code =
+      _.registerStreamTrigger("t", "s:", (_, r) => seen.add(r.idMs))))
+    val q = e.streams.attach(graftLogStream(dir), tmpDir("glog-ckpt"))
+    def next(): Option[Long] =
+      Option(seen.poll(1, java.util.concurrent.TimeUnit.SECONDS)).map(_.longValue)
+    try {
+      assert(next().contains(1L))
+      assert(tailAlive(q) && q.recentProgress.isEmpty && q.lastProgress == null)
+      // a second instance shares nothing with the first but the JVM
+      newLog(dir).append(Seq(rec("s:1", 2), rec("other:x", 7)))
+      assert(next().contains(2L))
+      // a segment renamed into place by a writer outside this JVM's
+      // append signal is found by the fallback poll
+      val tmp = java.nio.file.Paths.get(dir, ".tmp-seg-0000000002")
+      java.nio.file.Files.write(tmp, (GraftLog.toJsonLine(rec("s:1", 3)) + "\n").getBytes("UTF-8"))
+      java.nio.file.Files.move(tmp, java.nio.file.Paths.get(dir, "seg-0000000002.jsonl"))
+      assert(next().contains(3L))
+      assert(seen.isEmpty) // other: was dropped by the prefix
+    } finally { q.stop(); e.close() }
+  }
+
+  test("tail: no tail thread outlives stop() or Engine.close()") {
+    val dir = tmpDir("glog") + "/log"
+    newLog(dir).append(Seq(rec("s:1", 1)))
+    def engine() = {
+      val e = new Engine(spark)
+      e.load(LibraryDefinition("lib", code = _.registerStreamTrigger("t", "s:", (_, _) => ())))
+      e
+    }
+    val e1 = engine()
+    val q1 = e1.streams.attach(graftLogStream(dir), tmpDir("glog-ckpt"))
+    q1.processAllAvailable()
+    assert(q1.isActive && tailAlive(q1))
+    q1.stop()
+    assert(!q1.isActive && !tailAlive(q1) && q1.exception.isEmpty)
+    e1.close()
+
+    // Engine.close() with the query left running
+    val e2 = engine()
+    val q2 = e2.streams.attach(graftLogStream(dir), tmpDir("glog-ckpt"))
+    q2.processAllAvailable()
+    assert(q2.isActive && tailAlive(q2))
+    e2.close()
+    assert(!q2.isActive && !tailAlive(q2))
+    assert(q2.awaitTermination(1000L))
+  }
+
+  test("tail: a Retry failure ends the query; a new engine resumes at the persisted offset") {
+    val dir = tmpDir("glog") + "/log"
+    val log = newLog(dir)
+    val acks = tmpDir("glog-acks")
+    val ckpt = tmpDir("glog-ckpt")
+    @volatile var failOn = 3L
+    def engine(seen: ArrayBuffer[Long]) = {
+      val e = new Engine(spark, checkpointDir = Some(acks))
+      e.load(LibraryDefinition("lib", code = _.registerStreamTrigger("t", "s:", (_, r) => {
+        if (r.idMs == failOn) throw new RuntimeException(s"nack ${r.idMs}")
+        seen += r.idMs
+      })))
+      e
+    }
+    log.append(Seq(rec("s:1", 1), rec("s:1", 2)))
+    val seen1 = ArrayBuffer.empty[Long]
+    val e1 = engine(seen1)
+    val q1 = e1.streams.attach(graftLogStream(dir), ckpt)
+    q1.processAllAvailable()
+    assert(seen1.toSeq == Seq(1, 2))
+    // segment 0 is delivered and its offset persisted: a canary on a
+    // stream with no durable ack would be delivered if it were re-read
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(new org.apache.hadoop.fs.Path(dir, "seg-0000000000.jsonl"), true)
+    try out.write((GraftLog.toJsonLine(rec("s:canary", 1)) + "\n").getBytes("UTF-8"))
+    finally out.close()
+
+    log.append(Seq(rec("s:1", 3), rec("s:1", 4)))
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q1.processAllAvailable())
+    assert(err.getCause.isInstanceOf[StreamDeliveryException], err)
+    assert(!q1.isActive && q1.exception.contains(err))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](q1.awaitTermination())
+    q1.stop()
+    e1.close()
+    assert(seen1.toSeq == Seq(1, 2)) // window 1: 4 waits behind the failed 3
+
+    failOn = -1L
+    val seen2 = ArrayBuffer.empty[Long]
+    val e2 = engine(seen2)
+    val q2 = e2.streams.attach(graftLogStream(dir), ckpt)
+    try q2.processAllAvailable() finally { q2.stop(); e2.close() }
+    assert(seen2.toSeq == Seq(3, 4)) // the unacked records, and no canary
+  }
+
+  test("tail: a round larger than a chunk, in segments whose ids interleave, delivers every record") {
+    val dir = tmpDir("glog") + "/log"
+    val log = newLog(dir)
+    val n = graft.streaming.StreamTriggerEngine.ChunkSize + 2000L
+    // one stream's odd ids in segment 0 and its even ids in segment 1,
+    // each longer than a chunk: the ids do not ascend across segments
+    log.append((1L to n).map(i => rec("s:a", 2 * i - 1)))
+    log.append((1L to n).map(i => rec("s:a", 2 * i)))
+    val e = new Engine(spark)
+    val seen = ArrayBuffer.empty[Long]
+    e.load(LibraryDefinition("lib", code =
+      _.registerStreamTrigger("t", "s:", (_, r) => seen += r.idMs)))
+    val q = e.streams.attach(graftLogStream(dir), tmpDir("glog-ckpt"))
+    try {
+      q.processAllAvailable()
+      assert(seen.size == 2 * n && seen.toSeq == (1L to 2 * n))
+      // a distributed append sorted as its scaladoc asks for delivers
+      // whole while the tail runs, however much of it a round finds
+      import spark.implicits._
+      log.appendDistributed(spark.createDataset((2 * n + 1 to 4 * n).map(i => rec("s:a", i)))
+        .repartition(3).orderBy("stream", "idMs", "idSeq"))
+      q.processAllAvailable()
+      assert(seen.size == 4 * n && seen.toSeq == (1L to 4 * n))
+    } finally { q.stop(); e.close() }
+  }
+
+  test("tail: attaching again on a live checkpoint stops the running tail; the query id survives") {
+    val dir = tmpDir("glog") + "/log"
+    newLog(dir).append(Seq(rec("s:1", 1)))
+    def engine() = {
+      val e = new Engine(spark)
+      e.load(LibraryDefinition("lib", code = _.registerStreamTrigger("t", "s:", (_, _) => ())))
+      e
+    }
+    val ckpt = tmpDir("glog-ckpt")
+    val (e1, e2) = (engine(), engine())
+    val q1 = e1.streams.attach(graftLogStream(dir), ckpt)
+    q1.processAllAvailable()
+    val q2 = e2.streams.attach(graftLogStream(dir), ckpt)
+    assert(!q1.isActive && !tailAlive(q1) && q1.exception.isEmpty)
+    assert(q2.isActive && tailAlive(q2))
+    assert(q2.id == q1.id && q2.runId != q1.runId)
+    e2.close()
+    e1.close()
+    val e3 = engine()
+    val q3 = e3.streams.attach(graftLogStream(dir), ckpt)
+    val other = e3.streams.attach(graftLogStream(dir), tmpDir("glog-ckpt"))
+    try assert(q3.id == q1.id && other.id != q1.id && q3.isActive && other.isActive)
+    finally e3.close()
+  }
+
   test("appendDistributed: executor-written segments, driver-sequenced, readable by the source") {
     val dir = tmpDir("glog") + "/log"
     val log = newLog(dir)

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.core._
 
-/** The callback both planes run in the cross-plane property. Static, so
+/** The callback every plane runs in the cross-plane property. Static, so
   * the executor-side closure captures no engine state (local mode shares
   * the JVM). A flagged record fails its first attempt only. */
 object CrossPlaneSink {
@@ -32,9 +32,10 @@ object CrossPlaneSink {
   }
 }
 
-/** [[StreamCursor]] as both delivery planes use it: acks are published
-  * whole, and the driver path and the executor path deliver the same
-  * records in the same order and end in the same state. */
+/** [[StreamCursor]] as every delivery plane uses it: acks are published
+  * whole, and the driver path, the executor path and the graft-log tail
+  * deliver the same records in the same order and end in the same
+  * state. */
 class StreamCursorSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
@@ -165,8 +166,28 @@ class StreamCursorSpec extends AnyFunSuite {
       }
       val executor = outcome(e2)
 
+      // graft-log tail plane: the records as segments of 1-4 records,
+      // re-attached from the same checkpoint after each failed round
+      CrossPlaneSink.reset(flagged)
+      val e3 = engine(policy, window)
+      val logDir = java.nio.file.Files.createTempDirectory("graft-cross-log").toString + "/log"
+      val log = new graft.sources.GraftLog(logDir, spark.sparkContext.hadoopConfiguration)
+      records.grouped(1 + Math.floorMod(seed, 4L).toInt).foreach(log.append)
+      val tailCkpt = java.nio.file.Files.createTempDirectory("graft-cross-tail").toString
+      var reattaches = 0
+      var tailClean = false
+      while (!tailClean && reattaches < 50) {
+        val q = e3.streams.attach(spark.readStream.format("graft-log")
+          .option("path", logDir).option("prefix", "s:").load().as[StreamRecord], tailCkpt)
+        tailClean = try { q.processAllAvailable(); true }
+          catch { case _: StreamingQueryException => reattaches += 1; false }
+          finally q.stop()
+      }
+      val tail = outcome(e3)
+
       s"policy=$policy window=$window flagged=${flagged.toSeq.sorted}\n" +
-        s"driver=$driver\nexecutor=$executor" |: (replays < 50 && clean && driver == executor)
+        s"driver=$driver\nexecutor=$executor\ntail=$tail" |:
+        (replays < 50 && clean && tailClean && driver == executor && driver == tail)
     }
     val result = check(Parameters.default.withMinSuccessfulTests(24), prop)
     assert(result.passed, result.status.toString)
