@@ -438,7 +438,7 @@ object WinnowFingerprint {
   * codegen'd Catalyst expression: one fused pass computes the dot
   * product and both norms with zero per-row allocations — replacing
   * the interpreted `aggregate(zip_with(...))` higher-order-function
-  * formulation (kept as [[graft.functions.cosineSimilarityReference]]
+  * formulation (kept in CosineSimilaritySpec as the reference
   * for parity testing), which allocates an intermediate product array
   * per row and cannot participate in whole-stage codegen. This sits in
   * the innermost loop of every similarity/near-dup operator (candidate
@@ -563,7 +563,7 @@ object CosineSimilarityExpr {
       ny += yv * yv
       i += 1
     }
-    // norms run over each side's FULL length (matches l2Norm(a)*l2Norm(b))
+    // norms run over each side's FULL length (as the HOF reference in CosineSimilaritySpec does)
     while (i < xn) {
       val xv = if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)
       nx += xv * xv

@@ -16,20 +16,6 @@ package object functions {
   /** Whitespace tokens of a string column. */
   def tokens(text: Column): Column = split(text, "\\s+")
 
-  /** Distinct whitespace tokens (set semantics — used for Jaccard). */
-  def tokenSet(text: Column): Column = array_distinct(tokens(text))
-
-  /** Word n-gram shingles over whitespace tokens. Short texts (< n
-    * tokens) collapse to a single shingle of the whole text so every
-    * document has a non-empty shingle set. Test-only ground truth for
-    * the native [[WordShingles]] expression. */
-  private[graft] def shinglesReference(text: Column, n: Int): Column = {
-    val toks = tokens(text)
-    when(size(toks) < n, array(concat_ws(" ", toks)))
-      .otherwise(transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(n)))))
-  }
-
   /** Distinct shingles (set semantics) — native codegen'd expression
     * ([[WordShingles]]); requires [[GraftFunctions.register]]. */
   def shingleSet(text: Column, n: Int): Column =
@@ -93,33 +79,12 @@ package object functions {
     when(uni === 0, lit(0.0)).otherwise(inter / uni)
   }
 
-
-  /** Dot product of two numeric array columns, accumulated in Double
-    * left-to-right (deterministic). */
-  def dotProduct(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  /** L2 norm of a numeric array column. */
-  def l2Norm(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v.cast("double") * v.cast("double")))
-
   /** Cosine similarity of two FLOAT/DOUBLE array columns (0 when either
     * is a zero vector) — the native one-pass codegen'd expression
     * ([[CosineSimilarityExpr]]); auto-registers on the active session. */
   def cosineSimilarity(a: Column, b: Column): Column = {
     GraftFunctions.register(org.apache.spark.sql.SparkSession.active)
     call_function("cosine_similarity", a, b)
-  }
-
-  /** The declarative higher-order-function formulation of
-    * [[cosineSimilarity]] — interpreted (allocates a product array per
-    * row), kept as bit-exactness ground truth for the native
-    * expression's parity test. */
-  private[graft] def cosineSimilarityReference(a: Column, b: Column): Column = {
-    val d = dotProduct(a, b)
-    val n = l2Norm(a) * l2Norm(b)
-    when(n === 0, lit(0.0)).otherwise(d / n)
   }
 
   /** All multi-table sign-LSH buckets for a vector:
@@ -131,29 +96,6 @@ package object functions {
     * for ANN search; multiple tables boost recall. */
   def signLshBuckets(vec: Column, nbits: Int, tables: Int): Column =
     call_function("sign_lsh_buckets", vec, lit(nbits), lit(tables))
-
-  /** The declarative higher-order-function formulation of
-    * [[signLshBuckets]] — interpreted (not codegen'd) and recomputes
-    * every hyperplane weight per row, so it is test-only ground truth
-    * for the native expression's bit-exactness. */
-  private[graft] def signLshBucketsReference(vec: Column, nbits: Int, tables: Int): Column = {
-    require(nbits >= 1 && nbits <= 63, "nbits in [1,63]")
-    def bucket(table: Column): Column =
-      aggregate(
-        sequence(lit(0), lit(nbits - 1)),
-        lit(0L),
-        (acc, h) => {
-          // hyperplane h of table t, dim i weight = hash(t,h,i) % 1001 - 500
-          val proj = aggregate(
-            zip_with(vec, sequence(lit(0), size(vec) - 1),
-              (x, i) => x.cast("double") *
-                ((pmod(xxhash64(table, h, i), lit(1001)) - 500).cast("double"))),
-            lit(0.0), (a2, v) => a2 + v)
-          acc * 2 + when(proj > 0, lit(1L)).otherwise(lit(0L))
-        })
-    transform(sequence(lit(0), lit(tables - 1)),
-      t => struct(t.as("tbl"), bucket(t).as("bucket")))
-  }
 
   /** 64-bit SimHash of a token array (native Catalyst expression;
     * requires [[GraftFunctions.register]] on the session). */
@@ -212,15 +154,6 @@ package object functions {
     when(size(toks) === 0, lit(0.0)).otherwise(hits.cast("double") / size(toks).cast("double"))
   }
 
-  /** The original per-token lambda formulation — test-only ground truth
-    * for [[stopwordRatio]]'s regex counting. */
-  private[graft] def stopwordRatioReference(text: Column): Column = {
-    val toks = tokens(lower(text))
-    val stops = filter(toks, t =>
-      array_contains(array((StopwordsEn ++ StopwordsEs ++ StopwordsFr).distinct.map(lit): _*), t))
-    when(size(toks) === 0, lit(0.0)).otherwise(size(stops).cast("double") / size(toks).cast("double"))
-  }
-
   /** Ratio of non-[a-z0-9 ] characters (punctuation/symbols) to length. */
   def punctRatio(text: Column): Column =
     when(length(text) === 0, lit(0.0)).otherwise(
@@ -237,15 +170,6 @@ package object functions {
     val toks = tokens(text)
     when(size(toks) === 0, lit(0.0)).otherwise(
       length(regexp_replace(text, "\\s+", "")).cast("double") /
-        size(toks).cast("double"))
-  }
-
-  /** The original lambda formulation — test-only ground truth for
-    * [[meanTokenLen]]. */
-  private[graft] def meanTokenLenReference(text: Column): Column = {
-    val toks = tokens(text)
-    when(size(toks) === 0, lit(0.0)).otherwise(
-      aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") /
         size(toks).cast("double"))
   }
 

@@ -1,152 +1,23 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Bucketed-table layout for co-located joins — the storage-side scale
-  * lever the ad-hoc queries can't show: when both sides of a repeated
-  * equi-join are written bucketed (and in-bucket sorted) by the join
-  * key with the same bucket count, Spark's scan reports a compatible
-  * `HashPartitioning` and the SortMergeJoin plans with NO shuffle
-  * exchange on either side — the join cost collapses to a streaming
-  * merge of pre-sorted buckets. At 100 TB this turns every
-  * fact-to-fact join of a pipeline that owns its table layout
-  * (lineitem⋈orders here; (doc, shingle-sig)⋈(doc, shingle-sig) in a
-  * dedup pipeline) from the dominant shuffle into local work.
+/** Table-layout planning queries: q154 states the file-skipping argument
+  * of a z-ordered layout as data (per Morton bucket, the row count and
+  * 2-D key bounding box a z-ordered file would carry as zone-map
+  * statistics), and q198 plans a small-file compaction (pack a table's
+  * write chunks into size-targeted bins). Both are read-only: they
+  * report what a layout or maintenance pass would do, and neither
+  * writes a table.
   *
   * The reference has no table layer at all (its keyspace is hash-slots,
-  * `redisgears_core/src/background_run_ctx.rs:94-99` routes by slot);
-  * bucketing is the Spark-native analogue of "data lives pre-routed by
-  * key".
+  * `redisgears_core/src/background_run_ctx.rs:94-99` routes by slot).
   */
 object Bucketing {
 
   import Tables._
-
-  /** Write `lineitem` and `orders` as bucketed+sorted external tables
-    * under `warehouseDir`. Idempotent per (session, dir): re-running
-    * overwrites. */
-  def bucketize(s: SparkSession, d: String, warehouseDir: String,
-      buckets: Int = 8): Unit = {
-    def save(df: DataFrame, key: String, table: String): Unit =
-      df.write.mode(SaveMode.Overwrite)
-        .option("path", s"$warehouseDir/$table")
-        .bucketBy(buckets, key).sortBy(key)
-        .saveAsTable(table)
-    save(lineitem(s, d).select("l_orderkey", "l_extendedprice", "l_discount"),
-      "l_orderkey", "graft_lineitem_bkt")
-    save(orders(s, d).select("o_orderkey", "o_orderpriority"),
-      "o_orderkey", "graft_orders_bkt")
-  }
-
-  /** The q03 revenue query over the bucketed tables: identical result,
-    * shuffle-free join (asserted by BucketingSpec against the physical
-    * plan). */
-  def bucketedLookupEnrich(s: SparkSession): DataFrame =
-    s.table("graft_lineitem_bkt")
-      .join(s.table("graft_orders_bkt"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy("o_orderpriority")
-      .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-        .as("revenue"))
-
-  /** Hive-style partitioned layout — the other storage-side lever:
-    * writing a table partitioned by its hot filter column turns that
-    * predicate into DIRECTORY pruning (the scan lists only matching
-    * partitions — `PartitionFilters` in the plan — before reading a
-    * byte), where an unpartitioned layout reads every file and filters
-    * rows. At 100 TB this is the difference between scanning one
-    * event type and scanning the fleet's entire log. Spec-asserted
-    * against the scan's selected partition count. */
-  def writePartitioned(df: DataFrame, dir: String, partCol: String): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(dir)
-
-  /** Training-shard writer — the materialization sink at the end of a
-    * curation pipeline: deal documents into `shards` hash-balanced
-    * parquet shard directories (shard = xxhash64(doc_id) mod shards —
-    * deterministic, so re-runs and incremental appends land docs in
-    * the same shard) and write a manifest of per-shard doc/token/char
-    * totals beside the data — what a training loader needs to plan
-    * epochs without scanning shards. One shuffle on the shard column
-    * lays the data out; each data-parallel worker then reads exactly
-    * its directory (partition pruning), and the balance guarantee is
-    * the hash's. Returns the manifest. */
-  def writeTrainingShards(docs: DataFrame, dir: String,
-      shards: Int = 8): DataFrame = {
-    val sharded = docs.withColumn("shard",
-      pmod(xxhash64(col("doc_id")), lit(shards)).cast("int"))
-    sharded.repartition(col("shard"))
-      .write.mode(SaveMode.Overwrite).partitionBy("shard").parquet(s"$dir/data")
-    val manifest = sharded.groupBy("shard").agg(
-      count("*").as("n_docs"),
-      sum(graft.functions.tokenCount(col("text"))).cast("long").as("n_tokens"),
-      sum(length(col("text"))).cast("long").as("n_chars"))
-    manifest.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/manifest")
-    manifest
-  }
-
-  /** Range-sorted layout — the third storage lever, for RANGE
-    * predicates where partitionBy (categorical directories) and
-    * bucketBy (hash co-location) don't apply: `repartitionByRange`
-    * gives every output file a disjoint slice of the sort column's
-    * domain and `sortWithinPartitions` orders rows inside each, so
-    * parquet's per-file/row-group min-max statistics let a range scan
-    * skip every file outside the queried window. On an unsorted
-    * layout the same column's values span every file and the min-max
-    * stats prune nothing. At 100 TB this is how a time-range query
-    * over an event log reads hours instead of years. The range
-    * boundaries come from a distributed sample (Spark's range
-    * partitioner) — no global sort, one shuffle to lay the data out
-    * once, every later range query pays only for what it touches.
-    * Spec-asserted: per-file min-max ranges are pairwise disjoint and
-    * a window predicate's matching rows live in a strict subset of
-    * files. */
-  def writeRangeSorted(df: DataFrame, dir: String, sortCol: String,
-      files: Int = 8): Unit =
-    df.repartitionByRange(files, col(sortCol))
-      .sortWithinPartitions(sortCol)
-      .write.mode(SaveMode.Overwrite).parquet(dir)
-
-  /** Z-ordered layout — the fourth storage lever, for MULTI-dimensional
-    * predicates where range-sorting on one column leaves the other's
-    * min-max stats useless (a file holding one `event_id` slice still
-    * spans the full `user_id` domain). Each row's two key columns are
-    * scaled to 16-bit grid cells and bit-interleaved into a Morton
-    * code; range-partitioning + in-file sorting on that code gives
-    * every file a compact 2-D box of the key space, so parquet min-max
-    * statistics prune files for box predicates on EITHER or BOTH
-    * columns. This is the layout trick of Delta/Iceberg OPTIMIZE
-    * ZORDER, built from public Spark primitives: the Morton spread is
-    * a codegen'd shift/mask expression chain, the layout shuffle is
-    * one `repartitionByRange` on the code (sampled boundaries, no
-    * global sort), and the code column is dropped before the write —
-    * readers see only the original schema. Min/max for the scaling
-    * come from one footer-cheap agg over the input. */
-  def writeZOrdered(df: DataFrame, dir: String, colA: String, colB: String,
-      files: Int = 8): Unit = {
-    // min/max via a double cast so any numeric key type works (and an
-    // empty/all-null input degenerates to a plain write, not an NPE)
-    val mm = df.agg(min(col(colA).cast("double")), max(col(colA).cast("double")),
-      min(col(colB).cast("double")), max(col(colB).cast("double"))).head()
-    if (mm.isNullAt(0) || mm.isNullAt(2)) {
-      df.write.mode(SaveMode.Overwrite).parquet(dir)
-      return
-    }
-    def grid(c: String, lo: Double, hi: Double) = {
-      val span = math.max(hi - lo, 1e-12)
-      least(lit(65535L), (col(c).cast("double") - lo) / span * 65536.0)
-        .cast("long")
-    }
-    val z = spread16(grid(colA, mm.getDouble(0), mm.getDouble(1)))
-      .bitwiseOR(shiftleft(spread16(grid(colB, mm.getDouble(2),
-        mm.getDouble(3))), 1))
-    df.withColumn("__z", z)
-      .repartitionByRange(files, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode(SaveMode.Overwrite).parquet(dir)
-  }
 
   /** Morton spread: distribute a 16-bit value's bits to the even bit
     * positions of a 32-bit lane (the classic magic-mask doubling walk),
@@ -161,7 +32,7 @@ object Bucketing {
     x
   }
 
-  /** q154: the Morton-curve bucket map behind [[writeZOrdered]], as an
+  /** q154: the Morton-curve bucket map of a z-ordered layout, as an
     * oracle-checkable query — scale each lineitem key to a 16-bit grid
     * cell over its observed [min, max] domain (EXACT integer
     * arithmetic: `(key−min)·65535 div (max−min)`, no doubles),
@@ -193,9 +64,9 @@ object Bucketing {
   }
 
   /** q198: small-file compaction plan — the table-MAINTENANCE verb
-    * beside the four layout levers above (Delta/Iceberg OPTIMIZE's
-    * planning phase, and what Spark's own `maxPartitionBytes` split
-    * coalescing does to input files at read time): per source, the
+    * (Delta/Iceberg OPTIMIZE's planning phase, and what Spark's own
+    * `maxPartitionBytes` split coalescing does to input files at read
+    * time): per source, the
     * document corpus's small "files" (50-doc write chunks with their
     * byte weights) are packed into contiguous size-targeted output
     * bins by cumulative offset — file → bin `floor(prev_cum ÷

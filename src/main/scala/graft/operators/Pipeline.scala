@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions._
 
 /** Dataset-curation operators for a large-scale training-data pipeline:
-  * source mixing (stratified sampling), sub-document dedup, and
+  * source mixing (per-source sampling rates), sub-document dedup, and
   * benchmark-contamination detection. All are single-shuffle shapes
   * (explode → hash equi-join / partial agg) that scale linearly — no
   * all-pairs joins anywhere.
@@ -14,25 +14,6 @@ import graft.functions._
 object Pipeline {
 
   import Tables._
-
-  /** Stratified sampling / dataset mixing: keep a row when its
-    * `selector` (a deterministic value in [0, 1)) falls below its
-    * stratum's rate. With `selector = pmod(xxhash64(key), 10000)/10000`
-    * this is reproducible hash-sampling (cluster-stable, the production
-    * path); the oracle query uses an arithmetic selector so DuckDB can
-    * agree bit-for-bit. */
-  def stratifiedSample(df: DataFrame, strataCol: Column, selector: Column,
-      rates: Map[String, Double], defaultRate: Double): DataFrame = {
-    val rate = rates.foldLeft(lit(defaultRate)) { case (acc, (k, v)) =>
-      when(strataCol === k, lit(v)).otherwise(acc)
-    }
-    df.filter(selector < rate)
-  }
-
-  /** Hash-based selector for production sampling: uniform in [0,1),
-    * deterministic across the cluster. */
-  def hashSelector(key: Column): Column =
-    pmod(xxhash64(key), lit(10000)).cast("double") / 10000.0
 
   /** q40: dataset mixing across the 20 sources — even-numbered sources
     * keep 70%, odd keep 30%, via the deterministic arithmetic selector

@@ -505,16 +505,6 @@ object Similarity {
         round(sum(aggregate(col("embedding"), lit(0.0),
           (acc, v) => acc + v.cast("double"))), 4).as("sum_components"))
 
-  /** Element-wise mean vector per label — the IVF coarse quantizer
-    * (posexplode → per-(label, dim) avg → re-assemble ordered). One
-    * shuffle; output is #labels rows. */
-  def labelCentroids(e: DataFrame): DataFrame =
-    e.select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
-      .groupBy("label", "pos").agg(avg(col("x")).as("m"))
-      .groupBy("label")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        s => s.getField("m")).as("centroid"))
-
   /** IVF ANN with a TRAINED coarse quantizer: an MLlib k-means codebook
     * (fixed seed) learned from the embedding column itself — no label
     * column involved. The corpus is assigned to its nearest cell once;

@@ -4156,31 +4156,6 @@ object Stats {
       .orderBy("stratum")
   }
 
-  /** q345b (spec twin, not registered): the sequential Misra–Gries
-    * fold as a BATCH per-type walk over (us, event_id)-ordered user
-    * ids — the batch side of the fifteenth parity; shares the literal
-    * [[graft.functions.MisraGriesFold]] update with the streaming
-    * state. Output = the surviving counters per type, exploded. */
-  private[graft] def mgBatchFold(s: SparkSession, d: String,
-      m: Int = 8): DataFrame = {
-    import s.implicits._
-    events(s, d)
-      .select(col("event_type"), unix_micros(col("ts")).as("us"),
-        col("event_id").cast("long"), col("user_id").cast("long"))
-      .as[(String, Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (tpe, it) =>
-        val buf = scala.collection.mutable.LinkedHashMap[Long, Long]()
-        var n = 0L
-        it.toArray.sortBy(x => (x._2, x._3)).foreach { x =>
-          graft.functions.MisraGriesFold.update(buf, x._4, m); n += 1
-        }
-        buf.keys.toArray.sorted.iterator.map(k => (tpe, n, k, buf(k)))
-      }
-      .toDF("event_type", "n_events", "user_id", "mg_count")
-      .orderBy("event_type", "user_id")
-  }
-
   /** q346: Wald's sequential probability ratio test over the q263
     * arm conversions — the ALWAYS-VALID-inference cell the fixed-n
     * battery lacks (q263/q341 assume you picked n in advance; a live

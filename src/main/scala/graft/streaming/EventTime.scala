@@ -377,28 +377,6 @@ object EventTime {
       "append", 0, "q70")()
   }
 
-  /** Event-time windows over the custom `graft-log` DataSourceV2
-    * source — the composition of the two streaming subsystems: trigger
-    * data whose record id carries the event time (`idMs`, the
-    * reference's stream-id convention, `stream_reader.rs` id = (ms,
-    * seq)) aggregated under a real watermark. Prefix pushdown happens
-    * in the source's partition reader; the window aggregation shuffles
-    * once into the state store; APPEND mode emits only
-    * watermark-closed windows — so a stream-trigger log gets the same
-    * event-time semantics the parquet-backed queries (q38/q51) have.
-    * Spec-verified against a batch read of the same log
-    * (GraftLogSourceSpec). */
-  def graftLogWindows(s: SparkSession, dir: String, prefix: String,
-      winDur: String = "1 hour", delay: String = Delay): DataFrame =
-    s.readStream.format("graft-log")
-      .option("path", dir).option("prefix", prefix).load()
-      .withColumn("ts", timestamp_millis(col("idMs")))
-      .withWatermark("ts", delay)
-      .groupBy(window(col("ts"), winDur), col("stream"))
-      .agg(count("*").as("n"))
-      .select(unix_timestamp(col("window.start")).as("win_ts"),
-        col("stream"), col("n"))
-
   /** q39: per-user session windows with a 10-minute gap and a
     * 30-minute watermark — a session closes when no event arrives for
     * the gap duration; only sessions the watermark has finalized are

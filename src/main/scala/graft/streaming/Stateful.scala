@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Custom keyed streaming state via `mapGroupsWithState` /
   * `flatMapGroupsWithState` — the Spark primitive SURVEY §2.4 maps the
@@ -13,109 +12,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * unbounded key spaces (SURVEY §7.5.6). */
 object Stateful {
 
-  case class KeyedCount(key: Long, n: Long, sum: Double)
-
-  private implicit val stateEnc: Encoder[(Long, Double)] =
-    Encoders.product[(Long, Double)]
-  private implicit val outEnc: Encoder[KeyedCount] = Encoders.product[KeyedCount]
   private implicit val longEnc: Encoder[Long] = Encoders.scalaLong
-
-  /** Running (count, sum) per key, updated every micro-batch — the
-    * canonical `mapGroupsWithState` shape: read state, fold the batch's
-    * records for the key, write state back, emit the running value. */
-  def runningCounts(records: Dataset[(Long, Double)],
-      timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout): Dataset[KeyedCount] =
-    records.groupByKey(_._1)
-      .mapGroupsWithState[(Long, Double), KeyedCount](timeout) {
-        (key: Long, it: Iterator[(Long, Double)], state: GroupState[(Long, Double)]) =>
-          val (n0, s0) = state.getOption.getOrElse((0L, 0.0))
-          var n = n0
-          var sum = s0
-          it.foreach { case (_, v) => n += 1; sum += v }
-          state.update((n, sum))
-          KeyedCount(key, n, sum)
-      }
-
-  /** The output mode `mapGroupsWithState` requires. */
-  val RequiredOutputMode: OutputMode = OutputMode.Update()
-
-  /** The same running (count, sum) contract on Spark 4's
-    * `transformWithState` API — the successor to `mapGroupsWithState`
-    * with composable named state variables and a per-state TTL the old
-    * API lacks (eviction without timeout-callback bookkeeping). State
-    * lives in the RocksDB state store (the provider this API requires),
-    * which is also the right provider at scale: state spills off-heap
-    * and snapshots incrementally instead of living on the executor
-    * heap. The TTL bounds state for unbounded key spaces exactly like
-    * the watermark horizon bounds q45's dedup state. */
-  class RunningCountsProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[Long, (Long, Double), KeyedCount] {
-    @transient private var agg: ValueState[(Long, Double)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      agg = getHandle.getValueState[(Long, Double)]("agg",
-        Encoders.product[(Long, Double)], ttl)
-
-    override def handleInputRows(key: Long, rows: Iterator[(Long, Double)],
-        timerValues: TimerValues): Iterator[KeyedCount] = {
-      val (n0, s0) = if (agg.exists()) agg.get() else (0L, 0.0)
-      var n = n0
-      var sum = s0
-      rows.foreach { case (_, v) => n += 1; sum += v }
-      agg.update((n, sum))
-      Iterator.single(KeyedCount(key, n, sum))
-    }
-  }
-
-  /** Running counts via `transformWithState`. Requires the RocksDB
-    * state store provider
-    * (`spark.sql.streaming.stateStore.providerClass`). TimeMode is
-    * None unless a TTL is set: ProcessingTime arms the timer machinery,
-    * which keeps scheduling batches even with no data — an idle query
-    * that never settles (and `processAllAvailable` never returns). */
-  def runningCountsTws(records: Dataset[(Long, Double)],
-      ttl: TTLConfig = TTLConfig.NONE): Dataset[KeyedCount] = {
-    val timeMode = if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
-    records.groupByKey(_._1)
-      .transformWithState(new RunningCountsProcessor(ttl), timeMode, OutputMode.Update())
-  }
-
-  case class KeyedDistinct(key: Long, estimate: Double)
-
-  /** Running DISTINCT-count estimate per key via the KMV bottom-k
-    * sketch ([[graft.functions.KmvSketch]]) held as streaming state —
-    * the sketch-in-state composition a streaming pipeline needs when
-    * exact per-key distinct over an unbounded stream would grow state
-    * without bound: the state per key is ≤ k digests FOREVER,
-    * regardless of how many distinct values flow past. Values are RAW
-    * strings — each is md5-hashed here, so callers never touch the
-    * sketch's fixed-width-hex digest contract. Because the KMV state
-    * is a pure set function, the running estimate after any
-    * micro-batch ordering equals the batch estimate over the union of
-    * everything seen — which is what StatefulSpec asserts across
-    * batches. */
-  def runningDistinct(records: Dataset[(Long, String)], k: Int = 64,
-      timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout): Dataset[KeyedDistinct] = {
-    implicit val kmvEnc: Encoder[graft.functions.KmvState] =
-      Encoders.product[graft.functions.KmvState]
-    implicit val outE: Encoder[KeyedDistinct] = Encoders.product[KeyedDistinct]
-    implicit val inE: Encoder[(Long, String)] = Encoders.product[(Long, String)]
-    val agg = new graft.functions.KmvSketch(k)
-    records.groupByKey(_._1)
-      .mapGroupsWithState[graft.functions.KmvState, KeyedDistinct](timeout) {
-        (key: Long, it: Iterator[(Long, String)], state: GroupState[graft.functions.KmvState]) =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          val st = it.foldLeft(state.getOption.getOrElse(agg.zero)) {
-            case (acc, (_, value)) =>
-              md.reset()
-              val hex = md.digest(value.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-              agg.reduce(acc, hex)
-          }
-          state.update(st)
-          KeyedDistinct(key, agg.finish(st))
-      }
-  }
 
   /** Per-user funnel progress: first-view / first-qualifying-click /
     * completing-purchase microsecond timestamps, −1 = not reached.
@@ -166,141 +63,6 @@ object Stateful {
           }
           state.update((v, c, p))
           FunnelProgress(user, v, c, p)
-      }
-  }
-
-  case class KeyedHitters(key: Long, hitters: Seq[(String, Long)], n: Long)
-
-  /** Running heavy hitters per key via the Misra–Gries summary
-    * ([[graft.functions.MisraGries]]) held as streaming state — the
-    * second sketch-in-state composition beside [[runningDistinct]]
-    * (cardinality there, frequency here): per key the state is ≤ m
-    * counters FOREVER, where exact per-key frequency tables over an
-    * unbounded stream grow with the item domain. The MG invariants
-    * survive the composition because folding batch items into the
-    * carried summary is exactly the aggregator's reduce: after any
-    * number of micro-batches every item with true count > n/m is
-    * present, and every estimate is within n/m below its true count —
-    * which is what StatefulSpec asserts across batch splits. */
-  def runningHeavyHitters(records: Dataset[(Long, String)], m: Int = 8,
-      timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout): Dataset[KeyedHitters] = {
-    implicit val mgEnc: Encoder[graft.functions.MGSummary] =
-      Encoders.product[graft.functions.MGSummary]
-    implicit val outE: Encoder[KeyedHitters] = Encoders.product[KeyedHitters]
-    implicit val inE: Encoder[(Long, String)] = Encoders.product[(Long, String)]
-    val agg = new graft.functions.MisraGries(m)
-    records.groupByKey(_._1)
-      .mapGroupsWithState[graft.functions.MGSummary, KeyedHitters](timeout) {
-        (key: Long, it: Iterator[(Long, String)],
-            state: GroupState[graft.functions.MGSummary]) =>
-          val st = it.foldLeft(state.getOption.getOrElse(agg.zero)) {
-            case (acc, (_, item)) => agg.reduce(acc, item)
-          }
-          state.update(st)
-          KeyedHitters(key, agg.finish(st), st.n)
-      }
-  }
-
-  case class HistQState(n: Long, counts: Seq[Long])
-  case class KeyedQuantiles(key: Long, n: Long, quantiles: Seq[(Double, Double)])
-
-  /** Running quantiles per key via a fixed-bin histogram held as
-    * streaming state — the third sketch-in-state composition beside
-    * [[runningDistinct]] (cardinality) and [[runningHeavyHitters]]
-    * (frequency): per key the state is exactly `bins` counters FOREVER,
-    * where an exact quantile would buffer the whole stream. Counts are
-    * additive, so the state is a pure set function of everything seen —
-    * the running estimate after any micro-batch split equals the
-    * single-batch estimate EXACTLY (StatefulSpec asserts bit equality),
-    * and every reported quantile is within one bin width of the true
-    * empirical quantile (the spec's other assertion). Bin range is a
-    * config, as in every production histogram-quantile system; values
-    * outside clamp to the edge bins. */
-  def runningQuantiles(records: Dataset[(Long, Double)], lo: Double = 0.0,
-      hi: Double = 1000.0, bins: Int = 64,
-      ps: Seq[Double] = Seq(0.5, 0.95, 0.99),
-      timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout): Dataset[KeyedQuantiles] = {
-    require(bins > 0 && hi > lo)
-    implicit val stEnc: Encoder[HistQState] = Encoders.product[HistQState]
-    implicit val outE: Encoder[KeyedQuantiles] = Encoders.product[KeyedQuantiles]
-    implicit val inE: Encoder[(Long, Double)] = Encoders.product[(Long, Double)]
-    val width = (hi - lo) / bins
-    records.groupByKey(_._1)
-      .mapGroupsWithState[HistQState, KeyedQuantiles](timeout) {
-        (key: Long, it: Iterator[(Long, Double)], state: GroupState[HistQState]) =>
-          val prev = state.getOption.getOrElse(HistQState(0L, Seq.fill(bins)(0L)))
-          val counts = prev.counts.toArray
-          var n = prev.n
-          it.foreach { case (_, v) =>
-            val b = math.min(bins - 1, math.max(0,
-              math.floor((v - lo) / width).toInt))
-            counts(b) += 1
-            n += 1
-          }
-          state.update(HistQState(n, counts.toIndexedSeq))
-          val qs = ps.map { p =>
-            val target = math.max(1L, math.ceil(p * n).toLong)
-            var cum = 0L
-            var b = 0
-            while (b < bins - 1 && cum + counts(b) < target) { cum += counts(b); b += 1 }
-            val inBin = if (counts(b) == 0) 0.5
-              else (target - cum - 0.5) / counts(b)
-            p -> (lo + (b + inBin) * width)
-          }
-          KeyedQuantiles(key, n, qs)
-      }
-  }
-
-  case class BandBucket(ids: Seq[Long])
-  case class CandidatePair(idA: Long, idB: Long)
-
-  /** Streaming MinHash-LSH near-dup candidates — the streaming
-    * counterpart of the batch LSH dedup (`Dedup.minhashPairs`, q27):
-    * documents arrive in micro-batches, each is shingled and signed
-    * with the SAME column functions the batch path uses, and the state
-    * per (band, bandHash) bucket is the id list of every doc that ever
-    * hashed there. A new arrival emits a candidate pair against each
-    * existing member of its buckets (plus same-batch co-arrivals), so
-    * the union of emitted pairs after any batch split equals the batch
-    * LSH candidate set over everything seen — StatefulSpec asserts set
-    * equality. Emitting CANDIDATES (not verified duplicates) is the
-    * honest streaming contract: Jaccard verification needs the shingle
-    * sets, which would make per-bucket state corpus-sized; production
-    * pipelines verify candidates downstream (batch q27's verify join,
-    * or a doc-store lookup), and the candidate stream is tiny. State
-    * per bucket is capped at `maxBucket` ids (a bucket that hot is
-    * boilerplate, q77's df-ceiling argument — new members still pair
-    * against the capped set). */
-  def streamingLshCandidates(docs: Dataset[(Long, String)],
-      numHashes: Int = 64, bands: Int = 16, shingleN: Int = 2,
-      maxBucket: Int = 1024,
-      timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout): Dataset[CandidatePair] = {
-    import org.apache.spark.sql.functions._
-    import graft.functions.{shingleSet, minhashSignature, lshBandHashes, GraftFunctions}
-    GraftFunctions.register(docs.sparkSession)
-    implicit val stEnc: Encoder[BandBucket] = Encoders.product[BandBucket]
-    implicit val outE: Encoder[CandidatePair] = Encoders.product[CandidatePair]
-    implicit val inE: Encoder[(String, Long)] = Encoders.product[(String, Long)]
-    implicit val keyE: Encoder[String] = Encoders.STRING
-    val bandHashes = docs.toDF("id", "text")
-      .select(col("id"), minhashSignature(shingleSet(col("text"), shingleN),
-        numHashes).as("sig"))
-      .select(col("id"),
-        posexplode(lshBandHashes(col("sig"), numHashes, bands)).as(Seq("band", "bh")))
-      .select(concat_ws(":", col("band"), col("bh")).as("bucket"), col("id"))
-      .as[(String, Long)]
-    bandHashes.groupByKey(_._1)
-      .flatMapGroupsWithState[BandBucket, CandidatePair](OutputMode.Append, timeout) {
-        (_, it, state) =>
-          val prev = state.getOption.map(_.ids).getOrElse(Seq.empty)
-          val seen = prev.toSet
-          val fresh = it.map(_._2).toSeq.distinct.filterNot(seen).sorted
-          val out = for {
-            (b, i) <- fresh.zipWithIndex
-            a <- prev.iterator ++ fresh.iterator.take(i)
-          } yield if (a < b) CandidatePair(a, b) else CandidatePair(b, a)
-          state.update(BandBucket((prev ++ fresh).take(maxBucket)))
-          out.distinct.iterator
       }
   }
 

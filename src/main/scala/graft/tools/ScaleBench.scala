@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleBench {
 
-  private val Queries =
+  private[graft] val Queries =
     Seq("q19_revenue_by_nation", "q23_text_quality",
       "q27_dedup_minhash_lsh", "q28_dedup_simhash",
       // round 5: the iterative-join CC (O(log n) rounds claim), the
@@ -270,6 +270,14 @@ object ScaleBench {
       "q376_byte_bpe_encode")
 
   def main(args: Array[String]): Unit = {
+    // the probe list is hand-kept beside the registry: a name the
+    // registry does not know is refused before any work
+    val unknown = Queries.filterNot(graft.SparkEntry.queries.contains).sorted
+    if (unknown.nonEmpty) {
+      System.err.println("[scale] names not in SparkEntry.queries: " +
+        unknown.mkString(", "))
+      sys.exit(2)
+    }
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = if (args.length > 1) args(1).toInt else 10
     val out = if (args.length > 2) args(2)

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,6 +16,20 @@ class CosineSimilaritySpec extends AnyFunSuite {
 
   private val rnd = new scala.util.Random(7)
   private def vec(n: Int): Array[Float] = Array.fill(n)(rnd.nextFloat() * 2 - 1)
+
+  /** The declarative higher-order-function formulation of
+    * [[cosineSimilarity]] — interpreted (allocates a product array per
+    * row), kept as bit-exactness ground truth for the native
+    * expression: dot product and both L2 norms accumulated in Double
+    * left-to-right. */
+  private def cosineSimilarityReference(a: Column, b: Column): Column = {
+    val d = aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+    def l2Norm(v: Column): Column =
+      sqrt(aggregate(v, lit(0.0), (acc, x) => acc + x.cast("double") * x.cast("double")))
+    val n = l2Norm(a) * l2Norm(b)
+    when(n === 0, lit(0.0)).otherwise(d / n)
+  }
 
   test("bit-exact parity with the HOF reference on random float vectors") {
     val pairs = Seq.fill(200)((vec(64).toSeq, vec(64).toSeq))

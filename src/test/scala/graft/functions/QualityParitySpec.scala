@@ -1,10 +1,11 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.functions.{meanTokenLen, meanTokenLenReference, stopwordRatio, stopwordRatioReference}
+import graft.functions.{meanTokenLen, stopwordRatio}
 import graft.operators.Tables
 
 /** The codegen-friendly quality metrics must be EXACTLY equal (not
@@ -13,6 +14,24 @@ import graft.operators.Tables
   * on edge-case strings. */
 class QualityParitySpec extends AnyFunSuite {
   private val spark = TestSpark.spark
+
+  /** The original per-token lambda formulation — test-only ground truth
+    * for [[stopwordRatio]]'s regex counting. */
+  private def stopwordRatioReference(text: Column): Column = {
+    val toks = tokens(lower(text))
+    val stops = filter(toks, t =>
+      array_contains(array((StopwordsEn ++ StopwordsEs ++ StopwordsFr).distinct.map(lit): _*), t))
+    when(size(toks) === 0, lit(0.0)).otherwise(size(stops).cast("double") / size(toks).cast("double"))
+  }
+
+  /** The original lambda formulation — test-only ground truth for
+    * [[meanTokenLen]]. */
+  private def meanTokenLenReference(text: Column): Column = {
+    val toks = tokens(text)
+    when(size(toks) === 0, lit(0.0)).otherwise(
+      aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") /
+        size(toks).cast("double"))
+  }
 
   private def mismatches(df: org.apache.spark.sql.DataFrame): Long =
     df.select(

@@ -1,10 +1,11 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.functions.{signLshBuckets, signLshBucketsReference}
+import graft.functions.signLshBuckets
 import graft.operators.Tables
 
 /** The native SignLshBuckets expression must be bit-exact with the
@@ -14,6 +15,29 @@ import graft.operators.Tables
 class SignLshSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
+
+  /** The declarative higher-order-function formulation of
+    * [[signLshBuckets]] — interpreted (not codegen'd) and recomputes
+    * every hyperplane weight per row, so it is test-only ground truth
+    * for the native expression's bit-exactness. */
+  private def signLshBucketsReference(vec: Column, nbits: Int, tables: Int): Column = {
+    require(nbits >= 1 && nbits <= 63, "nbits in [1,63]")
+    def bucket(table: Column): Column =
+      aggregate(
+        sequence(lit(0), lit(nbits - 1)),
+        lit(0L),
+        (acc, h) => {
+          // hyperplane h of table t, dim i weight = hash(t,h,i) % 1001 - 500
+          val proj = aggregate(
+            zip_with(vec, sequence(lit(0), size(vec) - 1),
+              (x, i) => x.cast("double") *
+                ((pmod(xxhash64(table, h, i), lit(1001)) - 500).cast("double"))),
+            lit(0.0), (a2, v) => a2 + v)
+          acc * 2 + when(proj > 0, lit(1L)).otherwise(lit(0L))
+        })
+    transform(sequence(lit(0), lit(tables - 1)),
+      t => struct(t.as("tbl"), bucket(t).as("bucket")))
+  }
 
   test("native expression is bit-exact with the HOF reference on real embeddings") {
     GraftFunctions.register(spark)

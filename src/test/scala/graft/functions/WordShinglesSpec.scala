@@ -1,10 +1,11 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.functions.{shingleSet, shinglesReference}
+import graft.functions.shingleSet
 import graft.operators.Tables
 
 /** The native WordShingles expression must produce the same shingle
@@ -14,6 +15,17 @@ import graft.operators.Tables
   * both are compared sorted). */
 class WordShinglesSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
+
+  /** Word n-gram shingles over whitespace tokens. Short texts (< n
+    * tokens) collapse to a single shingle of the whole text so every
+    * document has a non-empty shingle set. Test-only ground truth for
+    * the native [[WordShingles]] expression. */
+  private def shinglesReference(text: Column, n: Int): Column = {
+    val toks = tokens(text)
+    when(size(toks) < n, array(concat_ws(" ", toks)))
+      .otherwise(transform(sequence(lit(1), size(toks) - (n - 1)),
+        i => concat_ws(" ", slice(toks, i, lit(n)))))
+  }
 
   test("native shingles equal the HOF reference on real documents") {
     GraftFunctions.register(spark)

@@ -40,6 +40,11 @@ class OperatorsSpec extends AnyFunSuite {
       "q27_dedup_minhash_lsh", "q28_dedup_simhash", "q32_knn_brute_force"))
   }
 
+  test("every ScaleBench probe name is a registry name") {
+    val unknown = graft.tools.ScaleBench.Queries.filterNot(SparkEntry.queries.contains)
+    assert(unknown.isEmpty, s"ScaleBench names the registry lacks: $unknown")
+  }
+
   test("entry returns rows (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

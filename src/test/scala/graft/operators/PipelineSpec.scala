@@ -105,26 +105,6 @@ class PipelineSpec extends AnyFunSuite {
     assert((r.getLong(0), r.getLong(1), r.getDouble(2)) === ((3L, 2L, 0.666667)))
   }
 
-  test("hash-based stratified sampling hits the requested rate and is deterministic") {
-    val docs = Tables.documents(spark, sf)
-    val sampled = Pipeline.stratifiedSample(docs, col("source"),
-      Pipeline.hashSelector(col("doc_id")),
-      rates = Map("src0" -> 1.0, "src1" -> 0.0), defaultRate = 0.5)
-    val bySource = sampled.groupBy("source").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(bySource("src0") == 25) // rate 1.0 keeps everything
-    assert(!bySource.contains("src1")) // rate 0.0 keeps nothing
-    val restKept = bySource.filterKeys(k => k != "src0").values.sum.toDouble
-    val restTotal = 450.0 // 18 sources x 25 docs
-    assert(math.abs(restKept / restTotal - 0.5) < 0.15, s"kept $restKept of $restTotal")
-    // deterministic: same selector, same sample
-    val again = Pipeline.stratifiedSample(docs, col("source"),
-      Pipeline.hashSelector(col("doc_id")),
-      rates = Map("src0" -> 1.0, "src1" -> 0.0), defaultRate = 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(again == sampled.select("doc_id").collect().map(_.getLong(0)).toSet)
-  }
-
   test("contamination matches a driver-side brute force on shared 5-grams") {
     GraftFunctions.register(spark)
     val docs = Tables.documents(spark, sf)

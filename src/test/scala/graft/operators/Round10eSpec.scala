@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,6 +16,32 @@ import graft.TestSpark
 class Round10eSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
+
+  /** q345b, the batch twin of the streaming q345: the sequential
+    * Misra–Gries fold as a BATCH per-type walk over (us,
+    * event_id)-ordered user ids — the batch side of the fifteenth
+    * parity; shares the literal
+    * [[graft.functions.MisraGriesFold]] update with the streaming
+    * state. Output = the surviving counters per type, exploded. */
+  private def mgBatchFold(s: SparkSession, d: String,
+      m: Int = 8): DataFrame = {
+    import s.implicits._
+    Tables.events(s, d)
+      .select(col("event_type"), unix_micros(col("ts")).as("us"),
+        col("event_id").cast("long"), col("user_id").cast("long"))
+      .as[(String, Long, Long, Long)]
+      .groupByKey(_._1)
+      .flatMapGroups { (tpe, it) =>
+        val buf = scala.collection.mutable.LinkedHashMap[Long, Long]()
+        var n = 0L
+        it.toArray.sortBy(x => (x._2, x._3)).foreach { x =>
+          graft.functions.MisraGriesFold.update(buf, x._4, m); n += 1
+        }
+        buf.keys.toArray.sorted.iterator.map(k => (tpe, n, k, buf(k)))
+      }
+      .toDF("event_type", "n_events", "user_id", "mg_count")
+      .orderBy("event_type", "user_id")
+  }
 
   test("q320 Fleiss' kappa matches a textbook recount") {
     val lines = spark.read.parquet(s"$sf/lineitem.parquet")
@@ -780,7 +807,7 @@ class Round10eSpec extends AnyFunSuite {
   }
 
   test("q345 streaming MG equals the batch fold bit for bit (fifteenth parity)") {
-    val batch = Stats.mgBatchFold(spark, sf).collect()
+    val batch = mgBatchFold(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSet
     val stream = graft.streaming.EventTime.qStreamingMisraGries(spark, sf)
@@ -797,7 +824,7 @@ class Round10eSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("c"))
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2))
       .toMap
-    val rows = Stats.mgBatchFold(spark, sf).collect()
+    val rows = mgBatchFold(spark, sf).collect()
     rows.groupBy(_.getString(0)).foreach { case (tpe, rs) =>
       val n = rs.head.getAs[Long]("n_events")
       rs.foreach { r =>

@@ -418,7 +418,19 @@ class GraftLogSourceSpec extends AnyFunSuite {
     e.close()
   }
 
+  test("a refused segment rename throws and leaves the committed segments intact") {
+    val dir = tmpDir("glog-refuse") + "/log"
+    newLog(dir).append(Seq(rec("s:1", 1)))
+    val refusing = new GraftLog(dir, graft.RefusingRenameFileSystem.conf())
+    val e = intercept[java.io.IOException](refusing.append(Seq(rec("s:1", 2))))
+    assert(e.getMessage.contains(s"concurrent append to $dir at segment 1"), e.getMessage)
+    val log = newLog(dir)
+    assert(log.segmentCount == 1)
+    assert(log.readSegment(0).map(_.idMs).toSeq == Seq(1L))
+  }
+
   test("event-time windows over the graft-log source match the batch log content") {
+    import org.apache.spark.sql.functions.{col, count, timestamp_millis, unix_timestamp, window}
     val hour = 3600L * 1000
     val dir = tmpDir("glog") + "/log"
     val log = newLog(dir)
@@ -430,10 +442,19 @@ class GraftLogSourceSpec extends AnyFunSuite {
       rec("s:a", hour + 1), rec("s:b", hour + 2),
       rec("s:a", 2 * hour + 35 * 60 * 1000), rec("other:x", 5)))
     val name = "glw_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    // default trigger (not AvailableNow): the watermark advances after
+    // idMs is the event time and the "s:" prefix is pushed into the
+    // source's partition reader.
+    // Default trigger (not AvailableNow): the watermark advances after
     // the data batch, and the no-data follow-up batch flushes the
     // closed windows; processAllAvailable covers both
-    val q = graft.streaming.EventTime.graftLogWindows(spark, dir, "s:")
+    val q = spark.readStream.format("graft-log")
+      .option("path", dir).option("prefix", "s:").load()
+      .withColumn("ts", timestamp_millis(col("idMs")))
+      .withWatermark("ts", "30 minutes")
+      .groupBy(window(col("ts"), "1 hour"), col("stream"))
+      .agg(count("*").as("n"))
+      .select(unix_timestamp(col("window.start")).as("win_ts"),
+        col("stream"), col("n"))
       .writeStream.format("memory").queryName(name)
       .outputMode("append")
       .option("checkpointLocation", tmpDir("glw-ckpt"))

@@ -224,4 +224,19 @@ class CrashRecoverySpec extends AnyFunSuite {
     }
     engine.close()
   }
+
+  test("a refused checkpoint rename throws and leaves the previous map loadable") {
+    val dir = Files.createTempDirectory("ckpt-refuse").toString
+    val good = new CheckpointStore(dir, spark.sparkContext.hadoopConfiguration)
+    val before = Map(("c", "s:1") -> ((5L, 0L)))
+    good.save(before)
+    val refusing = new CheckpointStore(dir, graft.RefusingRenameFileSystem.conf())
+    // twice: the refused save must not advance the version it publishes
+    (1 to 2).foreach { _ =>
+      val e = intercept[java.io.IOException](refusing.save(Map(("c", "s:1") -> ((9L, 0L)))))
+      assert(e.getMessage.contains("ckpt-00000000000000000001"), e.getMessage)
+    }
+    assert(refusing.load() == before)
+    assert(new CheckpointStore(dir, spark.sparkContext.hadoopConfiguration).load() == before)
+  }
 }

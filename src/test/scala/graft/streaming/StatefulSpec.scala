@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -18,7 +19,7 @@ class StatefulSpec extends AnyFunSuite {
     val name = "funnel_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val q = Stateful.funnelStages(mem.toDS()).writeStream
       .format("memory").queryName(name)
-      .outputMode(Stateful.RequiredOutputMode)
+      .outputMode(OutputMode.Update())
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("funnel").toString)
       .start()
@@ -46,236 +47,5 @@ class StatefulSpec extends AnyFunSuite {
     assert(fin(1L) === ((10L, 10L, 86400000010L))) // full funnel on both ties
     assert(fin(2L) === ((10L, 20L, -1L))) // pre-view click never counted
     assert(fin(3L) === ((0L, -1L, -1L))) // purchase without click is a no-op
-  }
-
-  test("running per-key counts accumulate across micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[(Long, Double)]
-    val name = "stateful_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = Stateful.runningCounts(mem.toDS()).writeStream
-      .format("memory").queryName(name)
-      .outputMode(Stateful.RequiredOutputMode)
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("stateful").toString)
-      .start()
-
-    mem.addData((1L, 10.0), (1L, 5.0), (2L, 1.0))
-    q.processAllAvailable()
-    val after1 = spark.table(name).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    assert(after1(1L) == ((2L, 15.0)))
-    assert(after1(2L) == ((1L, 1.0)))
-
-    // second batch: state persists, values accumulate
-    mem.addData((1L, 1.0), (3L, 7.0))
-    q.processAllAvailable()
-    q.stop()
-    // update mode appends one row per updated key per batch: take the latest
-    val rows = spark.table(name).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2)))
-    val latest = rows.zipWithIndex.groupBy(_._1._1).view
-      .mapValues(_.maxBy(_._2)._1._2).toMap
-    assert(latest(1L) == ((3L, 16.0))) // 2+1 events, 15+1 sum — state carried over
-    assert(latest(2L) == ((1L, 1.0)))
-    assert(latest(3L) == ((1L, 7.0)))
-  }
-
-  test("transformWithState carries the same contract on the RocksDB provider") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[(Long, Double)]
-      val name = "tws_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = Stateful.runningCountsTws(mem.toDS()).writeStream
-        .format("memory").queryName(name)
-        .outputMode(Stateful.RequiredOutputMode)
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("tws").toString)
-        .start()
-      mem.addData((1L, 10.0), (1L, 5.0), (2L, 1.0))
-      q.processAllAvailable()
-      mem.addData((1L, 1.0), (3L, 7.0))
-      q.processAllAvailable()
-      q.stop()
-      val rows = spark.table(name).collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2)))
-      val latest = rows.zipWithIndex.groupBy(_._1._1).view
-        .mapValues(_.maxBy(_._2)._1._2).toMap
-      assert(latest(1L) == ((3L, 16.0)))
-      assert(latest(2L) == ((1L, 1.0)))
-      assert(latest(3L) == ((1L, 7.0)))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
-  }
-
-  test("running KMV distinct: bounded state, batch-order-invariant estimate") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def md5hex(s: String): String =
-      java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-    val k = 16
-    val mem = MemoryStream[(Long, String)]
-    val name = "kmvstate_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = Stateful.runningDistinct(mem.toDS(), k).writeStream
-      .format("memory").queryName(name)
-      .outputMode(Stateful.RequiredOutputMode)
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("kmvstate").toString)
-      .start()
-    // 300 distinct RAW values for key 1 split across three micro-
-    // batches (with overlap between batches; runningDistinct hashes
-    // internally); 5 distinct for key 2
-    val vals = (1 to 300).map(i => s"v$i")
-    mem.addData(vals.slice(0, 120).map((1L, _)): _*)
-    q.processAllAvailable()
-    mem.addData((vals.slice(100, 220) ++ vals.slice(0, 10)).map((1L, _)): _*)
-    q.processAllAvailable()
-    mem.addData(vals.slice(200, 300).map((1L, _)) ++ (1 to 5).map(i => (2L, s"w$i")): _*)
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table(name).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).zipWithIndex
-    val latest = rows.groupBy(_._1._1).view.mapValues(_.maxBy(_._2)._1._2).toMap
-    // the KMV state is a set function, so the streamed estimate equals
-    // the one-shot fold over the union of all batches
-    val agg = new graft.functions.KmvSketch(k)
-    val oneShot = agg.finish(vals.map(md5hex).foldLeft(agg.zero)(agg.reduce))
-    assert(latest(1L) == oneShot, s"streamed ${latest(1L)} != one-shot $oneShot")
-    assert(math.abs(latest(1L) - 300) / 300.0 < 4.0 / math.sqrt(k))
-    // below k the sketch is exact
-    assert(latest(2L) == 5.0)
-  }
-
-  test("running heavy hitters: MG guarantees survive micro-batch splits") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val m = 8
-    val mem = MemoryStream[(Long, String)]
-    val name = "mgstate_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = Stateful.runningHeavyHitters(mem.toDS(), m).writeStream
-      .format("memory").queryName(name)
-      .outputMode(Stateful.RequiredOutputMode)
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("mgstate").toString)
-      .start()
-    // key 1: skewed stream split across three batches — "hot" 60×,
-    // "warm" 25×, 40 singletons (n = 125, threshold n/m = 15.625)
-    mem.addData((Seq.fill(20)("hot") ++ Seq.fill(10)("warm")
-      ++ (1 to 15).map(i => s"x$i")).map((1L, _)): _*)
-    q.processAllAvailable()
-    mem.addData((Seq.fill(25)("hot") ++ (16 to 30).map(i => s"x$i")).map((1L, _)): _*)
-    q.processAllAvailable()
-    mem.addData((Seq.fill(15)("hot") ++ Seq.fill(15)("warm")
-      ++ (31 to 40).map(i => s"x$i")).map((1L, _)): _*)
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table(name).collect().zipWithIndex
-    val latestRow = rows.filter(_._1.getLong(0) == 1L).maxBy(_._2)._1
-    val hitters = latestRow.getSeq[org.apache.spark.sql.Row](1)
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val n = latestRow.getLong(2)
-    assert(n == 125)
-    val trueCounts = Map("hot" -> 60L, "warm" -> 25L)
-    val eps = n.toDouble / m
-    // presence: every item with true count > n/m is in the summary
-    for ((item, t) <- trueCounts if t > eps) {
-      assert(hitters.contains(item), s"$item (true $t > $eps) missing")
-      // estimate bounds: true - n/m <= est <= true
-      assert(hitters(item) <= t && hitters(item) >= t - eps,
-        s"$item est ${hitters(item)} outside [${t - eps}, $t]")
-    }
-    // no estimate exceeds its true count (singletons are all <= 1)
-    for ((item, est) <- hitters)
-      assert(est <= trueCounts.getOrElse(item, 1L), s"$item overestimated: $est")
-    // state is bounded: at most m counters survive
-    assert(hitters.size <= m)
-  }
-
-  test("running quantiles: one-bin-width accuracy, exact batch-split invariance") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val (lo, hi, bins) = (0.0, 1000.0, 64)
-    val width = (hi - lo) / bins
-    // a deterministic shuffle of 1..500 (plus out-of-range outliers
-    // that must clamp, not crash)
-    val values = (1 to 500).map(_.toDouble).sortBy(v => (v * 7919) % 501) ++
-      Seq(-50.0, 1500.0)
-    def run(batches: Seq[Seq[Double]]): (Long, Seq[(Double, Double)]) = {
-      val mem = MemoryStream[(Long, Double)]
-      val name = "qstate_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = Stateful.runningQuantiles(mem.toDS(), lo, hi, bins).writeStream
-        .format("memory").queryName(name)
-        .outputMode(Stateful.RequiredOutputMode)
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("qstate").toString)
-        .start()
-      batches.foreach { b => mem.addData(b.map((1L, _)): _*); q.processAllAvailable() }
-      q.stop()
-      val rows = spark.table(name).collect().zipWithIndex
-      val last = rows.filter(_._1.getLong(0) == 1L).maxBy(_._2)._1
-      (last.getLong(1), last.getSeq[org.apache.spark.sql.Row](2)
-        .map(r => (r.getDouble(0), r.getDouble(1))))
-    }
-    val (n3, q3) = run(Seq(values.take(200), values.slice(200, 400), values.drop(400)))
-    assert(n3 == values.length)
-    // accuracy: each estimate within one bin width of the exact
-    // empirical quantile (clamped values contribute at the edges)
-    val sorted = values.map(v => math.min(hi, math.max(lo, v))).sorted
-    for ((p, est) <- q3) {
-      val exact = sorted(math.max(0, math.ceil(p * sorted.length).toInt - 1))
-      assert(math.abs(est - exact) <= width + 1e-9,
-        s"p=$p est $est vs exact $exact (width $width)")
-    }
-    // additivity: the same data in ONE batch yields bit-identical output
-    val (n1, q1) = run(Seq(values))
-    assert(n1 == n3 && q1 == q3)
-  }
-
-  test("streaming LSH candidates equal the batch LSH candidate set over the union") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    import graft.functions.{shingleSet, minhashSignature, lshBandHashes, GraftFunctions}
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    GraftFunctions.register(spark)
-    val docs = graft.operators.Tables.documents(spark, graft.TestSpark.sf)
-      .select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1))).take(150)
-    // batch reference: the same band-hash self-join the q27 path builds
-    // its candidates from
-    val bh = docs.toSeq.toDF("id", "text")
-      .select(col("id"), minhashSignature(shingleSet(col("text"), 2), 64).as("sig"))
-      .select(col("id"), posexplode(lshBandHashes(col("sig"), 64, 16)).as(Seq("band", "bh")))
-    val batchPairs = bh.select(col("band"), col("bh"), col("id").as("id_a"))
-      .join(bh.select(col("band"), col("bh"), col("id").as("id_b")), Seq("band", "bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct().collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(batchPairs.nonEmpty, "the corpus must produce LSH candidates")
-    // streamed in three batches
-    val mem = MemoryStream[(Long, String)]
-    val name = "lshcand_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = Stateful.streamingLshCandidates(mem.toDS()).writeStream
-      .format("memory").queryName(name)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("lshcand").toString)
-      .start()
-    docs.grouped(50).foreach { b => mem.addData(b.toSeq: _*); q.processAllAvailable() }
-    q.stop()
-    val streamed = spark.table(name).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(streamed == batchPairs,
-      s"streamed ${streamed.size} pairs vs batch ${batchPairs.size}: " +
-        s"missing=${(batchPairs -- streamed).take(5)} extra=${(streamed -- batchPairs).take(5)}")
   }
 }
