@@ -2438,9 +2438,10 @@ object Stats {
         expr("unix_timestamp(date_trunc('HOUR', ts)) div 3600").as("h"))
       .agg(count(lit(1)).as("c")))
 
-  /** Detector core over any (event_type, h, c) hourly series —
-    * factored out so the spec can drive a synthetic spike series
-    * through the exact same fold. */
+  /** Detector core over any (event_type, h, c) hourly series: each
+    * type's hours, in order, fold [[graft.functions.EwmaStep]] — the
+    * step q298's streaming monitor advances — and the spec drives a
+    * synthetic spike series through it. */
   private[graft] def ewmaSpikes(s: SparkSession, hourly: DataFrame): DataFrame = {
     import s.implicits._
     hourly
@@ -2448,18 +2449,8 @@ object Stats {
       .as[(String, Long, Long)]
       .groupByKey(_._1)
       .mapGroups { (tpe, it) =>
-        val arr = it.toArray.sortBy(_._2)
-        var e = 0L; var n = 0L; var spikes = 0L; var first = -1L
-        arr.foreach { case (_, h, c) =>
-          val v = c * 1000000L
-          if (n == 0L) e = v
-          else {
-            if (2L * v > 3L * e) { spikes += 1; if (first < 0) first = h }
-            e = (v + e) / 2L
-          }
-          n += 1L
-        }
-        (tpe, n, e, spikes, first)
+        val r = graft.functions.EwmaStep.fold(it.map(x => (x._2, x._3)).toArray.sortBy(_._1))
+        (tpe, r.n, r.e, r.nSpikes, r.firstSpike)
       }
       .toDF("event_type", "n_hours", "final_ewma_micro", "n_spikes",
         "first_spike_hour")
@@ -2496,9 +2487,10 @@ object Stats {
         expr("unix_timestamp(date_trunc('HOUR', ts)) div 3600").as("h"))
       .agg(count(lit(1)).as("c")))
 
-  /** Monitor core over any (event_type, h, c) hourly series —
-    * factored out so the spec can drive a crafted ramp through the
-    * exact same fold. */
+  /** Monitor core over any (event_type, h, c) hourly series: each
+    * type's hours, in order, fold [[graft.functions.HoltStep]] — the
+    * step q327's streaming monitor advances — and the spec drives a
+    * crafted ramp through it. */
   private[graft] def holtMonitor(s: SparkSession, hourly: DataFrame): DataFrame = {
     import s.implicits._
     hourly
@@ -2506,23 +2498,8 @@ object Stats {
       .as[(String, Long, Long)]
       .groupByKey(_._1)
       .mapGroups { (tpe, it) =>
-        val arr = it.toArray.sortBy(_._2)
-        var l = 0L; var b = 0L; var n = 0L
-        var overs = 0L; var first = -1L
-        arr.foreach { case (_, h, c) =>
-          val v = c * 1000000L
-          if (n == 0L) { l = v; b = 0L }
-          else {
-            if (10L * v > 11L * (l + b)) {
-              overs += 1; if (first < 0) first = h
-            }
-            val lNew = (v + l + b) / 2L
-            b = (lNew - l + b) / 2L
-            l = lNew
-          }
-          n += 1L
-        }
-        (tpe, n, l, b, l + b, overs, first)
+        val r = graft.functions.HoltStep.fold(it.map(x => (x._2, x._3)).toArray.sortBy(_._1))
+        (tpe, r.n, r.l, r.b, r.l + r.b, r.nOver, r.firstOver)
       }
       .toDF("event_type", "n_hours", "level_micro", "trend_micro",
         "forecast_micro", "n_over_forecast", "first_over_hour")

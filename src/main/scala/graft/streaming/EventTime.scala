@@ -3,7 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -81,8 +81,13 @@ object EventTime {
     graft.operators.Tables.normalizeTs(s.readStream.schema(schema).parquet(dir))
   }
 
+  /** The number of (ts, event_id) ranges the replays split the events
+    * table into, and so the number of data batches each replay must
+    * span. */
+  private val ReplayParts = 3
+
   /** The events table as a TIME-ORDERED multi-file stream: range-split
-    * by (ts, event_id) into `parts` files with file mtimes forced
+    * by (ts, event_id) into [[ReplayParts]] files with file mtimes forced
     * ascending in range order, so the file source replays
     * micro-batches in event-time order — the keyed-partition delivery
     * contract [[Stateful.funnelStages]]'s exactness needs, reproduced
@@ -92,16 +97,15 @@ object EventTime {
     * consumers apply then composes to a GLOBAL (us, event_id) order
     * across batches, matching the batch windows' strict
     * preceding-row semantics exactly (the q200 tie contract). Streamed
-    * with `maxFilesPerTrigger = 1`, a query over it runs ≥ `parts`
-    * micro-batches — the shape that actually exercises cross-batch
-    * state (a single-file source collapses every stateful operator to
-    * one batch). */
-  private def eventsStreamTimeOrdered(s: SparkSession, d: String,
-      parts: Int): DataFrame = {
+    * with `maxFilesPerTrigger = 1`, a query over it runs ≥
+    * [[ReplayParts]] micro-batches — the shape that actually exercises
+    * cross-batch state (a single-file source collapses every stateful
+    * operator to one batch). */
+  private def eventsStreamTimeOrdered(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$d/events.parquet"
     val schema = s.read.parquet(path).schema
-    val dir = timeOrderedSplitDir(s, d, parts)
+    val dir = timeOrderedSplitDir(s, d, ReplayParts)
     graft.operators.Tables.normalizeTs(
       s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir))
   }
@@ -180,6 +184,14 @@ object EventTime {
     }
   }
 
+  /** Replay the keyed stateful operator `op` builds over the
+    * time-ordered events stream, in update mode, through
+    * [[replayToTable]]. */
+  private def replayKeyed(s: SparkSession, d: String, label: String,
+      finalAgg: DataFrame => DataFrame = identity)(op: DataFrame => Dataset[_]): DataFrame =
+    replayToTable(op(eventsStreamTimeOrdered(s, d)).toDF(), "update", ReplayParts,
+      label)(finalAgg)
+
   /** q133: the ordered funnel (q131) as STREAMING state — per-user
     * three-timestamp state advanced micro-batch by micro-batch
     * ([[Stateful.funnelStages]]), replayed over a time-ordered 3-file
@@ -195,12 +207,12 @@ object EventTime {
     * state without ordering metadata. */
   def qStreamingFunnel(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("user_id").cast("long").as("u"), col("event_type"),
-        unix_micros(col("ts")).as("us"))
-      .as[(Long, String, Long)]
-    val staged = Stateful.funnelStages(ev)
-    val snap = replayToTable(staged.toDF(), "update", 3, "q133 funnel")()
+    val snap = replayKeyed(s, d, "q133 funnel") { ev =>
+      Stateful.funnelStages(ev
+        .select(col("user_id").cast("long").as("u"), col("event_type"),
+          unix_micros(col("ts")).as("us"))
+        .as[(Long, String, Long)])
+    }
     val fin = snap.groupBy("user_id").agg(
       max("v_us").as("v"), max("c_us").as("c"), max("p_us").as("p"))
     fin
@@ -278,13 +290,13 @@ object EventTime {
       f"event-time span $spanDays%.1f days exceeds the 35-day dedup horizon — " +
         "the COUNT(DISTINCT) oracle would no longer be batching-invariant")
     replayToTable(
-      eventsStreamTimeOrdered(s, d, parts = 3)
+      eventsStreamTimeOrdered(s, d)
         .withWatermark("ts", DedupHorizon)
         .select(col("event_type"), col("user_id"), col("ts"))
         .dropDuplicatesWithinWatermark("event_type", "user_id")
         .groupBy("event_type")
         .agg(count("*").as("n_distinct_users")),
-      "complete", 3, "q45 dedup")()
+      "complete", ReplayParts, "q45 dedup")()
   }
 
   /** q45's dedup horizon: longer than the synthetic events table's
@@ -402,12 +414,12 @@ object EventTime {
     * beside q133's funnel). */
   def qStreamingThrottle(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("user_id").cast("long").as("u"), col("event_type"),
-        unix_micros(col("ts")).as("us"), col("event_id").cast("long").as("eid"))
-      .as[(Long, String, Long, Long)]
-    val counted = Stateful.throttleCounts(ev)
-    replayToTable(counted.toDF(), "update", 3, "q158 throttle")()
+    replayKeyed(s, d, "q158 throttle") { ev =>
+      Stateful.throttleCounts(ev
+        .select(col("user_id").cast("long").as("u"), col("event_type"),
+          unix_micros(col("ts")).as("us"), col("event_id").cast("long").as("eid"))
+        .as[(Long, String, Long, Long)])
+    }
       .groupBy("user_id", "event_type")
       .agg(max("n_total").as("t"), max("n_dropped").as("dr"))
       .groupBy("event_type")
@@ -425,12 +437,12 @@ object EventTime {
     * actually runs online. */
   def qStreamingSessionize(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("user_id").cast("long").as("u"),
-        unix_micros(col("ts")).as("us"), col("event_id").cast("long").as("eid"))
-      .as[(Long, Long, Long)]
-    val progressed = Stateful.sessionProgress(ev)
-    replayToTable(progressed.toDF(), "update", 3, "q167 session")().groupBy("user_id")
+    replayKeyed(s, d, "q167 session") { ev =>
+      Stateful.sessionProgress(ev
+        .select(col("user_id").cast("long").as("u"),
+          unix_micros(col("ts")).as("us"), col("event_id").cast("long").as("eid"))
+        .as[(Long, Long, Long)])
+    }.groupBy("user_id")
       .agg(max("n_sessions").as("n_sessions"),
         max("max_session_events").as("max_session_events"),
         max("n_events").as("n_events"))
@@ -450,12 +462,12 @@ object EventTime {
     * per invoked batch). */
   def qStreamingCoverage(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("user_id").cast("long").as("u"),
-        unix_micros(col("ts")).as("us"), col("event_id").cast("long").as("eid"))
-      .as[(Long, Long, Long)]
-    val prog = Stateful.coverageProgress(ev)
-    replayToTable(prog.toDF(), "update", 3, "q310 island")().groupBy("user_id")
+    replayKeyed(s, d, "q310 island") { ev =>
+      Stateful.coverageProgress(ev
+        .select(col("user_id").cast("long").as("u"),
+          unix_micros(col("ts")).as("us"), col("event_id").cast("long").as("eid"))
+        .as[(Long, Long, Long)])
+    }.groupBy("user_id")
       .agg(expr("max_by(n_islands, n_events)").as("n_islands"),
         expr("max_by(covered_sec, n_events)").as("covered_sec"))
   }
@@ -472,11 +484,10 @@ object EventTime {
     * twice. */
   def qStreamingCusum(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("event_type"), unix_micros(col("ts")).as("us"))
-      .as[(String, Long)]
-    val prog = Stateful.pageCusumProgress(ev)
-    replayToTable(prog.toDF(), "update", 3, "q186 detector")().filter(col("n_days") > 7)
+    replayKeyed(s, d, "q186 detector") { ev =>
+      Stateful.pageCusumProgress(ev.select(col("event_type"), unix_micros(col("ts")).as("us"))
+        .as[(String, Long)])
+    }.filter(col("n_days") > 7)
       .groupBy("event_type")
       .agg(max(struct(col("n_days"), col("max_s"), col("sum7"),
         col("first_alarm_day"), col("s_at_alarm"))).as("m"))
@@ -499,11 +510,10 @@ object EventTime {
     * batch mapGroups fold, and the oracle's recursion. */
   def qStreamingEwma(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("event_type"), unix_micros(col("ts")).as("us"))
-      .as[(String, Long)]
-    val prog = Stateful.ewmaProgress(ev)
-    replayToTable(prog.toDF(), "update", 3, "q298 EWMA")().groupBy("event_type")
+    replayKeyed(s, d, "q298 EWMA") { ev =>
+      Stateful.ewmaProgress(ev.select(col("event_type"), unix_micros(col("ts")).as("us"))
+        .as[(String, Long)])
+    }.groupBy("event_type")
       .agg(max_by(struct(col("n_hours"), col("final_ewma_micro"),
         col("n_spikes"), col("first_spike_hour")), col("n_seen")).as("m"))
       .select(col("event_type"), col("m.n_hours").as("n_hours"),
@@ -526,11 +536,10 @@ object EventTime {
     * implementations use truncation. */
   def qStreamingHolt(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("event_type"), unix_micros(col("ts")).as("us"))
-      .as[(String, Long)]
-    val prog = Stateful.holtProgress(ev)
-    replayToTable(prog.toDF(), "update", 3, "q327 Holt")().groupBy("event_type")
+    replayKeyed(s, d, "q327 Holt") { ev =>
+      Stateful.holtProgress(ev.select(col("event_type"), unix_micros(col("ts")).as("us"))
+        .as[(String, Long)])
+    }.groupBy("event_type")
       .agg(max_by(struct(col("n_hours"), col("level_micro"),
         col("trend_micro"), col("forecast_micro"),
         col("n_over_forecast"), col("first_over_hour")),
@@ -554,12 +563,12 @@ object EventTime {
     * against exact counts). */
   def qStreamingMisraGries(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("event_type"), unix_micros(col("ts")).as("us"),
-        col("event_id").cast("long"), col("user_id").cast("long"))
-      .as[(String, Long, Long, Long)]
-    val prog = Stateful.mgProgress(ev)
-    replayToTable(prog.toDF(), "update", 3, "q345 MG")().groupBy("event_type")
+    replayKeyed(s, d, "q345 MG") { ev =>
+      Stateful.mgProgress(ev
+        .select(col("event_type"), unix_micros(col("ts")).as("us"),
+          col("event_id").cast("long"), col("user_id").cast("long"))
+        .as[(String, Long, Long, Long)])
+    }.groupBy("event_type")
       .agg(max_by(struct(col("n_seen"), col("keys"), col("counts")),
         col("n_seen")).as("m"))
       .select(col("event_type"), col("m.n_seen").as("n_events"),
@@ -579,11 +588,10 @@ object EventTime {
     * exactly. */
   def qStreamingLocf(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("event_type"), unix_micros(col("ts")).as("us"))
-      .as[(String, Long)]
-    val prog = Stateful.locfProgress(ev)
-    replayToTable(prog.toDF(), "update", 3, "q314 LOCF")().groupBy("event_type")
+    replayKeyed(s, d, "q314 LOCF") { ev =>
+      Stateful.locfProgress(ev.select(col("event_type"), unix_micros(col("ts")).as("us"))
+        .as[(String, Long)])
+    }.groupBy("event_type")
       .agg(max_by(struct(col("n_days"), col("n_obs"), col("n_filled"),
         col("locf_checksum")), col("n_seen")).as("m"))
       .select(col("event_type"), col("m.n_days").as("n_days"),
@@ -620,11 +628,11 @@ object EventTime {
     * gate runs. */
   private def hllFinal(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("event_type"), xxhash64(col("user_id")).as("h"))
-      .as[(String, Long)]
-    val prog = Stateful.hllDistinctProgress(ev)
-    replayToTable(prog.toDF(), "update", 3, "q214 register")()
+    replayKeyed(s, d, "q214 register") { ev =>
+      Stateful.hllDistinctProgress(ev
+        .select(col("event_type"), xxhash64(col("user_id")).as("h"))
+        .as[(String, Long)])
+    }
       .groupBy("event_type")
       .agg(max(col("n_seen")).as("n_events"),
         max_by(col("regs"), col("n_seen")).as("regs"))
@@ -651,24 +659,23 @@ object EventTime {
   def qStreamingKs(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val arms = Seq("click", "error", "signup", "purchase")
-    val src = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("event_type"),
-        expr("CAST(ROUND(value * 100, 0) AS BIGINT)").as("v"))
     // r12 OPTIMIZATION (guide §2.4): the old 4-way unionAll of filtered
     // branches scanned every micro-batch's file four times; one scan
     // with an in-row fanout emits the identical row multiset — an arm
     // event routes to its own pair, a control event explodes to all
     // four pairs, anything else to none.
     val armsLit = array(arms.map(lit): _*)
-    val tagged = src
-      .select(explode(when(col("event_type") === "view", armsLit)
-          .when(col("event_type").isin(arms: _*), array(col("event_type")))
-          .otherwise(array().cast("array<string>"))).as("pair"),
-        (col("event_type") =!= "view").cast("long").as("in_arm"), col("v"))
-      .select(col("pair"), col("in_arm"), col("v"))
-      .as[(String, Long, Long)]
-    val prog = Stateful.ksDriftProgress(tagged)
-    val snap = replayToTable(prog.toDF(), "update", 3, "q369 rollup")()
+    val snap = replayKeyed(s, d, "q369 rollup") { ev =>
+      Stateful.ksDriftProgress(ev
+        .select(col("event_type"),
+          expr("CAST(ROUND(value * 100, 0) AS BIGINT)").as("v"))
+        .select(explode(when(col("event_type") === "view", armsLit)
+            .when(col("event_type").isin(arms: _*), array(col("event_type")))
+            .otherwise(array().cast("array<string>"))).as("pair"),
+          (col("event_type") =!= "view").cast("long").as("in_arm"), col("v"))
+        .select(col("pair"), col("in_arm"), col("v"))
+        .as[(String, Long, Long)])
+    }
     snap.groupBy("pair")
       .agg(max_by(col("n1"), col("n_seen")).as("n1"),
         max_by(col("n2"), col("n_seen")).as("n2"),
@@ -723,11 +730,11 @@ object EventTime {
   private[graft] def streamedCmsState(s: SparkSession,
       d: String): Map[String, (Long, Array[Long])] = {
     import s.implicits._
-    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("event_type"), col("user_id").cast("string").as("item"))
-      .as[(String, String)]
-    val prog = Stateful.cmsProgress(ev, CmsDepth, CmsWidth)
-    replayToTable(prog.toDF(), "update", 3, "q242 counter")()
+    replayKeyed(s, d, "q242 counter") { ev =>
+      Stateful.cmsProgress(ev
+        .select(col("event_type"), col("user_id").cast("string").as("item"))
+        .as[(String, String)], CmsDepth, CmsWidth)
+    }
       .groupBy("event_type")
       .agg(max(col("n_seen")).as("n_events"),
         max_by(col("counts"), col("n_seen")).as("counts"))
@@ -784,11 +791,11 @@ object EventTime {
     * hashes) — shared with its spec hook. */
   private def kmvFinal(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("event_type"), col("user_id").cast("string").as("item"))
-      .as[(String, String)]
-    val prog = Stateful.kmvProgress(ev, KmvK)
-    replayToTable(prog.toDF(), "update", 3, "q245 bottom-k")()
+    replayKeyed(s, d, "q245 bottom-k") { ev =>
+      Stateful.kmvProgress(ev
+        .select(col("event_type"), col("user_id").cast("string").as("item"))
+        .as[(String, String)], KmvK)
+    }
       .groupBy("event_type")
       .agg(max(col("n_seen")).as("n_events"),
         max_by(col("hashes"), col("n_seen")).as("hashes"))
@@ -851,11 +858,11 @@ object EventTime {
     * bits) — shared with its spec hook. */
   private def bloomFinal(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("event_type"), xxhash64(col("user_id")).as("h"))
-      .as[(String, Long)]
-    val prog = Stateful.bloomProgress(ev, expected = 4096L)
-    replayToTable(prog.toDF(), "update", 3, "q265 filter")()
+    replayKeyed(s, d, "q265 filter") { ev =>
+      Stateful.bloomProgress(ev
+        .select(col("event_type"), xxhash64(col("user_id")).as("h"))
+        .as[(String, Long)])
+    }
       .groupBy("event_type")
       .agg(max(col("n_seen")).as("n_events"),
         max_by(col("bits"), col("n_seen")).as("bits"))
@@ -889,13 +896,13 @@ object EventTime {
     import s.implicits._
     val d0 = graft.operators.Tables.events(s, d)
       .agg(min(to_date(col("ts")))).head().getAs[java.sql.Date](0)
-    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("event_type"),
-        expr(s"CAST(datediff(to_date(ts), date'$d0') div 7 AS BIGINT)").as("week"),
-        expr("CAST(ROUND(value * 100, 0) AS BIGINT)").as("cents"))
-      .as[(String, Long, Long)]
-    val prog = Stateful.percentileProgress(ev)
-    val snap = replayToTable(prog.toDF(), "update", 3, "q281 rollup")()
+    val snap = replayKeyed(s, d, "q281 rollup") { ev =>
+      Stateful.percentileProgress(ev
+        .select(col("event_type"),
+          expr(s"CAST(datediff(to_date(ts), date'$d0') div 7 AS BIGINT)").as("week"),
+          expr("CAST(ROUND(value * 100, 0) AS BIGINT)").as("cents"))
+        .as[(String, Long, Long)])
+    }
     snap.groupBy("event_type")
       .agg(max_by(col("weekly"), col("n_seen")).as("weekly"))
       .select(col("event_type"), explode(col("weekly")).as("w"))
@@ -915,13 +922,13 @@ object EventTime {
     * carries ONE long of touch state per user forever. */
   def qStreamingAttribution(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ev = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("user_id").cast("long").as("u"), col("event_type"),
-        unix_micros(col("ts")).as("us"), col("event_id").cast("long").as("eid"),
-        expr("CAST(ROUND(value * 100, 0) AS BIGINT)").as("cents"))
-      .as[(Long, String, Long, Long, Long)]
-    val prog = Stateful.attributionProgress(ev)
-    val fin = replayToTable(prog.toDF(), "update", 3, "q200 touch")()
+    val fin = replayKeyed(s, d, "q200 touch") { ev =>
+      Stateful.attributionProgress(ev
+        .select(col("user_id").cast("long").as("u"), col("event_type"),
+          unix_micros(col("ts")).as("us"), col("event_id").cast("long").as("eid"),
+          expr("CAST(ROUND(value * 100, 0) AS BIGINT)").as("cents"))
+        .as[(Long, String, Long, Long, Long)])
+    }
       .groupBy("user_id")
       .agg(max("click_n").as("cn"), max("click_cents").as("cc"),
         max("view_n").as("vn"), max("view_cents").as("vc"),
@@ -947,14 +954,13 @@ object EventTime {
     * bit for bit (the q369 device, flatMap emission-once variant). */
   def qStreamingTransitions(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val src = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("user_id").cast("long"), unix_micros(col("ts")),
-        col("event_id").cast("long"), col("event_type"))
-      .as[(Long, Long, Long, String)]
-    val prog = Stateful.transitionProgress(src)
-    replayToTable(prog.toDF(), "update", 3, "q372 carried")(
-        _.groupBy("from_type", "to_type").agg(count(lit(1)).as("n")))
-      .orderBy("from_type", "to_type")
+    replayKeyed(s, d, "q372 carried",
+        _.groupBy("from_type", "to_type").agg(count(lit(1)).as("n"))) { ev =>
+      Stateful.transitionProgress(ev
+        .select(col("user_id").cast("long"), unix_micros(col("ts")),
+          col("event_id").cast("long"), col("event_type"))
+        .as[(Long, Long, Long, String)])
+    }.orderBy("from_type", "to_type")
   }
 
   /** q373: exact running moments per event type — cross-batch
@@ -966,12 +972,11 @@ object EventTime {
     * exact DECIMAL both engines). */
   def qStreamingMoments(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val src = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("event_type"),
-        expr("CAST(ROUND(value * 100, 0) AS BIGINT)"))
-      .as[(String, Long)]
-    val prog = Stateful.momentsProgress(src)
-    replayToTable(prog.toDF(), "update", 3, "q373 moment")().groupBy("event_type")
+    replayKeyed(s, d, "q373 moment") { ev =>
+      Stateful.momentsProgress(ev
+        .select(col("event_type"), expr("CAST(ROUND(value * 100, 0) AS BIGINT)"))
+        .as[(String, Long)])
+    }.groupBy("event_type")
       .agg(max(col("n")).as("n_events"),
         max_by(col("sum_cents"), col("n")).as("sum_cents"),
         max_by(col("sumsq_cents"), col("n")).as("sumsq_cents"))
@@ -989,11 +994,11 @@ object EventTime {
     * batch COUNT(DISTINCT) exactly ([[Stateful.distinctExactProgress]]). */
   def qStreamingDistinctExact(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val src = eventsStreamTimeOrdered(s, d, parts = 3)
-      .select(col("event_type"), col("user_id").cast("long"))
-      .as[(String, Long)]
-    val prog = Stateful.distinctExactProgress(src)
-    replayToTable(prog.toDF(), "update", 3, "q374 id-set")().groupBy("event_type")
+    replayKeyed(s, d, "q374 id-set") { ev =>
+      Stateful.distinctExactProgress(ev
+        .select(col("event_type"), col("user_id").cast("long"))
+        .as[(String, Long)])
+    }.groupBy("event_type")
       .agg(max(col("n_seen")).as("n_events"),
         max_by(col("n_users"), col("n_seen")).as("n_users"))
       .orderBy("event_type")

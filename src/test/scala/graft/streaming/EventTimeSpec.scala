@@ -359,4 +359,30 @@ class EventTimeSpec extends AnyFunSuite {
     val leaked = ckptDirs -- before
     assert(leaked.isEmpty, s"leaked checkpoint dirs: $leaked")
   }
+
+  test("q133: the streaming funnel equals the q131 batch funnel") {
+    val batch = rows(graft.operators.Relational.qFunnel(spark, sf))
+    assert(rows(EventTime.qStreamingFunnel(spark, sf)) == batch)
+    assert(batch.head.head.asInstanceOf[Long] > 0L)
+  }
+
+  test("q372: streamed transitions equal the batch LAG() rollup") {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
+      .orderBy("ts", "event_id")
+    val batch = Tables.events(spark, sf)
+      .select(lag("event_type", 1).over(w).as("from_type"), col("event_type").as("to_type"))
+      .filter(col("from_type").isNotNull)
+      .groupBy("from_type", "to_type").agg(count(lit(1)).as("n"))
+    val got = rows(EventTime.qStreamingTransitions(spark, sf))
+    assert(got.nonEmpty)
+    assert(got == rows(batch))
+  }
+
+  test("q374: streamed exact distinct users equal the batch COUNT(DISTINCT user_id)") {
+    val batch = Tables.events(spark, sf).groupBy("event_type")
+      .agg(count(lit(1)).as("n_events"), countDistinct("user_id").as("n_users"))
+    val got = rows(EventTime.qStreamingDistinctExact(spark, sf))
+    assert(got.nonEmpty)
+    assert(got == rows(batch))
+  }
 }
